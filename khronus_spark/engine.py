@@ -19,7 +19,12 @@ import time as _time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import counter_summary, histogram_summary
+from khronus_spark.functions.summary import (
+    COUNTER,
+    counter_summary,
+    family_of,
+    histogram_summary,
+)
 from khronus_spark.operators.rollup import read_summaries
 from khronus_spark.parser.ast import InfluxCriteria, Source
 from khronus_spark.parser.parser import InfluxQueryParser
@@ -68,11 +73,15 @@ class KhronusEngine:
         now_ms: int | None = None,
         min_points: int = MIN_RESOLUTION_POINTS,
         max_points: int = MAX_RESOLUTION_POINTS,
-        approx_percentiles: bool = False,
-        summary_read_limit: int | None = None,
-        bucket_read_limit: int | None = None,
-        exact_mode: str = "auto",
+        read_limit: int | None = None,
     ):
+        """Query engine over raw `measurements` or a materialized summary
+        store at `summary_base_path` (which needs an explicit `catalog`).
+
+        `read_limit` is an opt-in cap on the rows read per (metric,
+        slice), in query order (`QueryExecutor.read_limit`). Queries are
+        uncapped by default like the reference's influx path, which
+        binds only the query limit (`InfluxQueryResolver.scala:138`)."""
         if measurements is None and summary_base_path is None:
             raise ValueError("need measurements or summary_base_path")
         if measurements is None and catalog is None:
@@ -90,55 +99,8 @@ class KhronusEngine:
         self.summary_base_path = summary_base_path
         self.windows_ms = windows_ms
         self._now_ms = now_ms
-        self.approx = approx_percentiles
-        # On-the-fly exact-percentile strategy (`_provide_summaries`):
-        #   'array'  — collect+sort each bucket's samples; ONE shuffle, but
-        #              per-bucket state grows with sample count.
-        #   'counts' — pre-aggregate to per-value counts first; state
-        #              bounded by DISTINCT values, at the cost of a second
-        #              shuffle — the unbounded-safe form.
-        #   'auto'   — array when the slice spans at most `max_points`
-        #              buckets (an interactive dashboard read, ≤700 points
-        #              by the reference's resolution clamp
-        #              `reference.conf:62-63`), counts beyond that (a
-        #              hand-forced wide slice, where dense buckets are the
-        #              risk). Both produce bit-identical summaries
-        #              (tests/test_rollup.py), so this is purely a
-        #              physical-plan choice. The true 100 TB dashboard
-        #              path remains the materialized store (O1,
-        #              `util/Setting.scala:99-103`) — on-the-fly exists
-        #              for exploratory reads over raw measurements.
-        if exact_mode not in ("auto", "array", "counts"):
-            raise ValueError(f"exact_mode must be auto|array|counts, got {exact_mode!r}")
-        self.exact_mode = exact_mode
         self.max_points = max_points
         self._catalog = catalog
-        # Opt-in per-slice read caps. The reference's influx query path
-        # binds the QUERY limit (`InfluxQueryResolver.scala:138`,
-        # default Int.MaxValue — `InfluxAst.scala:30`), so queries are
-        # uncapped by default; the config caps (`reference.conf:30-33`)
-        # guard the ROLLUP read path (see operators/incremental.py) and
-        # other internal summary reads (`SummaryStore.scala:105-108`).
-        # A deployment can set these to bound hand-forced slices. Each
-        # cap belongs to one construction mode — reject the one that
-        # would be silently ignored instead of letting a deployment
-        # believe it is protected.
-        if summary_base_path is not None:
-            if bucket_read_limit is not None:
-                raise ValueError(
-                    "bucket_read_limit applies to measurements-backed engines "
-                    "(raw bucket reads); this engine reads a summary store — "
-                    "use summary_read_limit"
-                )
-            read_limit = summary_read_limit
-        else:
-            if summary_read_limit is not None:
-                raise ValueError(
-                    "summary_read_limit applies to summary-store engines; "
-                    "this engine computes from measurements — use "
-                    "bucket_read_limit"
-                )
-            read_limit = bucket_read_limit
         self.executor = QueryExecutor(
             spark,
             self._provide_summaries,
@@ -170,7 +132,7 @@ class KhronusEngine:
     # -- summaries ----------------------------------------------------------
 
     def _provide_summaries(self, src: Source, window_ms: int, slc) -> DataFrame:
-        family = "counter" if src.mtype == "counter" else "histogram"
+        family = family_of(src.mtype)
         if self.summary_base_path is not None:
             # materialized path: (metric, ts) predicates push down to the
             # partitioned/sorted parquet store (the executor applies them)
@@ -204,15 +166,16 @@ class KhronusEngine:
                     lo * 1_000_000, (hi + 1) * 1_000_000 - 1
                 )
         m = self.measurements.where(cond)
-        if family == "counter":
+        if family == COUNTER:
             return counter_summary(m, window_ms)
+        # both exact modes are bit-identical, so this is purely a plan
+        # choice: collect+sort (one shuffle) for an interactive slice of
+        # at most `max_points` buckets (the reference's 700-point clamp,
+        # `reference.conf:62-63`); per-value counts (state bounded by
+        # DISTINCT values, one more shuffle) for a hand-forced wider one
         n_buckets = (hi + 1 - lo) // window_ms
-        use_counts = self.exact_mode == "counts" or (
-            self.exact_mode == "auto" and n_buckets > self.max_points
-        )
         return histogram_summary(
-            m, window_ms, approx=self.approx,
-            exact_counts=use_counts and not self.approx,
+            m, window_ms, exact_counts=n_buckets > self.max_points
         )
 
     # -- query --------------------------------------------------------------

@@ -56,7 +56,6 @@ from khronus_spark.sources.tables import (
     MEASUREMENTS_SQL,
     load_table,
     measurements_from_events,
-    spread,
 )
 from khronus_spark.timegrid import align_ceil, align_floor
 

@@ -44,9 +44,44 @@ PERCENTILE_FRACTIONS: dict[str, str] = {
 ALL_PERCENTILES = tuple(PERCENTILE_FRACTIONS)
 ALL_HISTOGRAM_FUNCTIONS = ALL_PERCENTILES + ("count", "min", "max", "mean", "cpm")
 ALL_COUNTER_FUNCTIONS = ("count", "cpm")
+#: the HistogramSummary's value columns, in store order after (metric, ts)
+HISTOGRAM_FIELDS = ALL_PERCENTILES + ("min", "max", "count", "mean")
 
 #: percentile integer value (as used in `percentiles(50 80 999)`) → name
 PERCENTILE_BY_VALUE = {50: "p50", 80: "p80", 90: "p90", 95: "p95", 99: "p99", 999: "p999"}
+
+#: summary family → the metric types it summarizes: timers and gauges
+#: share the HistogramSummary (`InfluxCriteriaBuilder.scala:113-117`)
+HISTOGRAM = "histogram"
+COUNTER = "counter"
+FAMILY_MTYPES = {HISTOGRAM: ("timer", "gauge"), COUNTER: ("counter",)}
+
+
+def family_of(mtype: str) -> str:
+    """The summary family of a metric type; raises on an unknown one."""
+    for family, mtypes in FAMILY_MTYPES.items():
+        if mtype in mtypes:
+            return family
+    raise ValueError(f"Unknown metric type: {mtype}")
+
+
+def family_filter(family: str) -> Column:
+    return F.col("mtype").isin(*FAMILY_MTYPES[family])
+
+
+def sketch_aggregates() -> list[Column]:
+    """The bounded-state histogram aggregate over `value` (exact count,
+    min, max, mean; `percentile_approx` sketches) — shared by the batch
+    approx mode and the streaming rollup."""
+    return [
+        F.count("value").alias("count"),
+        F.min("value").alias("min"),
+        F.max("value").alias("max"),
+        F.expr("sum(value) div count(value)").alias("mean"),
+    ] + [
+        F.percentile_approx("value", float(frac), 10000).alias(name)
+        for name, frac in PERCENTILE_FRACTIONS.items()
+    ]
 
 
 def bucket_ts(ts_ms_col: str, window_ms: int) -> Column:
@@ -101,34 +136,17 @@ def histogram_summary(
             .groupBy("metric", "ts")
             .agg(F.array_sort(F.collect_list(F.struct("v", "c"))).alias("hist"))
         )
-        return state_summary(raw_state).select(
-            "metric", "ts", *ALL_PERCENTILES, "min", "max", "count", "mean"
-        )
-    # NULL values carry no sample in ANY mode: the counts path filters
-    # them explicitly, and without this filter an all-NULL bucket made
-    # the array path index element_at(_vals, 1) on an EMPTY collected
-    # array — a hard ANSI crash under Spark 4's defaults — while the
-    # counts path emitted no row for the same bucket (r13 review,
-    # verified live; the modes are documented bit-identical, so all
-    # three now agree: a bucket with no non-NULL sample yields no row)
+        return state_summary(raw_state).select("metric", "ts", *HISTOGRAM_FIELDS)
+    # NULL values carry no sample in ANY mode, so a bucket with no
+    # non-NULL sample yields no row in all three (without this filter
+    # the array path indexed an EMPTY collected array — an ANSI crash)
     measurements = measurements.where(F.col("value").isNotNull())
     grouped = measurements.groupBy(
         F.col("metric"), bucket_ts("ts_ms", window_ms)
     )
     if approx:
-        accuracy = 10000
-        aggs = [
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.expr("sum(value) div count(value)").alias("mean"),
-        ] + [
-            F.percentile_approx("value", float(frac), accuracy).alias(name)
-            for name, frac in PERCENTILE_FRACTIONS.items()
-        ]
-        return grouped.agg(*aggs).select(
-            "metric", "ts", *ALL_PERCENTILES, "min", "max", "count", "mean"
-        )
+        summary = grouped.agg(*sketch_aggregates())
+        return summary.select("metric", "ts", *HISTOGRAM_FIELDS)
 
     agg = grouped.agg(
         F.array_sort(F.collect_list("value")).alias("_vals"),

@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import counter_summary, histogram_summary
+from khronus_spark.operators.rollup import rollup_all
 from khronus_spark.timegrid import DEFAULT_WINDOWS_MS, align_floor
 
 #: late-data allowance: one smallest-window bucket (reference.conf:7-8)
@@ -133,12 +133,7 @@ def process_tick(
             F.col("metric").isin(*due_metrics)
             & F.col("ts_ms").between(slice_start, slice_end - 1)
         )
-        fams: dict[str, DataFrame] = {}
-        hist = due.where(F.col("mtype").isin("timer", "gauge"))
-        ctr = due.where(F.col("mtype") == "counter")
-        fams["histogram"] = histogram_summary(hist, w)
-        fams["counter"] = counter_summary(ctr, w)
-        out[w] = fams
+        out[w] = rollup_all(due, (w,))[w]
 
     # capped catch-up: a held metric's watermark stays at its capped end
     # so deferred buckets are aggregated by later ticks (never silently

@@ -451,6 +451,22 @@ def _adc_luts(
     the cached frame rather than re-running training."""
     subdim = _subdim(dims, sub)
     rows = sorted(books.collect(), key=lambda r: (int(r["s"]), int(r["cid"])))
+    # a corrupt or foreign codebook must fail here, by name: an
+    # out-of-range cid would silently mis-slice the probe, and a
+    # duplicate (s, cid) would surface as an opaque map_from_entries
+    # error at execution
+    seen: set[tuple[int, int]] = set()
+    for r in rows:
+        s, cid = int(r["s"]), int(r["cid"])
+        if not 0 <= cid < k:
+            raise ValueError(
+                f"PQ codebook row out of range for k={k}, sub={sub}: {r}"
+            )
+        if (s, cid) in seen:
+            raise ValueError(
+                f"PQ codebook has a duplicate (s, cid) for k={k}, sub={sub}: {r}"
+            )
+        seen.add((s, cid))
     if not rows:
         # degenerate empty codebook: preserve the former cross-join
         # semantics (zero LUT rows → zero scored rows downstream)
@@ -507,7 +523,9 @@ def pq_topk(
     codes: per probe a sub×k LUT of exact int64 subspace distances to
     every centroid (built in-engine from the broadcast codebooks), then
     every corpus code scores with `sub` lookups. Ties break to the
-    smaller neighbor id; probes are excluded from their own results."""
+    smaller neighbor id; probes are excluded from their own results.
+    Building the plan runs the codebook collect (`_adc_luts`), so
+    calling this function already runs Spark jobs."""
     state = _pq_state(embeddings, sub, k, iters, mode, dims)
     books = _books_from_state(state)
     codes = _codes_from_state(state, k, mode)
@@ -565,7 +583,8 @@ def pq_topk_indexed(
     (sub·k broadcast rows) and the map-side scan over the 8-byte code
     table. `probe_vecs` is (probe_id, embedding). Identical results to
     `pq_topk` when the index was trained on the full corpus
-    (test-pinned)."""
+    (test-pinned). Building the plan runs the codebook collect
+    (`_adc_luts`), which also validates the persisted books."""
     pvec = probe_vecs.select(
         "probe_id", F.expr(_QUANT_COL.format(c="embedding")).alias("pe")
     )
@@ -764,7 +783,8 @@ def ivf_pq_topk(
     vector table; the candidate join keys on the centroid id against a
     broadcast probe-list table; scoring is `sub` table adds per
     candidate; the per-probe top-k window is over the candidate subset
-    only."""
+    only. Building the plan runs the codebook collect (`_adc_luts`), so
+    calling this function already runs Spark jobs."""
     from khronus_spark.operators.similarity import ivf_assignments, ivf_probe_lists
 
     state = _pq_state(embeddings, sub, k, iters, mode, dims)
@@ -1540,7 +1560,9 @@ def ivf_pq_topk_indexed(
     corpus — test-pinned, same oracle); candidates come from the
     prebuilt coded lists by a join-key restriction; scoring is `sub`
     broadcast-LUT adds per candidate. No k-means anywhere in the plan.
-    `probe_vecs` is (probe_id, embedding)."""
+    `probe_vecs` is (probe_id, embedding). Building the plan runs the
+    codebook collect (`_adc_luts`), which also validates the persisted
+    books."""
     from khronus_spark.operators.similarity import cosine_col
 
     sim = cosine_col(F.col("embedding"), F.col("cvec"))

@@ -31,14 +31,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from khronus_spark.functions.summary import (
+    COUNTER,
+    FAMILY_MTYPES,
+    HISTOGRAM,
     bucket_ts,
     counter_summary,
+    family_filter,
     histogram_summary,
 )
 from khronus_spark.timegrid import DEFAULT_WINDOWS_MS, STORE_GROUP_MS, format_duration
 
-HISTOGRAM_FAMILY = ("timer", "gauge")
-COUNTER_FAMILY = ("counter",)
+
+def store_key(family: str, window_ms: int | None = None) -> str:
+    """`<family>_summary/<resolution>` under the store root (the family
+    directory when no window is given)."""
+    key = f"{family}_summary"
+    return key if window_ms is None else f"{key}/{format_duration(window_ms)}"
+
+
+def _store_layout(df: DataFrame) -> DataFrame:
+    """Hash by metric, sorted by (metric, ts) within partitions: parquet
+    min/max pushdown on both keys, the locality of the reference's
+    PK(metric, timestamp) (`store/SummaryStore.scala:70-75`)."""
+    return df.repartition("metric").sortWithinPartitions("metric", "ts")
 
 
 def pregroup_raw(measurements: DataFrame, group_ms: int = STORE_GROUP_MS) -> DataFrame:
@@ -70,15 +85,15 @@ def rollup_all(
     the caller's choice (`measurements.cache()`); each window is an
     independent branch so Spark can reuse the cached scan.
     """
-    hist_src = measurements.where(F.col("mtype").isin(*HISTOGRAM_FAMILY))
-    ctr_src = measurements.where(F.col("mtype").isin(*COUNTER_FAMILY))
-    out: dict[int, dict[str, DataFrame]] = {}
-    for w in windows_ms:
-        out[w] = {
-            "histogram": histogram_summary(hist_src, w, approx=approx),
-            "counter": counter_summary(ctr_src, w),
+    hist_src = measurements.where(family_filter(HISTOGRAM))
+    ctr_src = measurements.where(family_filter(COUNTER))
+    return {
+        w: {
+            HISTOGRAM: histogram_summary(hist_src, w, approx=approx),
+            COUNTER: counter_summary(ctr_src, w),
         }
-    return out
+        for w in windows_ms
+    }
 
 
 def write_summaries(
@@ -86,27 +101,18 @@ def write_summaries(
     base_path: str,
 ) -> None:
     """Persist the summary tables: parquet partitioned by resolution,
-    sorted by (metric, ts) within partitions — query scans then get
-    partition pruning + parquet min/max pushdown on both keys, matching
-    the locality of the reference's PK(metric, timestamp)
-    (`store/SummaryStore.scala:70-75`)."""
+    each in `_store_layout`."""
     for w, fams in rollups.items():
-        res = format_duration(w)
         for family, df in fams.items():
-            (
-                df.repartition("metric")
-                .sortWithinPartitions("metric", "ts")
-                .write.mode("overwrite")
-                .parquet(f"{base_path}/{family}_summary/{res}")
+            _store_layout(df).write.mode("overwrite").parquet(
+                f"{base_path}/{store_key(family, w)}"
             )
 
 
 def read_summaries(
     spark: SparkSession, base_path: str, family: str, window_ms: int
 ) -> DataFrame:
-    return spark.read.parquet(
-        f"{base_path}/{family}_summary/{format_duration(window_ms)}"
-    )
+    return spark.read.parquet(f"{base_path}/{store_key(family, window_ms)}")
 
 
 def write_summaries_txn(rollups: dict[int, dict[str, DataFrame]], table) -> int:
@@ -117,26 +123,22 @@ def write_summaries_txn(rollups: dict[int, dict[str, DataFrame]], table) -> int:
     `store/BucketStore.scala:159-172`, without delta-spark in the
     container), concurrent writers are safe (optimistic commit), and
     retention becomes a partition-drop commit instead of a filtered
-    rewrite. Same layout discipline as the plain writer (hash by
-    metric, sorted within partitions for min/max pushdown). Returns
-    the committed version."""
-    parts: dict[str, DataFrame | None] = {}
-    for w, fams in rollups.items():
-        res = format_duration(w)
-        for family, df in fams.items():
-            parts[f"{family}_summary/{res}"] = df.repartition(
-                "metric"
-            ).sortWithinPartitions("metric", "ts")
-    return table.commit(parts)
+    rewrite. Same `_store_layout` as the plain writer. Returns the
+    committed version."""
+    return table.commit(
+        {
+            store_key(family, w): _store_layout(df)
+            for w, fams in rollups.items()
+            for family, df in fams.items()
+        }
+    )
 
 
 def read_summaries_txn(
     spark: SparkSession, table, family: str, window_ms: int,
     version: int | None = None,
 ) -> DataFrame | None:
-    return table.read_partition(
-        spark, f"{family}_summary/{format_duration(window_ms)}", version
-    )
+    return table.read_partition(spark, store_key(family, window_ms), version)
 
 
 def apply_retention(
@@ -178,7 +180,7 @@ def compact_summaries(
     table format with commits (Delta/Iceberg — not in this container).
     Returns the number of files written.
     """
-    path = f"{base_path}/{family}_summary/{format_duration(window_ms)}"
+    path = f"{base_path}/{store_key(family, window_ms)}"
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -204,12 +206,13 @@ def catalog_from_store(spark: SparkSession, base_path: str) -> list[tuple[str, s
     store's own content is the system of record when no raw
     measurements are attached (a store-backed engine must not need a
     side-channel catalog to answer `list series` or bind FROM regexes).
-    Counter-family metrics register as 'counter'; histogram-family as
-    'timer' (timers and gauges share one summary family and one valid
-    function set, `InfluxCriteriaBuilder.scala:113-117`). Reads ONE
-    resolution per family — every resolution holds the same metric set."""
+    Each metric registers under its family's first mtype: 'timer' for
+    the histogram family (timers and gauges share one summary family and
+    one valid function set, `InfluxCriteriaBuilder.scala:113-117`),
+    'counter' for counters. Reads ONE resolution per family — every
+    resolution holds the same metric set."""
     entries: set[tuple[str, str]] = set()
-    for family, mtype in (("counter", "counter"), ("histogram", "timer")):
+    for family, mtypes in FAMILY_MTYPES.items():
         resolutions = sorted(
             p for _, p in _store_resolution_dirs(spark, base_path, family)
         )
@@ -221,7 +224,7 @@ def catalog_from_store(spark: SparkSession, base_path: str) -> list[tuple[str, s
             .distinct()
             .collect()
         )
-        entries.update((r["metric"], mtype) for r in rows)
+        entries.update((r["metric"], mtypes[0]) for r in rows)
     return sorted(entries)
 
 
@@ -237,8 +240,9 @@ def _store_resolution_dirs(
     mistaken for the store's first resolution."""
     from khronus_spark.timegrid import parse_duration_ms
 
+    fam_dir = f"{base_path}/{store_key(family)}"
     jvm = spark._jvm
-    fam_path = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{family}_summary")
+    fam_path = jvm.org.apache.hadoop.fs.Path(fam_dir)
     fs = fam_path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(fam_path):
         return []
@@ -251,7 +255,7 @@ def _store_resolution_dirs(
             window_ms = parse_duration_ms(name)
         except ValueError:
             continue
-        out.append((window_ms, f"{base_path}/{family}_summary/{name}"))
+        out.append((window_ms, f"{fam_dir}/{name}"))
     return out
 
 
@@ -263,7 +267,7 @@ def windows_from_store(spark: SparkSession, base_path: str) -> tuple[int, ...]:
     would otherwise route a query to a resolution that was never
     written and fail at scan time."""
     windows: set[int] = set()
-    for family in ("counter", "histogram"):
+    for family in FAMILY_MTYPES:
         windows.update(w for w, _ in _store_resolution_dirs(spark, base_path, family))
     return tuple(sorted(windows))
 

@@ -19,6 +19,8 @@ import re
 from khronus_spark.functions.summary import (
     ALL_COUNTER_FUNCTIONS,
     ALL_HISTOGRAM_FUNCTIONS,
+    COUNTER,
+    family_of,
 )
 from khronus_spark.parser.ast import (
     AllField,
@@ -45,11 +47,11 @@ EXTENDED_FUNCTIONS = ("delta",)
 
 
 def functions_for_mtype(mtype: str) -> tuple[str, ...]:
-    if mtype in ("timer", "gauge"):
-        return ALL_HISTOGRAM_FUNCTIONS
-    if mtype == "counter":
-        return ALL_COUNTER_FUNCTIONS
-    raise QueryValidationError(f"Unknown metric type: {mtype}")
+    try:
+        family = family_of(mtype)
+    except ValueError as e:
+        raise QueryValidationError(str(e)) from None
+    return ALL_COUNTER_FUNCTIONS if family == COUNTER else ALL_HISTOGRAM_FUNCTIONS
 
 
 def build_criteria(query: ParsedQuery, catalog: list[tuple[str, str]]) -> InfluxCriteria:

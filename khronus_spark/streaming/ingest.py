@@ -28,7 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import PERCENTILE_FRACTIONS
+from khronus_spark.functions.summary import (
+    COUNTER,
+    HISTOGRAM,
+    HISTOGRAM_FIELDS,
+    sketch_aggregates,
+)
+from khronus_spark.operators.rollup import store_key
 from khronus_spark.timegrid import duration_to_spark_interval, format_duration
 
 
@@ -60,35 +66,34 @@ def streaming_histogram_summary(
     measurements: DataFrame,
     window_ms: int,
     watermark: str = "30 seconds",
-    accuracy: int = 10000,
 ) -> DataFrame:
-    """Streaming HistogramSummary with mergeable sketch percentiles —
-    bounded state per (metric, bucket), unlike the exact batch path."""
+    """Streaming HistogramSummary: the batch approx mode's sketch
+    aggregate (`functions.summary.sketch_aggregates`) per tumbling
+    bucket — bounded state per (metric, bucket), unlike the exact batch
+    path."""
     interval = duration_to_spark_interval(window_ms)
-    aggs = [
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.expr("sum(value) div count(value)").alias("mean"),
-    ] + [
-        F.percentile_approx("value", float(frac), accuracy).alias(name)
-        for name, frac in PERCENTILE_FRACTIONS.items()
-    ]
     return (
         _with_event_time(measurements)
         .withWatermark("ts", watermark)
         .groupBy(F.col("metric"), F.window("ts", interval).alias("w"))
-        .agg(*aggs)
+        .agg(*sketch_aggregates())
         .select(
-            "metric",
-            F.unix_millis(F.col("w.start")).alias("ts"),
-            *PERCENTILE_FRACTIONS,
-            "min",
-            "max",
-            "count",
-            "mean",
+            "metric", F.unix_millis(F.col("w.start")).alias("ts"), *HISTOGRAM_FIELDS
         )
     )
+
+
+def _streaming_summary(
+    family: str, measurements: DataFrame, window_ms: int, watermark: str
+) -> DataFrame:
+    """The streaming summary of one family; raises on an unknown one."""
+    summarize = {
+        HISTOGRAM: streaming_histogram_summary,
+        COUNTER: streaming_counter_summary,
+    }
+    if family not in summarize:
+        raise ValueError(f"Unknown summary family: {family}")
+    return summarize[family](measurements, window_ms, watermark)
 
 
 def run_streaming_rollup(
@@ -121,19 +126,18 @@ def run_streaming_rollup(
     land); expect a bounded tail of later data to still land, and add
     ~2 trigger intervals to any end-to-end freshness budget.
     """
-    if family == "counter":
-        summaries = streaming_counter_summary(measurements, window_ms, watermark)
-    else:
-        summaries = streaming_histogram_summary(measurements, window_ms, watermark)
-    res = format_duration(window_ms)
-    writer = (
+    summaries = _streaming_summary(family, measurements, window_ms, watermark)
+    return (
         summaries.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", f"{base_path}/{family}_summary/{res}")
-        .option("checkpointLocation", f"{checkpoint_path}/{family}_{res}")
+        .option("path", f"{base_path}/{store_key(family, window_ms)}")
+        .option(
+            "checkpointLocation",
+            f"{checkpoint_path}/{family}_{format_duration(window_ms)}",
+        )
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
 
 
 def dedupe_deliveries(
@@ -154,6 +158,12 @@ def dedupe_deliveries(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(list(id_cols))
     )
+
+
+def _replace_rows(existing: DataFrame, new: DataFrame, keys: DataFrame) -> DataFrame:
+    """The upsert merge: `existing` minus its rows whose (metric, ts) is
+    in `keys`, plus `new`."""
+    return existing.join(keys, ["metric", "ts"], "left_anti").unionByName(new)
 
 
 def upsert_sink(store_path: str):
@@ -183,18 +193,12 @@ def upsert_sink(store_path: str):
         days = [r["day"] for r in batch.select("day").distinct().collect()]
         if not days:
             return
-        # Probe store existence explicitly — a transient read error must
-        # fail the batch (checkpoint retries it), NOT be mistaken for
-        # "first batch" and dynamic-overwrite away previously stored days.
-        # The probe looks for COMMITTED DAY PARTITIONS, not the bare
-        # directory: a pre-provisioned empty dir (mkdir -p before the
-        # stream starts) or a crash that left only _temporary/ under a
-        # never-committed store used to wedge the stream permanently —
-        # exists() was true, the read failed schema inference, and
-        # every checkpoint retry failed identically (r13 review
-        # finding). No data ⇒ the first-batch branch is safe: there is
-        # nothing to clobber. A transient LISTING error still raises
-        # and fails the batch, preserving the retry contract.
+        # Probe for COMMITTED DAY PARTITIONS explicitly: a transient
+        # listing error must fail the batch (the checkpoint retries it),
+        # not be mistaken for "first batch" and overwrite stored days;
+        # and a pre-provisioned empty dir, or one holding only a
+        # crashed write's _temporary/, must not wedge the stream on a
+        # failing schema inference. No data ⇒ nothing to clobber.
         jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
         hpath = jvm.org.apache.hadoop.fs.Path(store_path)
@@ -214,18 +218,15 @@ def upsert_sink(store_path: str):
 
         if _has_committed_days():
             # explicit schema (the batch's own, which the store was
-            # written from): no per-batch footer-inference job — the
-            # r13 persisted-index-reader pattern applied to the one
-            # read every micro-batch pays (r14 streaming profile)
+            # written from): no per-batch footer-inference job
             existing = (
                 spark.read.schema(batch.schema)
                 .parquet(store_path)
                 .where(F.col("day").isin(days))
             )
-            keep = existing.join(
-                batch.select("metric", "ts").distinct(), ["metric", "ts"], "left_anti"
+            merged = _replace_rows(
+                existing, batch, batch.select("metric", "ts").distinct()
             )
-            merged = keep.unionByName(batch)
         else:  # first batch: store does not exist yet
             merged = batch
         out = merged.localCheckpoint(eager=True)
@@ -288,8 +289,7 @@ def txn_upsert_sink(table, export_delta: bool = False):
                 existing = table.read_partition(spark, key, version)
                 part = batch.where(F.col("day") == d)
                 if existing is not None:
-                    keep = existing.join(new_keys, ["metric", "ts"], "left_anti")
-                    part = keep.unionByName(part)
+                    part = _replace_rows(existing, part, new_keys)
                 parts[key] = part
             try:
                 # partition-scoped CAS: racing compactions and
@@ -328,10 +328,7 @@ def run_streaming_rollup_upsert(
     (metric, ts) — the reference's idempotent set-upsert semantics
     (`model/TimeWindowChain.scala:42-55`) without append mode's
     watermark-delayed finalization."""
-    if family == "counter":
-        summaries = streaming_counter_summary(measurements, window_ms, watermark)
-    else:
-        summaries = streaming_histogram_summary(measurements, window_ms, watermark)
+    summaries = _streaming_summary(family, measurements, window_ms, watermark)
     return (
         summaries.writeStream.outputMode("update")
         .foreachBatch(upsert_sink(store_path))
@@ -359,10 +356,7 @@ def run_streaming_rollup_upsert_txn(
     tests. `export_delta=True` keeps `<root>/_delta_log` current with
     every commit inside the same trigger (byte-identical to a post-hoc
     export; see `txn_upsert_sink`)."""
-    if family == "counter":
-        summaries = streaming_counter_summary(measurements, window_ms, watermark)
-    else:
-        summaries = streaming_histogram_summary(measurements, window_ms, watermark)
+    summaries = _streaming_summary(family, measurements, window_ms, watermark)
     return (
         summaries.writeStream.outputMode("update")
         .foreachBatch(txn_upsert_sink(table, export_delta=export_delta))

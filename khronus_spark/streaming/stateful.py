@@ -35,7 +35,7 @@ from pyspark.sql.types import (
 )
 
 from khronus_spark.functions.hdr import HIGHEST_TRACKABLE, SUB_BUCKET_COUNT
-from khronus_spark.functions.summary import PERCENTILE_FRACTIONS
+from khronus_spark.functions.summary import HISTOGRAM_FIELDS, PERCENTILE_FRACTIONS
 
 STATE_SCHEMA = StructType(
     [
@@ -46,13 +46,7 @@ STATE_SCHEMA = StructType(
 
 SUMMARY_SCHEMA = StructType(
     [StructField("metric", StringType()), StructField("ts", LongType())]
-    + [StructField(p, LongType()) for p in PERCENTILE_FRACTIONS]
-    + [
-        StructField("min", LongType()),
-        StructField("max", LongType()),
-        StructField("count", LongType()),
-        StructField("mean", LongType()),
-    ]
+    + [StructField(f, LongType()) for f in HISTOGRAM_FIELDS]
 )
 
 

@@ -200,13 +200,13 @@ def test_read_limit_caps_slice_in_query_order(spark):
 
     rows = [("m", "counter", t * 60_000, 1) for t in range(1, 11)]
     m = spark.createDataFrame(rows, "metric STRING, mtype STRING, ts_ms LONG, value LONG")
-    eng = KhronusEngine(spark, measurements=m, now_ms=700_000, bucket_read_limit=3)
+    eng = KhronusEngine(spark, measurements=m, now_ms=700_000, read_limit=3)
     res = eng.sql('select count from "m" where time >= 0 force group by time(1m)')
     pts = sorted(r["time"] for r in res[0].df.where("value is not null").collect())
     # ascending order (default): the FIRST 3 buckets survive the cap
     assert pts == [60_000, 120_000, 180_000]
 
-    eng2 = KhronusEngine(spark, measurements=m, now_ms=700_000, bucket_read_limit=3)
+    eng2 = KhronusEngine(spark, measurements=m, now_ms=700_000, read_limit=3)
     res2 = eng2.sql(
         'select count from "m" where time >= 0 force group by time(1m) order desc'
     )

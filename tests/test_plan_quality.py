@@ -386,7 +386,7 @@ def test_q22_scalar_threshold_broadcast(spark, oracle_sf_dir):
 
 
 def test_percentile_mode_routing(spark, oracle_sf_dir):
-    """exact_mode='auto' (engine.py): an interactive dashboard slice
+    """The engine's exact-percentile routing: an interactive dashboard slice
     (<= max_points buckets, the reference's 700-point clamp) takes the
     single-shuffle array mode; a hand-forced wide slice takes the
     bounded-state counts mode. Both are bit-identical summaries; this

@@ -492,3 +492,30 @@ def test_recall_probe_rejects_absent_and_duplicate_probes(spark, emb16):
             emb16, [0, 0, 1], 3, prefix_dims=8, sub=4, k=8,
             iters=1, dims=16,
         )
+
+
+@pytest.mark.parametrize(
+    "corrupt, match",
+    [
+        # cid == k: would slice past the probe's subvector
+        (lambda b: b.withColumn("cid", F.expr("IF(cid = 0, 8, cid)")),
+         "out of range for k=8, sub=4"),
+        # a repeated row: two LUT entries under one map key
+        (lambda b: b.unionByName(b.where("s = 0 AND cid = 0")),
+         "duplicate \\(s, cid\\) for k=8, sub=4"),
+    ],
+    ids=["cid_out_of_range", "duplicate_s_cid"],
+)
+def test_adc_lut_rejects_corrupt_codebook(spark, emb16, tmp_path, corrupt, match):
+    """A corrupt persisted codebook fails while the query plan is
+    built, with an error naming the geometry and the bad row."""
+    books, codes = pq_ops.pq_build_index(emb16, sub=4, k=8, iters=1, dims=16)
+    path = str(tmp_path / "idx")
+    pq_ops.write_pq_index(books, codes, path)
+    books, codes = pq_ops.read_pq_index(spark, path)
+    pv = emb16.where("vec_id < 3").select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    assert pq_ops.pq_topk_indexed(books, codes, pv, sub=4, k=8, dims=16).count() == 9
+    with pytest.raises(ValueError, match=match):
+        pq_ops.pq_topk_indexed(corrupt(books), codes, pv, sub=4, k=8, dims=16)

@@ -189,3 +189,21 @@ def test_all_null_bucket_yields_no_row_in_every_mode(spark):
         }
         assert set(got) == {60_000}, kwargs
         assert got[60_000][0] == 1 and float(got[60_000][1]) == 5.0, kwargs
+
+
+def test_family_rule_rejects_unknown_types():
+    """functions.summary owns the mtype → family rule; the binder and the
+    streaming rollup refuse an unknown type instead of guessing a family."""
+    from khronus_spark.functions.summary import COUNTER, HISTOGRAM, family_of
+    from khronus_spark.plans.criteria import QueryValidationError, functions_for_mtype
+    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
+
+    assert family_of("timer") == family_of("gauge") == HISTOGRAM
+    assert family_of("counter") == COUNTER
+    with pytest.raises(ValueError, match="Unknown metric type: meter"):
+        family_of("meter")
+    with pytest.raises(QueryValidationError, match="Unknown metric type: meter"):
+        functions_for_mtype("meter")
+    # an mtype where a family belongs: rejected before any stream is built
+    with pytest.raises(ValueError, match="Unknown summary family: timer"):
+        run_streaming_rollup_upsert(None, "store", "ckpt", 60_000, family="timer")

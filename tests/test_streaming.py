@@ -8,7 +8,11 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import counter_summary
+from khronus_spark.functions.summary import (
+    ALL_PERCENTILES,
+    counter_summary,
+    histogram_summary,
+)
 from khronus_spark.sources.tables import measurements_from_events
 from khronus_spark.streaming.ingest import run_streaming_rollup
 
@@ -67,9 +71,23 @@ def test_streaming_histogram_rollup_runs(spark, staged):
     assert rows
     cols = set(got.columns)
     assert {"metric", "ts", "p50", "p999", "min", "max", "count", "mean"} <= cols
-    # sketch percentiles bounded by min/max
+    # every emitted bucket is the batch summary of the same samples: the
+    # exact fields match, the sketch percentiles stay within the
+    # tolerance test_rollup.py::test_approx_mode_close_to_exact allows
+    expected = {
+        (r["metric"], r["ts"]): r
+        for r in histogram_summary(
+            batch_m.where(F.col("mtype") == "timer"), 3_600_000
+        ).collect()
+    }
     for r in rows:
-        assert r["min"] <= r["p50"] <= r["max"]
+        e = expected[(r["metric"], r["ts"])]
+        for f in ("count", "min", "max", "mean"):
+            assert r[f] == e[f], (r["metric"], r["ts"], f, r[f], e[f])
+        for p in ALL_PERCENTILES:
+            assert abs(r[p] - e[p]) <= max(2, 0.05 * e[p]), (
+                r["metric"], r["ts"], p, r[p], e[p]
+            )
 
 
 def test_duplicate_deliveries_deduped(spark, staged):
