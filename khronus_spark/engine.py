@@ -126,8 +126,15 @@ class KhronusEngine:
         import re as _re
 
         pat = _re.compile(f".*{regex}.*", _re.IGNORECASE)
-        names = [(0, name) for name, _ in self.catalog if pat.fullmatch(name)]
-        return self.spark.createDataFrame(names or [], "time INT, name STRING")
+        names = [name for name, _ in self.catalog if pat.fullmatch(name)]
+        # an inline VALUES table is a local relation: collecting it runs
+        # no Spark job
+        rows = ", ".join(f"(0, :n{i})" for i in range(len(names)))
+        df = self.spark.sql(
+            f"SELECT * FROM VALUES {rows or '(0, CAST(NULL AS STRING))'} AS t(time, name)",
+            args={f"n{i}": name for i, name in enumerate(names)},
+        )
+        return df if names else df.limit(0)
 
     # -- summaries ----------------------------------------------------------
 

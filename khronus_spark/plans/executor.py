@@ -1,4 +1,4 @@
-"""Compile bound InfluxCriteria into DataFrame plans and execute.
+"""Compile bound InfluxCriteria into one DataFrame plan and execute.
 
 The Spark restatement of `influx/finder/InfluxQueryResolver.scala`:
 
@@ -7,28 +7,37 @@ The Spark restatement of `influx/finder/InfluxQueryResolver.scala`:
    mandatory.
 2. route the query to a materialized resolution (`adjustResolution`,
    :89-118), then grid-align the range (from ceils, to floors, :120-133).
-3. per source: scan that resolution's summary table, pushed-down filtered
-   to (metric, slice) with order+limit applied **at the read**, before
-   spine generation (`store/SummaryStore.scala:108-117`).
-4. per projection: join onto the dense time spine (`sequence()`-based,
-   no driver-side loop); missing buckets take fill(x) or are omitted
-   (:184-201); binary operations inner-join two series on the bucket
-   timestamp (`zipByTimestamp`, :203-212) — broadcast-sized.
-5. scale, round to 4dp HALF_UP (:214-224), order by time.
+3. group the projections by the sources they read (projections sharing
+   a source land in one group) and read each source's summary once,
+   pushed-down filtered to (metric, slice) with order+limit applied
+   **at the read**, before spine generation
+   (`store/SummaryStore.scala:108-117`). A group's summaries are zipped
+   on `ts`, one struct column per source.
+4. join each group onto the dense time spine once and compute every
+   projection of the group as a column pair (value, keep) of one
+   select: missing buckets take fill(x) or are omitted (:184-201), a
+   binary operation keeps the buckets both operands have
+   (`zipByTimestamp`, :203-212). The pairs unpivot into
+   (series, time, value) rows.
+5. union the groups, then scale, round to 4dp HALF_UP (:214-224) and
+   order by (series, time), once for the whole query.
 
 Everything stays in Catalyst: the spine is `explode(sequence(...))`,
-functions are column expressions, joins are equi-joins on `time`.
-At dashboard scale each series is ≤700 points (reference.conf:61-64),
-so per-query work is trivially broadcastable; the heavy lifting lives in
+functions are column expressions, joins are equi-joins on the bucket
+timestamp. A query is one plan, so a caller that collects every series
+runs one chain of Spark jobs, and building the plan runs none. At
+dashboard scale each series is ≤700 points (reference.conf:61-64), so
+per-query work is trivially broadcastable; the heavy lifting lives in
 the rollup engine that materialized the summaries.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from khronus_spark.functions.summary import cpm_col
@@ -62,14 +71,31 @@ class QueryExecutionError(Exception):
     pass
 
 
-@dataclass
 class InfluxSeriesResult:
     """One output series (`InfluxSeries`, `influx/service/InfluxProtocol.scala:19`):
-    name = projection name, df = (time long, value double) points."""
+    name = projection name, df = (time long, value double) points.
 
-    name: str
-    metric: str
-    df: DataFrame
+    The series of one query share one plan, `frame`: (_sid, series,
+    metric, time, value) rows ordered by (_sid, time). `df` is then the
+    `_sid == sid` slice of it, built on first use; a caller that renders
+    every series collects `frame` once instead (`service.series_to_json`)."""
+
+    def __init__(
+        self,
+        name: str,
+        metric: str,
+        df: DataFrame | None = None,
+        frame: DataFrame | None = None,
+        sid: int = 0,
+    ):
+        self.name, self.metric, self.frame, self.sid = name, metric, frame, sid
+        self._df = df
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = self.frame.where(F.col("_sid") == self.sid).select("time", "value")
+        return self._df
 
 
 def build_slice(filters, now_ms: int) -> Slice:
@@ -121,6 +147,25 @@ class QueryExecutor:
     # -- public ------------------------------------------------------------
 
     def execute(self, criteria: InfluxCriteria, now_ms: int) -> list[InfluxSeriesResult]:
+        frame, projections = self._compile(criteria, now_ms)
+        return [
+            InfluxSeriesResult(p.series_name, self._metric(p, criteria), frame=frame, sid=sid)
+            for sid, p in enumerate(projections)
+        ]
+
+    def execute_union(self, criteria: InfluxCriteria, now_ms: int) -> DataFrame:
+        """All series in long format (series, metric, time, value),
+        ordered by series then time — test/oracle friendly."""
+        frame, _ = self._compile(criteria, now_ms)
+        return frame.select("series", "metric", "time", "value")
+
+    # -- internals ----------------------------------------------------------
+
+    def _compile(
+        self, criteria: InfluxCriteria, now_ms: int
+    ) -> tuple[DataFrame, list]:
+        """The query's one (_sid, series, metric, time, value) frame, and
+        its projections in `_sid` order (sorted by series id)."""
         slc = build_slice(criteria.filters, now_ms)
         window_ms = adjust_resolution(
             slc,
@@ -131,68 +176,62 @@ class QueryExecutor:
             self.max_points,
         )
         trange = build_time_range(slc, window_ms)
-
-        summaries = {
-            src.table_id: self._read_summaries(src, window_ms, slc, criteria)
-            for src in criteria.sources
-        }
-        # Share one summary computation across projections (guide §2.5):
-        # without this, every projection of the same source embeds its own
-        # copy of the summary subtree, and the union/multi-series plan
-        # re-scans + re-aggregates the measurements once PER SERIES
-        # (column pruning specializes each branch, so ReuseExchange never
-        # fires — plans/r13/influx_percentiles_before.txt shows 3 full
-        # scans for 3 percentile series). A lazy localCheckpoint makes
-        # every branch read the ONE materialized summary slice instead —
-        # bounded rows (the resolution clamp keeps rendered series ≤700
-        # points; a `force` override is bounded by the user's own
-        # slice/window choice, the same in-memory-series bound the
-        # reference carries). Only applied when ≥2 projections reference
-        # the source — a single-series query keeps its straight-line plan.
-        refs: dict[str, int] = {}
-        for proj in criteria.projections:
-            for tid in self._field_table_ids(proj):
-                refs[tid] = refs.get(tid, 0) + 1
-        for tid, n in refs.items():
-            if n > 1 and tid in summaries:
-                summaries[tid] = summaries[tid].localCheckpoint(eager=False)
-
-        results = []
-        for proj in sorted(criteria.projections, key=lambda p: p.series_id):
-            df = self._project(proj, trange, summaries, criteria, window_ms)
-            df = self._finalize(df, criteria)
-            metric = ""
-            if isinstance(proj, Field):
-                metric = criteria.source_by_table_id(proj.table_id).metric
-            results.append(InfluxSeriesResult(proj.series_name, metric, df))
-        return results
-
-    def execute_union(self, criteria: InfluxCriteria, now_ms: int) -> DataFrame:
-        """All series in long format (series, time, value) — test/oracle
-        friendly; series assembled with unionByName."""
-        out = None
-        for series in self.execute(criteria, now_ms):
-            df = series.df.select(
-                F.lit(series.name).alias("series"),
-                F.lit(series.metric).alias("metric"),
-                F.col("time"),
-                F.col("value"),
+        projections = sorted(criteria.projections, key=lambda p: p.series_id)
+        parts = []
+        for table_ids, members in self._groups(projections):
+            framed, structs = self._zip(table_ids, members, trange, slc, criteria, window_ms)
+            values, cells = [], []
+            for sid, proj in members:
+                value, keep = self._series(proj, structs, criteria, window_ms)
+                values += [F.when(keep, value).alias(f"_v{sid}"), keep.alias(f"_k{sid}")]
+                metric = self._metric(proj, criteria)
+                cells += [F.lit(sid), F.lit(proj.series_name), F.lit(metric)]
+                cells += [F.col(f"_v{sid}"), F.col(f"_k{sid}")]
+            # unpivot: one (sid, series, metric, value, keep) row per
+            # projection per bucket
+            parts.append(
+                framed.select("time", *values)
+                .select("time", F.stack(F.lit(len(members)), *cells))
+                .where(F.col("col4"))
+                .select(
+                    F.col("col0").alias("_sid"),
+                    F.col("col1").alias("series"),
+                    F.col("col2").alias("metric"),
+                    "time",
+                    F.col("col3").alias("value"),
+                )
             )
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    # -- internals ----------------------------------------------------------
+        return self._finalize(reduce(DataFrame.unionByName, parts), criteria), projections
 
     @staticmethod
-    def _field_table_ids(proj):
-        """table_ids a projection's value depends on (Numbers depend on
-        none — they render from the spine alone)."""
+    def _metric(proj, criteria: InfluxCriteria) -> str:
         if isinstance(proj, Field):
-            yield proj.table_id
-        elif isinstance(proj, Operation):
-            for side in (proj.left, proj.right):
-                if isinstance(side, Field):
-                    yield side.table_id
+            return criteria.source_by_table_id(proj.table_id).metric
+        return ""
+
+    @staticmethod
+    def _fields(proj) -> list[Field]:
+        """The Fields a projection's value depends on (Numbers depend on
+        none — they render from the spine alone)."""
+        sides = (proj.left, proj.right) if isinstance(proj, Operation) else (proj,)
+        return [side for side in sides if isinstance(side, Field)]
+
+    def _groups(self, projections) -> list[tuple[set[str], list]]:
+        """(table_ids, [(sid, projection)]) per group: projections that
+        share a source land in one group, so each source is read once;
+        the projections that read no source form one group of their own."""
+        groups: list[tuple[set[str], list]] = []
+        for sid, proj in enumerate(projections):
+            tids = {f.table_id for f in self._fields(proj)}
+            hits = [g for g in groups if (g[0] & tids) or not (g[0] or tids)]
+            groups = [g for g in groups if not any(g is h for h in hits)]
+            groups.append(
+                (
+                    tids.union(*(g[0] for g in hits)),
+                    [m for g in hits for m in g[1]] + [(sid, proj)],
+                )
+            )
+        return groups
 
     def _read_summaries(
         self, src: Source, window_ms: int, slc: Slice, criteria: InfluxCriteria
@@ -210,6 +249,56 @@ class QueryExecutor:
             df = df.orderBy(order).limit(min(limits))
         return df
 
+    def _zip(
+        self,
+        table_ids: set[str],
+        members: list,
+        trange: TimeRange,
+        slc: Slice,
+        criteria: InfluxCriteria,
+        window_ms: int,
+    ) -> tuple[DataFrame, dict[str, str]]:
+        """The group's frame: `time`, plus one struct column per source
+        holding its summary row for that bucket (null where the source
+        has none), and the struct column name per table_id. Sources
+        zip on `ts` by one union + group-by. The spine joins once: with
+        fill every spine bucket stays (left join), without it only the
+        buckets some source has (inner join)."""
+        if not table_ids:
+            return self._spine(trange), {}
+        deltas = {
+            f.table_id for _, proj in members for f in self._fields(proj) if f.name == "delta"
+        }
+        structs, sides = {}, []
+        for i, tid in enumerate(sorted(table_ids)):
+            summary = self._read_summaries(
+                criteria.source_by_table_id(tid), window_ms, slc, criteria
+            )
+            if tid in deltas:
+                # extension: count difference vs the previous EXISTING
+                # bucket in the sliced range (the first in-range bucket
+                # has none, so its delta is null and the series drops it;
+                # a gap's delta spans the gap). The lag window runs over
+                # one source's sliced summary — ≤700 points by G1,
+                # bounded like _fill_linear.
+                w = W.partitionBy(F.lit(1)).orderBy("ts")
+                summary = summary.withColumn(
+                    "delta", (F.col("count") - F.lag("count").over(w)).cast("double")
+                )
+            structs[tid] = f"_s{i}"
+            fields = [c for c in summary.columns if c not in ("metric", "ts")]
+            sides.append(summary.select("ts", F.struct(*fields).alias(structs[tid])))
+        zipped = sides[0]
+        if len(sides) > 1:
+            zipped = (
+                reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), sides)
+                .groupBy("ts")
+                .agg(*(F.first(c, ignorenulls=True).alias(c) for c in structs.values()))
+            )
+        spine = self._spine(trange)
+        how = "inner" if criteria.fill is None else "left"
+        return spine.join(zipped, spine.time == zipped.ts, how), structs
+
     def _spine(self, trange: TimeRange) -> DataFrame:
         """Dense timestamp spine from..to inclusive, step window — a
         Catalyst `sequence` + explode, not a driver loop (G3)."""
@@ -220,17 +309,16 @@ class QueryExecutor:
             f"{trange.window_ms}L)) AS time"
         )
 
-    def _fill_linear(self, joined: DataFrame) -> DataFrame:
+    @staticmethod
+    def _fill_linear(known: Column) -> Column:
         """fill(linear): interpolate missing buckets between their
         nearest known neighbours — the InfluxQL fill(linear) semantics
-        (gaps before the first / after the last known point are
-        DROPPED, not extrapolated). The carry-forward/backward windows
-        run over ONE series of ≤700 points (G1 bounds every rendered
-        series), so the single partition is by construction bounded —
-        the same reasoning as the reference's in-memory series build
-        (`InfluxQueryResolver.scala:184-201`)."""
-        from pyspark.sql import Window as W
-
+        (gaps before the first / after the last known point stay null,
+        so the series drops them, not extrapolated). The carry-forward/
+        backward windows run over one group's spine of ≤700 points (G1
+        bounds every rendered series), so the single partition is by
+        construction bounded — the same reasoning as the reference's
+        in-memory series build (`InfluxQueryResolver.scala:184-201`)."""
         one = F.lit(1)
         prev_w = W.partitionBy(one).orderBy("time").rowsBetween(
             W.unboundedPreceding, -1
@@ -238,123 +326,98 @@ class QueryExecutor:
         next_w = W.partitionBy(one).orderBy("time").rowsBetween(
             1, W.unboundedFollowing
         )
-        known_t = F.when(F.col("_v").isNotNull(), F.col("time"))
-        pv = F.last("_v", ignorenulls=True).over(prev_w)
+        known_t = F.when(known.isNotNull(), F.col("time"))
+        pv = F.last(known, ignorenulls=True).over(prev_w)
         pt = F.last(known_t, ignorenulls=True).over(prev_w)
-        nv = F.first("_v", ignorenulls=True).over(next_w)
+        nv = F.first(known, ignorenulls=True).over(next_w)
         nt = F.first(known_t, ignorenulls=True).over(next_w)
         interp = pv + (nv - pv) * (F.col("time") - pt) / (nt - pt)
-        value = (
-            F.when(F.col("_v").isNotNull(), F.col("_v"))
-            .when(pv.isNotNull() & nv.isNotNull(), interp)
-        )
-        return (
-            joined.select("time", value.alias("value"))
-            .where(F.col("value").isNotNull())
+        return F.when(known.isNotNull(), known).when(
+            pv.isNotNull() & nv.isNotNull(), interp
         )
 
-    def _function_col(self, field: Field, window_ms: int) -> Column:
+    @staticmethod
+    def _function_col(field: Field, row: Column, window_ms: int) -> Column:
         if field.name == "cpm":
-            return cpm_col(F.col("count"), window_ms).cast("double")
-        return F.col(field.name).cast("double")
+            return cpm_col(row["count"], window_ms).cast("double")
+        return row[field.name].cast("double")
 
-    def _series_values(
+    def _operand(
         self,
         proj: Field | Number,
-        trange: TimeRange,
-        summaries: dict[str, DataFrame],
+        structs: dict[str, str],
         criteria: InfluxCriteria,
         window_ms: int,
-    ) -> DataFrame:
-        """(time, value) for a simple projection (`generateSeq`, :176-201)."""
-        spine = self._spine(trange)
+    ) -> tuple[Column, Column]:
+        """(value, keep) of a simple projection per spine bucket, fill
+        applied (`generateSeq`, :176-201)."""
         if isinstance(proj, Number):
-            return spine.select("time", F.lit(float(proj.value)).alias("value"))
-        summary = summaries[proj.table_id]
+            return F.lit(float(proj.value)), F.lit(True)
+        if not isinstance(proj, Field):
+            raise QueryExecutionError(f"Unknown projection {proj!r}")
+        row = F.col(structs[proj.table_id])
         if proj.name == "delta":
-            # extension: count difference vs the previous EXISTING bucket
-            # in the sliced range (the first in-range bucket has no
-            # predecessor and drops; a gap's delta spans the gap). The
-            # lag window runs over one rendered series — ≤700 points by
-            # G1, bounded like _fill_linear.
-            from pyspark.sql import Window as W
-
-            w = W.partitionBy(F.lit(1)).orderBy("ts")
-            vals = (
-                summary.withColumn(
-                    "_v",
-                    (F.col("count") - F.lag("count").over(w)).cast("double"),
-                )
-                .where(F.col("_v").isNotNull())
-                .select(F.col("ts"), F.col("_v"))
-            )
+            value = row["delta"]
+            present = value.isNotNull()
         else:
-            value = self._function_col(proj, window_ms)
-            vals = summary.withColumn("_v", value).select(
-                F.col("ts"), F.col("_v")
-            )
-        if criteria.fill is not None:
-            joined = spine.join(vals, spine.time == F.col("ts"), "left")
-            if criteria.fill == "linear":
-                return self._fill_linear(joined)
-            return joined.select(
-                "time", F.coalesce(F.col("_v"), F.lit(float(criteria.fill))).alias("value")
-            )
-        joined = spine.join(vals, spine.time == F.col("ts"), "inner")
-        return joined.select("time", F.col("_v").alias("value"))
+            value = self._function_col(proj, row, window_ms)
+            present = row.isNotNull()
+        if criteria.fill is None:
+            return value, present
+        known = F.when(present, value)
+        if criteria.fill == "linear":
+            filled = self._fill_linear(known)
+            return filled, filled.isNotNull()
+        return F.coalesce(known, F.lit(float(criteria.fill))), F.lit(True)
 
-    def _project(
+    def _series(
         self,
         proj,
-        trange: TimeRange,
-        summaries: dict[str, DataFrame],
+        structs: dict[str, str],
         criteria: InfluxCriteria,
         window_ms: int,
-    ) -> DataFrame:
-        if isinstance(proj, (Field, Number)):
-            return self._series_values(proj, trange, summaries, criteria, window_ms)
-        if isinstance(proj, Operation):
-            if isinstance(proj.left, Operation) or isinstance(proj.right, Operation):
-                raise QueryExecutionError("Nested operations are not supported yet")
-            left = self._series_values(proj.left, trange, summaries, criteria, window_ms)
-            right = self._series_values(proj.right, trange, summaries, criteria, window_ms)
-            # zipByTimestamp (:203-212): inner equi-join on the bucket ts.
-            joined = left.alias("l").join(right.alias("r"), "time", "inner")
-            lv, rv = F.col("l.value"), F.col("r.value")
-            if proj.operator == "+":
-                value = lv + rv
-            elif proj.operator == "-":
-                value = lv - rv
-            elif proj.operator == "*":
-                value = lv * rv
-            elif proj.operator == "/":
-                # the reference throws on division by zero
-                # (`InfluxAst.scala:86-95`); reject the literal case at
-                # plan time, and fail per-point via a raising expression
-                # otherwise rather than emitting silent nulls
-                if isinstance(proj.right, Number) and float(proj.right.value) == 0.0:
-                    raise QueryExecutionError("Division by zero")
-                value = F.when(rv == 0, F.raise_error(F.lit("Division by zero"))).otherwise(
-                    lv / rv
-                )
-            else:
-                raise QueryExecutionError(f"Unknown operator {proj.operator}")
-            return joined.select("time", value.alias("value"))
-        raise QueryExecutionError(f"Unknown projection {proj!r}")
+    ) -> tuple[Column, Column]:
+        """(value, keep) of one projection per spine bucket. The caller
+        evaluates the value only where keep holds, so a zero divisor in
+        a bucket the series drops raises nothing, as with the reference's
+        inner zip."""
+        if not isinstance(proj, Operation):
+            return self._operand(proj, structs, criteria, window_ms)
+        if isinstance(proj.left, Operation) or isinstance(proj.right, Operation):
+            raise QueryExecutionError("Nested operations are not supported yet")
+        lv, lk = self._operand(proj.left, structs, criteria, window_ms)
+        rv, rk = self._operand(proj.right, structs, criteria, window_ms)
+        if proj.operator == "+":
+            value = lv + rv
+        elif proj.operator == "-":
+            value = lv - rv
+        elif proj.operator == "*":
+            value = lv * rv
+        elif proj.operator == "/":
+            # the reference throws on division by zero
+            # (`InfluxAst.scala:86-95`); reject the literal case at
+            # plan time, and fail per-point via a raising expression
+            # otherwise rather than emitting silent nulls
+            if isinstance(proj.right, Number) and float(proj.right.value) == 0.0:
+                raise QueryExecutionError("Division by zero")
+            value = F.when(rv == 0, F.raise_error(F.lit("Division by zero"))).otherwise(
+                lv / rv
+            )
+        else:
+            raise QueryExecutionError(f"Unknown operator {proj.operator}")
+        return value, lk & rk
 
     def _finalize(self, df: DataFrame, criteria: InfluxCriteria) -> DataFrame:
-        """scale + 4dp HALF_UP rounding + time order (:214-224).
+        """scale + 4dp HALF_UP rounding + (series, time) order (:214-224).
 
-        The time order is a SINGLE-PARTITION sort, not a global orderBy:
-        a global sort range-partitions, which costs a separate boundary-
-        sampling job plus a range exchange PER SERIES — on a ≤700-point
-        rendered series (the same bound `_fill_linear`'s windows already
-        rely on) that is pure overhead at any scale. coalesce(1) narrows
-        the few post-aggregate partitions without a shuffle and the
-        within-partition sort then IS the total order — identical rows,
-        identical order (guide §2.1: remove shuffles the data's shape
-        makes unnecessary)."""
+        The order is a single-partition sort: coalesce(1) narrows the
+        few post-aggregate partitions without a shuffle, and the
+        within-partition sort is then the total order. The rendered
+        rows are bounded (≤700 points per series, G1), so a range
+        exchange and its boundary-sampling job would be pure overhead."""
         value = F.col("value") * F.lit(float(criteria.scale if criteria.scale is not None else 1.0))
-        df = df.select("time", F.round(value, 4).alias("value"))
+        df = df.select(
+            "_sid", "series", "metric", "time", F.round(value, 4).alias("value")
+        )
         order = F.col("time").asc() if criteria.order_asc else F.col("time").desc()
-        return df.coalesce(1).sortWithinPartitions(order)
+        return df.coalesce(1).sortWithinPartitions("_sid", order)

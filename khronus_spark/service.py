@@ -65,18 +65,24 @@ def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple
 
 
 def series_to_json(results) -> list[dict]:
-    """InfluxSeriesResult list → reference wire shape."""
+    """InfluxSeriesResult list → reference wire shape. The series of one
+    query share one plan (`frame`), collected once and split by series
+    in Python; a result without one (`list series`) collects its own
+    (time, name) rows."""
+    points: dict[int, dict[int, list]] = {}
     out = []
     for s in results:
-        rows = s.df.collect()
-        cols = s.df.columns
-        if cols == ["time", "value"]:
-            points = [[int(r["time"]), r["value"]] for r in rows]
-            columns = ["time", s.name]
-        else:  # list_series shape: (time, name)
-            points = [[r[c] for c in cols] for r in rows]
-            columns = list(cols)
-        out.append({"name": s.metric or s.name, "columns": columns, "points": points})
+        if s.frame is None:
+            cols = list(s.df.columns)
+            rows = [[r[c] for c in cols] for r in s.df.collect()]
+        else:
+            if id(s.frame) not in points:
+                by_sid = points[id(s.frame)] = {}
+                for r in s.frame.select("_sid", "time", "value").collect():
+                    by_sid.setdefault(r[0], []).append([int(r[1]), r[2]])
+            cols = ["time", s.name]
+            rows = points[id(s.frame)].get(s.sid, [])
+        out.append({"name": s.metric or s.name, "columns": cols, "points": rows})
     return out
 
 
@@ -106,11 +112,23 @@ class KhronusHttpService:
         )
         self._engine_factory = engine_factory or self._default_engine
         self._dashboards = None
-        # default-engine cache: the catalog scan (distinct over the
-        # landed history) used to run per query; reuse the engine until
-        # new data lands (sequence bumped by _append)
+        # default-engine cache: reuse the engine until new data lands
+        # (sequence bumped by _append)
         self._engine_cache: tuple = (None, -1)
         self._appended_seq = 0
+        # the (metric, mtype) pairs landed so far — the default engine's
+        # catalog, kept by _append so no query rescans the landing
+        # history for it. Only a service started over landed data scans
+        # it, once, here.
+        self._landed: set[tuple[str, str]] = set()
+        if engine_factory is None and any(
+            not n.startswith((".", "_")) for n in os.listdir(landing_path)
+        ):
+            rows = (
+                spark.read.schema(_SCHEMA).parquet(landing_path)
+                .select("metric", "mtype").distinct().collect()
+            )
+            self._landed = {(r["metric"], r["mtype"]) for r in rows}
         self._lock = threading.Lock()
         self._idle = threading.Condition(self._lock)
         self._inflight = 0
@@ -369,7 +387,9 @@ class KhronusHttpService:
         staged = f"{self.landing_path}/.staged-{name}.parquet"
         papq.write_table(table, staged)
         os.rename(staged, f"{self.landing_path}/part-{name}.parquet")
+        pairs = {(r[0], r[1]) for r in rows}
         with self._lock:
+            self._landed |= pairs
             self._appended_seq += 1  # invalidates the cached engine
 
     @property
@@ -386,20 +406,19 @@ class KhronusHttpService:
             return self._dashboards
 
     def _default_engine(self) -> KhronusEngine:
-        """Engine over the landing dir, CACHED until new data lands:
-        the engine's catalog binding runs a distinct() over the landed
-        history, and rebuilding both per dashboard refresh made every
-        query pay a full catalog scan that grows with table age (r13
-        review). The parquet file listing is pinned at DataFrame
-        creation, so the cache must (and does) invalidate on append —
-        `_appended_seq` bumps after each landed batch."""
+        """Engine over the landing dir, CACHED until new data lands: the
+        parquet file listing is pinned at DataFrame creation, so the
+        cache invalidates on append (`_appended_seq` bumps after each
+        landed batch). The catalog is the landed pairs, read under the
+        same lock as the sequence, so building an engine runs no Spark
+        job."""
         with self._lock:
             eng, cached_seq = self._engine_cache
-            seq = self._appended_seq
-        if eng is not None and cached_seq == seq:
-            return eng
+            if eng is not None and cached_seq == self._appended_seq:
+                return eng
+            seq, catalog = self._appended_seq, sorted(self._landed)
         measurements = self.spark.read.schema(_SCHEMA).parquet(self.landing_path)
-        eng = KhronusEngine(self.spark, measurements=measurements)
+        eng = KhronusEngine(self.spark, measurements=measurements, catalog=catalog)
         with self._lock:
             self._engine_cache = (eng, seq)
         return eng

@@ -9,7 +9,9 @@ row-content hash of: `histogram_summary` in its three modes and
 `counter_summary`; the streaming histogram and counter summaries (plan
 only); `rollup_all` and `process_tick`; and `KhronusEngine.sql_union`
 over the perfbench dashboard query mix, against raw measurements and
-against a summary store written by `write_summaries`. With `--sf-dir`
+against a summary store written by `write_summaries`, plus a hash of
+each mix query's wire payload (`series_to_json(engine.sql(q))`,
+`list series` included). With `--sf-dir`
 it also plans two queries over `measurements_from_events` (the NTZ
 time-pushdown path). Expression ids, plan ids, UUIDs, RDD numbers
 and the scratch directory are masked, so two checkouts' snapshots
@@ -28,6 +30,7 @@ import argparse
 import contextlib
 import hashlib
 import io
+import json
 import re
 import shutil
 import sys
@@ -68,6 +71,7 @@ def main() -> None:
     from khronus_spark.functions.summary import counter_summary, histogram_summary
     from khronus_spark.operators.incremental import process_tick
     from khronus_spark.operators.rollup import rollup_all, write_summaries
+    from khronus_spark.service import series_to_json
     from khronus_spark.streaming import ingest
 
     spark = (
@@ -134,6 +138,9 @@ def main() -> None:
         for label, q in dashboard_queries(T0, names):
             if q != "list series":  # not a sql_union shape
                 record(f"{kind} {label}", eng.sql_union(q))
+            payload = json.dumps(series_to_json(eng.sql(q)), sort_keys=True)
+            digest = hashlib.sha256(payload.encode()).hexdigest()
+            out.append(f"===== payload {kind} {label}: {digest}")
 
     if args.sf_dir:
         from khronus_spark.sources.tables import measurements_from_events

@@ -406,6 +406,84 @@ def test_fresh_service_answers_queries_before_first_ingest(spark):
         svc.stop()
 
 
+def _get(svc, q: str):
+    url = f"http://127.0.0.1:{svc.port}/khronus/db/influx/series?q={urllib.parse.quote(q)}"
+    with urllib.request.urlopen(url) as r:
+        return json.loads(r.read())
+
+
+def _post(svc, name: str, mtype: str, ts: int, values: list[int]) -> None:
+    batch = {"metrics": [{"name": name, "mtype": mtype,
+                          "measurements": [{"ts": ts, "values": values}]}]}
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{svc.port}/khronus/metrics",
+        data=json.dumps(batch).encode(), method="POST",
+    )
+    assert urllib.request.urlopen(req).status == 200
+    svc.wait_idle()
+
+
+def test_metric_landed_after_engine_cached_is_listed_and_queryable(spark):
+    """The default engine's catalog is the (metric, mtype) pairs the
+    service has landed: a metric first posted after the engine was
+    cached is listed and queryable on the next GET."""
+    import time as _time
+
+    landing = tempfile.mkdtemp(prefix="khronus_catalog_") + "/in"
+    svc = KhronusHttpService(spark, landing)
+    svc.start()
+    try:
+        now = int(_time.time() * 1000) // 60_000 * 60_000
+        _post(svc, "first.hits", "counter", now - 120_000, [1, 2])
+        listed = _get(svc, "list series")
+        assert [p[1] for p in listed[0]["points"]] == ["first.hits"]
+        assert svc._engine_cache[0] is not None
+
+        _post(svc, "later.latency", "timer", now - 60_000, [5, 7])
+        listed = _get(svc, "list series")
+        assert [p[1] for p in listed[0]["points"]] == ["first.hits", "later.latency"]
+        got = _get(
+            svc,
+            'select count, max from "later.latency" '
+            "where time > now()-1h force group by time(1m)",
+        )
+        assert [s["columns"][1] for s in got] == ["count", "max"]
+        assert got[0]["points"] == [[now - 60_000, 2.0]]
+        assert got[1]["points"] == [[now - 60_000, 7.0]]
+    finally:
+        svc.stop()
+
+
+def test_restarted_service_lists_landed_metrics(spark):
+    """Only a service started over landed data scans the landing dir
+    for its catalog, once, at construction; over an empty dir it runs
+    no Spark job at all."""
+    sc = spark.sparkContext
+    landing = tempfile.mkdtemp(prefix="khronus_restart_") + "/in"
+
+    def build(group):
+        sc.setJobGroup(group, group)
+        try:
+            svc = KhronusHttpService(spark, landing)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return svc, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, jobs = build("restart-empty")
+    assert jobs == 0
+    first._append([("a.hits", "counter", 60_000, 1), ("b.latency", "timer", 60_000, 4)])
+    first._server.server_close()  # never started: nothing to shut down
+
+    svc, jobs = build("restart-landed")
+    assert jobs >= 1  # the one catalog scan
+    svc.start()
+    try:
+        listed = _get(svc, "list series")
+        assert [p[1] for p in listed[0]["points"]] == ["a.hits", "b.latency"]
+    finally:
+        svc.stop()
+
+
 def test_corrupt_gzip_ingest_is_400_not_connection_abort(service):
     import urllib.error
 
