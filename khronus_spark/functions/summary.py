@@ -69,10 +69,20 @@ def family_filter(family: str) -> Column:
     return F.col("mtype").isin(*FAMILY_MTYPES[family])
 
 
-def sketch_aggregates() -> list[Column]:
-    """The bounded-state histogram aggregate over `value` (exact count,
-    min, max, mean; `percentile_approx` sketches) — shared by the batch
-    approx mode and the streaming rollup."""
+#: summary family → its value columns, in store order after (metric, ts)
+FAMILY_FIELDS = {HISTOGRAM: HISTOGRAM_FIELDS, COUNTER: ("count",)}
+
+
+def family_aggregates(family: str) -> list[Column]:
+    """The bounded-state aggregate of one summary family over `value`,
+    shared by `counter_summary`, `histogram_summary(approx=True)` and
+    the streaming rollup: a counter sums its values; a histogram keeps
+    exact count, min, max and mean plus `percentile_approx` sketches.
+    Raises on an unknown family."""
+    if family == COUNTER:
+        return [F.sum("value").alias("count")]
+    if family != HISTOGRAM:
+        raise ValueError(f"Unknown summary family: {family}")
     return [
         F.count("value").alias("count"),
         F.min("value").alias("min"),
@@ -120,33 +130,26 @@ def histogram_summary(
     - approx (`approx=True`): mergeable `percentile_approx` sketch —
       bounded state AND single shuffle, for streaming/latency-first.
     """
+    # NULL values carry no sample in ANY mode, so a bucket with no
+    # non-NULL sample yields no row in all three (without this filter
+    # the array path indexed an EMPTY collected array — an ANSI crash,
+    # and the counts path kept a NULL entry that inflated the count)
+    measurements = measurements.where(F.col("value").isNotNull())
     if exact_counts and not approx:
-        from khronus_spark.operators.hdr_rollup import state_summary
+        from khronus_spark.operators.hdr_rollup import counts_state, state_summary
 
-        raw_state = (
+        raw_state = counts_state(
             measurements.select(
                 "metric", bucket_ts("ts_ms", window_ms), F.col("value").alias("v")
             )
-            # array mode's count("value")/collect_list skip NULLs; the
-            # value-level groupBy would otherwise keep a NULL entry and
-            # inflate _n / null the fold results
-            .where(F.col("v").isNotNull())
-            .groupBy("metric", "ts", "v")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("metric", "ts")
-            .agg(F.array_sort(F.collect_list(F.struct("v", "c"))).alias("hist"))
         )
         return state_summary(raw_state).select("metric", "ts", *HISTOGRAM_FIELDS)
-    # NULL values carry no sample in ANY mode, so a bucket with no
-    # non-NULL sample yields no row in all three (without this filter
-    # the array path indexed an EMPTY collected array — an ANSI crash)
-    measurements = measurements.where(F.col("value").isNotNull())
     grouped = measurements.groupBy(
         F.col("metric"), bucket_ts("ts_ms", window_ms)
     )
     if approx:
-        summary = grouped.agg(*sketch_aggregates())
-        return summary.select("metric", "ts", *HISTOGRAM_FIELDS)
+        summary = grouped.agg(*family_aggregates(HISTOGRAM))
+        return summary.select("metric", "ts", *FAMILY_FIELDS[HISTOGRAM])
 
     agg = grouped.agg(
         F.array_sort(F.collect_list("value")).alias("_vals"),
@@ -168,8 +171,8 @@ def counter_summary(measurements: DataFrame, window_ms: int) -> DataFrame:
     `store/MetricMeasurementStore.scala:100-110`)."""
     return (
         measurements.groupBy(F.col("metric"), bucket_ts("ts_ms", window_ms))
-        .agg(F.sum("value").alias("count"))
-        .select("metric", "ts", "count")
+        .agg(*family_aggregates(COUNTER))
+        .select("metric", "ts", *FAMILY_FIELDS[COUNTER])
     )
 
 

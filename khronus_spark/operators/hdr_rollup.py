@@ -34,16 +34,23 @@ from khronus_spark.functions.summary import PERCENTILE_FRACTIONS, bucket_ts
 
 
 def histogram_state(measurements: DataFrame, window_ms: int) -> DataFrame:
-    """measurements → (metric, ts, hist: array<struct<v,c>> sorted by v)."""
-    counted = (
+    """measurements → (metric, ts, hist: array<struct<v,c>> sorted by v)
+    over the quantized value."""
+    return counts_state(
         measurements.select(
             "metric",
             bucket_ts("ts_ms", window_ms),
             hdr_quantize(F.col("value")).alias("v"),
         )
-        .groupBy("metric", "ts", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
     )
+
+
+def counts_state(samples: DataFrame) -> DataFrame:
+    """(metric, ts, v) samples → (metric, ts, hist: array<struct<v,c>>
+    sorted by v): the (value → count) map of each bucket. The exact
+    counts mode of `functions.summary.histogram_summary` builds it over
+    the raw value."""
+    counted = samples.groupBy("metric", "ts", "v").agg(F.count(F.lit(1)).alias("c"))
     return (
         counted.groupBy("metric", "ts")
         .agg(F.array_sort(F.collect_list(F.struct("v", "c"))).alias("hist"))

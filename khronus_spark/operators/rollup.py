@@ -14,11 +14,13 @@ Design (Spark-first, for 100 TB):
   `README.md:23`). The cascade-equivalence property (summary at R from
   the cascade == summary directly from raw, `model/TimeWindow.scala:96-109`)
   is kept as a test gate.
-- at scale, writing all resolutions in one pass over the data is the win:
-  `rollup_all` caches the 5s pre-grouped layer (A1,
-  `store/MetricMeasurementStore.scala:35-110`) so coarser counter/count
-  aggregates reuse it instead of re-reading raw. Percentile state rolls
-  up exactly (array concat) or via mergeable sketch (approx mode).
+- `rollup_all` aggregates every window independently from the
+  measurements it is given, with the summary functions of
+  `functions/summary.py`; caching that scan is the caller's choice. It
+  neither reads the 5s pre-grouped layer (`pregroup_raw`, A1,
+  `store/MetricMeasurementStore.scala:35-110`) nor merges percentile
+  state across windows: rolling histogram states up a cascade is
+  `operators/hdr_rollup.py`.
 - summaries are written partitioned by resolution, sorted by
   (metric, ts) within files, so query-side scans prune partitions and
   push (metric, ts) filters to parquet — the Spark analogue of the
@@ -293,27 +295,19 @@ def compact_partition_txn(
     partition does not exist. `sort_cols` is the global file order —
     (metric, ts) for the summary store; other TxnTables (e.g. the
     streaming SCD2 fact/dim buckets) pass their own keys."""
-    from khronus_spark.sources.txnlog import CommitConflict
+    from khronus_spark.sources.txnlog import commit_optimistically
 
-    for _ in range(8):
-        version = table.version()
+    def derive(version: int) -> dict[str, DataFrame] | None:
         df = table.read_partition(spark, key, version)
         if df is None:
             return None
-        compacted = df.repartitionByRange(
-            n_files, *sort_cols
-        ).sortWithinPartitions(*sort_cols)
-        try:
-            # kind="compaction": content-preserving by construction
-            # (read at the pinned version, rewrite, CAS) — which is
-            # what lets concurrent partition-scoped data commits
-            # override it instead of starving (txnlog.commit docstring)
-            return table.commit(
-                {key: compacted},
-                expect_version=version,
-                kind="compaction",
-                conflict_scope="partitions",
-            )
-        except CommitConflict:
-            continue
-    raise RuntimeError("compaction lost 8 CAS rounds; partition too hot")
+        return {
+            key: df.repartitionByRange(n_files, *sort_cols)
+            .sortWithinPartitions(*sort_cols)
+        }
+
+    # kind="compaction": content-preserving by construction (read at
+    # the pinned version, rewrite, CAS) — which is what lets concurrent
+    # partition-scoped data commits override it instead of starving
+    # (txnlog.commit docstring)
+    return commit_optimistically(table, derive, kind="compaction")

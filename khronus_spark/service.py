@@ -296,14 +296,14 @@ class KhronusHttpService:
 
                 length = int(self.headers.get("Content-Length", 0))
                 if length > INGEST_BODY_LIMIT:
-                    self.send_error(413)
+                    self._respond_error(
+                        413, f"dashboard body over {INGEST_BODY_LIMIT} bytes"
+                    )
                     return
-                # client errors and server failures split (r13 review):
-                # a disk-full/Spark failure used to answer 400 — a
-                # permanent-looking CLIENT error the client won't
-                # retry, losing the dashboard — through send_error,
-                # whose HTML page also lacks the CORS header every
-                # sibling route deliberately adds
+                # client errors answer 400 and server failures 500 (a
+                # 400 for a disk-full/Spark failure reads as permanent,
+                # so the client would drop the dashboard); every answer
+                # goes through _respond_error, whose body carries CORS
                 try:
                     dashboards = json.loads(self.rfile.read(length))
                 except Exception as e:

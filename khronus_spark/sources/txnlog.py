@@ -64,6 +64,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -470,6 +471,42 @@ class TxnTable:
             if not os.listdir(tdir):
                 os.rmdir(tdir)
         return deleted
+
+
+#: lost compare-and-swap rounds after which an optimistic commit gives up
+CAS_ROUNDS = 8
+
+
+def commit_optimistically(
+    table: TxnTable,
+    derive: Callable[[int], dict[str, DataFrame | None] | None],
+    kind: str = "data",
+) -> int | None:
+    """The optimistic read-modify-write loop of every snapshot-derived
+    writer: derive the partitions to commit from the latest version
+    (`derive(version)`), compare-and-swap them against it with
+    partition-scoped conflicts (`TxnTable.commit`), and on
+    `CommitConflict` derive again from the new version. Returns the
+    committed version, or None when `derive` returns None. Raises
+    RuntimeError after `CAS_ROUNDS` lost rounds, having committed
+    nothing."""
+    for _ in range(CAS_ROUNDS):
+        version = table.version()
+        parts = derive(version)
+        if parts is None:
+            return None
+        try:
+            return table.commit(
+                parts,
+                expect_version=version,
+                kind=kind,
+                conflict_scope="partitions",
+            )
+        except CommitConflict:
+            continue
+    raise RuntimeError(
+        f"optimistic commit lost {CAS_ROUNDS} CAS rounds; table too hot"
+    )
 
 
 def change_feed(

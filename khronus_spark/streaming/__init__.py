@@ -1,5 +1,4 @@
 from khronus_spark.streaming.ingest import (  # noqa: F401
     run_streaming_rollup,
-    streaming_counter_summary,
-    streaming_histogram_summary,
+    streaming_summary,
 )

@@ -17,10 +17,19 @@ Structured Streaming primitives:
 | idempotent set-upsert (T5)        | append-after-watermark + checkpoint (Delta MERGE at scale) |
 | consistent-hash worker affinity (T6) | shuffle partitioning on the group key |
 
-Aggregation state per (metric, bucket) is bounded: counters keep a sum;
-histograms keep count/min/max/sum plus a `percentile_approx` sketch —
-mergeable and fixed-size, which is what makes this viable at 100 TB
-(the exact collect-values path is for batch/backfill only).
+A streaming rollup is the batch rollup run incrementally, not a second
+implementation of it: `streaming_summary` groups by the tumbling bucket
+and applies the family's aggregate from `functions/summary.py`
+(`family_aggregates`, the one `counter_summary` and the batch approx
+mode use). Its state per (metric, bucket) is bounded: counters keep a
+sum; histograms keep count/min/max/sum plus a `percentile_approx`
+sketch — mergeable and fixed-size, which is what makes this viable at
+100 TB (the exact collect-values path is for batch/backfill only).
+
+The upsert sinks merge each micro-batch's amended buckets by
+(metric, ts) into day-partitioned parquet (`upsert_sink`) or a
+`sources.txnlog.TxnTable` (`txn_upsert_sink`, through
+`commit_optimistically`).
 """
 
 from __future__ import annotations
@@ -28,12 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import (
-    COUNTER,
-    HISTOGRAM,
-    HISTOGRAM_FIELDS,
-    sketch_aggregates,
-)
+from khronus_spark.functions.summary import FAMILY_FIELDS, family_aggregates
 from khronus_spark.operators.rollup import store_key
 from khronus_spark.timegrid import duration_to_spark_interval, format_duration
 
@@ -43,57 +47,29 @@ def _with_event_time(measurements: DataFrame) -> DataFrame:
     return measurements.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
 
 
-def streaming_counter_summary(
+def streaming_summary(
     measurements: DataFrame,
     window_ms: int,
+    family: str,
     watermark: str = "30 seconds",
 ) -> DataFrame:
-    """Streaming CounterSummary: (metric, ts, count) per tumbling bucket,
-    finalized once the watermark passes the bucket end."""
+    """The streaming summary of one family: the batch rollup's bounded
+    aggregate (`functions.summary.family_aggregates`) per tumbling
+    bucket, finalized once the watermark passes the bucket end. Raises
+    on an unknown family before touching `measurements`."""
+    aggregates = family_aggregates(family)
     interval = duration_to_spark_interval(window_ms)
     return (
         _with_event_time(measurements)
         .withWatermark("ts", watermark)
         .groupBy(F.col("metric"), F.window("ts", interval).alias("w"))
-        .agg(F.sum("value").alias("count"))
+        .agg(*aggregates)
         .select(
-            "metric", F.unix_millis(F.col("w.start")).alias("ts"), F.col("count")
+            "metric",
+            F.unix_millis(F.col("w.start")).alias("ts"),
+            *FAMILY_FIELDS[family],
         )
     )
-
-
-def streaming_histogram_summary(
-    measurements: DataFrame,
-    window_ms: int,
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Streaming HistogramSummary: the batch approx mode's sketch
-    aggregate (`functions.summary.sketch_aggregates`) per tumbling
-    bucket — bounded state per (metric, bucket), unlike the exact batch
-    path."""
-    interval = duration_to_spark_interval(window_ms)
-    return (
-        _with_event_time(measurements)
-        .withWatermark("ts", watermark)
-        .groupBy(F.col("metric"), F.window("ts", interval).alias("w"))
-        .agg(*sketch_aggregates())
-        .select(
-            "metric", F.unix_millis(F.col("w.start")).alias("ts"), *HISTOGRAM_FIELDS
-        )
-    )
-
-
-def _streaming_summary(
-    family: str, measurements: DataFrame, window_ms: int, watermark: str
-) -> DataFrame:
-    """The streaming summary of one family; raises on an unknown one."""
-    summarize = {
-        HISTOGRAM: streaming_histogram_summary,
-        COUNTER: streaming_counter_summary,
-    }
-    if family not in summarize:
-        raise ValueError(f"Unknown summary family: {family}")
-    return summarize[family](measurements, window_ms, watermark)
 
 
 def run_streaming_rollup(
@@ -126,7 +102,7 @@ def run_streaming_rollup(
     land); expect a bounded tail of later data to still land, and add
     ~2 trigger intervals to any end-to-end freshness budget.
     """
-    summaries = _streaming_summary(family, measurements, window_ms, watermark)
+    summaries = streaming_summary(measurements, window_ms, family, watermark)
     return (
         summaries.writeStream.outputMode("append")
         .format("parquet")
@@ -267,7 +243,7 @@ def txn_upsert_sink(table, export_delta: bool = False):
     Delta log one version behind, which the NEXT trigger's export
     catches up (the immutability/incrementality contract makes the
     catch-up indistinguishable from never having lagged)."""
-    from khronus_spark.sources.txnlog import CommitConflict
+    from khronus_spark.sources.txnlog import commit_optimistically
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
@@ -281,8 +257,8 @@ def txn_upsert_sink(table, export_delta: bool = False):
         if not days:
             return
         new_keys = batch.select("metric", "ts").distinct()
-        for _ in range(8):
-            version = table.version()
+
+        def derive(version: int) -> dict[str, DataFrame]:
             parts = {}
             for d in days:
                 key = f"day={d}"
@@ -291,18 +267,12 @@ def txn_upsert_sink(table, export_delta: bool = False):
                 if existing is not None:
                     part = _replace_rows(existing, part, new_keys)
                 parts[key] = part
-            try:
-                # partition-scoped CAS: racing compactions and
-                # disjoint-day writers never cost a re-merge (only a
-                # data commit on a touched day does)
-                table.commit(
-                    parts, expect_version=version, conflict_scope="partitions"
-                )
-                break
-            except CommitConflict:
-                continue  # an external writer moved the table: re-merge
-        else:
-            raise RuntimeError("txn upsert lost 8 CAS rounds; table too hot")
+            return parts
+
+        # partition-scoped CAS: racing compactions and disjoint-day
+        # writers never cost a re-merge (only a data commit on a
+        # touched day does)
+        commit_optimistically(table, derive)
         if export_delta:
             from khronus_spark.sources.delta_export import export_delta_log
 
@@ -328,7 +298,7 @@ def run_streaming_rollup_upsert(
     (metric, ts) — the reference's idempotent set-upsert semantics
     (`model/TimeWindowChain.scala:42-55`) without append mode's
     watermark-delayed finalization."""
-    summaries = _streaming_summary(family, measurements, window_ms, watermark)
+    summaries = streaming_summary(measurements, window_ms, family, watermark)
     return (
         summaries.writeStream.outputMode("update")
         .foreachBatch(upsert_sink(store_path))
@@ -356,7 +326,7 @@ def run_streaming_rollup_upsert_txn(
     tests. `export_delta=True` keeps `<root>/_delta_log` current with
     every commit inside the same trigger (byte-identical to a post-hoc
     export; see `txn_upsert_sink`)."""
-    summaries = _streaming_summary(family, measurements, window_ms, watermark)
+    summaries = streaming_summary(measurements, window_ms, family, watermark)
     return (
         summaries.writeStream.outputMode("update")
         .foreachBatch(txn_upsert_sink(table, export_delta=export_delta))

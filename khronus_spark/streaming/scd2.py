@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from khronus_spark.operators.scd2 import WEEK_MS, scd2_intervals
-from khronus_spark.sources.txnlog import CommitConflict, TxnTable
+from khronus_spark.sources.txnlog import TxnTable, commit_optimistically
 
 _FACT_COLS = ["event_id", "user_id", "ts", "event_type"]
 
@@ -148,8 +148,8 @@ def scd2_upsert_sink(
             return
         batch_users = batch.select("user_id").distinct()
         new_ids = batch.select("event_id")
-        for _ in range(8):
-            version = table.version()
+
+        def derive(version: int) -> dict[str, DataFrame]:
             parts: dict[str, DataFrame] = {}
             merged_by_bucket: dict[int, DataFrame] = {}
             replaced_users = None
@@ -202,21 +202,16 @@ def scd2_upsert_sink(
                     )
                     new_dim = kept.unionByName(new_dim)
                 parts[f"dim/bucket={b}"] = new_dim.coalesce(bucket_files)
-            try:
-                # partition-scoped CAS: the merge window here is LONG
-                # (touched-user chain rebuild), so table-scoped CAS
-                # starves under any short-cadence concurrent committer
-                # — the round-9 soak measured exactly that (8 straight
-                # losses to a 10 s compactor). Compaction-kind and
-                # disjoint-bucket commits re-link the staged result;
-                # only a data commit on a touched bucket re-merges.
-                table.commit(
-                    parts, expect_version=version, conflict_scope="partitions"
-                )
-                return
-            except CommitConflict:
-                continue  # an external writer moved the table: re-merge
-        raise RuntimeError("scd2 upsert lost 8 CAS rounds; table too hot")
+            return parts
+
+        # partition-scoped CAS: the merge window here is LONG
+        # (touched-user chain rebuild), so table-scoped CAS starves
+        # under any short-cadence concurrent committer — the round-9
+        # soak measured exactly that (8 straight losses to a 10 s
+        # compactor). Compaction-kind and disjoint-bucket commits
+        # re-link the staged result; only a data commit on a touched
+        # bucket re-merges.
+        commit_optimistically(table, derive)
 
     return merge
 

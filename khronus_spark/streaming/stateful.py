@@ -11,6 +11,14 @@ passes the bucket end (the reference's tick-delay, `model/Tick.scala:
 12-19`). Late samples inside the watermark merge into live state;
 `Histogram.add` semantics fall out of count addition.
 
+Only the merge is streaming-specific. Values are quantized with the
+batch quantizer (`functions.hdr.hdr_quantize`) before the group, the
+pandas state function merges (value → count) maps and emits a finalized
+group's map, and the summary is the batch state's rank walk
+(`operators.hdr_rollup.state_summary`) run as a stateless projection
+after the stateful operator — so every emitted row equals
+`state_summary(histogram_state(...))` over the same samples.
+
 Why this shape at 100 TB: state per group is bounded by the number of
 distinct quantized values (≈ few thousand entries) regardless of sample
 volume, and the state store shards by group key — the consistent-hash
@@ -26,16 +34,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from khronus_spark.functions.hdr import HIGHEST_TRACKABLE, SUB_BUCKET_COUNT
-from khronus_spark.functions.summary import HISTOGRAM_FIELDS, PERCENTILE_FRACTIONS
+from khronus_spark.functions.hdr import hdr_quantize
+from khronus_spark.operators.hdr_rollup import state_summary
 
 STATE_SCHEMA = StructType(
     [
@@ -43,41 +45,6 @@ STATE_SCHEMA = StructType(
         StructField("counts", ArrayType(LongType())),
     ]
 )
-
-SUMMARY_SCHEMA = StructType(
-    [StructField("metric", StringType()), StructField("ts", LongType())]
-    + [StructField(f, LongType()) for f in HISTOGRAM_FIELDS]
-)
-
-
-def _quantize_np(v: np.ndarray) -> np.ndarray:
-    """hdr_quantize (functions/hdr.py) over a numpy long array."""
-    clamped = np.minimum(v.astype(np.int64), HIGHEST_TRACKABLE)
-    rng = np.where(
-        clamped < SUB_BUCKET_COUNT,
-        np.int64(1),
-        np.exp2(np.floor(np.log2(np.maximum(clamped, 1))) - 10).astype(np.int64),
-    )
-    return (clamped // rng + 1) * rng - 1
-
-
-def _summary_row(metric: str, ts: int, values: np.ndarray, counts: np.ndarray):
-    """Histogram map → the 11-field summary row (same discrete-percentile
-    convention as hdr_rollup.state_summary: first value whose cumulative
-    count reaches ceil(frac · total))."""
-    order = np.argsort(values)
-    values, counts = values[order], counts[order]
-    total = int(counts.sum())
-    cum = np.cumsum(counts)
-    row = {"metric": metric, "ts": ts}
-    for name, frac in PERCENTILE_FRACTIONS.items():
-        need = max(1, int(np.ceil(float(frac) * total)))
-        row[name] = int(values[int(np.searchsorted(cum, need))])
-    row["min"] = int(values[0])
-    row["max"] = int(values[-1])
-    row["count"] = total
-    row["mean"] = int((values * counts).sum()) // total
-    return row
 
 
 def stateful_histogram_summaries(
@@ -99,11 +66,7 @@ def stateful_histogram_summaries(
             (values, counts) = state.get
             state.remove()
             yield pd.DataFrame(
-                [
-                    _summary_row(
-                        metric, ts, np.asarray(values), np.asarray(counts)
-                    )
-                ]
+                [{"metric": metric, "ts": ts, "values": values, "counts": counts}]
             )
             return
 
@@ -112,8 +75,7 @@ def stateful_histogram_summaries(
             (values, counts) = state.get
             merged = dict(zip(values, counts))
         for pdf in pdfs:
-            q = _quantize_np(pdf["value"].to_numpy())
-            vals, cnts = np.unique(q, return_counts=True)
+            vals, cnts = np.unique(pdf["v"].to_numpy(), return_counts=True)
             for v, c in zip(vals.tolist(), cnts.tolist()):
                 merged[v] = merged.get(v, 0) + c
         state.update((list(merged.keys()), list(merged.values())))
@@ -129,13 +91,27 @@ def stateful_histogram_summaries(
             "bucket_ts",
             (F.col("ts_ms") / window_ms).cast("long") * window_ms,
         )
+        .withColumn("v", hdr_quantize(F.col("value")))
     )
-    return with_bucket.groupBy("metric", "bucket_ts").applyInPandasWithState(
+    states = with_bucket.groupBy("metric", "bucket_ts").applyInPandasWithState(
         update,
-        outputStructType=SUMMARY_SCHEMA,
+        # a finalized group emits its state; state_summary reads it below
+        outputStructType=(
+            "metric string, ts long, values array<long>, counts array<long>"
+        ),
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    return state_summary(
+        states.select(
+            "metric",
+            "ts",
+            F.expr(
+                "array_sort(zip_with(values, counts, "
+                "(v, c) -> named_struct('v', v, 'c', c)))"
+            ).alias("hist"),
+        )
     )
 
 

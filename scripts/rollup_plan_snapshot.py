@@ -7,9 +7,10 @@ Usage: python scripts/rollup_plan_snapshot.py <out.txt> [--sf-dir DIR]
 Writes, for the checkout this script lives in, the formatted plan and a
 row-content hash of: `histogram_summary` in its three modes and
 `counter_summary`; the streaming histogram and counter summaries (plan
-only); `rollup_all` and `process_tick`; and `KhronusEngine.sql_union`
-over the perfbench dashboard query mix, against raw measurements and
-against a summary store written by `write_summaries`, plus a hash of
+only); the rows `run_stateful_rollup` emits; `rollup_all` and
+`process_tick`; and `KhronusEngine.sql_union` over the perfbench
+dashboard query mix, against raw measurements and against a summary
+store written by `write_summaries`, plus a hash of
 each mix query's wire payload (`series_to_json(engine.sql(q))`,
 `list series` included). With `--sf-dir`
 it also plans two queries over `measurements_from_events` (the NTZ
@@ -58,6 +59,13 @@ _MASKS = (
 )
 
 
+def _digest(df) -> str:
+    """Row count and a hash of the sorted rows."""
+    rs = sorted(repr(tuple(r)) for r in df.collect())
+    digest = hashlib.sha256("\n".join(rs).encode()).hexdigest()
+    return f"{len(rs)} {digest}"
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out")
@@ -65,6 +73,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from gen import dashboard_queries
     from khronus_spark.engine import KhronusEngine
@@ -73,6 +82,7 @@ def main() -> None:
     from khronus_spark.operators.rollup import rollup_all, write_summaries
     from khronus_spark.service import series_to_json
     from khronus_spark.streaming import ingest
+    from khronus_spark.streaming.stateful import run_stateful_rollup
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -93,9 +103,7 @@ def main() -> None:
             text = pat.sub(repl, text)
         out.append(f"===== {label}\n{text}")
         if rows:
-            rs = sorted(repr(tuple(r)) for r in df.collect())
-            digest = hashlib.sha256("\n".join(rs).encode()).hexdigest()
-            out.append(f"===== rows {label}: {len(rs)} {digest}")
+            out.append(f"===== rows {label}: {_digest(df)}")
 
     # 20k samples over one day: 1-minute slots in a scrambled order,
     # spread over the seconds of the minute
@@ -111,9 +119,25 @@ def main() -> None:
     record("hist_approx", histogram_summary(m, 30_000, approx=True))
     record("counter", counter_summary(m, 60_000))
     stream = spark.readStream.schema(SCHEMA).parquet(f"{tmp}/m")
+    if hasattr(ingest, "streaming_summary"):
+        stream_hist = ingest.streaming_summary(stream, 30_000, "histogram")
+        stream_counter = ingest.streaming_summary(stream, 60_000, "counter")
+    else:  # checkouts from before the one streaming builder
+        stream_hist = ingest.streaming_histogram_summary(stream, 30_000)
+        stream_counter = ingest.streaming_counter_summary(stream, 60_000)
     # a streaming frame can be planned but not collected
-    record("stream_hist", ingest.streaming_histogram_summary(stream, 30_000), False)
-    record("stream_counter", ingest.streaming_counter_summary(stream, 60_000), False)
+    record("stream_hist", stream_hist, False)
+    record("stream_counter", stream_counter, False)
+    # the stateful operator's plan carries its Python UDF, so only its
+    # emitted rows are compared
+    q = run_stateful_rollup(
+        stream.where(F.col("mtype").isin("timer", "gauge")),
+        out_path=f"{tmp}/stateful",
+        checkpoint_path=f"{tmp}/stateful_ckpt",
+        window_ms=300_000,
+    )
+    q.awaitTermination()
+    out.append(f"===== rows stateful: {_digest(spark.read.parquet(f'{tmp}/stateful'))}")
     for w, fams in rollup_all(m, (30_000, 300_000)).items():
         for family, df in fams.items():
             record(f"rollup_all {w} {family}", df)

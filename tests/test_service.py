@@ -122,6 +122,28 @@ def test_oversized_ingest_body_is_413(service):
         assert r.status == 200
 
 
+def test_oversized_dashboard_body_is_413_with_cors(service):
+    """An oversized dashboard POST is refused like every other dashboard
+    error: a 413 that carries the CORS header, so a browser can read it."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", service.port, timeout=30)
+    try:
+        # announce a body 1 byte over the 2 MB cap and send none of it:
+        # the server answers from the headers alone
+        conn.putrequest("POST", "/khronus/db/influx/dashboards/series")
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", str(2 * 1024 * 1024 + 1))
+        conn.endheaders()
+        resp = conn.getresponse()
+    except ConnectionError:
+        return  # transport-level refusal
+    finally:
+        conn.close()
+    assert resp.status == 413
+    assert resp.getheader("Access-Control-Allow-Origin") == "*"
+
+
 def test_stress_batch_shape_and_determinism():
     """scripts/stress.py (the khronus-stress analogue) must emit
     reference-shaped MetricBatch JSON deterministically per worker."""

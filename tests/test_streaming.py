@@ -338,6 +338,105 @@ def test_upsert_store_complete_and_idempotent(spark, staged):
     assert again == expected
 
 
+def test_upsert_rollup_job_budget(spark, staged, tmp_path):
+    """Job budget of the counter upsert rollup over two landed files,
+    one per trigger: on a fresh store, then again from a new checkpoint
+    over the store the first run left (each batch then merges with the
+    stored days). A change that adds a job per batch fails here."""
+    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
+
+    tmp, schema, batch_m = staged
+    land = str(tmp_path / "land")
+    counters = batch_m.where(F.col("mtype") == "counter")
+    mid = counters.agg(F.median("ts_ms")).first()[0]
+    counters.where(F.col("ts_ms") < mid).coalesce(1).write.parquet(land)
+    counters.where(F.col("ts_ms") >= mid).coalesce(1).write.mode(
+        "append"
+    ).parquet(land)
+    sc = spark.sparkContext
+
+    def jobs(ckpt):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(land)
+        )
+        q = run_streaming_rollup_upsert(
+            stream.where(F.col("mtype") == "counter"),
+            store_path=str(tmp_path / "store"),
+            checkpoint_path=str(tmp_path / ckpt),
+            window_ms=300_000,
+            family="counter",
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None and len(q.recentProgress) >= 2
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        # the micro-batches' jobs run under the query's run id
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    # measured with this suite's session (local[8], 8 shuffle partitions)
+    assert (jobs("ckpt1"), jobs("ckpt2")) == (8, 9)
+
+
+def test_upsert_rollup_is_shuffle_partition_invariant(spark, staged, tmp_path):
+    """The upsert rollup under 1 and 7 shuffle partitions, each from its
+    own checkpoint: the counter stores are identical and equal the
+    batch counter_summary; the histogram stores agree exactly with each
+    other and with the batch histogram_summary on count/min/max/mean,
+    and their sketch percentiles stay within the tolerance of
+    test_streaming_histogram_rollup_runs."""
+    from khronus_spark.functions.summary import family_filter
+    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
+
+    tmp, schema, batch_m = staged
+    windows = {"counter": 300_000, "histogram": 3_600_000}
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    stores = {}
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            for family, window_ms in windows.items():
+                stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
+                q = run_streaming_rollup_upsert(
+                    stream.where(family_filter(family)),
+                    store_path=str(tmp_path / f"{family}{n}"),
+                    checkpoint_path=str(tmp_path / f"ckpt_{family}{n}"),
+                    window_ms=window_ms,
+                    family=family,
+                )
+                q.awaitTermination(120)
+                rows = spark.read.parquet(str(tmp_path / f"{family}{n}")).collect()
+                stores[family, n] = {
+                    (r["metric"], r["ts"]): r.asDict() for r in rows
+                }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    counters = {
+        (r["metric"], r["ts"]): r["count"]
+        for r in counter_summary(
+            batch_m.where(family_filter("counter")), windows["counter"]
+        ).collect()
+    }
+    for n in (1, 7):
+        assert {k: r["count"] for k, r in stores["counter", n].items()} == counters
+
+    hists = {
+        (r["metric"], r["ts"]): r
+        for r in histogram_summary(
+            batch_m.where(family_filter("histogram")), windows["histogram"]
+        ).collect()
+    }
+    assert set(stores["histogram", 1]) == set(stores["histogram", 7]) == set(hists)
+    for key, e in hists.items():
+        for n in (1, 7):
+            r = stores["histogram", n][key]
+            for f in ("count", "min", "max", "mean"):
+                assert r[f] == e[f], (key, n, f, r[f], e[f])
+            for p in ALL_PERCENTILES:
+                assert abs(r[p] - e[p]) <= max(2, 0.05 * e[p]), (key, n, p, r[p], e[p])
+
+
 def test_upsert_store_survives_preprovisioned_empty_dir(spark, staged):
     """r13 review finding: a store dir that EXISTS but holds no
     committed day partitions (ops pre-created it, or the first batch's

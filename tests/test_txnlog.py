@@ -14,7 +14,11 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from khronus_spark.sources.txnlog import CommitConflict, TxnTable
+from khronus_spark.sources.txnlog import (
+    CommitConflict,
+    TxnTable,
+    commit_optimistically,
+)
 
 
 def _df(spark, rows):
@@ -424,6 +428,30 @@ def test_compaction_retries_past_disjoint_and_compaction_commits(spark, tmp_path
     assert ver == t.version()
     assert _rows(t.read_partition(spark, "a")) == [(1, "a"), (2, "b")]
     assert _rows(t.read_partition(spark, "other")) == [(8, "o2")]
+
+
+def test_optimistic_commit_gives_up_after_eight_lost_rounds(spark, tmp_path):
+    """The optimistic commit loop shared by the txn upsert sink, the
+    streaming SCD2 sink and compact_partition_txn re-derives after every
+    CommitConflict, and raises after 8 lost rounds without committing."""
+    t = TxnTable(str(tmp_path / "t"))
+    t.commit({"a": _df(spark, [(0, "base")])})
+    snapshots = []
+
+    def derive(version):
+        snapshots.append(version)
+        # a racing writer lands a data commit on the touched key after
+        # every snapshot read, so every compare-and-swap loses
+        t.commit({"a": _df(spark, [(len(snapshots), "racer")])})
+        return {"a": _df(spark, [(-1, "ours")])}
+
+    with pytest.raises(RuntimeError, match="lost 8 CAS rounds"):
+        commit_optimistically(t, derive)
+    # each round re-derived from the version the racer left behind
+    assert snapshots == list(range(1, 9))
+    # every version is the base commit or a racer: nothing of ours landed
+    assert t.version() == 9
+    assert _rows(t.read_partition(spark, "a")) == [(8, "racer")]
 
 
 # ----------------------------------------------- change feed (CDC)
