@@ -10,7 +10,10 @@ Here:
 - the rollup cascade is a set of DataFrame aggregations (operators/rollup.py)
 - the query language is parsed in pure Python (parser/) and compiled to a
   DataFrame plan (plans/executor.py) that Catalyst optimizes
-- ingestion is batch append or Structured Streaming (streaming/ingest.py)
+- ingestion is batch append or Structured Streaming; the streaming rollup
+  upserts each resolution's summaries by (metric, ts) into a
+  day-partitioned parquet store (streaming/ingest.py), the one summary
+  store the engine reads
 - the large-scale training-data operators (dedup, similarity search, text
   analysis, multimodal plumbing) live in operators/
 

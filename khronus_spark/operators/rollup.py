@@ -117,32 +117,6 @@ def read_summaries(
     return spark.read.parquet(f"{base_path}/{store_key(family, window_ms)}")
 
 
-def write_summaries_txn(rollups: dict[int, dict[str, DataFrame]], table) -> int:
-    """The transactional face of `write_summaries`: every
-    (family, resolution) partition of the rollup lands in ONE commit of
-    a `sources.txnlog.TxnTable` — readers see the whole rollup tick or
-    none of it (the reference's effectively-once store contract,
-    `store/BucketStore.scala:159-172`, without delta-spark in the
-    container), concurrent writers are safe (optimistic commit), and
-    retention becomes a partition-drop commit instead of a filtered
-    rewrite. Same `_store_layout` as the plain writer. Returns the
-    committed version."""
-    return table.commit(
-        {
-            store_key(family, w): _store_layout(df)
-            for w, fams in rollups.items()
-            for family, df in fams.items()
-        }
-    )
-
-
-def read_summaries_txn(
-    spark: SparkSession, table, family: str, window_ms: int,
-    version: int | None = None,
-) -> DataFrame | None:
-    return table.read_partition(spark, store_key(family, window_ms), version)
-
-
 def apply_retention(
     spark: SparkSession,
     base_path: str,
@@ -174,13 +148,17 @@ def compact_summaries(
     partitioning gives GLOBAL (metric, ts) order across files, so every
     file covers a disjoint key span and parquet min/max skipping stays
     maximally selective (tighter than the write path's hash-by-metric,
-    which interleaves ts ranges across files).
+    which interleaves ts ranges across files). A streaming upsert store
+    (`streaming/ingest.py::upsert_sink`) keeps its `day=` partitions:
+    its next micro-batch merges into them, so a flat rewrite would hide
+    every day that batch does not touch.
 
     The swap is delete-then-rename via the Hadoop FileSystem API —
     effectively atomic on HDFS renames, NOT transactional on object
     stores; a production deployment on S3/GCS would compact through a
-    table format with commits (Delta/Iceberg — not in this container).
-    Returns the number of files written.
+    table format with commits (Delta/Iceberg — not a dependency here).
+    Returns the number of range partitions written (the file count of
+    a store without day partitions).
     """
     path = f"{base_path}/{store_key(family, window_ms)}"
     jvm = spark._jvm
@@ -188,15 +166,20 @@ def compact_summaries(
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(hpath).getLength()
     n_files = max(1, -(-int(total_bytes) // target_bytes_per_file))
+    by_day = any(
+        st.isDirectory() and st.getPath().getName().startswith("day=")
+        for st in fs.listStatus(hpath)
+    )
+    order = ("day", "metric", "ts") if by_day else ("metric", "ts")
 
     df = spark.read.parquet(path)
     tmp = f"{path}._compacting"
-    (
-        df.repartitionByRange(n_files, "metric", "ts")
-        .sortWithinPartitions("metric", "ts")
+    writer = (
+        df.repartitionByRange(n_files, *order)
+        .sortWithinPartitions(*order)
         .write.mode("overwrite")
-        .parquet(tmp)
     )
+    (writer.partitionBy("day") if by_day else writer).parquet(tmp)
     fs.delete(hpath, True)
     if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath):
         raise RuntimeError(f"compaction rename failed for {path}")
@@ -293,8 +276,8 @@ def compact_partition_txn(
     Readers pinned to older versions keep their snapshot (immutable
     staging). Returns the committed version, or None when the
     partition does not exist. `sort_cols` is the global file order —
-    (metric, ts) for the summary store; other TxnTables (e.g. the
-    streaming SCD2 fact/dim buckets) pass their own keys."""
+    (metric, ts) by default; other tables (e.g. the streaming SCD2
+    fact/dim buckets) pass their own keys."""
     from khronus_spark.sources.txnlog import commit_optimistically
 
     def derive(version: int) -> dict[str, DataFrame] | None:

@@ -193,6 +193,18 @@ class KhronusHttpService:
                 self.end_headers()
                 self.wfile.write(body)
 
+            def _body_length(self) -> int | None:
+                """The request's Content-Length (0 when absent), or None
+                after answering 400 for a value that is not a decimal
+                digit string: `rfile.read(-1)` reads to EOF past the
+                body limit, and a non-numeric value must not abort the
+                handler with no response."""
+                value = self.headers.get("Content-Length", "0").strip()
+                if value.isascii() and value.isdigit():
+                    return int(value)
+                self._respond_error(400, f"bad Content-Length: {value!r}")
+                return None
+
             def do_OPTIONS(self):
                 """CORS preflight (r13 review): a browser POSTing JSON
                 cross-origin sends OPTIONS first; the default handler
@@ -220,7 +232,9 @@ class KhronusHttpService:
                 if path != "/khronus/metrics":
                     self.send_error(404)
                     return
-                length = int(self.headers.get("Content-Length", 0))
+                length = self._body_length()
+                if length is None:
+                    return
                 if length > INGEST_BODY_LIMIT:
                     # reference `request-chunk-aggregation-limit = 2m`
                     # (reference.conf:159): oversized batches are refused
@@ -294,7 +308,9 @@ class KhronusHttpService:
             def _post_dashboard(self):
                 from khronus_spark.sources.dashboards import store_dashboard_wire
 
-                length = int(self.headers.get("Content-Length", 0))
+                length = self._body_length()
+                if length is None:
+                    return
                 if length > INGEST_BODY_LIMIT:
                     self._respond_error(
                         413, f"dashboard body over {INGEST_BODY_LIMIT} bytes"

@@ -256,9 +256,7 @@ def export_delta_log(
     # ONE snapshot replay to seed the live map, then one commit read
     # per exported version (`_apply_commit`, change_feed's incremental
     # step) — the old per-version snapshot_files pair re-replayed the
-    # whole log twice per version, so a backlog export was O(V^2) and
-    # the per-trigger streaming export grew with table age (r13
-    # review)
+    # whole log twice per version, so a backlog export was O(V^2)
     from khronus_spark.sources.txnlog import _apply_commit
 
     live = dict(table.snapshot_files(start_txn - 1)) if start_txn > 1 else {}

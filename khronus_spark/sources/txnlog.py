@@ -1,17 +1,18 @@
 """A minimal filesystem commit log: atomic multi-partition overwrite
 with snapshot reads and optimistic concurrency — the transactional
-sink the summary store needs, built from the one primitive this
-container (and HDFS) actually guarantees.
+sink of the streaming SCD2 and corpus tables (`streaming/scd2.py`,
+`streaming/corpus.py`), built from the one primitive a POSIX
+filesystem (and HDFS) actually guarantees.
 
-The round-6 verdict's #1 missing item is a real transactional sink:
-the reference's idempotent set-upsert (`store/BucketStore.scala:159-172`
-— Cassandra's "INSERT is an upsert" contract) was emulated with plain
-parquet overwrite-by-key, which is correct under a single writer but
-not concurrent-writer-safe, and `delta-spark` is absent from the
-container. This module closes the gap with a delta-shaped log whose
-entire correctness rests on ONE primitive: `os.link(tmp, final)` is
-atomic and fails if `final` exists (POSIX). Everything else is
-immutable files.
+The summary store stays plain parquet overwrite-by-key
+(`streaming/ingest.py::upsert_sink`), correct under its single
+writer. Tables whose writers race need the reference's idempotent
+set-upsert (`store/BucketStore.scala:159-172` — Cassandra's "INSERT is
+an upsert" contract) to be concurrent-writer-safe, and `delta-spark`
+is not a dependency. This module provides that with a
+delta-shaped log whose entire correctness rests on ONE primitive:
+`os.link(tmp, final)` is atomic and fails if `final` exists (POSIX).
+Everything else is immutable files.
 
 Layout:
 

@@ -115,7 +115,7 @@ def scd2_upsert_sink(
     which is the same fix applied late). Size it so each file is
     ~100-500 MB at production bucket volume.
 
-    No whole-table `export_delta` here by design: this table holds
+    No whole-table Delta export here by design: this table holds
     TWO schemas (facts + dim namespaces) and the Delta export pins one
     schema per table (it refuses heterogeneous snapshots). The interop
     face for SCD2 tables is `sources/delta_export.py::

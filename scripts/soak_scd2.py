@@ -4,8 +4,8 @@
 `streaming/scd2.py` carries the strongest invariant in the repo —
 dim(v) == scd2_intervals(facts(v)) at EVERY committed version, facts
 and dimension landing as ONE CAS commit — but had only unit-scale
-tests. This soak drives it with the soak_txn.py adversaries at sf0.1
-volume:
+tests. This soak drives it at sf0.1 volume against racing
+adversaries:
 
 - the 100k-event fact table lands in 10 chunks at the 30 s cadence,
   PERMUTED BY md5(event_id) so every chunk is late-fact-heavy: facts

@@ -72,7 +72,6 @@ SLOW_TESTS = {
     "tests/test_corpus_ops.py::test_leakage_safe_kfold_component_purity",
     "tests/test_corpus_ops.py::test_tokenizer_fertility_consistent_with_encode_and_ranks_langs",
     "tests/test_delta_export.py::test_export_of_the_txn_summary_store",
-    "tests/test_delta_export.py::test_streamed_export_equals_posthoc_byte_for_byte",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_rerank_topk_indexed]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk_indexed]",
@@ -121,7 +120,6 @@ SLOW_TESTS = {
     "tests/test_stateful_streaming.py::test_stateful_emits_nothing_twice",
     "tests/test_streaming.py::test_effective_watermark_lags_two_batches_of_front_progress",
     "tests/test_streaming.py::test_streaming_windowed_hll_matches_batch",
-    "tests/test_streaming.py::test_txn_upsert_store_matches_plain_and_batch",
     "tests/test_streaming.py::test_upsert_store_complete_and_idempotent",
     "tests/test_streaming_ann.py::test_add_post_check_lands_batch_into_swapped_generation",
     "tests/test_streaming_ann.py::test_carry_fails_loudly_on_null_embeddings",

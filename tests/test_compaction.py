@@ -1,5 +1,6 @@
 """Summary-store compaction: fragmented micro-batch output → few
-globally-ordered files, data identical, pruning layout preserved."""
+globally-ordered files, data identical, pruning layout preserved; the
+streaming upsert store keeps its day partitions through a compaction."""
 
 from __future__ import annotations
 
@@ -8,12 +9,14 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from khronus_spark.functions.summary import counter_summary
 from khronus_spark.operators.rollup import (
     compact_summaries,
     read_summaries,
     rollup_all,
 )
 from khronus_spark.sources.tables import measurements_from_events
+from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
 
 
 def _files(path):
@@ -84,3 +87,33 @@ def test_compaction_scan_still_prunes(spark, sf_dir):
     )
     assert "EqualTo(metric,click)" in plan
     assert "GreaterThanOrEqual(ts," in plan
+
+
+def test_compacted_upsert_store_keeps_every_bucket(spark, tmp_path):
+    """upsert → compact → upsert: the second stream batch merges into
+    the compacted store, so it still holds every landed row's bucket."""
+    schema = "metric string, mtype string, ts_ms long, value long"
+    land, base = str(tmp_path / "land"), str(tmp_path / "store")
+
+    def upsert(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(land)
+        run_streaming_rollup_upsert(
+            spark.readStream.schema(schema).parquet(land),
+            store_path=f"{base}/counter_summary/5m",
+            checkpoint_path=str(tmp_path / "ckpt"),
+            window_ms=300_000,
+            family="counter",
+        ).awaitTermination(120)
+
+    upsert([("a", "counter", 0, 1), ("a", "counter", 86_400_000, 2)])
+    compact_summaries(spark, base, "counter", 300_000)
+    upsert([("a", "counter", 86_400_010, 5)])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("metric", "ts", "count").collect())
+
+    got = read_summaries(spark, base, "counter", 300_000)
+    want = counter_summary(spark.read.schema(schema).parquet(land), 300_000)
+    assert rows(got) == rows(want) == [("a", 0, 1), ("a", 86_400_000, 7)]

@@ -213,8 +213,8 @@ def test_export_content_is_deterministic_across_processes(spark, tmp_path):
 
 
 def test_export_of_the_txn_summary_store(spark, tmp_path, sf_dir):
-    """End-to-end with the real writer: the txn summary store's
-    content survives the exporter + clean-room reader round trip."""
+    """A day-partitioned counter-summary table's content survives the
+    exporter + clean-room reader round trip."""
     from pyspark.sql import functions as F
 
     from khronus_spark.functions.summary import counter_summary
@@ -301,97 +301,6 @@ def test_vacuum_of_unexported_history_refuses_clearly(spark, tmp_path):
     t.vacuum(keep_from_version=3, grace_seconds=0)  # deletes v2's dir
     with pytest.raises(RuntimeError, match="vacuum"):
         export_delta_log(spark, t)
-
-
-# ----------------------------------- continuous export (streaming txn)
-
-
-def _delta_log_bytes(root):
-    log_dir = os.path.join(root, "_delta_log")
-    return {
-        name: open(os.path.join(log_dir, name), "rb").read()
-        for name in sorted(os.listdir(log_dir))
-        if name.endswith(".json")
-    }
-
-
-def test_streamed_export_equals_posthoc_byte_for_byte(spark, tmp_path, sf_dir):
-    """run_streaming_rollup_upsert_txn(export_delta=True) publishes
-    each commit's Delta version inside its own trigger; because action
-    timestamps derive from commit metadata (never a process clock),
-    the streamed log must equal a post-hoc export_delta_log over the
-    same TxnTable BYTE FOR BYTE at every version."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from khronus_spark.sources.tables import measurements_from_events
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert_txn
-
-    m = measurements_from_events(spark, sf_dir).where(F.col("mtype") == "counter")
-    m.write.mode("overwrite").parquet(str(tmp_path / "in"))
-    table = TxnTable(str(tmp_path / "table"))
-
-    for ckpt in ("ckpt1", "ckpt2"):  # second run = redelivery, new versions
-        q = run_streaming_rollup_upsert_txn(
-            spark.readStream.schema(m.schema).parquet(str(tmp_path / "in")),
-            table=table,
-            checkpoint_path=str(tmp_path / ckpt),
-            window_ms=300_000,
-            family="counter",
-            export_delta=True,
-        )
-        q.awaitTermination(120)
-
-    txn_v = table.version()
-    assert txn_v >= 2
-    # export is current: delta v ↔ txn v+1, so latest delta == txn-1
-    assert exported_delta_version(table) == txn_v - 1
-    streamed = _delta_log_bytes(table.root)
-    assert len(streamed) == txn_v
-
-    # wipe the log and re-export post-hoc over the identical commit
-    # history: must reproduce the streamed files exactly
-    shutil.rmtree(os.path.join(table.root, "_delta_log"))
-    assert export_delta_log(spark, table) == txn_v
-    assert _delta_log_bytes(table.root) == streamed
-
-    # and the continuously-exported log round-trips through the reader
-    assert _content(read_delta_snapshot(spark, table.root)) == _content(
-        table.read_all(spark)
-    )
-
-
-def test_streamed_export_catches_up_after_lag(spark, tmp_path):
-    """A crash between commit and export (simulated by an external
-    commit with no export) leaves the Delta log behind; the next
-    trigger's export must catch up EVERY missing version, keeping the
-    log contiguous — indistinguishable from never having lagged."""
-    from khronus_spark.streaming.ingest import txn_upsert_sink
-
-    table = TxnTable(str(tmp_path / "t"))
-    sink = txn_upsert_sink(table, export_delta=True)
-
-    sink(_df(spark, [("a", 1_000, 1)]), 0)       # txn v1, delta v0
-    assert exported_delta_version(table) == 0
-    # external/unexported commit — the lag (same schema the sink
-    # writes: its batches carry the derived day column)
-    table.commit(
-        {
-            "day=0": spark.createDataFrame(
-                [("b", 2_000, 2, 0)],
-                "metric string, ts long, count long, day long",
-            )
-        }
-    )
-    assert exported_delta_version(table) == 0
-
-    sink(_df(spark, [("c", 3_000, 3)]), 1)       # txn v3: catch up v1+v2
-    assert table.version() == 3
-    assert exported_delta_version(table) == 2
-    got = _content(read_delta_snapshot(spark, table.root))
-    want = _content(table.read_all(spark))
-    assert got == want and ("b", 2_000, 2, 0) in want
 
 
 # ------------------------------------------- namespace export (SCD2)

@@ -3,6 +3,8 @@ from one frame, collected once.
 
 - the job budget of each shape of the perfbench dashboard mix, read from
   the status tracker under a job group of its own;
+- the job budget of each perfbench `batch_pipeline` registry entry, run
+  and collected the same way;
 - every series of a multi-series answer equals the same projection
   queried alone (a series mix-up in the long frame shows here), on a
   measurements engine and on a summary-store engine.
@@ -15,6 +17,7 @@ from pathlib import Path
 
 import pytest
 
+from khronus_spark import entry_queries
 from khronus_spark.engine import KhronusEngine
 from khronus_spark.functions.summary import ALL_HISTOGRAM_FUNCTIONS
 from khronus_spark.operators.rollup import rollup_all, write_summaries
@@ -47,6 +50,21 @@ JOB_BUDGET = {
 }
 
 
+#: Spark jobs of each perfbench `batch_pipeline` entry, built and collected
+#: at this suite's scale factor (local[8], 8 shuffle partitions). The CC
+#: and k-center entries are driver loops, one or more jobs per round.
+#: `corpus_curation` runs 25 jobs, or 26 when adaptive execution runs one
+#: more query stage of its near-duplicate pass as a job of its own (2 of
+#: 13 measured runs).
+BATCH_JOB_BUDGET = {
+    "corpus_curation": {25, 26},
+    "coreset_kcenter_per_cell": {16},
+    "part_entity_components": {18},
+    "decontamination_retrieval": {13},
+    "influx_store_percentiles_1h": {7},
+}
+
+
 def _mix_rows() -> list[tuple]:
     """20k samples over one day of the four mix metrics: 1-minute slots
     in a scrambled order, spread over the seconds of the minute."""
@@ -68,6 +86,7 @@ def _jobs(spark, group: str, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -110,6 +129,18 @@ def test_get_after_append_runs_no_catalog_scan(spark, tmp_path):
         assert jobs == JOB_BUDGET[label]
     names = {p[1] for p in payload[0]["points"]}
     assert names == {name for name, _ in MIX_METRICS}
+
+
+@pytest.mark.parametrize("name", sorted(BATCH_JOB_BUDGET))
+def test_batch_pipeline_entry_job_budget(spark, sf_dir, name):
+    """A change that adds a job to one of the benchmark's batch entries
+    fails here instead of hiding in the benchmark's wall-time noise."""
+    entry = entry_queries.queries()[name]
+    rows, jobs = _jobs(
+        spark, f"batch-{name}", lambda: entry(spark, sf_dir).collect()
+    )
+    assert rows
+    assert jobs in BATCH_JOB_BUDGET[name]
 
 
 # ---------------------------------------------------------------------------

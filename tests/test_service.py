@@ -581,3 +581,40 @@ def test_malformed_dashboard_post_is_400_with_cors(service):
     except urllib.error.HTTPError as e:
         assert e.code == 400
         assert e.headers["Access-Control-Allow-Origin"] == "*"
+
+
+_BAD_LENGTH_BODIES = {
+    "/khronus/metrics": {"metrics": []},
+    "/khronus/db/influx/dashboards/series": [
+        {
+            "name": "grafana.dashboard_YmFkIGxlbmd0aA==",
+            "columns": ["time", "sequence_number", "title", "tags", "dashboard"],
+            "points": [["1", "1", "bad length", "", '{"title":"bad length"}']],
+        }
+    ],
+}
+
+
+@pytest.mark.parametrize("length", ["-1", "abc"])
+@pytest.mark.parametrize("path", sorted(_BAD_LENGTH_BODIES))
+def test_bad_content_length_is_400_with_cors(service, path, length):
+    """A negative Content-Length must not read the body to EOF past the
+    2 MB cap, and a non-numeric one must still get an answer: both are
+    400 before the body is read. The client half-closes after sending,
+    so a server that reads to EOF answers instead of hanging."""
+    import socket
+
+    body = json.dumps(_BAD_LENGTH_BODIES[path]).encode()
+    head = (
+        f"POST {path} HTTP/1.1\r\nHost: 127.0.0.1\r\n"
+        f"Content-Length: {length}\r\nConnection: close\r\n\r\n"
+    )
+    with socket.create_connection(("127.0.0.1", service.port), timeout=60) as s:
+        s.sendall(head.encode() + body)
+        s.shutdown(socket.SHUT_WR)
+        reply = b""
+        while chunk := s.recv(65536):
+            reply += chunk
+    status, _, rest = reply.partition(b"\r\n")
+    assert status.split()[1:2] == [b"400"], reply
+    assert b"Access-Control-Allow-Origin: *" in rest, reply

@@ -14,7 +14,7 @@ from khronus_spark.functions.summary import (
     histogram_summary,
 )
 from khronus_spark.sources.tables import measurements_from_events
-from khronus_spark.streaming.ingest import run_streaming_rollup
+from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
 
 
 @pytest.fixture(scope="module")
@@ -25,69 +25,6 @@ def staged(spark, sf_dir):
     m.write.mode("overwrite").parquet(f"{tmp}/in")
     schema = m.schema
     return tmp, schema, m
-
-
-def test_streaming_counter_rollup_matches_batch(spark, staged):
-    tmp, schema, batch_m = staged
-    stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
-    q = run_streaming_rollup(
-        stream.where(F.col("mtype") == "counter"),
-        base_path=f"{tmp}/out",
-        checkpoint_path=f"{tmp}/ckpt",
-        window_ms=300_000,
-        family="counter",
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(f"{tmp}/out/counter_summary/5m")
-    expected = counter_summary(batch_m.where(F.col("mtype") == "counter"), 300_000)
-    g = {(r["metric"], r["ts"]): r["count"] for r in got.collect()}
-    e = {(r["metric"], r["ts"]): r["count"] for r in expected.collect()}
-    # append mode only emits buckets the watermark has passed; with
-    # availableNow the final watermark is max(ts)-30s, so at most the
-    # trailing bucket(s) per metric may be unfinalized.
-    assert g, "stream produced no summaries"
-    missing = set(e) - set(g)
-    for metric, ts in missing:
-        max_ts = max(t for (m2, t) in e if m2 == metric)
-        assert ts >= max_ts - 600_000, f"non-trailing bucket missing: {(metric, ts)}"
-    for k, v in g.items():
-        assert e[k] == v, f"bucket {k}: stream {v} != batch {e[k]}"
-
-
-def test_streaming_histogram_rollup_runs(spark, staged):
-    tmp, schema, batch_m = staged
-    stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
-    q = run_streaming_rollup(
-        stream.where(F.col("mtype") == "timer"),
-        base_path=f"{tmp}/out2",
-        checkpoint_path=f"{tmp}/ckpt2",
-        window_ms=3_600_000,
-        family="histogram",
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(f"{tmp}/out2/histogram_summary/1h")
-    rows = got.collect()
-    assert rows
-    cols = set(got.columns)
-    assert {"metric", "ts", "p50", "p999", "min", "max", "count", "mean"} <= cols
-    # every emitted bucket is the batch summary of the same samples: the
-    # exact fields match, the sketch percentiles stay within the
-    # tolerance test_rollup.py::test_approx_mode_close_to_exact allows
-    expected = {
-        (r["metric"], r["ts"]): r
-        for r in histogram_summary(
-            batch_m.where(F.col("mtype") == "timer"), 3_600_000
-        ).collect()
-    }
-    for r in rows:
-        e = expected[(r["metric"], r["ts"])]
-        for f in ("count", "min", "max", "mean"):
-            assert r[f] == e[f], (r["metric"], r["ts"], f, r[f], e[f])
-        for p in ALL_PERCENTILES:
-            assert abs(r[p] - e[p]) <= max(2, 0.05 * e[p]), (
-                r["metric"], r["ts"], p, r[p], e[p]
-            )
 
 
 def test_duplicate_deliveries_deduped(spark, staged):
@@ -301,8 +238,6 @@ def test_upsert_store_complete_and_idempotent(spark, staged):
     store unchanged (idempotent by (metric, ts))."""
     import tempfile
 
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
-
     tmp, schema, batch_m = staged
     out = tempfile.mkdtemp(prefix="khronus_upsert_")
 
@@ -343,8 +278,6 @@ def test_upsert_rollup_job_budget(spark, staged, tmp_path):
     one per trigger: on a fresh store, then again from a new checkpoint
     over the store the first run left (each batch then merges with the
     stored days). A change that adds a job per batch fails here."""
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
-
     tmp, schema, batch_m = staged
     land = str(tmp_path / "land")
     counters = batch_m.where(F.col("mtype") == "counter")
@@ -383,11 +316,9 @@ def test_upsert_rollup_is_shuffle_partition_invariant(spark, staged, tmp_path):
     own checkpoint: the counter stores are identical and equal the
     batch counter_summary; the histogram stores agree exactly with each
     other and with the batch histogram_summary on count/min/max/mean,
-    and their sketch percentiles stay within the tolerance of
-    test_streaming_histogram_rollup_runs."""
+    and their sketch percentiles stay within the tolerance
+    test_rollup.py::test_approx_mode_close_to_exact allows."""
     from khronus_spark.functions.summary import family_filter
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
-
     tmp, schema, batch_m = staged
     windows = {"counter": 300_000, "histogram": 3_600_000}
     before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -448,8 +379,6 @@ def test_upsert_store_survives_preprovisioned_empty_dir(spark, staged):
     import os
     import tempfile
 
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
-
     tmp, schema, batch_m = staged
     out = tempfile.mkdtemp(prefix="khronus_upsert_empty_")
     store = f"{out}/store"
@@ -484,8 +413,6 @@ def test_stream_to_store_to_influx_query(spark, staged):
     import tempfile
 
     from khronus_spark.engine import KhronusEngine
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert
-
     tmp, schema, batch_m = staged
     out = tempfile.mkdtemp(prefix="khronus_loop_")
     stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
@@ -614,7 +541,7 @@ def test_effective_watermark_lags_two_batches_of_front_progress(spark):
                            + TWO micro-batches of event-time front
                              progress
 
-    which is the sizing rule for `run_streaming_rollup`'s `watermark`
+    which is the sizing rule for `run_streaming_rollup_upsert`'s `watermark`
     (and why the round-5 HTTP soak saw wave-B tails land: a bounded
     tail of beyond-delay data is legitimately accepted). availableNow
     replay, one file per batch (mtime-ordered), 1m buckets, 60s delay:
@@ -657,9 +584,10 @@ def test_effective_watermark_lags_two_batches_of_front_progress(spark):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{tmp}/in/*")
     )
-    q = run_streaming_rollup(
+    store_path = f"{tmp}/store"
+    q = run_streaming_rollup_upsert(
         stream,
-        base_path=f"{tmp}/out",
+        store_path=store_path,
         checkpoint_path=f"{tmp}/ckpt",
         window_ms=60_000,
         family="counter",
@@ -668,7 +596,7 @@ def test_effective_watermark_lags_two_batches_of_front_progress(spark):
     q.awaitTermination(120)
     got = {
         r["ts"]: r["count"]
-        for r in spark.read.parquet(f"{tmp}/out/counter_summary/1m").collect()
+        for r in spark.read.parquet(store_path).collect()
     }
     assert got.get(540_000) == 10, got      # inside the 2-batch-lag wm
     assert 480_000 not in got, got          # beyond it: dropped
@@ -676,58 +604,3 @@ def test_effective_watermark_lags_two_batches_of_front_progress(spark):
     assert 1_080_000 not in got, got        # beyond it: dropped
     assert got.get(60_000) == 1 and got.get(600_000) == 1
     assert got.get(1_200_000) == 1 and got.get(2_400_000) == 1
-
-
-def test_txn_upsert_store_matches_plain_and_batch(spark, staged):
-    """The transactional upsert sink (T5 through the commit log): the
-    final table content equals BOTH the plain upsert store and the
-    batch rollup; every micro-batch is one atomic commit (versions =
-    number of non-empty batches); a full redelivery from a fresh
-    checkpoint re-derives identical content (effectively-once by
-    content, new versions)."""
-    import tempfile
-
-    from khronus_spark.sources.txnlog import TxnTable
-    from khronus_spark.streaming.ingest import run_streaming_rollup_upsert_txn
-
-    tmp, schema, batch_m = staged
-    out = tempfile.mkdtemp(prefix="khronus_txn_upsert_")
-    table = TxnTable(f"{out}/table")
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
-        q = run_streaming_rollup_upsert_txn(
-            stream.where(F.col("mtype") == "counter"),
-            table=table,
-            checkpoint_path=f"{out}/{ckpt}",
-            window_ms=300_000,
-            family="counter",
-        )
-        q.awaitTermination(120)
-
-    run("ckpt1")
-    v_first = table.version()
-    assert v_first >= 1
-
-    def content():
-        df = table.read_all(spark)
-        return {(r["metric"], r["ts"]): r["count"] for r in df.collect()}
-
-    expected = {
-        (r["metric"], r["ts"]): r["count"]
-        for r in counter_summary(
-            batch_m.where(F.col("mtype") == "counter"), 300_000
-        ).collect()
-    }
-    got = content()
-    assert got == expected
-
-    run("ckpt2")  # full redelivery, fresh checkpoint
-    assert content() == expected
-    assert table.version() > v_first  # new versions, identical content
-    # and the pre-replay snapshot is still intact (snapshot isolation)
-    pre = {
-        (r["metric"], r["ts"]): r["count"]
-        for r in table.read_all(spark, version=v_first).collect()
-    }
-    assert pre == expected

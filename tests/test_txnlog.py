@@ -1,5 +1,6 @@
 """TxnTable: atomic multi-partition commits, snapshot isolation,
-optimistic concurrency — the transactional summary-store sink.
+optimistic concurrency — the commit log under the streaming SCD2 and
+corpus tables.
 
 Every guarantee the module docstring states is pinned here: torn
 commits are invisible, pinned snapshots never move, concurrent blind
@@ -149,39 +150,6 @@ def test_cas_rejects_future_expect_version(spark, tmp_path):
     # nothing landed, nothing staged became visible, no gap exists
     assert t.version() == 1
     assert _rows(t.read_partition(spark, "a")) == [(1, "x")]
-
-
-def test_txn_summary_store_matches_plain_writer(spark, tmp_path, sf_dir):
-    """The transactional face persists exactly what write_summaries
-    persists (same rows per (family, resolution)), with the whole tick
-    visible as ONE version."""
-    from khronus_spark.functions.summary import counter_summary
-    from khronus_spark.operators.rollup import (
-        read_summaries,
-        read_summaries_txn,
-        write_summaries,
-        write_summaries_txn,
-    )
-    from khronus_spark.sources.tables import measurements_from_events
-
-    m = measurements_from_events(spark, sf_dir).where("mtype = 'counter'")
-    rollups = {
-        300_000: {"counter": counter_summary(m, 300_000)},
-        3_600_000: {"counter": counter_summary(m, 3_600_000)},
-    }
-    write_summaries(rollups, str(tmp_path / "plain"))
-    t = TxnTable(str(tmp_path / "txn"))
-    v = write_summaries_txn(rollups, t)
-    assert v == 1  # one tick, one version, both resolutions inside
-    for w in rollups:
-        a = _rows_any(read_summaries(spark, str(tmp_path / "plain"), "counter", w))
-        b = _rows_any(read_summaries_txn(spark, t, "counter", w))
-        assert a == b and a
-
-
-def _rows_any(df):
-    cols = sorted(df.columns)
-    return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
 def test_txn_compaction_survives_a_racing_writer(spark, tmp_path):
