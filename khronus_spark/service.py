@@ -31,6 +31,7 @@ from __future__ import annotations
 import gzip
 import zlib
 import json
+import re
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -39,12 +40,34 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from khronus_spark.engine import KhronusEngine
+from khronus_spark.parser.parser import QueryParseError
+from khronus_spark.plans.criteria import QueryValidationError
+from khronus_spark.plans.executor import QueryExecutionError
 
 _SCHEMA = "metric STRING, mtype STRING, ts_ms LONG, value LONG"
 
 #: max ingest request body (wire bytes) — the reference's
 #: `request-chunk-aggregation-limit = 2m` (reference.conf:159).
 INGEST_BODY_LIMIT = 2 * 1024 * 1024
+
+#: FAIR scheduler pool of every request's Spark jobs. Background jobs in
+#: the same session (rollup ticks, drift maintenance) name no pool and
+#: share `default`, so a read is not queued behind a tick's stages; the
+#: reference likewise serves queries on their own dispatchers.
+QUERY_POOL = "khronus-query"
+
+#: what a request handler answers 400 for: the request itself is bad.
+#: Anything else is a server failure (Spark job, I/O) and answers 500,
+#: which a client may retry.
+_CLIENT_ERRORS = (
+    QueryParseError,
+    QueryValidationError,
+    QueryExecutionError,
+    ValueError,
+    KeyError,
+    TypeError,
+    re.error,
+)
 
 
 def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple]:
@@ -84,6 +107,12 @@ def series_to_json(results) -> list[dict]:
             rows = points[id(s.frame)].get(s.sid, [])
         out.append({"name": s.metric or s.name, "columns": cols, "points": rows})
     return out
+
+
+class _Server(ThreadingHTTPServer):
+    # socketserver's listen backlog of 5 drops and resets connections
+    # when a burst of agents POSTs at once
+    request_queue_size = 128
 
 
 class KhronusHttpService:
@@ -192,6 +221,14 @@ class KhronusHttpService:
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
                 self.wfile.write(body)
+
+            def _use_query_pool(self) -> None:
+                """Run this request's Spark jobs in QUERY_POOL. The pool
+                is a thread-local Spark property and every request has
+                its own handler thread."""
+                service.spark.sparkContext.setLocalProperty(
+                    "spark.scheduler.pool", QUERY_POOL
+                )
 
             def _body_length(self) -> int | None:
                 """The request's Content-Length (0 when absent), or None
@@ -326,8 +363,9 @@ class KhronusHttpService:
                     self._respond_error(400, f"malformed dashboard JSON: {e}")
                     return
                 try:
+                    self._use_query_pool()
                     name = store_dashboard_wire(service.dashboards, dashboards)
-                except (ValueError, KeyError, TypeError) as e:
+                except _CLIENT_ERRORS as e:
                     self._respond_error(400, str(e))
                     return
                 except Exception as e:
@@ -339,30 +377,32 @@ class KhronusHttpService:
             def do_GET(self):
                 url = urlparse(self.path)
                 q = parse_qs(url.query).get("q", [""])[0]
-                if url.path == "/khronus/db/influx/dashboards/series":
-                    from khronus_spark.sources.dashboards import (
-                        dashboard_operation,
-                    )
-
-                    try:
-                        payload = dashboard_operation(service.dashboards, q)
-                    except Exception as e:
-                        self._respond_error(400, str(e))
-                        return
-                    self._respond_json(payload)
-                    return
-                if url.path != "/khronus/db/influx/series":
+                dashboards = url.path == "/khronus/db/influx/dashboards/series"
+                if not dashboards and url.path != "/khronus/db/influx/series":
                     self.send_error(404)
                     return
+                # the rule _post_dashboard follows: 400 only for a bad
+                # query, 500 for a server failure
                 try:
-                    engine = service._engine_factory()
-                    payload = series_to_json(engine.sql(q))
-                except Exception as e:
+                    self._use_query_pool()
+                    if dashboards:
+                        from khronus_spark.sources.dashboards import (
+                            dashboard_operation,
+                        )
+
+                        payload = dashboard_operation(service.dashboards, q)
+                    else:
+                        engine = service._engine_factory()
+                        payload = series_to_json(engine.sql(q))
+                except _CLIENT_ERRORS as e:
                     self._respond_error(400, str(e))
+                    return
+                except Exception as e:
+                    self._respond_error(500, f"query failure: {e}")
                     return
                 self._respond_json(payload)
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
+        self._server = _Server(("127.0.0.1", port), Handler)
         self.port = self._server.server_port
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
 

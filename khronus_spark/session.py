@@ -31,10 +31,19 @@ def recommended_session_conf() -> dict[str, str]:
       for cluster executors.
     - adaptive execution + partition coalescing: scale-adaptive
       post-shuffle sizing instead of a constant tuned for one host.
+    - ``spark.scheduler.mode=FAIR``: the HTTP service runs each
+      request's jobs in its own pool (``service.QUERY_POOL``), so a
+      dashboard read takes the next free core instead of queueing
+      behind a rollup tick's stages. Jobs that name no pool share the
+      ``default`` pool, which is FIFO inside, so batch work keeps its
+      order.
 
     Values are overridable via SPARK_GRAFT_HUGE_METHOD_LIMIT (bench
     A/B knob). Deliberately NOT here: core counts, memory, shuffle
     partitions — those are deployment-sized, not engine properties.
+    Nor ``spark.python.sql.dataFrameDebugging.enabled=false``: it cuts
+    Python-side plan building but showed no end-to-end gain
+    (sweeps/r16/), and errors would lose their DataFrame context.
     """
     return {
         "spark.sql.codegen.hugeMethodLimit": os.environ.get(
@@ -42,4 +51,5 @@ def recommended_session_conf() -> dict[str, str]:
         ),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.scheduler.mode": "FAIR",
     }

@@ -618,3 +618,94 @@ def test_bad_content_length_is_400_with_cors(service, path, length):
     status, _, rest = reply.partition(b"\r\n")
     assert status.split()[1:2] == [b"400"], reply
     assert b"Access-Control-Allow-Origin: *" in rest, reply
+
+
+def _get_status(svc, path: str, q: str) -> tuple[int, dict]:
+    url = f"http://127.0.0.1:{svc.port}{path}?q={urllib.parse.quote(q)}"
+    try:
+        with urllib.request.urlopen(url) as r:
+            return r.status, dict(r.headers)
+    except urllib.error.HTTPError as e:
+        return e.code, dict(e.headers)
+
+
+def test_server_failure_on_a_read_route_is_500_with_cors(spark):
+    """A failed Spark job or I/O error on either GET route is the
+    server's fault: 500, so Grafana does not report the query as bad.
+    The CORS header still lets a browser read the detail."""
+    import types
+
+    def broken(*_):
+        raise RuntimeError("executor lost")
+
+    landing = tempfile.mkdtemp(prefix="khronus_500_") + "/in"
+    svc = KhronusHttpService(spark, landing, engine_factory=broken)
+    svc._dashboards = types.SimpleNamespace(lookup=broken, drop=broken)
+    svc.start()
+    try:
+        for path, q in [
+            ("/khronus/db/influx/series", "list series"),
+            (
+                "/khronus/db/influx/dashboards/series",
+                'select dashboard from "grafana.dashboard_YQ=="',
+            ),
+        ]:
+            code, headers = _get_status(svc, path, q)
+            assert code == 500, path
+            assert headers.get("Access-Control-Allow-Origin") == "*", path
+    finally:
+        svc.stop()
+
+
+def test_bad_metric_regex_is_400(service):
+    """A FROM regex that does not compile is the client's mistake."""
+    code, headers = _get_status(
+        service,
+        "/khronus/db/influx/series",
+        'select count from "a(" where time >= 0 force group by time(1m)',
+    )
+    assert code == 400
+    assert headers.get("Access-Control-Allow-Origin") == "*"
+
+
+def test_read_requests_run_in_the_query_pool(spark):
+    """Each read runs its Spark jobs in QUERY_POOL, set on its own
+    handler thread before any Spark work, so FAIR scheduling keeps it
+    from queueing behind background jobs in `default`. The caller's
+    thread keeps no pool."""
+    import types
+
+    from khronus_spark.service import QUERY_POOL
+
+    sc = spark.sparkContext
+    seen = []
+
+    def record(*_):
+        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
+
+    landing = tempfile.mkdtemp(prefix="khronus_pool_") + "/in"
+
+    def engine_factory():
+        record()
+        return KhronusEngine(
+            spark,
+            measurements=spark.read.schema(
+                "metric STRING, mtype STRING, ts_ms LONG, value LONG"
+            ).parquet(landing),
+        )
+
+    svc = KhronusHttpService(spark, landing, engine_factory=engine_factory)
+    svc._dashboards = types.SimpleNamespace(lookup=lambda _: record() or [])
+    svc.start()
+    try:
+        assert _get(svc, "list series")[0]["points"] == []
+        code, _ = _get_status(
+            svc,
+            "/khronus/db/influx/dashboards/series",
+            'select dashboard from "grafana.dashboard_YQ=="',
+        )
+        assert code == 200
+    finally:
+        svc.stop()
+    assert seen == [QUERY_POOL, QUERY_POOL]
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
