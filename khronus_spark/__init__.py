@@ -8,8 +8,9 @@ resolutions (30s..1h), and answers InfluxQL-0.8-style dashboard queries.
 Here:
 
 - the rollup cascade is a set of DataFrame aggregations (operators/rollup.py)
-- the query language is parsed in pure Python (parser/) and compiled to a
-  DataFrame plan (plans/executor.py) that Catalyst optimizes
+- the query language is parsed in pure Python (parser/) and compiled to
+  one parameterised Spark SQL statement (plans/executor.py) that
+  Catalyst optimizes
 - ingestion is batch append or Structured Streaming; the streaming rollup
   upserts each resolution's summaries by (metric, ts) into a
   day-partitioned parquet store (streaming/ingest.py), the one summary

@@ -17,16 +17,8 @@ from __future__ import annotations
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import (
-    COUNTER,
-    counter_summary,
-    family_of,
-    histogram_summary,
-)
-from khronus_spark.operators.rollup import read_summaries
-from khronus_spark.parser.ast import InfluxCriteria, Source
+from khronus_spark.parser.ast import InfluxCriteria
 from khronus_spark.parser.parser import InfluxQueryParser
 from khronus_spark.plans.criteria import build_criteria
 from khronus_spark.plans.executor import InfluxSeriesResult, QueryExecutor
@@ -35,31 +27,6 @@ from khronus_spark.timegrid import (
     MAX_RESOLUTION_POINTS,
     MIN_RESOLUTION_POINTS,
 )
-
-
-def _ms_to_naive_dt(ms: int):
-    """Epoch-ms → TIMESTAMP_NTZ literal column (UTC wall clock).
-
-    Built as an explicit NTZ SQL literal so the comparison against the
-    raw NTZ source column needs no implicit cast — a plain
-    attribute-vs-literal predicate Catalyst pushes into the parquet
-    scan — and is independent of the session timezone (a naive Python
-    datetime lit would become TIMESTAMP_LTZ and re-interpret)."""
-    import datetime as _dt
-
-    base = _dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=ms)
-    return F.expr(f"TIMESTAMP_NTZ '{base.strftime('%Y-%m-%d %H:%M:%S.%f')}'")
-
-
-def _ms_to_utc_instant(ms: int):
-    """Epoch-ms → TIMESTAMP (LTZ) literal column pinned with an explicit
-    +00:00 offset, so the instant is session-timezone-independent."""
-    import datetime as _dt
-
-    base = _dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=ms)
-    return F.expr(
-        f"TIMESTAMP '{base.strftime('%Y-%m-%d %H:%M:%S.%f')}+00:00'"
-    )
 
 
 class KhronusEngine:
@@ -103,7 +70,8 @@ class KhronusEngine:
         self._catalog = catalog
         self.executor = QueryExecutor(
             spark,
-            self._provide_summaries,
+            measurements,
+            summary_base_path,
             windows_ms,
             min_points,
             max_points,
@@ -135,55 +103,6 @@ class KhronusEngine:
             args={f"n{i}": name for i, name in enumerate(names)},
         )
         return df if names else df.limit(0)
-
-    # -- summaries ----------------------------------------------------------
-
-    def _provide_summaries(self, src: Source, window_ms: int, slc) -> DataFrame:
-        family = family_of(src.mtype)
-        if self.summary_base_path is not None:
-            # materialized path: (metric, ts) predicates push down to the
-            # partitioned/sorted parquet store (the executor applies them)
-            return read_summaries(self.spark, self.summary_base_path, family, window_ms)
-        # on-the-fly path: push the bucket-aligned slice into the RAW scan
-        # so only the queried buckets are aggregated (full buckets kept —
-        # a bucket's summary always covers [ts, ts+w), like the reference's
-        # precomputed summaries)
-        from khronus_spark.timegrid import align_floor
-
-        lo = align_floor(slc.from_ms, window_ms)
-        hi = align_floor(slc.to_ms, window_ms) + window_ms - 1
-        cond = (F.col("metric") == src.metric) & F.col("ts_ms").between(lo, hi)
-        dtypes = dict(self.measurements.dtypes)
-        if "ts_src" in dtypes:
-            # equivalent predicate in the raw source domain: unlike the
-            # derived ts_ms (a computed expression), this one pushes
-            # into the parquet scan and prunes row groups by stats
-            if dtypes["ts_src"] == "timestamp_ntz":
-                cond = cond & (
-                    F.col("ts_src") >= _ms_to_naive_dt(lo)
-                ) & (F.col("ts_src") < _ms_to_naive_dt(hi + 1))
-            elif dtypes["ts_src"].startswith("timestamp"):
-                # LTZ source: pin the literal's offset so no implicit
-                # session-timezone cast enters the comparison
-                cond = cond & (
-                    F.col("ts_src") >= _ms_to_utc_instant(lo)
-                ) & (F.col("ts_src") < _ms_to_utc_instant(hi + 1))
-            else:  # legacy epoch-ns long encoding
-                cond = cond & F.col("ts_src").between(
-                    lo * 1_000_000, (hi + 1) * 1_000_000 - 1
-                )
-        m = self.measurements.where(cond)
-        if family == COUNTER:
-            return counter_summary(m, window_ms)
-        # both exact modes are bit-identical, so this is purely a plan
-        # choice: collect+sort (one shuffle) for an interactive slice of
-        # at most `max_points` buckets (the reference's 700-point clamp,
-        # `reference.conf:62-63`); per-value counts (state bounded by
-        # DISTINCT values, one more shuffle) for a hand-forced wider one
-        n_buckets = (hi + 1 - lo) // window_ms
-        return histogram_summary(
-            m, window_ms, exact_counts=n_buckets > self.max_points
-        )
 
     # -- query --------------------------------------------------------------
 

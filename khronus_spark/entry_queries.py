@@ -630,7 +630,7 @@ def influx_fill_linear_error_1h(spark, sf_dir):
     the nearest known points; edge gaps are dropped, matching
     InfluxDB. The carry windows run over one rendered series (≤700
     points by G1), so the single-partition window is bounded by
-    construction (plans/executor.py::_fill_linear)."""
+    construction (plans/executor.py::_Statement._fill_linear)."""
     return _engine(spark, sf_dir).sql_union(
         f'select count from "error" where time between {A_MS} and {B_MS} '
         "force group by time(1h) fill(linear)"

@@ -73,35 +73,129 @@ def family_filter(family: str) -> Column:
 FAMILY_FIELDS = {HISTOGRAM: HISTOGRAM_FIELDS, COUNTER: ("count",)}
 
 
+def summary_aggregates_sql(
+    family: str, where: str | None = None, counted: bool = False
+) -> dict[str, str]:
+    """The exact per-bucket aggregates of one summary family over
+    `value`, as SQL text by name: `n` (the samples; the bucket exists
+    where n > 0), `count`/`min`/`max`/`sum` and, for a histogram, the
+    sorted samples `sorted`. `where` restricts every aggregate to the
+    rows it holds for (a FILTER clause). `counted` reads (value, c) rows,
+    c samples of each value, and collects the sorted (v, c) entries
+    `hist` instead of the samples, so state is bounded by distinct
+    values. `summary_field_sql` derives the summary fields from these.
+    Raises on an unknown family."""
+    if family not in FAMILY_FIELDS:
+        raise ValueError(f"Unknown summary family: {family}")
+    # a NULL value is no sample; only the counted rows keep a NULL group
+    conds = [c for c in (where, counted and family == HISTOGRAM and "value IS NOT NULL") if c]
+    flt = f" FILTER (WHERE {' AND '.join(conds)})" if conds else ""
+    if family == COUNTER:
+        total = "sum(value * c)" if counted else "sum(value)"
+        return {"n": f"count(1){flt}", "count": total + flt}
+    aggs = {
+        "n": ("sum(c)" if counted else "count(value)") + flt,
+        "min": f"min(value){flt}",
+        "max": f"max(value){flt}",
+        "sum": ("sum(value * c)" if counted else "sum(value)") + flt,
+    }
+    if counted:
+        aggs["hist"] = f"sort_array(collect_list(struct(value AS v, c)){flt})"
+    else:
+        aggs["sorted"] = f"sort_array(collect_list(value){flt})"
+    return aggs
+
+
+def summary_field_sql(
+    family: str, field: str, col, window_ms: int, counted: bool = False
+) -> str:
+    """SQL text of one summary field over the aggregates of
+    `summary_aggregates_sql`, each named by `col(name)`. In the counted
+    mode a percentile reads `col("walk")`, the `percentile_walk_sql`
+    struct of the bucket's entries."""
+    if field == "cpm":
+        return cpm_sql(summary_field_sql(family, "count", col, window_ms, counted), window_ms)
+    if family == COUNTER or field in ("min", "max"):
+        return col(field)
+    if field == "count":
+        return col("n")
+    if field == "mean":
+        return mean_sql(col("sum"), col("n"))
+    if counted:
+        return f"{col('walk')}.{field}"
+    return percentile_sql(col("sorted"), col("n"), PERCENTILE_FRACTIONS[field])
+
+
+def rank_sql(frac: str, n: str) -> str:
+    """1-indexed rank of the exact discrete percentile `frac` among `n`
+    sorted values, max(1, ceil(frac · n)), in double arithmetic."""
+    return f"greatest(1, ceil(CAST({frac} AS DOUBLE) * {n}))"
+
+
+def percentile_sql(sorted_values: str, n: str, frac: str) -> str:
+    """The exact discrete percentile of an ascending array of n values."""
+    return f"element_at({sorted_values}, CAST({rank_sql(frac, n)} AS INT))"
+
+
+def percentile_walk_sql(hist: str, rank) -> str:
+    """Every percentile of sorted (v, c) entries from ONE cumulative walk:
+    a struct with a field per percentile name, the first v whose
+    cumulative count reaches `rank(name)`."""
+    names = list(PERCENTILE_FRACTIONS)
+    init = "named_struct('cum', 0L, " + ", ".join(
+        f"'{n}', CAST(NULL AS BIGINT)" for n in names
+    ) + ")"
+    steps = ", ".join(
+        f"'{n}', IF(acc.{n} IS NOT NULL, acc.{n}, "
+        f"IF(acc.cum + e.c >= {rank(n)}, e.v, CAST(NULL AS BIGINT)))"
+        for n in names
+    )
+    return (
+        f"aggregate({hist}, {init}, "
+        f"(acc, e) -> named_struct('cum', acc.cum + e.c, {steps}))"
+    )
+
+
+def mean_sql(total: str, n: str) -> str:
+    """The mean truncated to Long, like the reference
+    (`model/HistogramBucket.scala:38-39`)."""
+    return f"{total} div {n}"
+
+
+def cpm_sql(count: str, window_ms: int) -> str:
+    """counts-per-minute meta-function: count / minutes-in-window
+    (`model/HistogramSummary.scala:92-101`)."""
+    return f"{count} / CAST({window_ms / 60000.0!r} AS DOUBLE)"
+
+
 def family_aggregates(family: str) -> list[Column]:
     """The bounded-state aggregate of one summary family over `value`,
     shared by `counter_summary`, `histogram_summary(approx=True)` and
     the streaming rollup: a counter sums its values; a histogram keeps
     exact count, min, max and mean plus `percentile_approx` sketches.
     Raises on an unknown family."""
+    aggs = summary_aggregates_sql(family)
     if family == COUNTER:
-        return [F.sum("value").alias("count")]
-    if family != HISTOGRAM:
-        raise ValueError(f"Unknown summary family: {family}")
+        return [F.expr(aggs["count"]).alias("count")]
     return [
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.expr("sum(value) div count(value)").alias("mean"),
+        F.expr(aggs["n"]).alias("count"),
+        F.expr(aggs["min"]).alias("min"),
+        F.expr(aggs["max"]).alias("max"),
+        F.expr(mean_sql(aggs["sum"], aggs["n"])).alias("mean"),
     ] + [
         F.percentile_approx("value", float(frac), 10000).alias(name)
         for name, frac in PERCENTILE_FRACTIONS.items()
     ]
 
 
+def bucket_sql(ts_ms: str, window_ms: int) -> str:
+    """Bucket-start timestamp of an epoch-ms column: floor to the grid
+    (model/Bucket.scala:54-91)."""
+    return f"CAST({ts_ms} / {window_ms} AS BIGINT) * {window_ms}"
+
+
 def bucket_ts(ts_ms_col: str, window_ms: int) -> Column:
-    """Bucket-start timestamp: floor to the grid (model/Bucket.scala:54-91)."""
-    return ((F.col(ts_ms_col) / F.lit(window_ms)).cast("long") * F.lit(window_ms)).alias("ts")
-
-
-def _disc_percentile(sorted_col: Column, n_col: Column, frac_literal: str) -> Column:
-    idx = F.greatest(F.lit(1), F.ceil(F.lit(float(frac_literal)) * n_col)).cast("int")
-    return F.element_at(sorted_col, idx)
+    return F.expr(bucket_sql(ts_ms_col, window_ms)).alias("ts")
 
 
 def histogram_summary(
@@ -151,18 +245,13 @@ def histogram_summary(
         summary = grouped.agg(*family_aggregates(HISTOGRAM))
         return summary.select("metric", "ts", *FAMILY_FIELDS[HISTOGRAM])
 
-    agg = grouped.agg(
-        F.array_sort(F.collect_list("value")).alias("_vals"),
-        F.count("value").alias("count"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.expr("sum(value) div count(value)").alias("mean"),
-    )
-    cols = [F.col("metric"), F.col("ts")]
-    for name, frac in PERCENTILE_FRACTIONS.items():
-        cols.append(_disc_percentile(F.col("_vals"), F.col("count"), frac).alias(name))
-    cols += [F.col("min"), F.col("max"), F.col("count"), F.col("mean")]
-    return agg.select(*cols)
+    aggs = summary_aggregates_sql(HISTOGRAM)
+    agg = grouped.agg(*(F.expr(sql).alias(f"_{name}") for name, sql in aggs.items()))
+    fields = [
+        F.expr(summary_field_sql(HISTOGRAM, f, lambda c: f"_{c}", window_ms)).alias(f)
+        for f in HISTOGRAM_FIELDS
+    ]
+    return agg.select("metric", "ts", *fields)
 
 
 def counter_summary(measurements: DataFrame, window_ms: int) -> DataFrame:
@@ -174,12 +263,6 @@ def counter_summary(measurements: DataFrame, window_ms: int) -> DataFrame:
         .agg(*family_aggregates(COUNTER))
         .select("metric", "ts", *FAMILY_FIELDS[COUNTER])
     )
-
-
-def cpm_col(count_col: Column, window_ms: int) -> Column:
-    """counts-per-minute meta-function: count / minutes-in-window
-    (`model/HistogramSummary.scala:92-101`)."""
-    return count_col / F.lit(window_ms / 60000.0)
 
 
 # ---- DuckDB oracle restatements (generated from the same constants) ------

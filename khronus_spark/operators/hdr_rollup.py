@@ -30,7 +30,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from khronus_spark.functions.hdr import hdr_quantize
-from khronus_spark.functions.summary import PERCENTILE_FRACTIONS, bucket_ts
+from khronus_spark.functions.summary import (
+    PERCENTILE_FRACTIONS,
+    bucket_ts,
+    mean_sql,
+    percentile_walk_sql,
+    rank_sql,
+)
 
 
 def histogram_state(measurements: DataFrame, window_ms: int) -> DataFrame:
@@ -53,7 +59,7 @@ def counts_state(samples: DataFrame) -> DataFrame:
     counted = samples.groupBy("metric", "ts", "v").agg(F.count(F.lit(1)).alias("c"))
     return (
         counted.groupBy("metric", "ts")
-        .agg(F.array_sort(F.collect_list(F.struct("v", "c"))).alias("hist"))
+        .agg(F.sort_array(F.collect_list(F.struct("v", "c"))).alias("hist"))
     )
 
 
@@ -68,17 +74,17 @@ def merge_states(state: DataFrame, coarser_window_ms: int) -> DataFrame:
         exploded.groupBy("metric", "ts", F.col("e.v").alias("v"))
         .agg(F.sum("e.c").alias("c"))
         .groupBy("metric", "ts")
-        .agg(F.array_sort(F.collect_list(F.struct("v", "c"))).alias("hist"))
+        .agg(F.sort_array(F.collect_list(F.struct("v", "c"))).alias("hist"))
     )
 
 
 #: rank-from-fraction formulas: 'engine' = the repo-wide discrete
-#: convention (ceil(frac·n), shared with every oracle); 'hdr' = the
-#: public HdrHistogram getValueAtPercentile convention the reference
-#: inherits (`model/HistogramBucket.scala:28-34`): round-half-up of
-#: frac·n, floored at 1.
+#: convention (`functions.summary.rank_sql`, shared with every oracle);
+#: 'hdr' = the public HdrHistogram getValueAtPercentile convention the
+#: reference inherits (`model/HistogramBucket.scala:28-34`):
+#: round-half-up of frac·n, floored at 1.
 _RANK_SQL = {
-    "engine": "greatest(1, ceil({f} * {n}))",
+    "engine": rank_sql("{f}", "{n}"),
     "hdr": "greatest(1, floor({f} * {n} + 0.5))",
 }
 
@@ -100,29 +106,14 @@ def state_summary(state: DataFrame, convention: str = "engine") -> DataFrame:
     for name, frac in PERCENTILE_FRACTIONS.items():
         rank = _RANK_SQL[convention].format(f=frac, n="_n")
         withn = withn.withColumn(f"_r_{name}", F.expr(f"CAST({rank} AS BIGINT)"))
-    init = (
-        "named_struct('cum', 0L, "
-        + ", ".join(f"'{n}', CAST(NULL AS BIGINT)" for n in names)
-        + ")"
-    )
-    # value at rank r = first entry where cumulative count reaches r
-    steps = ", ".join(
-        f"'{n}', IF(acc.{n} IS NOT NULL, acc.{n}, "
-        f"IF(acc.cum + e.c >= _r_{n}, e.v, CAST(NULL AS BIGINT)))"
-        for n in names
-    )
-    walk = (
-        f"aggregate(hist, {init}, "
-        f"(acc, e) -> named_struct('cum', acc.cum + e.c, {steps}))"
-    )
-    withp = withn.withColumn("_p", F.expr(walk))
+    withp = withn.withColumn("_p", F.expr(percentile_walk_sql("hist", lambda n: f"_r_{n}")))
     cols = [F.col("metric"), F.col("ts")]
     cols += [F.col("_p")[n].alias(n) for n in names]
     cols += [
         F.element_at("hist", 1)["v"].alias("min"),
         F.element_at("hist", -1)["v"].alias("max"),
         F.col("_n").alias("count"),
-        F.expr("aggregate(hist, 0L, (a, e) -> a + e.v * e.c) div _n").alias("mean"),
+        F.expr(mean_sql("aggregate(hist, 0L, (a, e) -> a + e.v * e.c)", "_n")).alias("mean"),
     ]
     return withp.select(*cols)
 

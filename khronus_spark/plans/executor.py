@@ -1,4 +1,4 @@
-"""Compile bound InfluxCriteria into one DataFrame plan and execute.
+"""Compile bound InfluxCriteria into one Spark SQL statement and execute.
 
 The Spark restatement of `influx/finder/InfluxQueryResolver.scala`:
 
@@ -7,47 +7,57 @@ The Spark restatement of `influx/finder/InfluxQueryResolver.scala`:
    mandatory.
 2. route the query to a materialized resolution (`adjustResolution`,
    :89-118), then grid-align the range (from ceils, to floors, :120-133).
-3. group the projections by the sources they read (projections sharing
-   a source land in one group) and read each source's summary once,
-   pushed-down filtered to (metric, slice) with order+limit applied
-   **at the read**, before spine generation
-   (`store/SummaryStore.scala:108-117`). A group's summaries are zipped
-   on `ts`, one struct column per source.
-4. join each group onto the dense time spine once and compute every
-   projection of the group as a column pair (value, keep) of one
-   select: missing buckets take fill(x) or are omitted (:184-201), a
-   binary operation keeps the buckets both operands have
-   (`zipByTimestamp`, :203-212). The pairs unpivot into
-   (series, time, value) rows.
-5. union the groups, then scale, round to 4dp HALF_UP (:214-224) and
-   order by (series, time), once for the whole query.
+3. read every source of the query in one pass keyed by bucket, with the
+   slice, order and limit applied at the read, before any series is
+   built (`store/SummaryStore.scala:108-117`). Over raw measurements
+   that is one scan and one aggregate: each source's aggregates run
+   under `FILTER (WHERE metric = :m)`, and `count(…) > 0` says whether
+   the source has the bucket. Over the summary store it is one scan per
+   summary family, zipped on `ts` by a group-by only when the query
+   reads more than one source.
+4. compute every projection as a (value, keep) pair per bucket:
+   missing buckets take fill(x) or are omitted (:184-201), a binary
+   operation keeps the buckets both operands have (`zipByTimestamp`,
+   :203-212). Only fill(…) and a bare-number series join the dense time
+   spine: otherwise every bucket read is already on the grid, because
+   `from` ceils and `to` floors. The pairs unpivot into (series, time,
+   value) rows.
+5. scale, round to 4dp HALF_UP (:214-224) and order by (series, time),
+   once for the whole query.
 
-Everything stays in Catalyst: the spine is `explode(sequence(...))`,
-functions are column expressions, joins are equi-joins on the bucket
-timestamp. A query is one plan, so a caller that collects every series
-runs one chain of Spark jobs, and building the plan runs none. At
-dashboard scale each series is ≤700 points (reference.conf:61-64), so
-per-query work is trivially broadcastable; the heavy lifting lives in
-the rollup engine that materialized the summaries.
+The statement is rendered as text and run by one `spark.sql` call, so
+building it costs a few Py4J round trips and one analysis. Every string
+that comes from the query or the catalog (metric and series names) binds
+as a named parameter, never into the text; the relations it reads bind
+through the call's temp views, which are dropped when the call returns.
+The summary math (bucket, per-family aggregates, percentile rank, cpm,
+mean) is the SQL text of `functions/summary.py`, which the DataFrame
+builders of the rollups share. At dashboard scale each series is ≤700
+points (reference.conf:61-64), so the windows of fill(linear), delta and
+limit run over one small partition.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Callable
+import datetime as _dt
+import math
+import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import cpm_col
-from khronus_spark.parser.ast import (
-    Field,
-    InfluxCriteria,
-    Number,
-    Operation,
-    Source,
+from khronus_spark.functions.summary import (
+    PERCENTILE_FRACTIONS,
+    bucket_sql,
+    cpm_sql,
+    family_of,
+    percentile_walk_sql,
+    rank_sql,
+    summary_aggregates_sql,
+    summary_field_sql,
 )
+from khronus_spark.operators.rollup import read_summaries
+from khronus_spark.parser.ast import Field, InfluxCriteria, Number, Operation
 from khronus_spark.timegrid import (
     DEFAULT_WINDOWS_MS,
     MAX_RESOLUTION_POINTS,
@@ -57,14 +67,6 @@ from khronus_spark.timegrid import (
     adjust_resolution,
     build_time_range,
 )
-
-#: summary-table provider: (source, window_ms, slice) -> DataFrame with
-#: the family's summary schema (histogram: metric/ts/p50..p999/min/max/
-#: count/mean; counter: metric/ts/count). The slice is advisory — a
-#: provider computing summaries on the fly can push it (bucket-aligned)
-#: into the raw scan so only the queried buckets are aggregated; the
-#: executor re-applies the exact ts filter afterwards either way.
-SummaryProvider = Callable[[Source, int, Slice], DataFrame]
 
 
 class QueryExecutionError(Exception):
@@ -121,27 +123,47 @@ def build_slice(filters, now_ms: int) -> Slice:
     return Slice(from_ms, to_ms)
 
 
+def _double(x) -> str:
+    """A SQL double literal of a number from the query."""
+    x = float(x)
+    return f"CAST({x!r} AS DOUBLE)" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _ts_literal(kind: str, ms: int) -> str:
+    """Epoch-ms as a timestamp literal in UTC wall clock: `TIMESTAMP_NTZ`
+    compares with an NTZ column with no cast, and `TIMESTAMP` pins its
+    +00:00 offset, so neither depends on the session timezone."""
+    wall = (_dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=ms)).strftime(
+        "%Y-%m-%d %H:%M:%S.%f"
+    )
+    return f"TIMESTAMP_NTZ '{wall}'" if kind == "ntz" else f"TIMESTAMP '{wall}+00:00'"
+
+
 class QueryExecutor:
     def __init__(
         self,
         spark: SparkSession,
-        summary_provider: SummaryProvider,
+        measurements: DataFrame | None = None,
+        summary_base_path: str | None = None,
         windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
         min_points: int = MIN_RESOLUTION_POINTS,
         max_points: int = MAX_RESOLUTION_POINTS,
         read_limit: int | None = None,
     ):
+        """Queries read the summary store at `summary_base_path` when
+        given, else summarize raw `measurements` (metric, mtype, ts_ms,
+        value[, ts_src]) per query."""
         self.spark = spark
-        self.summary_provider = summary_provider
+        self.measurements = measurements
+        self.summary_base_path = summary_base_path
         self.windows_ms = windows_ms
         self.min_points = min_points
         self.max_points = max_points
         #: hard per-(metric, slice) read cap, the reference's Cassandra
         #: `limit ?` bind (`SummaryStore.scala:80-88` summary-limit=1000;
         #: `BucketStore.scala:77` bucket-limit=30000). Applied in ts
-        #: order (query direction), BEFORE spine join/post-processing —
-        #: compiles to TakeOrderedAndProject (per-partition top-n), so
-        #: a runaway slice never materializes unbounded rows.
+        #: order (query direction) to each source's buckets, before fill
+        #: and post-processing.
         self.read_limit = read_limit
 
     # -- public ------------------------------------------------------------
@@ -149,7 +171,7 @@ class QueryExecutor:
     def execute(self, criteria: InfluxCriteria, now_ms: int) -> list[InfluxSeriesResult]:
         frame, projections = self._compile(criteria, now_ms)
         return [
-            InfluxSeriesResult(p.series_name, self._metric(p, criteria), frame=frame, sid=sid)
+            InfluxSeriesResult(p.series_name, _metric(p, criteria), frame=frame, sid=sid)
             for sid, p in enumerate(projections)
         ]
 
@@ -161,9 +183,7 @@ class QueryExecutor:
 
     # -- internals ----------------------------------------------------------
 
-    def _compile(
-        self, criteria: InfluxCriteria, now_ms: int
-    ) -> tuple[DataFrame, list]:
+    def _compile(self, criteria: InfluxCriteria, now_ms: int) -> tuple[DataFrame, list]:
         """The query's one (_sid, series, metric, time, value) frame, and
         its projections in `_sid` order (sorted by series id)."""
         slc = build_slice(criteria.filters, now_ms)
@@ -175,249 +195,341 @@ class QueryExecutor:
             self.min_points,
             self.max_points,
         )
-        trange = build_time_range(slc, window_ms)
         projections = sorted(criteria.projections, key=lambda p: p.series_id)
-        parts = []
-        for table_ids, members in self._groups(projections):
-            framed, structs = self._zip(table_ids, members, trange, slc, criteria, window_ms)
-            values, cells = [], []
-            for sid, proj in members:
-                value, keep = self._series(proj, structs, criteria, window_ms)
-                values += [F.when(keep, value).alias(f"_v{sid}"), keep.alias(f"_k{sid}")]
-                metric = self._metric(proj, criteria)
-                cells += [F.lit(sid), F.lit(proj.series_name), F.lit(metric)]
-                cells += [F.col(f"_v{sid}"), F.col(f"_k{sid}")]
-            # unpivot: one (sid, series, metric, value, keep) row per
-            # projection per bucket
-            parts.append(
-                framed.select("time", *values)
-                .select("time", F.stack(F.lit(len(members)), *cells))
-                .where(F.col("col4"))
-                .select(
-                    F.col("col0").alias("_sid"),
-                    F.col("col1").alias("series"),
-                    F.col("col2").alias("metric"),
-                    "time",
-                    F.col("col3").alias("value"),
-                )
+        stmt = _Statement(self, criteria, build_time_range(slc, window_ms))
+        text = stmt.render(projections)
+        # the relations bind as temp views of fresh names for this one
+        # call (which analyzes the statement, so its plan no longer needs
+        # them). They drop through the session catalog:
+        # `spark.catalog.dropTempView`, and so `spark.sql`'s DataFrame
+        # kwargs, would also uncache any cached plan equal to the view's
+        # -- the caller's cached measurements.
+        try:
+            for name, df in stmt.relations.items():
+                df.createOrReplaceTempView(name)
+            return self.spark.sql(text, args=stmt.args), projections
+        finally:
+            catalog = self.spark._jsparkSession.sessionState().catalog()
+            for name in stmt.relations:
+                catalog.dropTempView(name)
+
+
+def _metric(proj, criteria: InfluxCriteria) -> str:
+    if isinstance(proj, Field):
+        return criteria.source_by_table_id(proj.table_id).metric
+    return ""
+
+
+def _operands(proj) -> list:
+    if not isinstance(proj, Operation):
+        return [proj]
+    if isinstance(proj.left, Operation) or isinstance(proj.right, Operation):
+        raise QueryExecutionError("Nested operations are not supported yet")
+    return [proj.left, proj.right]
+
+
+class _Statement:
+    """The SQL text, named parameters and relations of one query.
+
+    Relations, in order: `b` has one row per bucket some source has,
+    with `s{i}_p` (source i has the bucket) and source i's aggregates
+    `s{i}_*`; `k` (from `b`, after the limit) holds `o{j}`, the value of
+    Field operand j where its source has the bucket; `x` has one row per
+    rendered bucket, `time`, with `v{j}` (o{j} after fill) and `q{j}`
+    (the bucket counts for operand j); the final select unpivots every
+    projection's (value, keep) into rows."""
+
+    def __init__(self, executor: QueryExecutor, criteria: InfluxCriteria, trange: TimeRange):
+        self.ex, self.criteria, self.trange = executor, criteria, trange
+        self.w = trange.window_ms
+        self.args: dict[str, str] = {}
+        self.relations: dict[str, DataFrame] = {}
+        self.counted = False
+
+    def param(self, value: str) -> str:
+        """A named parameter marker bound to `value`."""
+        for name, bound in self.args.items():
+            if bound == value:
+                return f":{name}"
+        name = f"p{len(self.args)}"
+        self.args[name] = value
+        return f":{name}"
+
+    def relation(self, df: DataFrame) -> str:
+        """The name the statement reads `df` by."""
+        name = f"_khronus_{uuid.uuid4().hex}"
+        self.relations[name] = df
+        return name
+
+    # -- the statement -----------------------------------------------------
+
+    def render(self, projections: list) -> str:
+        fields = list(
+            dict.fromkeys(
+                (o.table_id, o.name)
+                for p in projections
+                for o in _operands(p)
+                if isinstance(o, Field)
             )
-        return self._finalize(reduce(DataFrame.unionByName, parts), criteria), projections
-
-    @staticmethod
-    def _metric(proj, criteria: InfluxCriteria) -> str:
-        if isinstance(proj, Field):
-            return criteria.source_by_table_id(proj.table_id).metric
-        return ""
-
-    @staticmethod
-    def _fields(proj) -> list[Field]:
-        """The Fields a projection's value depends on (Numbers depend on
-        none — they render from the spine alone)."""
-        sides = (proj.left, proj.right) if isinstance(proj, Operation) else (proj,)
-        return [side for side in sides if isinstance(side, Field)]
-
-    def _groups(self, projections) -> list[tuple[set[str], list]]:
-        """(table_ids, [(sid, projection)]) per group: projections that
-        share a source land in one group, so each source is read once;
-        the projections that read no source form one group of their own."""
-        groups: list[tuple[set[str], list]] = []
+        )
+        fill = self.criteria.fill
+        spine = fill is not None or any(
+            not any(isinstance(o, Field) for o in _operands(p)) for p in projections
+        )
+        ctes = []
+        tids = sorted({tid for tid, _ in fields})
+        if fields:
+            # `b`: ts, then per source i its presence `s{i}_p` and the
+            # aggregates its fields read (a delta reads the count)
+            sources = [self.criteria.source_by_table_id(tid) for tid in tids]
+            needs = [{"count" if n == "delta" else n for t, n in fields if t == tid} for tid in tids]
+            store = self.ex.summary_base_path is not None
+            ctes += (self._store_buckets if store else self._raw_buckets)(sources, needs)
+            ctes.append(self._known(fields, tids))
+        ctes.append(self._rows(fields, tids, spine))
+        cells = []
         for sid, proj in enumerate(projections):
-            tids = {f.table_id for f in self._fields(proj)}
-            hits = [g for g in groups if (g[0] & tids) or not (g[0] or tids)]
-            groups = [g for g in groups if not any(g is h for h in hits)]
-            groups.append(
-                (
-                    tids.union(*(g[0] for g in hits)),
-                    [m for g in hits for m in g[1]] + [(sid, proj)],
-                )
+            value, keep = self._series(proj, fields)
+            cells.append(
+                f"{sid}, {self.param(proj.series_name)}, "
+                f"{self.param(_metric(proj, self.criteria))}, "
+                f"CASE WHEN {keep} THEN {value} END, {keep}"
             )
-        return groups
-
-    def _read_summaries(
-        self, src: Source, window_ms: int, slc: Slice, criteria: InfluxCriteria
-    ) -> DataFrame:
-        """Summary scan with slice + order + limit pushed to the read
-        (`SummaryStore.readAll`, applied before spine generation)."""
-        df = self.summary_provider(src, window_ms, slc)
-        df = df.where(
-            (F.col("metric") == src.metric)
-            & F.col("ts").between(slc.from_ms, slc.to_ms)
+        scale = self.criteria.scale
+        value = "value" if scale is None else f"value * {_double(scale)}"
+        order = "" if self.criteria.order_asc else " DESC"
+        # one partition, sorted within it: the rendered rows are few
+        # (≤700 points per series), so a range exchange and its sampling
+        # job would be pure overhead
+        return (
+            "WITH " + ",\n".join(ctes) + "\n"
+            f"SELECT /*+ COALESCE(1) */ _sid, series, metric, time, round({value}, 4) AS value\n"
+            f"FROM (SELECT time, stack({len(cells)}, {', '.join(cells)}) "
+            "AS (_sid, series, metric, value, keep) FROM x)\n"
+            f"WHERE keep SORT BY _sid, time{order}"
         )
-        limits = [n for n in (criteria.limit, self.read_limit) if n is not None]
+
+    def _raw_buckets(self, sources: list, needs: list[set[str]]) -> list[str]:
+        multi = len(sources) > 1
+        # the samples of the spine's buckets
+        lo, hi = self.trange.from_ms, self.trange.to_ms + self.w - 1
+        # both exact percentile modes are bit-identical, so this is a
+        # plan choice: collect+sort (one shuffle) for an interactive
+        # slice of at most `max_points` buckets (the reference's
+        # 700-point clamp, `reference.conf:62-63`); per-value counts
+        # (state bounded by DISTINCT values, one more shuffle) for a
+        # hand-forced wider one
+        n_buckets = (hi + 1 - lo) // self.w
+        counted = self.counted = n_buckets > self.ex.max_points and any(
+            need & set(PERCENTILE_FRACTIONS) for need in needs
+        )
+        metrics = [self.param(s.metric) for s in sources]
+        cols, walks = [], []
+        for i, (src, need) in enumerate(zip(sources, needs)):
+            family = family_of(src.mtype)
+            aggs = summary_aggregates_sql(
+                family, f"metric = {metrics[i]}" if multi else None, counted
+            )
+            used = {"n"}
+            for name in need:
+                summary_field_sql(family, name, lambda c: used.add(c) or c, self.w, counted)
+            if "walk" in used:
+                used |= {"hist"}
+                rank = lambda n, i=i: rank_sql(PERCENTILE_FRACTIONS[n], f"s{i}_n")
+                walks.append(f"{percentile_walk_sql(f's{i}_hist', rank)} AS s{i}_walk")
+            cols.append(f"{aggs['n']} > 0 AS s{i}_p")
+            cols += [f"{aggs[a]} AS s{i}_{a}" for a in sorted(used - {"walk"})]
+        rel = self.relation(self.ex.measurements)
+        where = (
+            (f"metric IN ({', '.join(metrics)})" if multi else f"metric = {metrics[0]}")
+            + f" AND ts_ms BETWEEN {lo} AND {hi}"
+            + self._ts_src_pushdown(lo, hi)
+        )
+        bucket = bucket_sql("ts_ms", self.w)
+        if counted:
+            scan = (
+                f"r AS (SELECT metric, {bucket} AS ts, value, count(1) AS c "
+                f"FROM {rel} WHERE {where} GROUP BY 1, 2, 3)"
+            )
+            return [
+                scan,
+                f"b0 AS (SELECT ts, {', '.join(cols)} FROM r GROUP BY ts)",
+                f"b AS (SELECT *, {', '.join(walks)} FROM b0)",
+            ]
+        return [f"b AS (SELECT {bucket} AS ts, {', '.join(cols)} FROM {rel} WHERE {where} GROUP BY 1)"]
+
+    def _ts_src_pushdown(self, lo: int, hi: int) -> str:
+        """The [lo, hi] ms range restated on the raw source column
+        `ts_src`, when the measurements carry one: unlike the derived
+        ts_ms, a predicate on it reaches the parquet scan and prunes row
+        groups by their stats."""
+        kind = dict(self.ex.measurements.dtypes).get("ts_src")
+        if kind is None:
+            return ""
+        if kind.startswith("timestamp"):
+            kind = "ntz" if kind == "timestamp_ntz" else "ltz"
+            return (
+                f" AND ts_src >= {_ts_literal(kind, lo)}"
+                f" AND ts_src < {_ts_literal(kind, hi + 1)}"
+            )
+        # legacy epoch-ns long encoding
+        return f" AND ts_src BETWEEN {lo * 1_000_000} AND {(hi + 1) * 1_000_000 - 1}"
+
+    def _store_buckets(self, sources: list, needs: list[set[str]]) -> list[str]:
+        """The store holds finished summary fields; one scan per family.
+        One source needs no aggregate; several zip on ts by one group-by."""
+        multi = len(sources) > 1
+        lo, hi = self.trange.from_ms, self.trange.to_ms
+        metrics = [self.param(s.metric) for s in sources]
+        columns = [sorted({"count" if f == "cpm" else f for f in need}) for need in needs]
+        if not multi:
+            rel = self._store_relation(sources[0])
+            cols = ", ".join(f"{c} AS s0_{c}" for c in columns[0])
+            return [
+                f"b AS (SELECT ts, TRUE AS s0_p, {cols} FROM {rel} "
+                f"WHERE metric = {metrics[0]} AND ts BETWEEN {lo} AND {hi})"
+            ]
+        every = sorted({(family_of(s.mtype), c) for s, cs in zip(sources, columns) for c in cs})
+        scans = []
+        for family in sorted({f for f, _ in every}):
+            mine = [(s, m) for s, m in zip(sources, metrics) if family_of(s.mtype) == family]
+            cols = [f"{c if f == family else 'CAST(NULL AS BIGINT)'} AS {f}_{c}" for f, c in every]
+            scans.append(
+                f"SELECT metric, ts, {', '.join(cols)} "
+                f"FROM {self._store_relation(mine[0][0])} "
+                f"WHERE metric IN ({', '.join(m for _, m in mine)}) AND ts BETWEEN {lo} AND {hi}"
+            )
+        cols = []
+        for i, (src, m, cs) in enumerate(zip(sources, metrics, columns)):
+            family = family_of(src.mtype)
+            cols.append(f"count(1) FILTER (WHERE metric = {m}) > 0 AS s{i}_p")
+            cols += [f"max({family}_{c}) FILTER (WHERE metric = {m}) AS s{i}_{c}" for c in cs]
+        return [
+            f"r AS ({' UNION ALL '.join(scans)})",
+            f"b AS (SELECT ts, {', '.join(cols)} FROM r GROUP BY ts)",
+        ]
+
+    def _store_relation(self, src) -> str:
+        family = family_of(src.mtype)
+        df = read_summaries(self.ex.spark, self.ex.summary_base_path, family, self.w)
+        return self.relation(df)
+
+    def _field_sql(self, i: int, src, name: str) -> str:
+        """SQL of summary field `name` of source i over `b`."""
+        col = lambda c: f"s{i}_{c}"  # noqa: E731
+        if self.ex.summary_base_path is not None:
+            return cpm_sql(col("count"), self.w) if name == "cpm" else col(name)
+        return summary_field_sql(family_of(src.mtype), name, col, self.w, self.counted)
+
+    def _known(self, fields: list, tids: list[str]) -> str:
+        """`k`: ts, each source's `s{i}_k` (it keeps the bucket: it has
+        it, within the limit), and per Field operand j `o{j}`, its value
+        where its source keeps the bucket. A delta is the count's
+        difference to the source's previous kept bucket: the first has
+        none, so its delta is NULL and the series drops it, and a gap's
+        delta spans the gap."""
+        limits = [n for n in (self.criteria.limit, self.ex.read_limit) if n is not None]
+        ctes, rel, key = "", "b", "p"
         if limits:
-            order = F.col("ts").asc() if criteria.order_asc else F.col("ts").desc()
-            df = df.orderBy(order).limit(min(limits))
-        return df
-
-    def _zip(
-        self,
-        table_ids: set[str],
-        members: list,
-        trange: TimeRange,
-        slc: Slice,
-        criteria: InfluxCriteria,
-        window_ms: int,
-    ) -> tuple[DataFrame, dict[str, str]]:
-        """The group's frame: `time`, plus one struct column per source
-        holding its summary row for that bucket (null where the source
-        has none), and the struct column name per table_id. Sources
-        zip on `ts` by one union + group-by. The spine joins once: with
-        fill every spine bucket stays (left join), without it only the
-        buckets some source has (inner join)."""
-        if not table_ids:
-            return self._spine(trange), {}
-        deltas = {
-            f.table_id for _, proj in members for f in self._fields(proj) if f.name == "delta"
-        }
-        structs, sides = {}, []
-        for i, tid in enumerate(sorted(table_ids)):
-            summary = self._read_summaries(
-                criteria.source_by_table_id(tid), window_ms, slc, criteria
+            order = "" if self.criteria.order_asc else " DESC"
+            ranks = ", ".join(
+                f"s{i}_p AND row_number() OVER (PARTITION BY s{i}_p ORDER BY ts{order}) "
+                f"<= {min(limits)} AS s{i}_k"
+                for i in range(len(tids))
             )
-            if tid in deltas:
-                # extension: count difference vs the previous EXISTING
-                # bucket in the sliced range (the first in-range bucket
-                # has none, so its delta is null and the series drops it;
-                # a gap's delta spans the gap). The lag window runs over
-                # one source's sliced summary — ≤700 points by G1,
-                # bounded like _fill_linear.
-                w = W.partitionBy(F.lit(1)).orderBy("ts")
-                summary = summary.withColumn(
-                    "delta", (F.col("count") - F.lag("count").over(w)).cast("double")
-                )
-            structs[tid] = f"_s{i}"
-            fields = [c for c in summary.columns if c not in ("metric", "ts")]
-            sides.append(summary.select("ts", F.struct(*fields).alias(structs[tid])))
-        zipped = sides[0]
-        if len(sides) > 1:
-            zipped = (
-                reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), sides)
-                .groupBy("ts")
-                .agg(*(F.first(c, ignorenulls=True).alias(c) for c in structs.values()))
-            )
-        spine = self._spine(trange)
-        how = "inner" if criteria.fill is None else "left"
-        return spine.join(zipped, spine.time == zipped.ts, how), structs
+            ctes, rel, key = f"l AS (SELECT *, {ranks} FROM b),\n", "l", "k"
+        cols = [f"s{i}_{key} AS s{i}_k" for i in range(len(tids))]
+        for j, (tid, name) in enumerate(fields):
+            i = tids.index(tid)
+            src = self.criteria.source_by_table_id(tid)
+            keep = f"s{i}_{key}"
+            if name == "delta":
+                count = self._field_sql(i, src, "count")
+                value = f"{count} - lag({count}) OVER (PARTITION BY {keep} ORDER BY ts)"
+            else:
+                value = self._field_sql(i, src, name)
+            cols.append(f"CASE WHEN {keep} THEN CAST({value} AS DOUBLE) END AS o{j}")
+        return ctes + f"k AS (SELECT ts, {', '.join(cols)} FROM {rel})"
 
-    def _spine(self, trange: TimeRange) -> DataFrame:
-        """Dense timestamp spine from..to inclusive, step window — a
-        Catalyst `sequence` + explode, not a driver loop (G3)."""
-        if trange.to_ms < trange.from_ms:
-            return self.spark.range(0).select(F.col("id").alias("time"))
-        return self.spark.sql(
-            f"SELECT explode(sequence({trange.from_ms}L, {trange.to_ms}L, "
-            f"{trange.window_ms}L)) AS time"
+    def _rows(self, fields: list, tids: list[str], spine: bool) -> str:
+        """`x`: one row per rendered bucket, `time`, with `v{j}`, Field
+        operand j after fill, and without fill `q{j}`, whether its
+        source counts the bucket. The spine joins only under fill or for
+        a bare-number series; without it every bucket read is already on
+        the grid."""
+        fill = self.criteria.fill
+        cols = []
+        for j, (tid, name) in enumerate(fields):
+            v = f"o{j}"
+            if fill is None:
+                keep = f"{v} IS NOT NULL" if name == "delta" else f"s{tids.index(tid)}_k"
+                cols += [f"{v} AS v{j}", f"{keep} AS q{j}"]
+            elif fill == "linear":
+                cols.append(f"{self._fill_linear(v, 'g.time')} AS v{j}")
+            else:
+                cols.append(f"coalesce({v}, {_double(fill)}) AS v{j}")
+        if not spine:
+            return f"x AS (SELECT ts AS time, {', '.join(cols)} FROM k)"
+        tr = self.trange
+        grid = f"(SELECT id AS time FROM range({tr.from_ms}, {tr.to_ms + self.w}, {self.w}, 1)) g"
+        if not fields:
+            return f"x AS (SELECT time FROM {grid})"
+        windows = ""
+        if fill == "linear":
+            windows = (
+                " WINDOW w_prev AS (PARTITION BY 1 ORDER BY g.time "
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), "
+                "w_next AS (PARTITION BY 1 ORDER BY g.time "
+                "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)"
+            )
+        return (
+            f"x AS (SELECT g.time, {', '.join(cols)} FROM {grid} "
+            f"LEFT JOIN k ON g.time = k.ts{windows})"
         )
 
     @staticmethod
-    def _fill_linear(known: Column) -> Column:
-        """fill(linear): interpolate missing buckets between their
-        nearest known neighbours — the InfluxQL fill(linear) semantics
-        (gaps before the first / after the last known point stay null,
-        so the series drops them, not extrapolated). The carry-forward/
-        backward windows run over one group's spine of ≤700 points (G1
-        bounds every rendered series), so the single partition is by
-        construction bounded — the same reasoning as the reference's
-        in-memory series build (`InfluxQueryResolver.scala:184-201`)."""
-        one = F.lit(1)
-        prev_w = W.partitionBy(one).orderBy("time").rowsBetween(
-            W.unboundedPreceding, -1
-        )
-        next_w = W.partitionBy(one).orderBy("time").rowsBetween(
-            1, W.unboundedFollowing
-        )
-        known_t = F.when(known.isNotNull(), F.col("time"))
-        pv = F.last(known, ignorenulls=True).over(prev_w)
-        pt = F.last(known_t, ignorenulls=True).over(prev_w)
-        nv = F.first(known, ignorenulls=True).over(next_w)
-        nt = F.first(known_t, ignorenulls=True).over(next_w)
-        interp = pv + (nv - pv) * (F.col("time") - pt) / (nt - pt)
-        return F.when(known.isNotNull(), known).when(
-            pv.isNotNull() & nv.isNotNull(), interp
+    def _fill_linear(v: str, t: str) -> str:
+        """fill(linear): interpolate a missing bucket between its nearest
+        known neighbours — the InfluxQL fill(linear) semantics (gaps
+        before the first / after the last known point stay NULL, so the
+        series drops them, not extrapolated)."""
+        pv, nv = f"last({v}, true) OVER w_prev", f"first({v}, true) OVER w_next"
+        known_t = f"CASE WHEN {v} IS NOT NULL THEN {t} END"
+        pt, nt = f"last({known_t}, true) OVER w_prev", f"first({known_t}, true) OVER w_next"
+        return (
+            f"CASE WHEN {v} IS NOT NULL THEN {v} "
+            f"WHEN {pv} IS NOT NULL AND {nv} IS NOT NULL "
+            f"THEN {pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) END"
         )
 
-    @staticmethod
-    def _function_col(field: Field, row: Column, window_ms: int) -> Column:
-        if field.name == "cpm":
-            return cpm_col(row["count"], window_ms).cast("double")
-        return row[field.name].cast("double")
-
-    def _operand(
-        self,
-        proj: Field | Number,
-        structs: dict[str, str],
-        criteria: InfluxCriteria,
-        window_ms: int,
-    ) -> tuple[Column, Column]:
-        """(value, keep) of a simple projection per spine bucket, fill
-        applied (`generateSeq`, :176-201)."""
-        if isinstance(proj, Number):
-            return F.lit(float(proj.value)), F.lit(True)
-        if not isinstance(proj, Field):
-            raise QueryExecutionError(f"Unknown projection {proj!r}")
-        row = F.col(structs[proj.table_id])
-        if proj.name == "delta":
-            value = row["delta"]
-            present = value.isNotNull()
-        else:
-            value = self._function_col(proj, row, window_ms)
-            present = row.isNotNull()
-        if criteria.fill is None:
-            return value, present
-        known = F.when(present, value)
-        if criteria.fill == "linear":
-            filled = self._fill_linear(known)
-            return filled, filled.isNotNull()
-        return F.coalesce(known, F.lit(float(criteria.fill))), F.lit(True)
-
-    def _series(
-        self,
-        proj,
-        structs: dict[str, str],
-        criteria: InfluxCriteria,
-        window_ms: int,
-    ) -> tuple[Column, Column]:
-        """(value, keep) of one projection per spine bucket. The caller
+    def _series(self, proj, fields: list) -> tuple[str, str]:
+        """(value, keep) of one projection per bucket. The statement
         evaluates the value only where keep holds, so a zero divisor in
-        a bucket the series drops raises nothing, as with the reference's
-        inner zip."""
+        a bucket the series drops raises nothing, as with the
+        reference's inner zip."""
+        fill = self.criteria.fill
+
+        def operand(o) -> tuple[str, str]:
+            if isinstance(o, Number):
+                return _double(o.value), "TRUE"
+            if not isinstance(o, Field):
+                raise QueryExecutionError(f"Unknown projection {o!r}")
+            j = fields.index((o.table_id, o.name))
+            if fill is None:
+                return f"v{j}", f"q{j}"
+            return f"v{j}", f"v{j} IS NOT NULL" if fill == "linear" else "TRUE"
+
         if not isinstance(proj, Operation):
-            return self._operand(proj, structs, criteria, window_ms)
-        if isinstance(proj.left, Operation) or isinstance(proj.right, Operation):
-            raise QueryExecutionError("Nested operations are not supported yet")
-        lv, lk = self._operand(proj.left, structs, criteria, window_ms)
-        rv, rk = self._operand(proj.right, structs, criteria, window_ms)
-        if proj.operator == "+":
-            value = lv + rv
-        elif proj.operator == "-":
-            value = lv - rv
-        elif proj.operator == "*":
-            value = lv * rv
-        elif proj.operator == "/":
-            # the reference throws on division by zero
-            # (`InfluxAst.scala:86-95`); reject the literal case at
-            # plan time, and fail per-point via a raising expression
-            # otherwise rather than emitting silent nulls
-            if isinstance(proj.right, Number) and float(proj.right.value) == 0.0:
-                raise QueryExecutionError("Division by zero")
-            value = F.when(rv == 0, F.raise_error(F.lit("Division by zero"))).otherwise(
-                lv / rv
-            )
-        else:
+            return operand(proj)
+        (lv, lk), (rv, rk) = (operand(o) for o in _operands(proj))
+        keep = " AND ".join(k for k in (lk, rk) if k != "TRUE") or "TRUE"
+        if proj.operator in ("+", "-", "*"):
+            return f"({lv} {proj.operator} {rv})", keep
+        if proj.operator != "/":
             raise QueryExecutionError(f"Unknown operator {proj.operator}")
-        return value, lk & rk
-
-    def _finalize(self, df: DataFrame, criteria: InfluxCriteria) -> DataFrame:
-        """scale + 4dp HALF_UP rounding + (series, time) order (:214-224).
-
-        The order is a single-partition sort: coalesce(1) narrows the
-        few post-aggregate partitions without a shuffle, and the
-        within-partition sort is then the total order. The rendered
-        rows are bounded (≤700 points per series, G1), so a range
-        exchange and its boundary-sampling job would be pure overhead."""
-        value = F.col("value") * F.lit(float(criteria.scale if criteria.scale is not None else 1.0))
-        df = df.select(
-            "_sid", "series", "metric", "time", F.round(value, 4).alias("value")
-        )
-        order = F.col("time").asc() if criteria.order_asc else F.col("time").desc()
-        return df.coalesce(1).sortWithinPartitions("_sid", order)
+        # the reference throws on division by zero (`InfluxAst.scala:86-95`):
+        # reject the literal case at plan time, and fail per point with a
+        # raising expression otherwise rather than emitting silent NULLs
+        if isinstance(proj.right, Number) and float(proj.right.value) == 0.0:
+            raise QueryExecutionError("Division by zero")
+        return f"CASE WHEN {rv} = 0 THEN raise_error('Division by zero') ELSE {lv} / {rv} END", keep

@@ -41,9 +41,6 @@ def recommended_session_conf() -> dict[str, str]:
     Values are overridable via SPARK_GRAFT_HUGE_METHOD_LIMIT (bench
     A/B knob). Deliberately NOT here: core counts, memory, shuffle
     partitions — those are deployment-sized, not engine properties.
-    Nor ``spark.python.sql.dataFrameDebugging.enabled=false``: it cuts
-    Python-side plan building but showed no end-to-end gain
-    (sweeps/r16/), and errors would lose their DataFrame context.
     """
     return {
         "spark.sql.codegen.hugeMethodLimit": os.environ.get(

@@ -312,3 +312,23 @@ def test_alias_colliding_with_metric_name_is_rejected(spark):
     )
     crit = build_criteria(ok, catalog)
     assert sorted(s.table_id for s in crit.sources) == ["cpu", "m2"]
+
+
+def test_query_reads_cached_measurements_and_keeps_them_cached(spark):
+    """The statement reads the measurements through a temp view of its
+    own. Dropping that view must not uncache the caller's DataFrame
+    (`spark.catalog.dropTempView` uncaches any cached plan equal to the
+    view's), and the query must read the cache."""
+    from pyspark import StorageLevel
+
+    rows = [("m", "counter", t * 60_000, t) for t in range(1, 11)]
+    m = spark.createDataFrame(rows, SCHEMA).cache()
+    try:
+        eng = KhronusEngine(spark, measurements=m, now_ms=700_000)
+        res = eng.sql('select count from "m" where time >= 0 force group by time(1m)')
+        plan = res[0].df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" in plan
+        assert m.storageLevel != StorageLevel.NONE
+        assert len(_vals(res[0])) == 10
+    finally:
+        m.unpersist()

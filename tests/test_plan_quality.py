@@ -42,9 +42,8 @@ def test_tpch_q5_all_dims_broadcast(spark, oracle_sf_dir):
     assert "EqualTo(r_name,ASIA)" in plan
 
 
-def test_dashboard_query_pushes_time_range_raw(spark, oracle_sf_dir):
-    plan = _plan(spark, oracle_sf_dir, "influx_count_click_5m")
-    assert "EqualTo(event_type,click)" in plan
+def _assert_pushes_time_range_raw(plan: str, metric: str) -> None:
+    assert f"EqualTo(event_type,{metric})" in plan
     # the ms-domain slice must be restated on the raw source column
     # (TIMESTAMP_NTZ literals vs the NTZ scan column — no cast) and
     # BOTH bounds must land in the scan's PushedFilters line, where
@@ -58,8 +57,20 @@ def test_dashboard_query_pushes_time_range_raw(spark, oracle_sf_dir):
         "GreaterThanOrEqual(ts," in ln and "LessThan(ts," in ln
         for ln in pushed
     ), pushed
-    assert "BroadcastHashJoin" in plan  # spine join broadcasts
     assert "props" not in plan  # unused events columns pruned
+
+
+def test_dashboard_query_pushes_time_range_raw(spark, oracle_sf_dir):
+    plan = _plan(spark, oracle_sf_dir, "influx_count_click_5m")
+    _assert_pushes_time_range_raw(plan, "click")
+    # without fill every bucket read is on the grid: no spine join
+    assert "Join" not in plan
+
+
+def test_dashboard_fill_query_broadcasts_its_spine_join(spark, oracle_sf_dir):
+    plan = _plan(spark, oracle_sf_dir, "influx_fill_zero_view_10m")
+    _assert_pushes_time_range_raw(plan, "view")
+    assert "BroadcastHashJoin" in plan  # the fill's spine join broadcasts
 
 
 def test_rollup_single_shuffle(spark, oracle_sf_dir):

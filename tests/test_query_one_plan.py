@@ -5,6 +5,9 @@ from one frame, collected once.
   the status tracker under a job group of its own;
 - the job budget of each perfbench `batch_pipeline` registry entry, run
   and collected the same way;
+- the Py4J round trips of building each mix shape's plan;
+- the wire bodies of the mix over 1 and 40 landed files, under 1 and 7
+  shuffle partitions with adaptive execution on and off;
 - every series of a multi-series answer equals the same projection
   queried alone (a series mix-up in the long frame shows here), on a
   measurements engine and on a summary-store engine.
@@ -12,6 +15,7 @@ from one frame, collected once.
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -37,15 +41,15 @@ MIX_METRICS = (
 )
 MIX_NAMES = ("ing.latency", "ing.latency", "ing.hits", "ing.errs", "ing.size")
 
-#: Spark jobs per GET of each mix shape: the summary's shuffle stage, the
-#: spine broadcast and the result stage; the two-source sum adds the
-#: second summary and the zip on `ts`; `list series` is a local relation.
+#: Spark jobs per GET of each mix shape: the aggregate's shuffle stage and
+#: the result stage (every source of the two-source sum comes from the one
+#: scan and aggregate); `list series` is a local relation.
 JOB_BUDGET = {
-    "count_5m": 3,
-    "percentiles_1h": 3,
-    "mean_max_30s": 3,
-    "star_10m": 3,
-    "alias_sum_5m": 5,
+    "count_5m": 2,
+    "percentiles_1h": 2,
+    "mean_max_30s": 2,
+    "star_10m": 2,
+    "alias_sum_5m": 2,
     "list_series": 0,
 }
 
@@ -61,7 +65,7 @@ BATCH_JOB_BUDGET = {
     "coreset_kcenter_per_cell": {16},
     "part_entity_components": {18},
     "decontamination_retrieval": {13},
-    "influx_store_percentiles_1h": {7},
+    "influx_store_percentiles_1h": {6},
 }
 
 
@@ -107,7 +111,7 @@ def test_dashboard_mix_job_budget(spark, tmp_path):
         )
         assert payload and (label == "list_series" or payload[0]["points"])
     assert jobs == JOB_BUDGET
-    assert jobs["star_10m"] <= 3
+    assert jobs["star_10m"] <= 2
 
 
 def test_get_after_append_runs_no_catalog_scan(spark, tmp_path):
@@ -129,6 +133,85 @@ def test_get_after_append_runs_no_catalog_scan(spark, tmp_path):
         assert jobs == JOB_BUDGET[label]
     names = {p[1] for p in payload[0]["points"]}
     assert names == {name for name, _ in MIX_METRICS}
+
+
+#: Py4J commands a mix shape's plan build may send: one SQL statement,
+#: its parameters and its temp view (16-56 measured; the per-column
+#: DataFrame builder it replaced sent 560-3000)
+PY4J_BUDGET = 100
+
+
+def test_plan_build_py4j_budget(spark, tmp_path):
+    """Building a mix shape's plan (`eng.sql(q)`, nothing collected)
+    stays a handful of Py4J round trips, so plan construction cannot
+    drift back to per-column DataFrame calls. Deferred frees of
+    earlier Java objects are not plan building and are not counted."""
+    import gc
+
+    from py4j import clientserver, protocol
+
+    spark.createDataFrame(_mix_rows(), SCHEMA).coalesce(1).write.parquet(str(tmp_path / "m"))
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send = clientserver.ClientServerConnection.send_command
+    sent = []
+
+    def counting(conn, command):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(conn, command)
+
+    commands = {}
+    for label, q in dashboard_queries(T0, MIX_NAMES):
+        m = spark.read.schema(SCHEMA).parquet(str(tmp_path / "m"))
+        eng = KhronusEngine(spark, measurements=m, catalog=sorted(MIX_METRICS), now_ms=T0 + DAY_MS)
+        gc.collect()
+        sent.clear()
+        clientserver.ClientServerConnection.send_command = counting
+        try:
+            eng.sql(q)
+        finally:
+            clientserver.ClientServerConnection.send_command = send
+        commands[label] = len(sent)
+    assert all(n <= PY4J_BUDGET for n in commands.values()), commands
+
+
+def test_answers_do_not_depend_on_layout_or_shuffle_conf(spark, tmp_path):
+    """The same rows landed as 1 file and as 40 answer every mix shape,
+    a fill(linear) and a delta query with identical wire bodies under
+    1 and 7 shuffle partitions, with adaptive execution on and off."""
+    rows = spark.createDataFrame(_mix_rows(), SCHEMA)
+    rows.coalesce(1).write.parquet(str(tmp_path / "one"))
+    rows.repartition(40).write.parquet(str(tmp_path / "forty"))
+    queries = [q for _, q in dashboard_queries(T0, MIX_NAMES)] + [
+        f'select count, p90 from "ing.latency" where time >= {T0} and time < {T0 + DAY_MS} '
+        "force group by time(1h) fill(linear)",
+        f'select delta, count from "ing.hits" where time >= {T0} and time < {T0 + DAY_MS} '
+        "force group by time(30m)",
+    ]
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    bodies = {}
+    try:
+        for partitions in ("1", "7"):
+            for adaptive in ("true", "false"):
+                spark.conf.set(keys[0], partitions)
+                spark.conf.set(keys[1], adaptive)
+                for layout in ("one", "forty"):
+                    m = spark.read.schema(SCHEMA).parquet(str(tmp_path / layout))
+                    eng = KhronusEngine(
+                        spark, measurements=m, catalog=sorted(MIX_METRICS), now_ms=T0 + DAY_MS
+                    )
+                    for q in queries:
+                        body = json.dumps(series_to_json(eng.sql(q)))
+                        bodies.setdefault(q, set()).add(body)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert all(len(b) == 1 for b in bodies.values()), [q for q, b in bodies.items() if len(b) > 1]
+    assert all('"points": []' not in next(iter(b)) for b in bodies.values())
 
 
 @pytest.mark.parametrize("name", sorted(BATCH_JOB_BUDGET))

@@ -709,3 +709,38 @@ def test_read_requests_run_in_the_query_pool(spark):
         svc.stop()
     assert seen == [QUERY_POOL, QUERY_POOL]
     assert sc.getLocalProperty("spark.scheduler.pool") is None
+
+
+def test_metric_names_cannot_break_the_statement(spark):
+    """Metric names bind as parameters of the query's SQL statement,
+    never into its text: names holding a quote, a backtick and braces
+    answer the same points as the same rows stored under plain names."""
+    import time as _time
+
+    landing = tempfile.mkdtemp(prefix="khronus_names_") + "/in"
+    svc = KhronusHttpService(spark, landing)
+    svc.start()
+    try:
+        now = int(_time.time() * 1000) // 60_000 * 60_000
+        names = {"t": ("q'{t}`", "plain.t"), "c": ("c`{x}'", "plain.c")}
+        for i, ts in enumerate((now - 180_000, now - 60_000)):
+            for name in names["t"]:
+                _post(svc, name, "timer", ts + 1_000, [5 + i, 9, 12 * i])
+            for name in names["c"]:
+                _post(svc, name, "counter", ts + 2_000, [3, i])
+        where = "where time > now()-1h force group by time(1m)"
+        for shape in (
+            'select count, p50 from "{t}"',
+            'select a.count + b.count as total from "{t}" as a, "{c}" as b',
+        ):
+            odd, plain = (
+                _get(svc, f"{shape.format(t=t, c=c)} {where}")
+                for t, c in zip(names["t"], names["c"])
+            )
+            assert [s["points"] for s in odd] == [s["points"] for s in plain]
+            assert all(s["points"] for s in odd)
+        assert {s["name"] for s in _get(svc, f'select count, p50 from "{names["t"][0]}" {where}')} == {
+            names["t"][0]
+        }
+    finally:
+        svc.stop()
