@@ -34,22 +34,16 @@ def make_session(cpus: str, app: str = "khronus-spark-bench", extra_conf=None):
         .config("spark.driver.memory", "16g")
     )
     # The engine-level recommended conf (hugeMethodLimit=8000 JIT
-    # alignment + AQE coalescing) now lives in ONE place —
-    # khronus_spark/session.py::recommended_session_conf — shared by
-    # this bench, `python -m khronus_spark`, and documented for
-    # cluster spark-defaults (r13 verdict What's-wrong #5: it was a
-    # bench-only artifact). Values and the A/B evidence are unchanged:
+    # alignment + AQE coalescing) lives in
+    # khronus_spark/session.py::recommended_session_conf, shared by
+    # this bench and `python -m khronus_spark`. A/B evidence:
     # sweeps/r13/huge_method_ab3_interleaved.json (zorder 2.533→1.756,
     # others 0.90–1.08); the JVM-wide -XX:-DontCompileHugeMethods
-    # alternative stays opt-in (suite geomean 1.118x — compile churn).
+    # alternative is not set (suite geomean 1.118x — compile churn).
     from khronus_spark.session import recommended_session_conf
 
     for k, v in recommended_session_conf().items():
         b = b.config(k, v)
-    if os.environ.get("SPARK_GRAFT_HUGE_METHOD_JIT", "0") != "0":
-        b = b.config(
-            "spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods"
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -179,16 +173,6 @@ def build_slots(spark, sf_dir: str, cpus: str) -> dict:
         "ann_lsh_topk": lambda: run_df(q["ann_lsh_topk"](spark, sf_dir)),
         # HDR-compat mergeable-histogram path (bounded per-bucket state)
         "rollup_hdr_5m": lambda: run_df(q["ts_hdr_summary_5m"](spark, sf_dir)),
-        # sketch path: mergeable percentile_approx (the streaming/scale mode)
-        "rollup_hist_approx_30s": lambda: run_df(
-            histogram_summary(
-                measurements_from_events(spark, sf_dir).where(
-                    "mtype IN ('timer','gauge')"
-                ),
-                30_000,
-                approx=True,
-            )
-        ),
         # point-in-time feature join (single-shuffle as-of)
         "asof_join": lambda: run_df(q["events_asof_signup"](spark, sf_dir)),
         # sessionization via session_window

@@ -141,10 +141,9 @@ def register(name: str, oracle: str | None):
 #: 3 + 37 + 10 = 50. The r14 streaming-reader schema pins have no
 #: registry consumer (maintainer-side paths); they are proven by the
 #: stream==batch/replay batteries. Rows-only entries (xxhash64
-#: signatures, the stateful streaming face) stay out — the window
-#: accepts only hash-checkable entries, and their md5/stream==batch
-#: twins are covered. Everything else is still locally oracle-checked
-#: every run by tests/test_oracle_parity.py.
+#: signatures) stay out — the window accepts only hash-checkable
+#: entries, and their md5 twins are covered. Everything else is still
+#: locally oracle-checked every run by tests/test_oracle_parity.py.
 #: tests/test_oracle_parity.py::test_window_rotation_covers_unproven
 #: enforces the invariant "green before, in the window, or queued".
 DRIVER_WINDOW = 50
@@ -3612,41 +3611,6 @@ SELECT metric, (ts_ms // {window_ms}) * {window_ms} AS ts,
 FROM (SELECT metric, ts_ms, {q} AS q FROM ({MEASUREMENTS_SQL}) m WHERE mtype = 'timer') s
 GROUP BY metric, ts
 """
-
-
-@register("streaming_stateful_hist_1h", None)  # custom stateful streaming
-# (applyInPandasWithState, event-time timeouts) — non-SQL-expressible;
-# its batch equivalent ts_hdr_summary_5m IS oracle-checked, and
-# tests/test_stateful_streaming.py proves stream == batch per bucket
-def streaming_stateful_hist_1h(spark, sf_dir):
-    """Per-(metric, bucket) histogram state across micro-batches with
-    event-time-timeout finalization (streaming/stateful.py): the
-    reference's bucket cache + tick processing (`store/BucketCache.
-    scala:21-186`, `model/Tick.scala:12-19`) as one stateful operator."""
-    from khronus_spark.streaming.stateful import run_stateful_rollup
-
-    tmp = _scratch_dir("stateful_entry")
-    m = measurements_from_events(spark, sf_dir).where(F.col("mtype") == "timer")
-    lo, hi = m.agg(F.min("ts_ms"), F.max("ts_ms")).first()
-    span = (hi - lo) + 1
-    chunked = m.withColumn("chunk", ((F.col("ts_ms") - lo) * 4 / span).cast("int"))
-    for i in range(4):
-        chunked.where(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{tmp}/in/chunk={i}")
-    stream = (
-        spark.readStream.schema(m.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp}/in/*")
-    )
-    q = run_stateful_rollup(
-        stream,
-        out_path=f"{tmp}/out",
-        checkpoint_path=f"{tmp}/ckpt",
-        window_ms=3_600_000,
-    )
-    q.awaitTermination(180)
-    return spark.read.parquet(f"{tmp}/out")
 
 
 @register("streaming_dedup_components", components_ops.minhash_components_sql())

@@ -17,9 +17,11 @@ which is the classic SQL percentile_disc convention, is exactly
 reproducible in any engine (the DuckDB oracle restates the identical
 formula), and never averages percentiles — preserving the reference's
 "percentiles done right" guarantee (`README.md:23`) without histogram
-quantization error. The scale path (`approx=True`) switches to Spark's
-`percentile_approx` sketch, which is mergeable and bounded-memory for
-100 TB inputs; correctness tests always run the exact path.
+quantization error. The batch rollup, the streaming rollup and the
+query compiler all render this one convention from the SQL text below.
+A histogram bucket's aggregate holds its samples, so its state grows
+with the bucket's sample count; a stream keeps that state only for
+buckets the watermark has not yet closed.
 
 mean is truncated to Long like the reference (`model/HistogramBucket.scala:38-39`)
 via integer division (values are non-negative by ingest contract).
@@ -168,26 +170,6 @@ def cpm_sql(count: str, window_ms: int) -> str:
     return f"{count} / CAST({window_ms / 60000.0!r} AS DOUBLE)"
 
 
-def family_aggregates(family: str) -> list[Column]:
-    """The bounded-state aggregate of one summary family over `value`,
-    shared by `counter_summary`, `histogram_summary(approx=True)` and
-    the streaming rollup: a counter sums its values; a histogram keeps
-    exact count, min, max and mean plus `percentile_approx` sketches.
-    Raises on an unknown family."""
-    aggs = summary_aggregates_sql(family)
-    if family == COUNTER:
-        return [F.expr(aggs["count"]).alias("count")]
-    return [
-        F.expr(aggs["n"]).alias("count"),
-        F.expr(aggs["min"]).alias("min"),
-        F.expr(aggs["max"]).alias("max"),
-        F.expr(mean_sql(aggs["sum"], aggs["n"])).alias("mean"),
-    ] + [
-        F.percentile_approx("value", float(frac), 10000).alias(name)
-        for name, frac in PERCENTILE_FRACTIONS.items()
-    ]
-
-
 def bucket_sql(ts_ms: str, window_ms: int) -> str:
     """Bucket-start timestamp of an epoch-ms column: floor to the grid
     (model/Bucket.scala:54-91)."""
@@ -198,10 +180,26 @@ def bucket_ts(ts_ms_col: str, window_ms: int) -> Column:
     return F.expr(bucket_sql(ts_ms_col, window_ms)).alias("ts")
 
 
+def summary_columns(family: str, window_ms: int) -> tuple[list[Column], list[Column]]:
+    """(aggregates, fields) of one family's exact summary over `value`:
+    the `summary_aggregates_sql` aggregates, each named `_<name>`, and
+    the summary fields over them in store order. The batch summaries
+    and the streaming rollup group by their bucket, aggregate with the
+    first and select the second. Raises on an unknown family."""
+    aggs = [
+        F.expr(sql).alias(f"_{name}")
+        for name, sql in summary_aggregates_sql(family).items()
+    ]
+    fields = [
+        F.expr(summary_field_sql(family, f, lambda c: f"_{c}", window_ms)).alias(f)
+        for f in FAMILY_FIELDS[family]
+    ]
+    return aggs, fields
+
+
 def histogram_summary(
     measurements: DataFrame,
     window_ms: int,
-    approx: bool = False,
     exact_counts: bool = False,
 ) -> DataFrame:
     """measurements(metric, ts_ms, value) → one summary row per
@@ -209,27 +207,22 @@ def histogram_summary(
     (`model/HistogramSummary.scala:21`, computed in
     `model/HistogramBucket.scala:28-48`).
 
-    Three modes, identical schema:
-    - exact/array (default): collect the bucket's values into a sorted
-      array — discrete-exact percentiles; per-bucket state grows with
-      SAMPLE count, so it is the correctness baseline, not the scale
-      path.
-    - exact/counts (`exact_counts=True`): pre-aggregate to
-      (metric, bucket, value) counts, then run the HDR cumulative-rank
-      walk over the RAW (unquantized) value domain — bit-identical
-      output to the array mode, but per-bucket state is bounded by
-      DISTINCT values (the ingest domain, ≲ thousands) no matter how
-      many samples land in the bucket. One extra shuffle, unbounded-
-      safe: the exact path to run at 100 TB.
-    - approx (`approx=True`): mergeable `percentile_approx` sketch —
-      bounded state AND single shuffle, for streaming/latency-first.
+    Two modes, identical output:
+    - array (default): collect the bucket's values into a sorted
+      array; per-bucket state grows with SAMPLE count.
+    - counts (`exact_counts=True`): pre-aggregate to
+      (metric, bucket, value) counts, then run the cumulative-rank
+      walk over the RAW (unquantized) value domain; per-bucket state
+      is bounded by DISTINCT values (the ingest domain, ≲ thousands)
+      no matter how many samples land in the bucket, at the cost of
+      one extra shuffle.
     """
-    # NULL values carry no sample in ANY mode, so a bucket with no
-    # non-NULL sample yields no row in all three (without this filter
-    # the array path indexed an EMPTY collected array — an ANSI crash,
-    # and the counts path kept a NULL entry that inflated the count)
+    # NULL values carry no sample, so a bucket with no non-NULL sample
+    # yields no row in either mode (without this filter the array path
+    # indexed an EMPTY collected array — an ANSI crash, and the counts
+    # path kept a NULL entry that inflated the count)
     measurements = measurements.where(F.col("value").isNotNull())
-    if exact_counts and not approx:
+    if exact_counts:
         from khronus_spark.operators.hdr_rollup import counts_state, state_summary
 
         raw_state = counts_state(
@@ -238,30 +231,23 @@ def histogram_summary(
             )
         )
         return state_summary(raw_state).select("metric", "ts", *HISTOGRAM_FIELDS)
-    grouped = measurements.groupBy(
-        F.col("metric"), bucket_ts("ts_ms", window_ms)
+    aggs, fields = summary_columns(HISTOGRAM, window_ms)
+    return (
+        measurements.groupBy(F.col("metric"), bucket_ts("ts_ms", window_ms))
+        .agg(*aggs)
+        .select("metric", "ts", *fields)
     )
-    if approx:
-        summary = grouped.agg(*family_aggregates(HISTOGRAM))
-        return summary.select("metric", "ts", *FAMILY_FIELDS[HISTOGRAM])
-
-    aggs = summary_aggregates_sql(HISTOGRAM)
-    agg = grouped.agg(*(F.expr(sql).alias(f"_{name}") for name, sql in aggs.items()))
-    fields = [
-        F.expr(summary_field_sql(HISTOGRAM, f, lambda c: f"_{c}", window_ms)).alias(f)
-        for f in HISTOGRAM_FIELDS
-    ]
-    return agg.select("metric", "ts", *fields)
 
 
 def counter_summary(measurements: DataFrame, window_ms: int) -> DataFrame:
     """measurements → CounterSummary(metric, ts, count): counts are the
     **sum of measurement values** per bucket (`model/CounterBucket.scala:5-13`,
     `store/MetricMeasurementStore.scala:100-110`)."""
+    aggs, fields = summary_columns(COUNTER, window_ms)
     return (
         measurements.groupBy(F.col("metric"), bucket_ts("ts_ms", window_ms))
-        .agg(*family_aggregates(COUNTER))
-        .select("metric", "ts", *FAMILY_FIELDS[COUNTER])
+        .agg(*aggs)
+        .select("metric", "ts", *fields)
     )
 
 

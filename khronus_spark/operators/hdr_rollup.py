@@ -116,18 +116,3 @@ def state_summary(state: DataFrame, convention: str = "engine") -> DataFrame:
         F.expr(mean_sql("aggregate(hist, 0L, (a, e) -> a + e.v * e.c)", "_n")).alias("mean"),
     ]
     return withp.select(*cols)
-
-
-def hdr_cascade(
-    measurements: DataFrame, windows_ms: tuple[int, ...]
-) -> dict[int, DataFrame]:
-    """Build the finest state once, then roll every coarser resolution
-    from the previous **state** — raw data is read exactly once."""
-    ordered = sorted(windows_ms)
-    states: dict[int, DataFrame] = {}
-    state = histogram_state(measurements, ordered[0])
-    states[ordered[0]] = state
-    for w in ordered[1:]:
-        state = merge_states(state, w)
-        states[w] = state
-    return states

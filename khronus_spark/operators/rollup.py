@@ -77,7 +77,6 @@ def pregroup_raw(measurements: DataFrame, group_ms: int = STORE_GROUP_MS) -> Dat
 def rollup_all(
     measurements: DataFrame,
     windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
-    approx: bool = False,
 ) -> dict[int, dict[str, DataFrame]]:
     """Compute every resolution's summary tables from measurements.
 
@@ -91,7 +90,7 @@ def rollup_all(
     ctr_src = measurements.where(family_filter(COUNTER))
     return {
         w: {
-            HISTOGRAM: histogram_summary(hist_src, w, approx=approx),
+            HISTOGRAM: histogram_summary(hist_src, w),
             COUNTER: counter_summary(ctr_src, w),
         }
         for w in windows_ms

@@ -40,6 +40,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from khronus_spark.engine import KhronusEngine
+from khronus_spark.functions.summary import family_of
 from khronus_spark.parser.parser import QueryParseError
 from khronus_spark.plans.criteria import QueryValidationError
 from khronus_spark.plans.executor import QueryExecutionError
@@ -71,11 +72,14 @@ _CLIENT_ERRORS = (
 
 
 def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple]:
-    """MetricBatch JSON → measurement rows (one per value)."""
+    """MetricBatch JSON → measurement rows (one per value). Raises
+    ValueError on a metric type that has no summary family: one landed
+    row of it would fail every query whose FROM regex matches it."""
     now = now_ms if now_ms is not None else int(time.time() * 1000)
     rows = []
     for metric in payload.get("metrics", []):
         name, mtype = metric["name"], metric["mtype"]
+        family_of(mtype)
         for m in metric.get("measurements", []):
             ts = m.get("ts")
             ts = now if ts is None else int(ts)

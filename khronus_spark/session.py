@@ -11,8 +11,6 @@ this dict; cluster deploys copy it into spark-defaults.conf.
 
 from __future__ import annotations
 
-import os
-
 
 def recommended_session_conf() -> dict[str, str]:
     """Session conf every khronus_spark session should carry.
@@ -38,14 +36,11 @@ def recommended_session_conf() -> dict[str, str]:
       ``default`` pool, which is FIFO inside, so batch work keeps its
       order.
 
-    Values are overridable via SPARK_GRAFT_HUGE_METHOD_LIMIT (bench
-    A/B knob). Deliberately NOT here: core counts, memory, shuffle
-    partitions — those are deployment-sized, not engine properties.
+    Deliberately NOT here: core counts, memory, shuffle partitions —
+    those are deployment-sized, not engine properties.
     """
     return {
-        "spark.sql.codegen.hugeMethodLimit": os.environ.get(
-            "SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"
-        ),
+        "spark.sql.codegen.hugeMethodLimit": "8000",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.scheduler.mode": "FAIR",

@@ -19,12 +19,14 @@ Structured Streaming primitives:
 
 A streaming rollup is the batch rollup run incrementally, not a second
 implementation of it: `streaming_summary` groups by the tumbling bucket
-and applies the family's aggregate from `functions/summary.py`
-(`family_aggregates`, the one `counter_summary` and the batch approx
-mode use). Its state per (metric, bucket) is bounded: counters keep a
-sum; histograms keep count/min/max/sum plus a `percentile_approx`
-sketch — mergeable and fixed-size, which is what makes this viable at
-100 TB (the exact collect-values path is for batch/backfill only).
+and applies the exact summary of `functions/summary.py`
+(`summary_columns`, the one `histogram_summary` and `counter_summary`
+use), so every stored field equals the batch rollup's. Counters keep a
+sum per (metric, bucket). Histograms keep count/min/max/sum and the
+bucket's samples, so a live bucket's state grows with its samples; the
+watermark evicts it once the bucket closes. A checkpoint written by the
+earlier quantile-sketch aggregate holds state of another shape and
+cannot resume: start such a stream from a new checkpoint.
 
 `run_streaming_rollup_upsert` is the one streaming summary writer: its
 sink (`upsert_sink`) merges each micro-batch's amended buckets by
@@ -36,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from khronus_spark.functions.summary import FAMILY_FIELDS, family_aggregates
+from khronus_spark.functions.summary import HISTOGRAM, summary_columns
 from khronus_spark.timegrid import duration_to_spark_interval
 
 
@@ -51,22 +53,21 @@ def streaming_summary(
     family: str,
     watermark: str = "30 seconds",
 ) -> DataFrame:
-    """The streaming summary of one family: the batch rollup's bounded
-    aggregate (`functions.summary.family_aggregates`) per tumbling
-    bucket, finalized once the watermark passes the bucket end. Raises
-    on an unknown family before touching `measurements`."""
-    aggregates = family_aggregates(family)
+    """The streaming summary of one family: the batch rollup's exact
+    summary (`functions.summary.summary_columns`) per tumbling bucket,
+    its state evicted once the watermark passes the bucket end. As in
+    `histogram_summary`, a NULL value is no histogram sample. Raises on
+    an unknown family before touching `measurements`."""
+    aggs, fields = summary_columns(family, window_ms)
+    if family == HISTOGRAM:
+        measurements = measurements.where(F.col("value").isNotNull())
     interval = duration_to_spark_interval(window_ms)
     return (
         _with_event_time(measurements)
         .withWatermark("ts", watermark)
         .groupBy(F.col("metric"), F.window("ts", interval).alias("w"))
-        .agg(*aggregates)
-        .select(
-            "metric",
-            F.unix_millis(F.col("w.start")).alias("ts"),
-            *FAMILY_FIELDS[family],
-        )
+        .agg(*aggs)
+        .select("metric", F.unix_millis(F.col("w.start")).alias("ts"), *fields)
     )
 
 

@@ -11,9 +11,10 @@ the full history (pinned by the stream==batch test).
 Ordering contract: the recurrence is order-dependent, so the stream
 must deliver each series' buckets in non-decreasing order across
 micro-batches — which is exactly what the upstream finalized-bucket
-producers emit (the watermark-ordered stateful rollup, or a
-bucket-partitioned landing zone replayed in file order). A row that
-arrives at-or-before the per-series high-water mark is DROPPED — it
+producers emit (a rollup that emits each bucket once the watermark
+closes it, or a bucket-partitioned landing zone replayed in file
+order). A row that arrives at-or-before the per-series high-water
+mark is DROPPED — it
 has no well-defined place in an already-emitted recurrence (the
 stream==batch test pins this: a replayed prefix changes nothing);
 within a batch rows sort by the order key first, so intra-batch

@@ -45,9 +45,6 @@ def slot_frames(spark, sf_dir):
         "rollup_hist_counts_30s": lambda: histogram_summary(
             meas(), 30_000, exact_counts=True
         ),
-        "rollup_hist_approx_30s": lambda: histogram_summary(
-            meas(), 30_000, approx=True
-        ),
         "semantic_dedup_auto": lambda: semantic_dedup_derived_k(
             load_table(spark, sf_dir, "embeddings")
         ),

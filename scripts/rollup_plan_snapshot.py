@@ -5,10 +5,9 @@ that a refactor leaves both unchanged.
 Usage: python scripts/rollup_plan_snapshot.py <out.txt> [--sf-dir DIR]
 
 Writes, for the checkout this script lives in, the formatted plan and a
-row-content hash of: `histogram_summary` in its three modes and
+row-content hash of: `histogram_summary` in its two modes and
 `counter_summary`; the streaming histogram and counter summaries (plan
-only); the rows `run_stateful_rollup` emits; `rollup_all` and
-`process_tick`; and `KhronusEngine.sql_union` over the perfbench
+only); `rollup_all` and `process_tick`; and `KhronusEngine.sql_union` over the perfbench
 dashboard query mix, against raw measurements and against a summary
 store written by `write_summaries`, plus a hash of
 each mix query's wire payload (`series_to_json(engine.sql(q))`,
@@ -73,7 +72,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from gen import dashboard_queries
     from khronus_spark.engine import KhronusEngine
@@ -82,7 +80,6 @@ def main() -> None:
     from khronus_spark.operators.rollup import rollup_all, write_summaries
     from khronus_spark.service import series_to_json
     from khronus_spark.streaming import ingest
-    from khronus_spark.streaming.stateful import run_stateful_rollup
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -116,7 +113,6 @@ def main() -> None:
 
     record("hist_array", histogram_summary(m, 30_000))
     record("hist_counts", histogram_summary(m, 30_000, exact_counts=True))
-    record("hist_approx", histogram_summary(m, 30_000, approx=True))
     record("counter", counter_summary(m, 60_000))
     stream = spark.readStream.schema(SCHEMA).parquet(f"{tmp}/m")
     if hasattr(ingest, "streaming_summary"):
@@ -128,16 +124,6 @@ def main() -> None:
     # a streaming frame can be planned but not collected
     record("stream_hist", stream_hist, False)
     record("stream_counter", stream_counter, False)
-    # the stateful operator's plan carries its Python UDF, so only its
-    # emitted rows are compared
-    q = run_stateful_rollup(
-        stream.where(F.col("mtype").isin("timer", "gauge")),
-        out_path=f"{tmp}/stateful",
-        checkpoint_path=f"{tmp}/stateful_ckpt",
-        window_ms=300_000,
-    )
-    q.awaitTermination()
-    out.append(f"===== rows stateful: {_digest(spark.read.parquet(f'{tmp}/stateful'))}")
     for w, fams in rollup_all(m, (30_000, 300_000)).items():
         for family, df in fams.items():
             record(f"rollup_all {w} {family}", df)

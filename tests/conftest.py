@@ -92,7 +92,6 @@ SLOW_TESTS = {
     "tests/test_oracle_parity.py::test_query_matches_oracle[events_hw_residual_anomaly]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[hard_negative_pairs]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[streaming_dedup_components]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[streaming_stateful_hist_1h]",
     "tests/test_pq_dims.py::test_dim16_oracle_parity_codes_and_topk",
     "tests/test_pq_dims.py::test_ivf_pq_build_encode_query_dim16",
     "tests/test_pq_dims.py::test_matryoshka_build_guard_warns_and_raises",
@@ -114,10 +113,6 @@ SLOW_TESTS = {
     "tests/test_similarity.py::test_ivf_sizing_p10_surfaces_the_tail_the_median_hides",
     "tests/test_sketches.py::test_hll_overlap_union_exact_and_intersection_bounded",
     "tests/test_smoothing.py::test_holt_winters_duckdb_recursion_matches_python_fold_property",
-    "tests/test_stateful_streaming.py::test_stateful_matches_batch_hdr",
-    # replay-half of the same soak chain: reads the out/ dir its
-    # (slow-marked) producer test writes, so it travels with it
-    "tests/test_stateful_streaming.py::test_stateful_emits_nothing_twice",
     "tests/test_streaming.py::test_effective_watermark_lags_two_batches_of_front_progress",
     "tests/test_streaming.py::test_streaming_windowed_hll_matches_batch",
     "tests/test_streaming.py::test_upsert_store_complete_and_idempotent",

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from khronus_spark.functions.hdr import HIGHEST_TRACKABLE, hdr_quantize
 from khronus_spark.functions.summary import histogram_summary
 from khronus_spark.operators.hdr_rollup import (
-    hdr_cascade,
     histogram_state,
     merge_states,
     state_summary,
@@ -61,8 +60,10 @@ def test_cascade_equals_direct(spark, sf_dir):
     the same summaries as building the coarse state directly from raw
     (percentiles of merged histograms, never averaged — README.md:23)."""
     m = measurements_from_events(spark, sf_dir).where("mtype = 'timer'")
-    states = hdr_cascade(m, (60_000, 300_000, 3_600_000))
-    via_cascade = state_summary(states[3_600_000])
+    state = histogram_state(m, 60_000)
+    for w in (300_000, 3_600_000):
+        state = merge_states(state, w)
+    via_cascade = state_summary(state)
     direct = state_summary(histogram_state(m, 3_600_000))
     a = sorted(map(tuple, via_cascade.collect()))
     b = sorted(map(tuple, direct.collect()))

@@ -135,22 +135,6 @@ def test_rollup_all_produces_every_window(spark, fixture_measurements):
         assert {"histogram", "counter"} <= set(fams)
 
 
-def test_approx_mode_close_to_exact(spark, sf_dir):
-    m = measurements_from_events(spark, sf_dir).where("mtype = 'timer'")
-    exact = {
-        (r["metric"], r["ts"]): r["p99"]
-        for r in histogram_summary(m, 3_600_000).collect()
-    }
-    approx = {
-        (r["metric"], r["ts"]): r["p99"]
-        for r in histogram_summary(m, 3_600_000, approx=True).collect()
-    }
-    assert set(exact) == set(approx)
-    # sketch percentiles should be within a small relative error
-    for k, v in exact.items():
-        assert abs(approx[k] - v) <= max(2, 0.05 * v)
-
-
 def test_exact_counts_mode_bit_identical_to_array_mode(spark, sf_dir):
     """The counts-mode exact path (bounded per-bucket state — the
     100 TB exact path) must produce byte-for-byte the same summaries
@@ -182,7 +166,7 @@ def test_all_null_bucket_yields_no_row_in_every_mode(spark):
         [("m", 1_000, None), ("m", 70_000, 5), ("m", 75_000, None)],
         "metric string, ts_ms long, value long",
     )
-    for kwargs in ({}, {"exact_counts": True}, {"approx": True}):
+    for kwargs in ({}, {"exact_counts": True}):
         got = {
             r["ts"]: (r["count"], r["p50"])
             for r in histogram_summary(m, 60_000, **kwargs).collect()

@@ -476,6 +476,44 @@ def test_metric_landed_after_engine_cached_is_listed_and_queryable(spark):
         svc.stop()
 
 
+def test_unknown_metric_type_is_400_and_lands_nothing(spark):
+    """A batch naming a metric type without a summary family answers
+    400 and lands none of its rows, good ones included: one landed row
+    of it would fail every FROM-regex query that matches it."""
+    import time as _time
+    import urllib.error
+
+    landing = tempfile.mkdtemp(prefix="khronus_mtype_") + "/in"
+    svc = KhronusHttpService(spark, landing)
+    svc.start()
+    try:
+        now = int(_time.time() * 1000) // 60_000 * 60_000
+        _post(svc, "good.hits", "counter", now - 60_000, [1, 2])
+        bad = {"metrics": [
+            {"name": "good.latency", "mtype": "timer",
+             "measurements": [{"ts": now - 60_000, "values": [5]}]},
+            {"name": "bad.hist", "mtype": "histogram",
+             "measurements": [{"ts": now - 60_000, "values": [7]}]},
+        ]}
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{svc.port}/khronus/metrics",
+            data=json.dumps(bad).encode(), method="POST",
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+        svc.wait_idle()
+
+        listed = _get(svc, "list series")
+        assert [p[1] for p in listed[0]["points"]] == ["good.hits"]
+        got = _get(svc, 'select count from ".*" where time > now()-1h force group by time(1m)')
+        assert [(s["name"], s["points"]) for s in got] == [
+            ("good.hits", [[now - 60_000, 3.0]])
+        ]
+    finally:
+        svc.stop()
+
+
 def test_restarted_service_lists_landed_metrics(spark):
     """Only a service started over landed data scans the landing dir
     for its catalog, once, at construction; over an empty dir it runs
