@@ -148,16 +148,6 @@ def build_slots(spark, sf_dir: str, cpus: str) -> dict:
                 30_000,
             )
         ),
-        # same exact output, bounded per-bucket state (the 100 TB exact path)
-        "rollup_hist_counts_30s": lambda: run_df(
-            histogram_summary(
-                measurements_from_events(spark, sf_dir).where(
-                    "mtype IN ('timer','gauge')"
-                ),
-                30_000,
-                exact_counts=True,
-            )
-        ),
         "rollup_counter_1m": lambda: run_df(q["ts_counter_summary_5m"](spark, sf_dir)),
         "influx_dashboard": lambda: run_df(q["influx_count_click_5m"](spark, sf_dir)),
         "influx_percentiles": lambda: run_df(

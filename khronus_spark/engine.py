@@ -22,11 +22,7 @@ from khronus_spark.parser.ast import InfluxCriteria
 from khronus_spark.parser.parser import InfluxQueryParser
 from khronus_spark.plans.criteria import build_criteria
 from khronus_spark.plans.executor import InfluxSeriesResult, QueryExecutor
-from khronus_spark.timegrid import (
-    DEFAULT_WINDOWS_MS,
-    MAX_RESOLUTION_POINTS,
-    MIN_RESOLUTION_POINTS,
-)
+from khronus_spark.timegrid import DEFAULT_WINDOWS_MS
 
 
 class KhronusEngine:
@@ -38,8 +34,6 @@ class KhronusEngine:
         catalog: list[tuple[str, str]] | None = None,
         windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
         now_ms: int | None = None,
-        min_points: int = MIN_RESOLUTION_POINTS,
-        max_points: int = MAX_RESOLUTION_POINTS,
         read_limit: int | None = None,
     ):
         """Query engine over raw `measurements` or a materialized summary
@@ -66,15 +60,12 @@ class KhronusEngine:
         self.summary_base_path = summary_base_path
         self.windows_ms = windows_ms
         self._now_ms = now_ms
-        self.max_points = max_points
         self._catalog = catalog
         self.executor = QueryExecutor(
             spark,
             measurements,
             summary_base_path,
             windows_ms,
-            min_points,
-            max_points,
             read_limit=read_limit,
         )
 

@@ -3593,14 +3593,13 @@ def media_frame_sample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _hdr_summary_sql(window_ms: int, convention: str = "engine") -> str:
-    from khronus_spark.functions.hdr import hdr_quantize_sql
-    from khronus_spark.operators.hdr_rollup import _RANK_SQL
+    from khronus_spark.functions.hdr import hdr_quantize_sql, hdr_rank_sql
+    from khronus_spark.functions.summary import rank_sql
 
     q = hdr_quantize_sql("value")
+    rank = {"engine": rank_sql, "hdr": hdr_rank_sql}[convention]
     pct = ",\n  ".join(
-        "(list_sort(list(q)))[CAST({rank} AS BIGINT)] AS {name}".format(
-            rank=_RANK_SQL[convention].format(f=frac, n="count(q)"), name=name
-        )
+        f"(list_sort(list(q)))[CAST({rank(frac, 'count(q)')} AS BIGINT)] AS {name}"
         for name, frac in PERCENTILE_FRACTIONS.items()
     )
     return f"""

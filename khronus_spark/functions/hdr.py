@@ -36,9 +36,11 @@ SUB_BUCKET_COUNT = 2048
 
 
 def hdr_quantize(v: Column) -> Column:
-    """Highest equivalent value of v in the 3-significant-digit grid.
-    v must be a non-negative long (ingest skips negatives)."""
-    clamped = F.least(v, F.lit(HIGHEST_TRACKABLE)).cast("long")
+    """Highest equivalent value of v in the 3-significant-digit grid;
+    NULL stays NULL. v must be a non-negative long (ingest skips
+    negatives)."""
+    # not `least`, which skips a NULL operand and would clamp it
+    clamped = F.when(v > HIGHEST_TRACKABLE, HIGHEST_TRACKABLE).otherwise(v).cast("long")
     rng = (
         F.when(clamped < SUB_BUCKET_COUNT, F.lit(1).cast("long"))
         .otherwise(
@@ -50,9 +52,17 @@ def hdr_quantize(v: Column) -> Column:
 
 def hdr_quantize_sql(expr: str) -> str:
     """The identical quantization in DuckDB SQL."""
-    clamped = f"least({expr}, {HIGHEST_TRACKABLE})"
+    clamped = f"(CASE WHEN {expr} > {HIGHEST_TRACKABLE} THEN {HIGHEST_TRACKABLE} ELSE {expr} END)"
     rng = (
         f"(CASE WHEN {clamped} < {SUB_BUCKET_COUNT} THEN 1 "
         f"ELSE CAST(power(2, floor(log2({clamped})) - 10) AS BIGINT) END)"
     )
     return f"(({clamped} // {rng} + 1) * {rng} - 1)"
+
+
+def hdr_rank_sql(frac: str, n: str) -> str:
+    """1-indexed rank of percentile `frac` among `n` values in the
+    reference's HdrHistogram `getValueAtPercentile` convention
+    (`model/HistogramBucket.scala:28-34`): round-half-up of frac · n,
+    floored at 1. Valid in Spark and DuckDB SQL."""
+    return f"greatest(1, floor({frac} * {n} + 0.5))"

@@ -21,7 +21,10 @@ quantization error. The batch rollup, the streaming rollup and the
 query compiler all render this one convention from the SQL text below.
 A histogram bucket's aggregate holds its samples, so its state grows
 with the bucket's sample count; a stream keeps that state only for
-buckets the watermark has not yet closed.
+buckets the watermark has not yet closed. The count state `hist`,
+sorted (value, count) entries, is bounded by distinct values and
+merges by adding counts; wide-slice queries and the HDR cascade
+(`operators/hdr_rollup.py`) build and summarize it from the text here.
 
 mean is truncated to Long like the reference (`model/HistogramBucket.scala:38-39`)
 via integer division (values are non-negative by ingest contract).
@@ -79,14 +82,15 @@ def summary_aggregates_sql(
     family: str, where: str | None = None, counted: bool = False
 ) -> dict[str, str]:
     """The exact per-bucket aggregates of one summary family over
-    `value`, as SQL text by name: `n` (the samples; the bucket exists
-    where n > 0), `count`/`min`/`max`/`sum` and, for a histogram, the
-    sorted samples `sorted`. `where` restricts every aggregate to the
-    rows it holds for (a FILTER clause). `counted` reads (value, c) rows,
-    c samples of each value, and collects the sorted (v, c) entries
-    `hist` instead of the samples, so state is bounded by distinct
-    values. `summary_field_sql` derives the summary fields from these.
-    Raises on an unknown family."""
+    `value`, as SQL text by name. A counter has `n` (its rows; the
+    bucket exists where n > 0) and `count`; a histogram has `n` (its
+    samples), `min`, `max`, `sum` and the sorted samples `sorted`.
+    `where` restricts every aggregate to the rows it holds for (a
+    FILTER clause). `counted` reads (value, c) rows, c samples of each
+    value, and a histogram then has only `hist`, its count state: the
+    (v, c) entries sorted by v, bounded by distinct values, empty where
+    the bucket has no sample. `summary_field_sql` derives the summary
+    fields from these. Raises on an unknown family."""
     if family not in FAMILY_FIELDS:
         raise ValueError(f"Unknown summary family: {family}")
     # a NULL value is no sample; only the counted rows keep a NULL group
@@ -95,17 +99,15 @@ def summary_aggregates_sql(
     if family == COUNTER:
         total = "sum(value * c)" if counted else "sum(value)"
         return {"n": f"count(1){flt}", "count": total + flt}
-    aggs = {
-        "n": ("sum(c)" if counted else "count(value)") + flt,
+    if counted:
+        return {"hist": f"sort_array(collect_list(struct(value AS v, c)){flt})"}
+    return {
+        "n": f"count(value){flt}",
         "min": f"min(value){flt}",
         "max": f"max(value){flt}",
-        "sum": ("sum(value * c)" if counted else "sum(value)") + flt,
+        "sum": f"sum(value){flt}",
+        "sorted": f"sort_array(collect_list(value){flt})",
     }
-    if counted:
-        aggs["hist"] = f"sort_array(collect_list(struct(value AS v, c)){flt})"
-    else:
-        aggs["sorted"] = f"sort_array(collect_list(value){flt})"
-    return aggs
 
 
 def summary_field_sql(
@@ -113,18 +115,29 @@ def summary_field_sql(
 ) -> str:
     """SQL text of one summary field over the aggregates of
     `summary_aggregates_sql`, each named by `col(name)`. In the counted
-    mode a percentile reads `col("walk")`, the `percentile_walk_sql`
-    struct of the bucket's entries."""
+    mode a histogram field derives from `col("hist")`: count = Σc, min
+    the first v, max the last, mean Σv·c over Σc, and a percentile reads
+    `col("walk")`, the `percentile_walk_sql` struct of the hist."""
     if field == "cpm":
         return cpm_sql(summary_field_sql(family, "count", col, window_ms, counted), window_ms)
-    if family == COUNTER or field in ("min", "max"):
+    if family == COUNTER:
+        return col(field)
+    if counted:
+        hist = col("hist")
+        count = f"aggregate({hist}, 0L, (a, e) -> a + e.c)"
+        if field == "count":
+            return count
+        if field in ("min", "max"):
+            return f"element_at({hist}, {1 if field == 'min' else -1}).v"
+        if field == "mean":
+            return mean_sql(f"aggregate({hist}, 0L, (a, e) -> a + e.v * e.c)", count)
+        return f"{col('walk')}.{field}"
+    if field in ("min", "max"):
         return col(field)
     if field == "count":
         return col("n")
     if field == "mean":
         return mean_sql(col("sum"), col("n"))
-    if counted:
-        return f"{col('walk')}.{field}"
     return percentile_sql(col("sorted"), col("n"), PERCENTILE_FRACTIONS[field])
 
 
@@ -139,23 +152,25 @@ def percentile_sql(sorted_values: str, n: str, frac: str) -> str:
     return f"element_at({sorted_values}, CAST({rank_sql(frac, n)} AS INT))"
 
 
-def percentile_walk_sql(hist: str, rank) -> str:
+def percentile_walk_sql(hist: str, rank=rank_sql) -> str:
     """Every percentile of sorted (v, c) entries from ONE cumulative walk:
     a struct with a field per percentile name, the first v whose
-    cumulative count reaches `rank(name)`."""
-    names = list(PERCENTILE_FRACTIONS)
+    cumulative count reaches `rank(frac, total)`, `total` being Σc. The
+    walk runs in the finish function of the fold that sums c, so the
+    total is computed once per row."""
     init = "named_struct('cum', 0L, " + ", ".join(
-        f"'{n}', CAST(NULL AS BIGINT)" for n in names
+        f"'{n}', CAST(NULL AS BIGINT)" for n in PERCENTILE_FRACTIONS
     ) + ")"
     steps = ", ".join(
         f"'{n}', IF(acc.{n} IS NOT NULL, acc.{n}, "
-        f"IF(acc.cum + e.c >= {rank(n)}, e.v, CAST(NULL AS BIGINT)))"
-        for n in names
+        f"IF(acc.cum + e.c >= {rank(frac, 'total')}, e.v, CAST(NULL AS BIGINT)))"
+        for n, frac in PERCENTILE_FRACTIONS.items()
     )
-    return (
+    walk = (
         f"aggregate({hist}, {init}, "
         f"(acc, e) -> named_struct('cum', acc.cum + e.c, {steps}))"
     )
+    return f"aggregate({hist}, 0L, (a, e) -> a + e.c, total -> {walk})"
 
 
 def mean_sql(total: str, n: str) -> str:
@@ -197,40 +212,17 @@ def summary_columns(family: str, window_ms: int) -> tuple[list[Column], list[Col
     return aggs, fields
 
 
-def histogram_summary(
-    measurements: DataFrame,
-    window_ms: int,
-    exact_counts: bool = False,
-) -> DataFrame:
+def histogram_summary(measurements: DataFrame, window_ms: int) -> DataFrame:
     """measurements(metric, ts_ms, value) → one summary row per
     (metric, bucket): the reference's 11-field HistogramSummary
     (`model/HistogramSummary.scala:21`, computed in
-    `model/HistogramBucket.scala:28-48`).
-
-    Two modes, identical output:
-    - array (default): collect the bucket's values into a sorted
-      array; per-bucket state grows with SAMPLE count.
-    - counts (`exact_counts=True`): pre-aggregate to
-      (metric, bucket, value) counts, then run the cumulative-rank
-      walk over the RAW (unquantized) value domain; per-bucket state
-      is bounded by DISTINCT values (the ingest domain, ≲ thousands)
-      no matter how many samples land in the bucket, at the cost of
-      one extra shuffle.
-    """
-    # NULL values carry no sample, so a bucket with no non-NULL sample
-    # yields no row in either mode (without this filter the array path
-    # indexed an EMPTY collected array — an ANSI crash, and the counts
-    # path kept a NULL entry that inflated the count)
+    `model/HistogramBucket.scala:28-48`), from the bucket's sorted
+    samples. `hdr_rollup.state_summary(counts_state(…))` computes the
+    same rows from per-value counts, with state bounded by distinct
+    values."""
+    # a NULL value is no sample: a bucket of none yields no row (the
+    # percentile would index an empty array, an ANSI error)
     measurements = measurements.where(F.col("value").isNotNull())
-    if exact_counts:
-        from khronus_spark.operators.hdr_rollup import counts_state, state_summary
-
-        raw_state = counts_state(
-            measurements.select(
-                "metric", bucket_ts("ts_ms", window_ms), F.col("value").alias("v")
-            )
-        )
-        return state_summary(raw_state).select("metric", "ts", *HISTOGRAM_FIELDS)
     aggs, fields = summary_columns(HISTOGRAM, window_ms)
     return (
         measurements.groupBy(F.col("metric"), bucket_ts("ts_ms", window_ms))

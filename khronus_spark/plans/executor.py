@@ -12,9 +12,11 @@ The Spark restatement of `influx/finder/InfluxQueryResolver.scala`:
    built (`store/SummaryStore.scala:108-117`). Over raw measurements
    that is one scan and one aggregate: each source's aggregates run
    under `FILTER (WHERE metric = :m)`, and `count(…) > 0` says whether
-   the source has the bucket. Over the summary store it is one scan per
-   summary family, zipped on `ts` by a group-by only when the query
-   reads more than one source.
+   the source has the bucket. A percentile query over more buckets
+   than the 700-point clamp first counts each value, then reads each
+   histogram source's count state `hist`, present where non-empty.
+   Over the summary store it is one scan per summary family, zipped on
+   `ts` by a group-by only when the query reads more than one source.
 4. compute every projection as a (value, keep) pair per bucket:
    missing buckets take fill(x) or are omitted (:184-201), a binary
    operation keeps the buckets both operands have (`zipByTimestamp`,
@@ -52,7 +54,6 @@ from khronus_spark.functions.summary import (
     cpm_sql,
     family_of,
     percentile_walk_sql,
-    rank_sql,
     summary_aggregates_sql,
     summary_field_sql,
 )
@@ -61,7 +62,6 @@ from khronus_spark.parser.ast import Field, InfluxCriteria, Number, Operation
 from khronus_spark.timegrid import (
     DEFAULT_WINDOWS_MS,
     MAX_RESOLUTION_POINTS,
-    MIN_RESOLUTION_POINTS,
     Slice,
     TimeRange,
     adjust_resolution,
@@ -146,8 +146,6 @@ class QueryExecutor:
         measurements: DataFrame | None = None,
         summary_base_path: str | None = None,
         windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
-        min_points: int = MIN_RESOLUTION_POINTS,
-        max_points: int = MAX_RESOLUTION_POINTS,
         read_limit: int | None = None,
     ):
         """Queries read the summary store at `summary_base_path` when
@@ -157,8 +155,6 @@ class QueryExecutor:
         self.measurements = measurements
         self.summary_base_path = summary_base_path
         self.windows_ms = windows_ms
-        self.min_points = min_points
-        self.max_points = max_points
         #: hard per-(metric, slice) read cap, the reference's Cassandra
         #: `limit ?` bind (`SummaryStore.scala:80-88` summary-limit=1000;
         #: `BucketStore.scala:77` bucket-limit=30000). Applied in ts
@@ -192,8 +188,6 @@ class QueryExecutor:
             criteria.group_by.duration_ms,
             criteria.group_by.force,
             self.windows_ms,
-            self.min_points,
-            self.max_points,
         )
         projections = sorted(criteria.projections, key=lambda p: p.series_id)
         stmt = _Statement(self, criteria, build_time_range(slc, window_ms))
@@ -315,30 +309,32 @@ class _Statement:
         lo, hi = self.trange.from_ms, self.trange.to_ms + self.w - 1
         # both exact percentile modes are bit-identical, so this is a
         # plan choice: collect+sort (one shuffle) for an interactive
-        # slice of at most `max_points` buckets (the reference's
-        # 700-point clamp, `reference.conf:62-63`); per-value counts
-        # (state bounded by DISTINCT values, one more shuffle) for a
-        # hand-forced wider one
+        # slice of at most 700 buckets (the reference's point clamp,
+        # `reference.conf:62-63`); the count state (bounded by DISTINCT
+        # values, one more shuffle) for a hand-forced wider one
         n_buckets = (hi + 1 - lo) // self.w
-        counted = self.counted = n_buckets > self.ex.max_points and any(
+        counted = self.counted = n_buckets > MAX_RESOLUTION_POINTS and any(
             need & set(PERCENTILE_FRACTIONS) for need in needs
         )
         metrics = [self.param(s.metric) for s in sources]
-        cols, walks = [], []
+        cols, derived = [], []
         for i, (src, need) in enumerate(zip(sources, needs)):
             family = family_of(src.mtype)
             aggs = summary_aggregates_sql(
                 family, f"metric = {metrics[i]}" if multi else None, counted
             )
+            if "hist" in aggs:
+                # every field derives from the count state
+                cols.append(f"{aggs['hist']} AS s{i}_hist")
+                derived.append(f"size(s{i}_hist) > 0 AS s{i}_p")
+                if need & set(PERCENTILE_FRACTIONS):
+                    derived.append(f"{percentile_walk_sql(f's{i}_hist')} AS s{i}_walk")
+                continue
             used = {"n"}
             for name in need:
                 summary_field_sql(family, name, lambda c: used.add(c) or c, self.w, counted)
-            if "walk" in used:
-                used |= {"hist"}
-                rank = lambda n, i=i: rank_sql(PERCENTILE_FRACTIONS[n], f"s{i}_n")
-                walks.append(f"{percentile_walk_sql(f's{i}_hist', rank)} AS s{i}_walk")
             cols.append(f"{aggs['n']} > 0 AS s{i}_p")
-            cols += [f"{aggs[a]} AS s{i}_{a}" for a in sorted(used - {"walk"})]
+            cols += [f"{aggs[a]} AS s{i}_{a}" for a in sorted(used)]
         rel = self.relation(self.ex.measurements)
         where = (
             (f"metric IN ({', '.join(metrics)})" if multi else f"metric = {metrics[0]}")
@@ -354,7 +350,7 @@ class _Statement:
             return [
                 scan,
                 f"b0 AS (SELECT ts, {', '.join(cols)} FROM r GROUP BY ts)",
-                f"b AS (SELECT *, {', '.join(walks)} FROM b0)",
+                f"b AS (SELECT *, {', '.join(derived)} FROM b0)",
             ]
         return [f"b AS (SELECT {bucket} AS ts, {', '.join(cols)} FROM {rel} WHERE {where} GROUP BY 1)"]
 

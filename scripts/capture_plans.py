@@ -42,9 +42,6 @@ def slot_frames(spark, sf_dir):
 
     frames = {
         "rollup_hist_30s": lambda: histogram_summary(meas(), 30_000),
-        "rollup_hist_counts_30s": lambda: histogram_summary(
-            meas(), 30_000, exact_counts=True
-        ),
         "semantic_dedup_auto": lambda: semantic_dedup_derived_k(
             load_table(spark, sf_dir, "embeddings")
         ),

@@ -5,8 +5,7 @@ that a refactor leaves both unchanged.
 Usage: python scripts/rollup_plan_snapshot.py <out.txt> [--sf-dir DIR]
 
 Writes, for the checkout this script lives in, the formatted plan and a
-row-content hash of: `histogram_summary` in its two modes and
-`counter_summary`; the streaming histogram and counter summaries (plan
+row-content hash of: `histogram_summary` and `counter_summary`; the streaming histogram and counter summaries (plan
 only); `rollup_all` and `process_tick`; and `KhronusEngine.sql_union` over the perfbench
 dashboard query mix, against raw measurements and against a summary
 store written by `write_summaries`, plus a hash of
@@ -112,7 +111,6 @@ def main() -> None:
     m = spark.read.schema(SCHEMA).parquet(f"{tmp}/m")
 
     record("hist_array", histogram_summary(m, 30_000))
-    record("hist_counts", histogram_summary(m, 30_000, exact_counts=True))
     record("counter", counter_summary(m, 60_000))
     stream = spark.readStream.schema(SCHEMA).parquet(f"{tmp}/m")
     if hasattr(ingest, "streaming_summary"):

@@ -332,3 +332,51 @@ def test_query_reads_cached_measurements_and_keeps_them_cached(spark):
         assert len(_vals(res[0])) == 10
     finally:
         m.unpersist()
+
+
+def test_wide_slice_query_equals_batch_summaries(spark):
+    """A hand-forced slice wider than the 700-point clamp reads each
+    source's per-value-count state (`hist`) instead of its sorted
+    samples. Every field of every bucket must still equal the batch
+    `histogram_summary` / `counter_summary`: a two-source query (timer
+    plus counter, each with buckets the other lacks) over 1080 30s
+    buckets, with one NULL timer sample."""
+    from khronus_spark.functions.summary import (
+        HISTOGRAM_FIELDS,
+        counter_summary,
+        histogram_summary,
+    )
+
+    w, n_buckets = 30_000, 1080
+    t0 = NOW - n_buckets * w
+    rows = []
+    for b in range(n_buckets):
+        ts = t0 + b * w
+        if b % 3 != 2:
+            rows += [
+                ("t", "timer", ts + i * 1000, (b * 31 + i * 17) % 97)
+                for i in range(1 + b * 7 % 13)
+            ]
+        if b % 4 < 2:
+            rows.append(("c", "counter", ts + 500, b % 5))
+    rows.append(("t", "timer", t0 + 1500, None))
+    m = spark.createDataFrame(rows, SCHEMA)
+    eng = KhronusEngine(spark, measurements=m, now_ms=NOW)
+    fields = HISTOGRAM_FIELDS
+    q = (
+        "select "
+        + ", ".join(f"t.{f} as t_{f}" for f in fields)
+        + f', c.count as c_count from "t" as t, "c" as c '
+        f"where time between {t0} and {NOW - 1} force group by time(30s)"
+    )
+    got = eng.sql_union(q)
+    assert "collect_list(struct" in got._jdf.queryExecution().optimizedPlan().toString()
+    served = {(r["series"], r["time"]): r["value"] for r in got.collect()}
+
+    want = {}
+    for r in histogram_summary(m.where("metric = 't'"), w).collect():
+        want.update({(f"t_{f}", r["ts"]): float(r[f]) for f in fields})
+    for r in counter_summary(m.where("metric = 'c'"), w).collect():
+        want[("c_count", r["ts"])] = float(r["count"])
+    assert len(want) == len(fields) * 720 + 540
+    assert served == want

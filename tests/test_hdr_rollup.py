@@ -77,3 +77,24 @@ def test_merge_is_count_preserving(spark, sf_dir):
     n_fine = fine.select(F.explode("hist").alias("e")).agg(F.sum("e.c")).collect()[0][0]
     n_coarse = coarse.select(F.explode("hist").alias("e")).agg(F.sum("e.c")).collect()[0][0]
     assert n_fine == n_coarse == m.count()
+
+
+def test_null_value_is_no_sample(spark):
+    """A NULL value quantizes to NULL, not to the top trackable value,
+    and carries no sample in the HDR state: a bucket of (NULL, 5, 7)
+    summarizes like `histogram_summary`, an all-NULL bucket has no
+    state row, and merging keeps both facts."""
+    m = spark.createDataFrame(
+        [("m", 1_000, None), ("m", 2_000, 5), ("m", 3_000, 7), ("m", 61_000, None)],
+        "metric string, ts_ms long, value long",
+    )
+    q = m.select(hdr_quantize(F.col("value")).alias("q")).where("q IS NULL").count()
+    assert q == 2
+    state = histogram_state(m, 60_000)
+    exact = histogram_summary(m, 60_000).collect()
+    assert len(exact) == 1 and exact[0]["count"] == 2
+    for st in (state, merge_states(state, 3_600_000)):
+        got = state_summary(st).collect()
+        assert len(got) == 1
+        assert [got[0][f] for f in ("count", "p80", "mean", "max")] == [2, 7, 6, 7]
+    assert [r["ts"] for r in state.collect()] == [0]

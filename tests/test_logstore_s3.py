@@ -34,12 +34,35 @@ from khronus_spark.sources.txnlog import (  # noqa: E402
 _BUCKET = "khronus-txn-test"
 
 
+class _AtomicConditionalPut:
+    """The boto3 client with S3's per-key atomic conditional PUT. moto
+    checks `IfNoneMatch` and stores the object later, under no lock, so
+    two racing PUTs of one key can both succeed; real S3 lets exactly
+    one win. Conditional PUTs of one key run one at a time here."""
+
+    def __init__(self, client):
+        self._client = client
+        self._locks: dict[str, threading.Lock] = {}
+        self._guard = threading.Lock()
+
+    def put_object(self, **kwargs):
+        if "IfNoneMatch" not in kwargs:
+            return self._client.put_object(**kwargs)
+        with self._guard:
+            lock = self._locks.setdefault(kwargs["Key"], threading.Lock())
+        with lock:
+            return self._client.put_object(**kwargs)
+
+    def __getattr__(self, name):
+        return getattr(self._client, name)
+
+
 @pytest.fixture()
 def s3_store():
     with moto.mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
         client.create_bucket(Bucket=_BUCKET)
-        yield S3LogStore(_BUCKET, client=client)
+        yield S3LogStore(_BUCKET, client=_AtomicConditionalPut(client))
 
 
 def _df(spark, rows):

@@ -135,10 +135,23 @@ def test_rollup_all_produces_every_window(spark, fixture_measurements):
         assert {"histogram", "counter"} <= set(fams)
 
 
-def test_exact_counts_mode_bit_identical_to_array_mode(spark, sf_dir):
-    """The counts-mode exact path (bounded per-bucket state — the
-    100 TB exact path) must produce byte-for-byte the same summaries
-    as the collect+sort baseline, every field, every bucket."""
+def _count_state_summary(m, window_ms):
+    """The exact bounded-state batch summary: each bucket's per-value
+    count state over the raw value, summarized."""
+    from khronus_spark.functions.summary import bucket_ts
+    from khronus_spark.operators.hdr_rollup import counts_state, state_summary
+
+    return state_summary(
+        counts_state(
+            m.select("metric", bucket_ts("ts_ms", window_ms), F.col("value").alias("v"))
+        )
+    )
+
+
+def test_count_state_summary_equals_histogram_summary(spark, sf_dir):
+    """The count state (per-bucket state bounded by distinct values —
+    the 100 TB exact path) must summarize byte-for-byte like the
+    collect+sort `histogram_summary`, every field, every bucket."""
     from khronus_spark.functions.summary import histogram_summary
     from khronus_spark.sources.tables import measurements_from_events
 
@@ -146,33 +159,27 @@ def test_exact_counts_mode_bit_identical_to_array_mode(spark, sf_dir):
         F.col("mtype").isin("timer", "gauge")
     )
     a = histogram_summary(m, 30_000).orderBy("metric", "ts").collect()
-    b = (
-        histogram_summary(m, 30_000, exact_counts=True)
-        .orderBy("metric", "ts")
-        .collect()
-    )
+    b = _count_state_summary(m, 30_000).orderBy("metric", "ts").collect()
     assert len(a) == len(b) and len(a) > 50
     assert a == b
 
 
 def test_all_null_bucket_yields_no_row_in_every_mode(spark):
-    """r13 review (verified live): a bucket whose every value is NULL
-    used to CRASH the exact-array path under Spark 4's ANSI defaults
-    (element_at on the empty collected array) while the counts path
-    emitted no row — the two modes are documented bit-identical. NULL
-    values now carry no sample in any mode: the all-NULL bucket yields
-    no row, the mixed bucket aggregates its non-NULL samples."""
+    """NULL values carry no sample in either exact summary,
+    `histogram_summary` or the count state's: the all-NULL bucket yields
+    no row (the collect+sort percentile would index an empty array, an
+    ANSI error), the mixed bucket aggregates its non-NULL samples."""
     m = spark.createDataFrame(
         [("m", 1_000, None), ("m", 70_000, 5), ("m", 75_000, None)],
         "metric string, ts_ms long, value long",
     )
-    for kwargs in ({}, {"exact_counts": True}):
+    for summarize in (histogram_summary, _count_state_summary):
         got = {
             r["ts"]: (r["count"], r["p50"])
-            for r in histogram_summary(m, 60_000, **kwargs).collect()
+            for r in summarize(m, 60_000).collect()
         }
-        assert set(got) == {60_000}, kwargs
-        assert got[60_000][0] == 1 and float(got[60_000][1]) == 5.0, kwargs
+        assert set(got) == {60_000}, summarize
+        assert got[60_000][0] == 1 and float(got[60_000][1]) == 5.0, summarize
 
 
 def test_family_rule_rejects_unknown_types():
