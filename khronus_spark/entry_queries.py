@@ -52,6 +52,7 @@ from khronus_spark.operators import scd2 as scd2_ops
 from khronus_spark.operators import smoothing as smoothing_ops
 from khronus_spark.operators import zorder as zorder_ops
 from khronus_spark.operators.rollup import pregroup_raw
+from khronus_spark.session import local_frame
 from khronus_spark.sources.tables import (
     MEASUREMENTS_SQL,
     load_table,
@@ -154,11 +155,29 @@ DRIVER_WINDOW = 50
 #: this explicit queue, each queued entry to be fully oracle-backed
 #: (hash-checked against DuckDB on every local parity run), and the
 #: NEXT round's window to lead with them (emptying the queue) before
-#: anything else rotates. Rounds 13 and 14 added no post-freeze
-#: entries (round 14 is an optimization round — no new surface);
-#: entries added after the round-14 window froze queue here for
-#: round 15.
-PENDING_NEXT_WINDOW: list[str] = []
+#: anything else rotates. Entries outside the window whose ENGINE PATH
+#: changed after the freeze queue here the same way: below, every
+#: caller of `components.connected_components` (small graphs now solved
+#: on the driver), the k-center coreset entries and the BPE trainers
+#: (driver rows now shipped as Arrow local relations).
+PENDING_NEXT_WINDOW: list[str] = [
+    "canonical_by_quality",
+    "corpus_curation",
+    "dedup_cluster_sizes",
+    "dedup_components_minhash",
+    "hard_negative_pairs",
+    "leakage_safe_kfold",
+    "leakage_safe_split",
+    "part_golden_records",
+    "streaming_dedup_components",
+    "training_batch_assembly",
+    "coreset_coverage_audit",
+    "coreset_kcenter_per_cell",
+    "coreset_streaming_kcenter_audit",
+    "embedding_coreset_kcenter",
+    "bpe_encode_6",
+    "bpe_merges_batched",
+]
 
 _PRIORITY = [
     # -- entries whose ENGINE PATH changed in round 14 (tokenizer
@@ -6603,9 +6622,7 @@ def coreset_streaming_kcenter_audit(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     centers, t2 = stream_coreset.replay_kcenter(spark, emb, m=6, n_chunks=4)
-    sel = spark.createDataFrame(
-        [(int(v),) for v, _ in centers], "vec_id long"
-    )
+    sel = local_frame(spark, [(int(v),) for v, _ in centers], "vec_id long")
     return (
         coreset_ops.coreset_assign(emb, sel)
         .groupBy("center_vec_id")

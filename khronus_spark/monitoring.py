@@ -16,6 +16,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from khronus_spark.session import local_frame
+
 SYSTEM_PREFIX = "~system."
 
 _SCHEMA = "metric STRING, mtype STRING, ts_ms LONG, value LONG"
@@ -54,4 +56,4 @@ class Monitoring:
         """Drain pending internal metrics as a measurements DataFrame
         (ready to union into the ingest path)."""
         rows, self._pending = self._pending, []
-        return spark.createDataFrame(rows or [], _SCHEMA)
+        return local_frame(spark, rows, _SCHEMA)

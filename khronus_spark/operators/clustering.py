@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from khronus_spark.session import local_frame
+
 K = 4
 ITERS = 2
 DIMS = 64
@@ -166,7 +168,7 @@ def _assign_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
     rows = sorted(centroids.collect(), key=lambda r: int(r["cid"]))
     out_schema = "vec_id long, e array<long>, cid long, d long"
     if not rows:
-        return q.sparkSession.createDataFrame([], out_schema)
+        return local_frame(q.sparkSession, [], out_schema)
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cmat = np.array([list(r["c"]) for r in rows], dtype=np.int64)
     c_sq = (cmat * cmat).sum(axis=1)
@@ -212,7 +214,7 @@ def _mean_partials_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
     rows = sorted(centroids.collect(), key=lambda r: int(r["cid"]))
     out_schema = "cid long, s array<long>, n long"
     if not rows:
-        return q.sparkSession.createDataFrame([], out_schema)
+        return local_frame(q.sparkSession, [], out_schema)
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cmat = np.array([list(r["c"]) for r in rows], dtype=np.int64)
     c_sq = (cmat * cmat).sum(axis=1)
@@ -237,13 +239,6 @@ def _mean_partials_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
             yield pd.DataFrame({"cid": out_cid, "s": out_s, "n": out_n})
 
     return q.select("e").mapInPandas(run, out_schema)
-
-
-def kmeans_centroids(
-    embeddings: DataFrame, k: int = K, iters: int = ITERS, mode: str = ASSIGN_MODE
-) -> DataFrame:
-    """(cid, c: array<long>) — final quantized centroids."""
-    return _kmeans_state(embeddings, k, iters, mode)[1]
 
 
 def kmeans_assignments(

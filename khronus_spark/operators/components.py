@@ -3,9 +3,14 @@
 Pairwise near-duplicate candidates (``dedup.near_duplicates_jaccard``,
 ``dedup.minhash_md5_pairs``) are only half of deduplication: a corpus
 cleaner must group transitively-linked docs into CLUSTERS and keep one
-canonical doc per cluster. At 100 TB the duplicate graph has billions of
-edges, so clustering must be a bounded number of shuffle rounds — not a
-driver-side union-find.
+canonical doc per cluster. The size rule: the first checksum counts the
+distinct edges; a graph of at most ``DRIVER_SOLVE_MAX_EDGES`` (1M) is
+collected and solved by union-find on the driver, returned as a local
+relation (measured faster than the loop at every size from 1k to 1M
+edges, sweeps/r20/cc_crossover.json; the benchmark's curation graph has
+a few hundred edges). At 100 TB the duplicate graph has billions of
+edges, so above the constant clustering is a bounded number of shuffle
+rounds (``star_contraction``).
 
 We implement the alternating large-star/small-star algorithm (Kiveris et
 al., "Connected Components in MapReduce and Beyond", SoCC'14), which
@@ -14,7 +19,7 @@ min-label propagation needs O(diameter) rounds and dies on chain-shaped
 duplicate clusters (doc A ~ B ~ C ~ ... arises naturally from
 content-drifted copies). Each round is two DataFrame self-aggregations
 (map-side combinable groupBy min + a join), fully JVM-side; lineage is
-truncated per round with an eager ``localCheckpoint`` so the plan stays
+truncated per round with a ``localCheckpoint`` so the plan stays
 O(1) deep (on a cluster this would be ``checkpoint()`` to durable
 storage for fault tolerance).
 
@@ -22,7 +27,8 @@ Scale notes:
 - shuffle volume per round is O(|E|), and |E| SHRINKS monotonically
   toward one star edge per non-root node;
 - the convergence check is a count+hash-sum checksum (two scalar
-  aggregates), never a driver-side collect of edges;
+  aggregates), never a driver-side collect of edges above the size
+  rule;
 - the final (doc_id → component_id) map is tiny relative to the corpus
   (only docs that appear in some duplicate pair), so downstream
   canonical-doc filters broadcast it.
@@ -37,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from khronus_spark.operators.dedup import near_duplicates_jaccard
+from khronus_spark.session import local_frame
 
 #: more than enough for convergence at any realistic n: measured on a
 #: pure chain (the diameter-maximizing worst case), rounds ≈
@@ -45,6 +52,16 @@ from khronus_spark.operators.dedup import near_duplicates_jaccard
 #: duplicate clusters have diameters in the tens). Exceeded only if
 #: the implementation regresses toward O(diameter) propagation.
 MAX_ROUNDS = 25
+
+#: distinct-edge count at or below which `connected_components` collects
+#: the graph and solves it on the driver. sweeps/r20/cc_crossover.json
+#: (local[4]) found no crossover from 1k to 1M edges: the driver solve
+#: wins at every size, by 9x at 1k random edges and still 2.6x at 1M
+#: (8x on a 1M chain, where the loop needs 21 rounds). So the constant
+#: sits at the top of the measured range; past it the driver's memory,
+#: not its speed, is the limit (0.39 GB peak Python RSS at 1M edges),
+#: and on a cluster the loop scales out where the driver cannot.
+DRIVER_SOLVE_MAX_EDGES = 1_000_000
 
 
 def _checksum(edges: DataFrame) -> tuple[int, int]:
@@ -122,7 +139,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) long-id edge list → (node_id, component_id) where
     component_id is the minimum node id in the component.
 
@@ -130,18 +147,75 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
     output; callers union them back if needed (see
     ``canonical_keep_filter``).
 
+    The first checksum counts the distinct edges; at or below
+    `DRIVER_SOLVE_MAX_EDGES` the edges are collected and solved by
+    union-find on the driver, above it `star_contraction` runs."""
+    cur = _edge_set(edges)
+    sig = _checksum(cur)
+    if sig[0] <= DRIVER_SOLVE_MAX_EDGES:
+        return _driver_components(cur)
+    return _contract(cur, sig)
+
+
+def star_contraction(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+    """`connected_components` by the large-star/small-star loop at any
+    size — the path every graph above `DRIVER_SOLVE_MAX_EDGES` takes.
+
     `stats` (optional out-param) records `rounds` and the per-round
     edge counts — the O(log² n) convergence evidence sweep scripts
     and tests pin (scripts/cc_sweep.py)."""
-    cur = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    ).where(F.col("src") != F.col("dst")).distinct()
-    # lazy checkpoints: the checksum that immediately follows each round
-    # materializes the checkpoint in the SAME action, so every round is
-    # one job instead of two (materialize + checksum) — same lineage
-    # truncation, half the driver-loop job latency
-    cur = cur.localCheckpoint(eager=False)
-    prev_sig = _checksum(cur)
+    cur = _edge_set(edges)
+    return _contract(cur, _checksum(cur), stats)
+
+
+def _edge_set(edges: DataFrame) -> DataFrame:
+    """Distinct non-loop long edges, checkpointed lazily: the checksum
+    that follows materializes the checkpoint in the SAME action, so the
+    first count is one job, not two."""
+    return (
+        edges.select(
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
+        )
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _driver_components(cur: DataFrame) -> DataFrame:
+    """Union-find (min-id root, path halving) over the collected edge
+    set, returned as a local relation — one collect instead of the
+    loop's jobs per round."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    t = cur.toArrow()
+    for a, b in zip(t.column("src").to_pylist(), t.column("dst").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return local_frame(
+        cur.sparkSession,
+        [(v, find(v)) for v in parent],
+        "node_id long, component_id long",
+    )
+
+
+def _contract(
+    cur: DataFrame, sig: tuple[int, int], stats: dict | None = None
+) -> DataFrame:
+    """The contraction loop from a checkpointed edge set and its
+    checksum `sig`; lazy checkpoints again make each round one job
+    (the checksum materializes the round's checkpoint)."""
+    prev_sig = sig
     edge_counts = [prev_sig[0]]
     rounds = 0
     for _ in range(MAX_ROUNDS):

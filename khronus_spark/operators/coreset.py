@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from khronus_spark.session import local_frame
+
 #: the module-shared quantization grid (pq/clustering convention)
 _QUANT = "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
 
@@ -94,9 +96,8 @@ def kcenter_select(embeddings: DataFrame, m: int = 8) -> DataFrame:
             break  # every remaining vector coincides with a center
         centers.append((rank, int(r["vec_id"]), int(r["mind2"]), list(r["e"])))
         state = state.where(F.col("vec_id") != int(r["vec_id"]))
-    return spark.createDataFrame(
-        [(c[0], c[1], c[2]) for c in centers],
-        "rank long, vec_id long, d2 long",
+    return local_frame(
+        spark, [(c[0], c[1], c[2]) for c in centers], "rank long, vec_id long, d2 long"
     )
 
 
@@ -191,9 +192,7 @@ def kcenter_select_per_cell(
     # and stalls driver analysis long before the executors see work
     def _won_frame(rows):
         return F.broadcast(
-            spark.createDataFrame(
-                [(int(v),) for _, v, _ in rows], "vec_id long"
-            )
+            local_frame(spark, [(int(v),) for _, v, _ in rows], "vec_id long")
         )
 
     state = q.select(
@@ -201,7 +200,8 @@ def kcenter_select_per_cell(
     ).join(_won_frame(newest), "vec_id", "left_anti")
     d_new = F.expr(_D2.format(a="e", b="ce"))
     for rank in range(1, m_per_cell):
-        new_df = spark.createDataFrame(
+        new_df = local_frame(
+            spark,
             [(c, [int(x) for x in e]) for c, _, e in newest],
             "cell long, ce array<long>",
         )
@@ -244,9 +244,7 @@ def kcenter_select_per_cell(
             (int(r["cell"]), int(r["vec_id"]), list(r["e"])) for r in wins
         ]
         state = state.join(_won_frame(newest), "vec_id", "left_anti")
-    return spark.createDataFrame(
-        out, "cell long, rank long, vec_id long, d2 long"
-    )
+    return local_frame(spark, out, "cell long, rank long, vec_id long, d2 long")
 
 
 _QUANT_DUCK = (

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from khronus_spark.session import local_frame
 from khronus_spark.sources.tables import spread
 
 
@@ -1126,8 +1127,8 @@ def bpe_merges_sequential(docs: DataFrame, k: int = 6) -> DataFrame:
         seqs = seqs.select(
             "cnt", _merge_fold(F.col("sym"), l, r).alias("sym")
         ).localCheckpoint(eager=False)
-    return docs.sparkSession.createDataFrame(
-        merges, "rank LONG, left STRING, right STRING, pair_count LONG"
+    return local_frame(
+        docs.sparkSession, merges, "rank LONG, left STRING, right STRING, pair_count LONG"
     )
 
 
@@ -1292,8 +1293,8 @@ def bpe_merges_batched(
         seqs = seqs.select("cnt", sym.alias("sym")).localCheckpoint(eager=False)
     if stats is not None:
         stats["passes"] = passes
-    return docs.sparkSession.createDataFrame(
-        merges, "rank LONG, left STRING, right STRING, pair_count LONG"
+    return local_frame(
+        docs.sparkSession, merges, "rank LONG, left STRING, right STRING, pair_count LONG"
     )
 
 
@@ -2222,9 +2223,9 @@ def write_bm25_constants(
         collection_stats=(int(n_docs), int(avgdl_m)),
     ).write.mode("overwrite").parquet(f"{path}/maximpact")
     if upto_batch is not None:
-        spark.createDataFrame(
-            [(int(upto_batch),)], "upto_batch long"
-        ).write.mode("overwrite").parquet(f"{path}/boundary")
+        local_frame(spark, [(int(upto_batch),)], "upto_batch long").write.mode(
+            "overwrite"
+        ).parquet(f"{path}/boundary")
 
 
 def read_bm25_boundary(spark, path: str) -> int | None:

@@ -15,6 +15,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from khronus_spark.session import local_frame
+
 _SCHEMA = "name STRING, content STRING"
 
 
@@ -52,7 +54,7 @@ class DashboardStore:
 
         root = resolve_generation_dir(self.path)
         if not os.path.isdir(root) or not os.listdir(root):
-            return self.spark.createDataFrame([], _SCHEMA)
+            return local_frame(self.spark, [], _SCHEMA)
         return self.spark.read.schema(_SCHEMA).parquet(root)
 
     def _write_unlocked(self, updated: DataFrame) -> None:
@@ -78,7 +80,7 @@ class DashboardStore:
         with self._lock:
             current = self._read_unlocked().where(F.col("name") != name)
             updated = current.unionByName(
-                self.spark.createDataFrame([(name, content)], _SCHEMA)
+                local_frame(self.spark, [(name, content)], _SCHEMA)
             )
             self._write_unlocked(updated)
 
@@ -109,9 +111,7 @@ class DashboardStore:
                 if not pat.search(r["name"])
             ]
             dropped = len(current) - len(keep)
-            self._write_unlocked(
-                self.spark.createDataFrame(keep or [], _SCHEMA)
-            )
+            self._write_unlocked(local_frame(self.spark, keep, _SCHEMA))
         return dropped
 
 

@@ -52,6 +52,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from khronus_spark.session import local_frame
+
 #: shared quantization grid (coreset/pq/clustering convention)
 _QUANT = (
     "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
@@ -81,7 +83,8 @@ def _write_state(
 ) -> None:
     os.makedirs(state_path, exist_ok=True)
     cdir = os.path.join(state_path, f"centers_v{batch_id}")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(vid, [int(x) for x in e]) for vid, e in centers],
         "vec_id long, e array<long>",
     ).coalesce(1).write.mode("overwrite").parquet(cdir)

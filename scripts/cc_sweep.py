@@ -42,7 +42,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from khronus_spark.operators import linkage
-    from khronus_spark.operators.components import connected_components
+    from khronus_spark.operators.components import star_contraction
     from khronus_spark.sources.tables import load_table
 
     spark = (
@@ -84,7 +84,7 @@ def main() -> None:
 
         stats: dict = {}
         t0 = time.time()
-        comp = connected_components(
+        comp = star_contraction(
             edges.selectExpr("id_a AS src", "id_b AS dst"), stats=stats
         )
         comp_sizes = comp.groupBy("component_id").count()

@@ -53,19 +53,29 @@ CASES = {
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_components_match_union_find(spark, name):
+def test_components_match_union_find(spark, monkeypatch, name):
+    """Both paths: the driver union-find (every case is under the
+    size constant) and the contraction loop (constant forced to 0)."""
+    from khronus_spark.operators import components
+
     edges = [(a, b) for a, b in CASES[name] if a != b]
     expected = _union_find(edges)
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node_id"]: r["component_id"] for r in connected_components(df).collect()
-    }
-    assert got == expected
+    for limit in (components.DRIVER_SOLVE_MAX_EDGES, 0):
+        monkeypatch.setattr(components, "DRIVER_SOLVE_MAX_EDGES", limit)
+        got = {
+            r["node_id"]: r["component_id"]
+            for r in connected_components(df).collect()
+        }
+        assert got == expected, limit
 
 
 def test_components_empty_edges(spark):
+    from khronus_spark.operators.components import star_contraction
+
     empty = spark.createDataFrame([], "src long, dst long")
     assert connected_components(empty).count() == 0
+    assert star_contraction(empty).count() == 0
 
 
 def test_canonical_keep_one_per_cluster(spark, oracle_sf_dir):
@@ -519,12 +529,12 @@ def test_cc_chain_converges_in_log_rounds(spark):
     MAX_ROUNDS=25, which therefore covers diameters to ~2^23). The
     pin is log2(n)+4 so a regression toward propagation-shaped
     round counts cannot hide behind the cap."""
-    from khronus_spark.operators.components import connected_components
+    from khronus_spark.operators.components import star_contraction
 
     n = 4096
     chain = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
     stats: dict = {}
-    comp = connected_components(chain, stats=stats)
+    comp = star_contraction(chain, stats=stats)
     rows = comp.collect()
     assert len(rows) == n
     assert {r["component_id"] for r in rows} == {0}

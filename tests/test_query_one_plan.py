@@ -55,15 +55,17 @@ JOB_BUDGET = {
 
 
 #: Spark jobs of each perfbench `batch_pipeline` entry, built and collected
-#: at this suite's scale factor (local[8], 8 shuffle partitions). The CC
-#: and k-center entries are driver loops, one or more jobs per round.
-#: `corpus_curation` runs 25 jobs, or 26 when adaptive execution runs one
-#: more query stage of its near-duplicate pass as a job of its own (2 of
-#: 13 measured runs).
+#: at this suite's scale factor (local[8], 8 shuffle partitions). The
+#: k-center entry is a driver loop, one or more jobs per round; the CC
+#: entries' graphs are small enough to be solved on the driver (the
+#: edge count plus one collect). `corpus_curation` runs 15 jobs, or 16
+#: when adaptive execution materializes one more query stage of its
+#: near-duplicate pass (the pair join that the CC edge count consumes)
+#: as a job of its own: 8 of 30 measured runs, over three sessions.
 BATCH_JOB_BUDGET = {
-    "corpus_curation": {25, 26},
-    "coreset_kcenter_per_cell": {16},
-    "part_entity_components": {18},
+    "corpus_curation": {15, 16},
+    "coreset_kcenter_per_cell": {15},
+    "part_entity_components": {7},
     "decontamination_retrieval": {13},
     "influx_store_percentiles_1h": {6},
 }
