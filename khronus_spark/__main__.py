@@ -25,28 +25,7 @@ def main() -> None:
     ap.add_argument("--summary-store", default=None,
                     help="materialized summary store to answer queries from")
     ap.add_argument("--cpus", default="8")
-    ap.add_argument(
-        "--ann-index",
-        default=None,
-        help="refresh-managed IVF-PQ index dir: poll its drift log and "
-        "self-heal by retrain + generation swap (streaming/ann.py)",
-    )
-    ap.add_argument(
-        "--ann-vectors",
-        default=None,
-        help="parquet dir of the standing raw embeddings (vec_id, "
-        "embedding) the drift-triggered retrain reads; required with "
-        "--ann-index",
-    )
-    ap.add_argument(
-        "--ann-tick-seconds",
-        type=float,
-        default=10.0,
-        help="drift-log poll cadence for --ann-index",
-    )
     args = ap.parse_args()
-    if bool(args.ann_index) != bool(args.ann_vectors):
-        ap.error("--ann-index and --ann-vectors must be given together")
 
     from pyspark.sql import SparkSession
 
@@ -105,37 +84,12 @@ def main() -> None:
     print("  POST /khronus/metrics        (MetricBatch JSON, gzip ok)", flush=True)
     print("  GET  /khronus/db/influx/series?q=<influxql>", flush=True)
 
-    # the CLOSED drift loop in production shape (r10 verdict #5): the
-    # in-stream guard lands per-batch verdicts; this tick polls them
-    # and self-heals by retrain + atomic generation swap — out of band
-    # of the ingest triggers, on the runner's own maintenance thread
-    ann_stop = None
-    if args.ann_index:
-        from khronus_spark.streaming.ann import run_drift_maintenance
-
-        _, ann_stop = run_drift_maintenance(
-            spark,
-            args.ann_index,
-            lambda: spark.read.parquet(args.ann_vectors),
-            interval_seconds=args.ann_tick_seconds,
-            on_refresh=lambda gen: print(
-                f"ann-maintenance: drift flagged -> published {gen}",
-                flush=True,
-            ),
-        )
-        print(
-            f"  ann drift maintenance on {args.ann_index} every "
-            f"{args.ann_tick_seconds:g}s",
-            flush=True,
-        )
     try:
         while True:
             time.sleep(3600)
     except KeyboardInterrupt:
         pass
     finally:
-        if ann_stop is not None:
-            ann_stop.set()
         svc.stop()
         spark.stop()
 

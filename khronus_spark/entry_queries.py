@@ -5918,9 +5918,7 @@ def events_alert_transitions(spark, sf_dir):
     a single threshold). Emits only the TRANSITIONS. The recurrence
     is order-dependent (state at t depends on the whole prefix), so
     the batch face is one applyInPandas fold per metric — the
-    EWMA/Holt family — and the oracle unrolls it as a recursive CTE.
-    The streaming twin (streaming/alerts.py) runs the SAME fold
-    function in applyInPandasWithState, stream==batch pinned."""
+    EWMA/Holt family — and the oracle unrolls it as a recursive CTE."""
     ev = load_table(spark, sf_dir, "events")
     buckets = (
         ev.select(

@@ -1,18 +1,12 @@
 """Threshold alerting with hysteresis — the state machine every
 metrics engine bolts onto its rollups (Kapacitor/Alertmanager shape),
-expressed once as a pure fold and served by two faces:
-
-- BATCH (`threshold_alert_transitions`): per metric, fold the
-  time-ordered bucket series; emit only the TRANSITIONS
-  (OK→ALERT, ALERT→OK). Order-dependent recurrence — hysteresis makes
-  the state at t depend on the whole prefix — so like the EWMA/Holt
-  family it runs as one `applyInPandas` per metric key (one shuffle),
-  NOT a window function; the oracle unrolls the recurrence as a
-  recursive CTE.
-- STREAMING (`streaming/alerts.py`): the same fold carried across
-  micro-batches in `applyInPandasWithState` — state per metric is
-  three scalars, transitions bit-identical to the batch face over the
-  full history (stream==batch pinned).
+expressed once as a pure fold (`fold_alerts`) and served by
+`threshold_alert_transitions`: per metric, fold the time-ordered
+bucket series; emit only the TRANSITIONS (OK→ALERT, ALERT→OK).
+Order-dependent recurrence — hysteresis makes the state at t depend on
+the whole prefix — so like the EWMA/Holt family it runs as one
+`applyInPandas` per metric key (one shuffle), NOT a window function;
+the oracle unrolls the recurrence as a recursive CTE.
 
 Semantics (integer-exact, deterministic):
 - state starts OK with a zero breach counter;
@@ -58,11 +52,10 @@ def fold_alerts(
     exit_below: int,
     min_breach: int,
 ):
-    """The ONE definition of the state machine, shared verbatim by the
-    batch and streaming faces (the NFKC single-definition discipline).
-    `rows` is an iterable of (ts_ms, value) in time order; returns
-    (transitions, alert, consec) where transitions is a list of
-    (ts_ms, from_state, to_state, value)."""
+    """The ONE definition of the state machine, folded from the state
+    (`alert`, `consec`). `rows` is an iterable of (ts_ms, value) in
+    time order; returns (transitions, alert, consec) where transitions
+    is a list of (ts_ms, from_state, to_state, value)."""
     out = []
     for ts, value in rows:
         if alert == OK:

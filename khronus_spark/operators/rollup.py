@@ -255,41 +255,3 @@ def windows_from_store(spark: SparkSession, base_path: str) -> tuple[int, ...]:
         windows.update(w for w, _ in _store_resolution_dirs(spark, base_path, family))
     return tuple(sorted(windows))
 
-
-def compact_partition_txn(
-    spark: SparkSession,
-    table,
-    key: str,
-    n_files: int = 1,
-    sort_cols: tuple[str, ...] = ("metric", "ts"),
-) -> int | None:
-    """Compaction THROUGH the commit log — the transactional answer to
-    `compact_summaries`' documented caveat (its delete-then-rename swap
-    is not safe under concurrent writers): read the partition at a
-    pinned version, rewrite it globally (metric, ts)-ordered into
-    `n_files` range files, and commit the replacement with
-    compare-and-swap against that version. A writer that lands between
-    the read and the commit makes the CAS fail with `CommitConflict` —
-    the compaction simply retries against the new version and NO data
-    is ever lost (the race the raw-directory swap cannot survive).
-    Readers pinned to older versions keep their snapshot (immutable
-    staging). Returns the committed version, or None when the
-    partition does not exist. `sort_cols` is the global file order —
-    (metric, ts) by default; other tables (e.g. the streaming SCD2
-    fact/dim buckets) pass their own keys."""
-    from khronus_spark.sources.txnlog import commit_optimistically
-
-    def derive(version: int) -> dict[str, DataFrame] | None:
-        df = table.read_partition(spark, key, version)
-        if df is None:
-            return None
-        return {
-            key: df.repartitionByRange(n_files, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-        }
-
-    # kind="compaction": content-preserving by construction (read at
-    # the pinned version, rewrite, CAS) — which is what lets concurrent
-    # partition-scoped data commits override it instead of starving
-    # (txnlog.commit docstring)
-    return commit_optimistically(table, derive, kind="compaction")

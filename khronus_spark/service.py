@@ -73,12 +73,15 @@ _CLIENT_ERRORS = (
 
 def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple]:
     """MetricBatch JSON → measurement rows (one per value). Raises
-    ValueError on a metric type that has no summary family: one landed
-    row of it would fail every query whose FROM regex matches it."""
+    ValueError on a metric name that is not a string or a metric type
+    that has no summary family: one landed row of either would fail
+    every query whose FROM regex matches it."""
     now = now_ms if now_ms is not None else int(time.time() * 1000)
     rows = []
     for metric in payload.get("metrics", []):
         name, mtype = metric["name"], metric["mtype"]
+        if not isinstance(name, str):
+            raise ValueError(f"metric name must be a string, got {name!r}")
         family_of(mtype)
         for m in metric.get("measurements", []):
             ts = m.get("ts")

@@ -123,8 +123,8 @@ def _write_batch_dir(out: DataFrame, root: str, batch_id: int, atomic: bool) -> 
     wins is immaterial. (Spark's overwrite mode deletes the target
     before committing, which under two concurrent writers can delete
     the winner's in-flight files — the r11 self-review finding this
-    closes. On an object store this CAS belongs to the LogStore seam;
-    local mode is POSIX.)"""
+    closes. The rename is a POSIX guarantee, so this face assumes a
+    local or HDFS-like filesystem, not an object store.)"""
     import os
     import shutil
     import uuid
@@ -509,7 +509,7 @@ def refresh_streamed_index(
     NOTHING about which batches `vectors` contained — the r11
     self-review showed the previous landed-at-entry default silently
     dropped any batch the standing-corpus mirror had not caught up to
-    (the exact production wiring of the runner's maintenance tick).
+    (the exact wiring of `run_drift_maintenance`).
     `covered_batches` remains for callers who can PROVE coverage and
     want to skip even the cheap sweep. A batch whose trigger straddles
     the swap itself is landed by the writer's own post-swap re-check
@@ -718,14 +718,13 @@ def run_drift_maintenance(
     **refresh_kwargs,
 ):
     """The production shape of the loop: a daemon thread that ticks
-    `drift_maintenance_tick` every `interval_seconds` (the process
-    runner's `--ann-tick-seconds`; 10 s default, the self-monitoring
-    flush cadence). Retraining happens on this thread, OUT OF BAND of
-    the ingest triggers — the coupling the generation-swap design
-    exists to avoid. Returns (thread, stop_event); set the event to
-    stop. `on_refresh(gen)` fires after each swap (the runner logs
-    it). A tick that throws (e.g. a reader racing a prune) logs to
-    stderr and keeps ticking — a maintenance daemon must outlive one
+    `drift_maintenance_tick` every `interval_seconds` (10 s default,
+    the self-monitoring flush cadence). Retraining happens on this
+    thread, OUT OF BAND of the ingest triggers — the coupling the
+    generation-swap design exists to avoid. Returns (thread,
+    stop_event); set the event to stop. `on_refresh(gen)` fires after
+    each swap. A tick that throws (e.g. a reader racing a prune) logs
+    to stderr and keeps ticking — a maintenance daemon must outlive one
     bad poll."""
     import sys
     import threading

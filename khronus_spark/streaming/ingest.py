@@ -71,26 +71,6 @@ def streaming_summary(
     )
 
 
-def dedupe_deliveries(
-    measurements: DataFrame,
-    id_cols: tuple[str, ...] = ("delivery_id",),
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """At-least-once → effectively-once: drop redelivered measurements by
-    id within the watermark horizon (`dropDuplicatesWithinWatermark`).
-
-    The reference's ingest is fire-and-forget at-most-once
-    (`KhronusEnpoint.scala:38-43`); a durable HTTP front-end upgrades to
-    at-least-once, and this operator restores exactly-once rollups
-    downstream. State per id expires with the watermark — bounded, like
-    every other piece of streaming state here."""
-    return (
-        _with_event_time(measurements)
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(list(id_cols))
-    )
-
-
 def upsert_sink(store_path: str):
     """foreachBatch MERGE emulation over parquet (T5's "Delta MERGE at
     scale" slot, `SURVEY.md §7.4.4`): upsert each micro-batch's amended

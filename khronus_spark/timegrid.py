@@ -98,11 +98,6 @@ def align_ceil(ts_ms: int, window_ms: int) -> int:
     return (ts_ms // window_ms + 1) * window_ms
 
 
-def bucket_number(ts_ms: int, window_ms: int) -> int:
-    """The bucket index containing ts (model/Bucket.scala:54-91)."""
-    return ts_ms // window_ms
-
-
 @dataclass(frozen=True)
 class Slice:
     """Closed time interval [from_ms, to_ms] in epoch millis."""

@@ -6,7 +6,7 @@ Usage: python scripts/rollup_plan_snapshot.py <out.txt> [--sf-dir DIR]
 
 Writes, for the checkout this script lives in, the formatted plan and a
 row-content hash of: `histogram_summary` and `counter_summary`; the streaming histogram and counter summaries (plan
-only); `rollup_all` and `process_tick`; and `KhronusEngine.sql_union` over the perfbench
+only); `rollup_all`; and `KhronusEngine.sql_union` over the perfbench
 dashboard query mix, against raw measurements and against a summary
 store written by `write_summaries`, plus a hash of
 each mix query's wire payload (`series_to_json(engine.sql(q))`,
@@ -75,7 +75,6 @@ def main() -> None:
     from gen import dashboard_queries
     from khronus_spark.engine import KhronusEngine
     from khronus_spark.functions.summary import counter_summary, histogram_summary
-    from khronus_spark.operators.incremental import process_tick
     from khronus_spark.operators.rollup import rollup_all, write_summaries
     from khronus_spark.service import series_to_json
     from khronus_spark.streaming import ingest
@@ -125,12 +124,6 @@ def main() -> None:
     for w, fams in rollup_all(m, (30_000, 300_000)).items():
         for family, df in fams.items():
             record(f"rollup_all {w} {family}", df)
-    catalog = {name: (mtype, T0) for name, mtype in METRICS}
-    windows = (30_000, 300_000, 3_600_000)
-    ticked, _ = process_tick(m, catalog, T0 + 3 * 3_600_000, windows)
-    for w, fams in ticked.items():
-        for family, df in fams.items():
-            record(f"process_tick {w} {family}", df)
 
     store_windows = (30_000, 300_000, 600_000, 3_600_000)
     write_summaries(rollup_all(m, store_windows), f"{tmp}/store")

@@ -47,9 +47,6 @@ def oracle_sf_dir() -> str:
 # to execute only these, or `-m ""` for the full suite.
 SLOW_TESTS = {
     "tests/test_alerts.py::test_hysteresis_debounce_hand_case",
-    "tests/test_alerts.py::test_streaming_intra_batch_duplicate_does_not_double_fold",
-    "tests/test_alerts.py::test_streaming_matches_batch_across_chunks",
-    "tests/test_alerts.py::test_streaming_replay_adds_nothing",
     "tests/test_components.py::test_bucket_pairs_mega_bucket_bounded_memory",
     "tests/test_components.py::test_bucket_pairs_star_cap_preserves_components",
     "tests/test_components.py::test_canonical_keep_one_per_cluster",
@@ -71,7 +68,6 @@ SLOW_TESTS = {
     "tests/test_corpus_ops.py::test_bpe_merge_counts_non_increasing",
     "tests/test_corpus_ops.py::test_leakage_safe_kfold_component_purity",
     "tests/test_corpus_ops.py::test_tokenizer_fertility_consistent_with_encode_and_ranks_langs",
-    "tests/test_delta_export.py::test_export_of_the_txn_summary_store",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_rerank_topk_indexed]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk_indexed]",
@@ -132,12 +128,9 @@ SLOW_TESTS = {
     "tests/test_streaming_ann.py::test_replay_replaces_batches_identically_and_snapshot_pins",
     "tests/test_streaming_ann.py::test_replayed_batch_absorbed_by_retrain_does_not_duplicate",
     "tests/test_streaming_ann.py::test_streamed_adds_match_one_shot_encode_and_queries_agree",
-    "tests/test_streaming_anomaly.py::test_streaming_anomalies_ignore_replayed_chunk",
-    "tests/test_streaming_anomaly.py::test_streaming_anomalies_match_batch",
     "tests/test_streaming_coreset.py::test_fold_m1_covers_by_scale_growth_and_state_prunes",
     "tests/test_streaming_coreset.py::test_streaming_kcenter_bounded_state_and_radius",
     "tests/test_streaming_coreset.py::test_streaming_kcenter_deterministic_and_replay_idempotent",
-    "tests/test_streaming_corpus.py::test_cross_batch_dup_claims_and_replay",
     "tests/test_streaming_dedup.py::test_streaming_dedup_full_redelivery_replaces_batches",
     "tests/test_streaming_dedup.py::test_streaming_dedup_matches_batch_components",
     # replay-half of the same soak chain (reads its producer's out/)
@@ -147,12 +140,6 @@ SLOW_TESTS = {
     "tests/test_streaming_retrieval.py::test_refresh_boundary_pins_the_pruned_snapshot",
     "tests/test_streaming_retrieval.py::test_refresh_in_place_swaps_generations_atomically",
     "tests/test_streaming_retrieval.py::test_refreshed_constants_enable_pruned_path_on_streamed_index",
-    "tests/test_streaming_scd2.py::test_every_version_is_derived_consistent",
-    "tests/test_streaming_scd2.py::test_replay_is_idempotent",
-    "tests/test_streaming_scd2.py::test_stream_equals_batch_with_late_facts",
-    "tests/test_streaming_scd2.py::test_untouched_buckets_are_not_rewritten",
-    "tests/test_streaming_smoothing.py::test_streaming_ewma_drops_replayed_prefix",
-    "tests/test_streaming_smoothing.py::test_streaming_holt_winters_matches_batch_across_warmup_cut",
     "tests/test_unigram.py::test_unigram_oracle_matches_python_reference_property",
     "tests/test_wordpiece.py::test_wordpiece_oracle_matches_python_reference_property",
 }

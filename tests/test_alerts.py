@@ -1,10 +1,8 @@
 """Threshold alerting: hysteresis + debounce semantics on a hand
-fixture, validation, and the streaming twin's stream==batch +
-replay-idempotence contracts (both faces run ONE shared fold)."""
+fixture, validation, the registry entry, fold properties, and alerts
+over rollup summaries."""
 
 from __future__ import annotations
-
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,57 +55,6 @@ def test_min_breach_one_and_validation(spark):
         threshold_alert_transitions(df, enter=50, exit_below=60)
     with pytest.raises(ValueError, match="min_breach"):
         threshold_alert_transitions(df, enter=100, exit_below=60, min_breach=0)
-
-
-def _stream_in_chunks(spark, tmp, chunks, enter, exit_below, min_breach, ckpt):
-    import os
-    import shutil
-
-    from khronus_spark.streaming.alerts import run_streaming_alerts
-
-    landing = f"{tmp}/landing_{ckpt}"
-    os.makedirs(landing, exist_ok=True)
-    stream = spark.readStream.schema(SCHEMA).parquet(landing)
-    for i, chunk in enumerate(chunks):
-        stage = f"{tmp}/stage_{ckpt}_{i}"
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        for j, f in enumerate(sorted(os.listdir(stage))):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{stage}/{f}", f"{landing}/c{i}_{j}.parquet")
-        q = run_streaming_alerts(
-            stream,
-            out_path=f"{tmp}/out_{ckpt}",
-            checkpoint_path=f"{tmp}/{ckpt}",
-            enter=enter,
-            exit_below=exit_below,
-            min_breach=min_breach,
-        )
-        q.awaitTermination(120)
-    return f"{tmp}/out_{ckpt}"
-
-
-def test_streaming_matches_batch_across_chunks(spark):
-    """The fold carried across micro-batches (state = 3 scalars) emits
-    transitions bit-identical to the batch face over the full history
-    — including an alert whose breach run STRADDLES a batch boundary
-    (m1's consec counter must survive the state store)."""
-    tmp = tempfile.mkdtemp(prefix="khronus_alerts_")
-    chunks = [FIX[:2], FIX[2:6], FIX[6:]]  # fire@3 straddles c0/c1
-    out = _stream_in_chunks(spark, tmp, chunks, 100, 60, 2, "ck1")
-    got = {tuple(r) for r in spark.read.parquet(out).collect()}
-    assert got == EXPECT
-
-
-def test_streaming_replay_adds_nothing(spark):
-    """Redelivered buckets sit at-or-behind the high-water mark and
-    are dropped: replaying chunk 2 emits no new transitions."""
-    tmp = tempfile.mkdtemp(prefix="khronus_alerts_")
-    chunks = [FIX[:6], FIX[6:], FIX[6:]]  # third chunk = pure replay
-    out = _stream_in_chunks(spark, tmp, chunks, 100, 60, 2, "ck1")
-    rows = [tuple(r) for r in spark.read.parquet(out).collect()]
-    assert sorted(rows) == sorted(EXPECT)  # no duplicates
 
 
 def test_registry_alert_entry_has_teeth(spark, oracle_sf_dir):
@@ -200,38 +147,3 @@ def test_alerts_over_rollup_summaries(spark, sf_dir):
     for states in by_metric.values():
         expected = [("OK", "ALERT"), ("ALERT", "OK")] * len(states)
         assert states == expected[: len(states)]
-
-
-def test_streaming_intra_batch_duplicate_does_not_double_fold(spark):
-    """r13 review finding: the high-water filter was computed once per
-    micro-batch against the pre-batch mark, so BOTH copies of an
-    at-least-once redelivered bucket landing in the SAME batch were
-    folded — consec double-incremented and a spurious ALERT could fire
-    from a single real breach at min_breach=2 (while the same
-    duplicate arriving in the NEXT batch was dropped: output depended
-    on chunking). The mark now advances per row, matching the
-    ewma/zscore siblings: one breach folds once wherever its duplicate
-    lands."""
-    tmp = tempfile.mkdtemp(prefix="khronus_alerts_dup_")
-    # one real breach at ts=3, delivered twice IN THE SAME chunk
-    dup_chunk = [
-        ("m1", 1, 10),
-        ("m1", 2, 20),
-        ("m1", 3, 500),
-        ("m1", 3, 500),  # at-least-once redelivery, same batch
-        ("m1", 4, 30),
-    ]
-    out = _stream_in_chunks(spark, tmp, [dup_chunk], 100, 60, 2, "ck1")
-    got = [tuple(r) for r in spark.read.parquet(out).collect()]
-    # min_breach=2: ONE real breach must not transition
-    assert got == []
-    # and split across chunks the outcome is identical (chunk-shape
-    # independence — the module's stream==batch contract)
-    tmp2 = tempfile.mkdtemp(prefix="khronus_alerts_dup2_")
-    out2 = _stream_in_chunks(
-        spark, tmp2,
-        [[("m1", 1, 10), ("m1", 2, 20), ("m1", 3, 500)],
-         [("m1", 3, 500), ("m1", 4, 30)]],
-        100, 60, 2, "ck1",
-    )
-    assert [tuple(r) for r in spark.read.parquet(out2).collect()] == []

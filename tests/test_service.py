@@ -476,10 +476,20 @@ def test_metric_landed_after_engine_cached_is_listed_and_queryable(spark):
         svc.stop()
 
 
-def test_unknown_metric_type_is_400_and_lands_nothing(spark):
-    """A batch naming a metric type without a summary family answers
-    400 and lands none of its rows, good ones included: one landed row
-    of it would fail every FROM-regex query that matches it."""
+@pytest.mark.parametrize(
+    "bad_metric",
+    [
+        {"name": "bad.hist", "mtype": "histogram"},
+        {"name": None, "mtype": "timer"},
+        {"name": 7, "mtype": "counter"},
+    ],
+    ids=["unknown_mtype", "null_name", "int_name"],
+)
+def test_unknown_metric_type_is_400_and_lands_nothing(spark, bad_metric):
+    """A batch naming a metric type without a summary family, or a
+    metric name that is not a string, answers 400 and lands none of its
+    rows, good ones included: one landed row of it would fail every
+    FROM-regex query that matches it."""
     import time as _time
     import urllib.error
 
@@ -492,7 +502,7 @@ def test_unknown_metric_type_is_400_and_lands_nothing(spark):
         bad = {"metrics": [
             {"name": "good.latency", "mtype": "timer",
              "measurements": [{"ts": now - 60_000, "values": [5]}]},
-            {"name": "bad.hist", "mtype": "histogram",
+            {**bad_metric,
              "measurements": [{"ts": now - 60_000, "values": [7]}]},
         ]}
         req = urllib.request.Request(

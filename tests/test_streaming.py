@@ -27,57 +27,6 @@ def staged(spark, sf_dir):
     return tmp, schema, m
 
 
-def test_duplicate_deliveries_deduped(spark, staged):
-    """At-least-once redelivery: the same file staged twice must yield
-    the same counter rollup as a single delivery (T5 effectively-once
-    via dropDuplicatesWithinWatermark)."""
-    import tempfile
-
-    from pyspark.sql import functions as F2
-
-    from khronus_spark.streaming.ingest import dedupe_deliveries
-
-    tmp, schema, batch_m = staged
-    dup_dir = tempfile.mkdtemp(prefix="khronus_dup_")
-    with_id = batch_m.withColumn(
-        "delivery_id",
-        F2.concat_ws("#", "metric", "ts_ms", F2.monotonically_increasing_id()),
-    )
-    with_id.coalesce(1).write.mode("overwrite").parquet(f"{dup_dir}/in/copy=0")
-    with_id.coalesce(1).write.mode("overwrite").parquet(f"{dup_dir}/in/copy=1")
-
-    id_schema = with_id.schema
-    stream = spark.readStream.schema(id_schema).parquet(f"{dup_dir}/in/*")
-    deduped = dedupe_deliveries(
-        stream.where(F2.col("mtype") == "counter"), watermark="45 days"
-    )
-    interval_sums = (
-        deduped.groupBy("metric")
-        .agg(F2.sum("value").alias("total"))
-    )
-    q = (
-        interval_sums.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("dedup_totals")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["metric"]: r["total"]
-        for r in spark.sql("select * from dedup_totals").collect()
-    }
-    expected = {
-        r["metric"]: r["total"]
-        for r in batch_m.where(F2.col("mtype") == "counter")
-        .groupBy("metric")
-        .agg(F2.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == expected, f"{got} != {expected}"
-
-
 def test_streaming_sliding_counts_match_batch(spark, sf_dir):
     """The shared sliding-window builder (operators/sliding.py) run as a
     watermarked stream must reproduce the batch result for every window
@@ -490,49 +439,6 @@ def test_percentiles_from_streamed_histogram_store(spark, tmp_path):
     got, expected = answer(store_eng), answer(raw_eng)
     assert len(expected) == 12  # 6 percentiles x 2 buckets
     assert got == expected
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir):
-    """Stream-static dimension enrichment (streaming/enrich.py): the
-    watermarked stream joined to a broadcast type dimension must equal
-    the batch join row-for-row, including the default for event types
-    absent from the dimension."""
-    import tempfile
-
-    from khronus_spark.sources.tables import EVENT_TYPE_MTYPE, load_table
-    from khronus_spark.streaming.enrich import typed_events
-
-    tmp = tempfile.mkdtemp(prefix="khronus_enrich_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    ev.write.mode("overwrite").parquet(f"{tmp}/in")
-    # dimension deliberately missing one type -> exercises the default
-    dim = spark.createDataFrame(
-        [(k, v) for k, v in EVENT_TYPE_MTYPE.items() if k != "error"],
-        "event_type string, mtype string",
-    )
-
-    batch = typed_events(spark.read.parquet(f"{tmp}/in"), dim)
-
-    stream_in = spark.readStream.schema(ev.schema).parquet(f"{tmp}/in")
-    q = (
-        typed_events(stream_in, dim)
-        .writeStream.format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(f"{tmp}/out")
-    assert got.count() == batch.count()
-    assert (
-        got.exceptAll(batch).count() == 0 and batch.exceptAll(got).count() == 0
-    )
-    # the defaulted type actually occurred
-    assert got.where("event_type = 'error' AND mtype = 'timer'").count() > 0
 
 
 def test_streaming_windowed_cms_matches_batch(spark, sf_dir):

@@ -504,7 +504,7 @@ def test_add_post_check_lands_batch_into_swapped_generation(
 
 def test_maintenance_tick_self_heals_drifted_stream(spark, tmp_path):
     """The closed loop in PRODUCTION shape (r10 verdict Next-round #5):
-    the in-stream guard flags a drifted batch, the runner's maintenance
+    the in-stream guard flags a drifted batch, the maintenance
     thread polls the drift log and self-heals by retrain + generation
     swap — no manual read_drift_log/refresh call anywhere — and the
     measured shortlist recall through the production query face is
@@ -524,7 +524,7 @@ def test_maintenance_tick_self_heals_drifted_stream(spark, tmp_path):
     refresh_streamed_index(spark, root, A)
     gen1 = resolve_generation_dir(root)
 
-    # the standing raw corpus the runner would point --ann-vectors at
+    # the standing raw corpus the retrain reads
     vdir = f"{tmp_path}/standing"
     A.write.parquet(vdir)
     B.select("vec_id", "embedding").write.mode("append").parquet(vdir)
@@ -564,7 +564,7 @@ def test_maintenance_tick_self_heals_drifted_stream(spark, tmp_path):
         ),
     )
 
-    # the runner's loop: poll fast, heal once, report the swap
+    # the maintenance loop: poll fast, heal once, report the swap
     refreshed: list[str] = []
     thread, stop = run_drift_maintenance(
         spark, root, standing, interval_seconds=0.2,
@@ -708,7 +708,7 @@ def test_refresh_default_carries_batches_missing_from_standing_corpus(
         spark, str(tmp_path), [B.select("vec_id", "embedding")], root, "ckm"
     )
     # standing corpus is STALE: vectors = A only, defaults throughout —
-    # exactly what __main__'s tick does when the mirror lags
+    # exactly what the maintenance tick does when the mirror lags
     refresh_streamed_index(spark, root, A)
     gen2 = resolve_generation_dir(root)
     assert os.path.isdir(f"{gen2}/coded_stream/batch=0")
