@@ -34,15 +34,12 @@ class KhronusEngine:
         catalog: list[tuple[str, str]] | None = None,
         windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
         now_ms: int | None = None,
-        read_limit: int | None = None,
     ):
         """Query engine over raw `measurements` or a materialized summary
         store at `summary_base_path` (which needs an explicit `catalog`).
 
-        `read_limit` is an opt-in cap on the rows read per (metric,
-        slice), in query order (`QueryExecutor.read_limit`). Queries are
-        uncapped by default like the reference's influx path, which
-        binds only the query limit (`InfluxQueryResolver.scala:138`)."""
+        Reads bind only the query's own `limit`, like the reference's
+        influx path (`InfluxQueryResolver.scala:138`)."""
         if measurements is None and summary_base_path is None:
             raise ValueError("need measurements or summary_base_path")
         if measurements is None and catalog is None:
@@ -62,11 +59,7 @@ class KhronusEngine:
         self._now_ms = now_ms
         self._catalog = catalog
         self.executor = QueryExecutor(
-            spark,
-            measurements,
-            summary_base_path,
-            windows_ms,
-            read_limit=read_limit,
+            spark, measurements, summary_base_path, windows_ms
         )
 
     # -- catalog (the meta snapshot, `store/Snapshot.scala:25-42`) ---------

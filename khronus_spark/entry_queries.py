@@ -4343,7 +4343,7 @@ def events_zorder_curve(spark, sf_dir):
     either predicate. The interleave is a flat integer polynomial
     (div/mod/multiply only), map-only and codegen-friendly; the top-50
     here is a TakeOrderedAndProject spot-check of the curve, not a
-    shuffle. The layout job itself (zorder_layout) is one range
+    shuffle. The layout job itself (zorder_layout_ranked) is one range
     shuffle, measured in tests/test_zorder.py to cut the partitions a
     2-D box query touches vs a single-key sort."""
     ev = load_table(spark, sf_dir, "events")
@@ -5409,11 +5409,13 @@ def ann_lsh_recall_sized(spark, sf_dir):
 #: sign-LSH there is no closed-form collision model for learned
 #: inverted lists (round 7 measured the cost-optimal `nlist =
 #: √(nprobe·N)` folklore at 0–33% recall here), so the sizing is
-#: EMPIRICAL — `ivf_size_for_recall` trains one index per grid point,
-#: measures recall@3 for every (n_clusters, nprobe) in a single
-#: ann_recall_at_k pass, measures each config's ACTUAL candidate mass
+#: EMPIRICAL. A grid-search sizing helper in operators/similarity.py
+#: (commit 344e4a1 measured this pin with it; it was deleted after
+#: d127767, with scripts/ivf_hard_sweep.py) trained one index per grid point,
+#: measured recall@3 for every (n_clusters, nprobe) in a single
+#: ann_recall_at_k pass, measured each config's ACTUAL candidate mass
 #: (kmeans lists are imbalanced; the nominal nprobe/nlist fraction
-#: lies), and returns the cheapest config with median recall ≥ the
+#: lies), and returned the cheapest config with median recall ≥ the
 #: 8000 bp target.
 #:
 #: ROUND-9 RE-PIN (self-caught seed-probe bias): the round-8 pin
@@ -5421,16 +5423,16 @@ def ann_lsh_recall_sized(spark, sf_dir):
 #: probes 0..9 — which are 10 of the 16 kmeans INIT SEEDS (centroids
 #: initialize from vec_id 0..k-1), so every probe sat at its own
 #: cell's center and its neighbors co-located. With unbiased probes
-#: (100..109) the same config truly measures 3333 bp. The helper now
-#: REFUSES seed-range probes, and the honest re-derivation on the
+#: (100..109) the same config truly measures 3333 bp. The helper
+#: REFUSED seed-range probes, and the honest re-derivation on the
 #: 500-vector gate corpus says what is in fact true at n=500: no
 #: sub-scan grid config reaches 8000 bp (neighborhoods scatter across
 #: lists at 31 vectors/list), so the cheapest config meeting the
 #: target is {n_clusters 4, nprobe 4} — a full scan, scanned_pm 1000,
 #: and the entry pins THAT. The discriminating sub-scan evidence
-#: lives at real scale: scripts/ivf_hard_sweep.py (20k-vector hard
-#: corpus — the helper sizes past failing low-nprobe configs) and
-#: the round-8 sizing sweep's jitter corpora (6% scans at easy
+#: lived at real scale: scripts/ivf_hard_sweep.py (commit 66e0fe6;
+#: 20k-vector hard corpus — the helper sized past failing low-nprobe
+#: configs) and the round-8 sizing sweep's jitter corpora (6% scans at easy
 #: neighborhood structure). An index helper that reports "just scan"
 #: on a 500-vector table is correct, not weak.
 _SIZED_IVF = {"n_clusters": 4, "nprobe": 4, "iters": 2}
@@ -5458,8 +5460,9 @@ _SIZED_IVF_PROBES = list(range(100, 110))
 )
 def ann_ivf_sized(spark, sf_dir):
     """Recall@3 of the trained-IVF retriever at the EMPIRICALLY SIZED
-    configuration `ivf_size_for_recall(probes 100..109, k=3, target
-    8000 bp)` — the measured mirror of `ann_lsh_recall_sized`:
+    configuration (probes 100..109, k=3, target 8000 bp; measured by
+    the grid-search sizing helper at commit 344e4a1) — the measured
+    mirror of `ann_lsh_recall_sized`:
     grid-measured recall (no collision-model pretense), actual
     candidate mass counted from the probe-list joins, refusal when no
     grid point reaches the target, and (round 9) refusal of probes in
@@ -5467,8 +5470,8 @@ def ann_ivf_sized(spark, sf_dir):
     (the _SIZED_IVF block above documents the self-caught re-pin: on
     this 500-vector corpus the honest answer is {4 clusters ×
     nprobe 4} — a full scan — because no sub-scan config reaches the
-    target; the sub-scan evidence lives in scripts/ivf_hard_sweep.py
-    at 20k vectors). Documented floor, pinned by test: median
+    target; the sub-scan evidence came from a 20k-vector hard-corpus
+    sweep). Documented floor, pinned by test: median
     recall@3 across the 10 unbiased probes ≥ 8000 bp at sf0.01. The
     oracle restates the unrolled kmeans chain + nprobe probe lists +
     exact-cosine rerank at the pinned parameters."""
@@ -5962,10 +5965,9 @@ def ann_ivfpq_rerank_topk_indexed(spark, sf_dir):
     (operators/pq.py::ivf_pq_rerank_topk_indexed): IVF routing + ADC
     shortlist from the persisted (books, coded, centroids) triple, then
     only the survivors fetch full vectors for the exact integer-L2
-    rerank — no training in the query plan. This is the query face the
-    streaming-ANN drift contract measures recall through
-    (tests/test_streaming_ann.py): shortlist quality is what frozen
-    codebooks lose under drift, and the exact rerank isolates it."""
+    rerank — no training in the query plan. Shortlist quality is what
+    frozen codebooks lose under drift, and the exact rerank isolates
+    it."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _scratch_dir("ivfpq_rerank_index")
     books, coded, cents = pq_ops.ivf_pq_build_index(
@@ -5991,9 +5993,8 @@ def embedding_drift_flags(spark, sf_dir):
     standard-error gate) plus newly-dead / newly-clipped flags. Here
     the even-id half of the embeddings table is the training profile
     and the odd-id half, shifted +0.5 (double add, clip, round to
-    float — bit-identical in both engines), is the drifted batch. The
-    any(drifted) output is what gates
-    streaming.ann.refresh_streamed_index in the drift loop."""
+    float — bit-identical in both engines), is the drifted batch. An
+    any(drifted) verdict says the frozen index needs a retrain."""
     emb = load_table(spark, sf_dir, "embeddings")
     train = emb.where("vec_id % 2 = 0")
     batch = emb.where("vec_id % 2 = 1").select(
@@ -6472,8 +6473,8 @@ def matryoshka_recall_probe(spark, sf_dir):
     """The Matryoshka fitness probe (operators/pq.py::
     matryoshka_recall_probe): ONE row measuring the sampled recall of
     the prefix-shortlist/full-rerank composition against exact
-    full-width top-k — the guard `matryoshka_build_index` runs before
-    an index serves, because on non-MRL embeddings the prefix metric
+    full-width top-k — the guard to run before a prefix index serves,
+    because on non-MRL embeddings the prefix metric
     can be garbage while every global statistic (variance share
     included — measured) looks healthy. recall_bp is integer-exact
     (10000·hits div probes·k), so the driver hash pins the measured

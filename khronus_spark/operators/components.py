@@ -144,8 +144,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     component_id is the minimum node id in the component.
 
     Isolated nodes don't appear in an edge list, hence not in the
-    output; callers union them back if needed (see
-    ``canonical_keep_filter``).
+    output; callers union them back if needed.
 
     The first checksum counts the distinct edges; at or below
     `DRIVER_SOLVE_MAX_EDGES` the edges are collected and solved by
@@ -268,14 +267,6 @@ def duplicate_components(docs: DataFrame, threshold_bp: int = 3000) -> DataFrame
     )
     return connected_components(pairs).select(
         F.col("node_id").alias("doc_id"), "component_id"
-    )
-
-
-def canonical_keep_filter(docs: DataFrame, components: DataFrame) -> DataFrame:
-    """Keep exactly one doc per duplicate cluster (the min doc_id) plus
-    every unclustered doc. The components map is small → broadcast."""
-    return docs.join(F.broadcast(components), "doc_id", "left").where(
-        F.col("component_id").isNull() | (F.col("doc_id") == F.col("component_id"))
     )
 
 

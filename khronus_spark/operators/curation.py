@@ -832,7 +832,7 @@ def canonical_by_quality(docs: DataFrame) -> DataFrame:
     (doc_id, lang, source, n_tokens, quality_bp).
 
     Scale shape: clusters come from the banded-LSH component map (tiny
-    vs the corpus → broadcast, like `canonical_keep_filter`); quality
+    vs the corpus → broadcast); quality
     is a map-only column pass; the per-cluster argmax is a window over
     the CLUSTERED subset only (docs in some duplicate pair), never the
     full corpus."""

@@ -204,14 +204,6 @@ def shingle_array(n: int = 3):
     )
 
 
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) — word n-gram shingles, distinct per doc."""
-    toks = spread(docs).select("doc_id", _tokens().alias("t"))
-    return toks.select(
-        "doc_id", F.explode(shingle_array(n)).alias("shingle")
-    ).distinct()
-
-
 def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3) -> DataFrame:
     """(doc_id, sig: array<long>) — minhash over word shingles; hash i is
     min over shingles of xxhash64(xxhash64(shingle), i).
@@ -931,19 +923,6 @@ def build_dedup_index(
     banded = minhash_md5_banded(corpus_docs, num_hashes, bands, n)
     return banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_doc_id")
-    )
-
-
-def compact_dedup_index(parts: DataFrame) -> DataFrame:
-    """Merge accumulated index parts (e.g. the per-micro-batch subdirs
-    `run_streaming_incremental_dedup` appends) back to ONE row per
-    (band, bucket): n_docs by sum, min_doc_id by min — both
-    map-side-combinable, so compaction is a single shuffle over short
-    rows. Probing works correctly WITHOUT compaction (the probe's min
-    tolerates duplicate keys); compaction is an offline file-count /
-    probe-size optimization, never a rebuild."""
-    return parts.groupBy("band", "bucket").agg(
-        F.sum("n_docs").alias("n_docs"), F.min("min_doc_id").alias("min_doc_id")
     )
 
 

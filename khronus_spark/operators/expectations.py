@@ -162,11 +162,6 @@ UNION ALL SELECT 'orderkey_resolves', 'lineitem', n, n = 0 FROM l
 """
 
 
-#: quarantine reason bits (contract violations — clean data yields none)
-R_VALUE_RANGE = 1
-R_TS_SPAN = 2
-R_TYPE_DOMAIN = 4
-
 #: anomaly reason bits (behavioral rules that fire on real data)
 A_HIGH_VALUE = 1
 A_ERROR_STORM = 2
@@ -175,26 +170,6 @@ A_BOT_RATE = 4
 HIGH_VALUE = 300.0
 ERROR_VALUE = 200.0
 BOT_EVENTS_PER_DAY = 7
-
-
-def quarantine_events(ev_ns: DataFrame) -> DataFrame:
-    """Route contract-violating event rows to quarantine with a reason
-    bitmask — the row-level complement of `events_checks`' counters
-    (the counters tell you THAT a drop is bad; quarantine tells you
-    WHICH rows, so the rest of the drop can still land). Map-only: the
-    flags are the same predicates as the counters."""
-    lo, hi = EVENTS_SPAN_MS
-    types = ", ".join(f"'{t}'" for t in EVENT_TYPES)
-    reasons = F.expr(
-        f"CAST(value < {VALUE_RANGE[0]} OR value > {VALUE_RANGE[1]} AS LONG) * {R_VALUE_RANGE} + "
-        f"CAST(ts div 1000000 < {lo}L OR ts div 1000000 >= {hi}L AS LONG) * {R_TS_SPAN} + "
-        f"CAST(event_type NOT IN ({types}) AS LONG) * {R_TYPE_DOMAIN}"
-    )
-    return (
-        ev_ns.withColumn("reasons", reasons)
-        .where(F.col("reasons") != 0)
-        .select("event_id", "user_id", "event_type", "reasons")
-    )
 
 
 def anomaly_flags(ev_ns: DataFrame) -> DataFrame:

@@ -126,8 +126,8 @@ def sorted_neighbor_pairs(
     The trade is recall, with TWO distinct failure modes the round-7
     sweep separates: (a) edits near the string head break sort
     adjacency (measured at sf0.01: w=5 finds ~59% of the pairs the
-    full within-block join finds; the reverse-sort second pass —
-    `sorted_neighbor_pairs_multipass` — recovers it to ~87%), and
+    full within-block join finds; a second pass sorted by the
+    reversed text recovered it to ~87%), and
     (b) WINDOW CROWDING: when block size grows while w stays fixed,
     lexically-close non-matches crowd true matches out of the window
     (the sweep's recall falls 0.34 → 0.14 across an 8× size-up and
@@ -195,42 +195,6 @@ def sorted_neighbor_pairs(
         .where((F.col("dist") >= 0) & (F.col("dist") <= F.lit(max_dist)))
         .select(*cols, "id_a", "id_b", "dist")
     )
-
-
-def sorted_neighbor_pairs_multipass(
-    df: DataFrame,
-    block_cols: Sequence[str],
-    text_col: str,
-    id_col: str,
-    window: int = 5,
-    max_dist: int = 2,
-) -> DataFrame:
-    """Multi-pass sorted-neighborhood: one pass sorted by the text and
-    one by its REVERSE, pair sets unioned and de-duplicated. An edit
-    near the string head breaks forward-sort adjacency but not
-    reverse-sort adjacency (and vice versa), so two cheap passes
-    recover most of what one pass misses — the standard production
-    answer, linear like the single pass (2·n·w candidates, still no
-    join; the union's distinct is one extra shuffle on the pair key).
-    Measured at sf0.01: 1252 → 1847 of the 2112 full-block pairs
-    (recall 59% → 87%) for 2× the single-pass cost.
-
-    Output (id_a, id_b, dist) with id_a < id_b (normalized across
-    passes so the same pair found twice collapses).
-    """
-    fwd = sorted_neighbor_pairs(
-        df, block_cols, text_col, id_col, window, max_dist
-    )
-    rev_input = df.withColumn("_rev_text", F.reverse(F.col(text_col)))
-    rev = sorted_neighbor_pairs(
-        rev_input, block_cols, "_rev_text", id_col, window, max_dist
-    )
-    norm = lambda p: p.select(  # noqa: E731 — tiny local shaping helper
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        "dist",
-    )
-    return norm(fwd).unionAll(norm(rev)).distinct()
 
 
 def triangle_counts(

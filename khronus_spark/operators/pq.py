@@ -315,20 +315,19 @@ def write_pq_index(
     """Persist the index as two parquet tables (books: sub·k short
     rows; codes: ONE BIGINT per vector). Pass `geometry` (e.g.
     {"sub": 4, "k": 8, "dims": 16}) to make the index SELF-DESCRIBING
-    via a geometry.json sidecar — the streaming generations' r11
-    convention, here opt-in so pre-sidecar layouts stay byte-stable:
-    readers can then validate query-time parameters against the
-    trained geometry instead of trusting the caller (the r12 ADVICE
-    asked for exactly this on the Matryoshka indexed path).
+    via a geometry.json sidecar, opt-in so pre-sidecar layouts stay
+    byte-stable: readers can then validate query-time parameters
+    against the trained geometry instead of trusting the caller (the
+    r12 ADVICE asked for exactly this on the Matryoshka indexed path).
 
     Publish is ATOMIC (r12 ADVICE): books, codes, and the sidecar are
     fully written into a fresh `gen-<token>/` under `path` and become
     visible in ONE os.replace of the CURRENT pointer — the
-    `publish_generation` convention shared with streaming/ann.py. The
-    old layout wrote the three artifacts in place, so a reader between
-    the parquet overwrite and the sidecar write could pair the OLD
-    geometry with the NEW books (or inherit a stale sidecar if the
-    writer died before the remove) — exactly the mispairing the
+    `sources/generations.py` convention. The old layout wrote the
+    three artifacts in place, so a reader between the parquet
+    overwrite and the sidecar write could pair the OLD geometry with
+    the NEW books (or inherit a stale sidecar if the writer died
+    before the remove) — exactly the mispairing the
     sidecar exists to prevent. A crash mid-write leaves CURRENT on the
     previous complete generation; readers resolve through
     `read_pq_index`/`read_pq_index_geometry`, and pre-generation flat
@@ -336,7 +335,7 @@ def write_pq_index(
     import json
     import os
 
-    from khronus_spark.streaming.retrieval import (
+    from khronus_spark.sources.generations import (
         new_generation,
         publish_generation,
     )
@@ -381,7 +380,7 @@ def resolve_pq_index_dir(path: str) -> str:
     with another's sidecar if a publish lands in between. Resolution
     is idempotent (a generation dir has no CURRENT file and resolves
     to itself), so passing an already-resolved root is always safe."""
-    from khronus_spark.streaming.retrieval import resolve_generation_dir
+    from khronus_spark.sources.generations import resolve_generation_dir
 
     return resolve_generation_dir(path)
 
@@ -988,8 +987,8 @@ def matryoshka_rerank_topk(
     corpus vs 0.92 at full width (sweeps/r11/matryoshka_sweep.json,
     ASSERTED by tests/test_pq_dims.py::
     test_matryoshka_probe_pins_the_sweep_numbers) — so gate any new
-    corpus through `matryoshka_build_index(probe_ids=...)` /
-    `matryoshka_recall_probe` before serving from a prefix index."""
+    corpus through `matryoshka_recall_probe` before serving from a
+    prefix index."""
     if prefix_dims > dims:
         raise ValueError(
             f"Matryoshka prefix_dims={prefix_dims} exceeds dims={dims}: "
@@ -1210,84 +1209,6 @@ FROM mat JOIN exact USING (probe_id, neighbor_id)
 """
 
 
-def matryoshka_build_index(
-    embeddings: DataFrame,
-    prefix_dims: int = 16,
-    sub: int = 4,
-    k: int = K,
-    iters: int = ITERS,
-    mode: str | None = None,
-    dims: int = DIMS,
-    probe_ids: list[int] | None = None,
-    min_recall_bp: int = 5000,
-    n_neighbors: int = 3,
-    n_candidates: int = 30,
-    fail_below: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """The Matryoshka BUILD face with the non-MRL guard built in:
-    slice the corpus to the prefix, train the prefix PQ index
-    (`pq_build_index` at prefix_dims), and — when `probe_ids` is given
-    — measure the composition's sampled recall against exact
-    full-width top-k (`matryoshka_recall_probe`) BEFORE anyone serves
-    from the index. Below `min_recall_bp` the build warns (or raises
-    under `fail_below`) — the measured r11 worst case is not
-    hypothetical: embeddings whose neighbor signal lives outside the
-    prefix (non-MRL checkpoints, feature-concatenated vectors) read
-    recall_bp = 0 while every global statistic looks healthy, and at
-    100 TB nobody re-reads a docstring caveat. Probing costs one
-    exact pass for the sampled probes, amortized into the build.
-
-    Returns (books, codes) — feed `write_pq_index` /
-    `matryoshka_rerank_topk_indexed` exactly like a bare build."""
-    if prefix_dims > dims:
-        raise ValueError(
-            f"Matryoshka prefix_dims={prefix_dims} exceeds dims={dims}: "
-            "the prefix must nest inside the full width"
-        )
-    # mirror of the query-side probe-width check (r12 ADVICE follow-up):
-    # `dims` is caller-asserted, so a corpus whose rows are NARROWER
-    # than prefix_dims would slip past the parameter check and slice()
-    # would silently CLAMP — the index then trains on truncated
-    # prefixes and serves an id-lottery. One min(size()) aggregate is
-    # noise next to the k-means passes the build already pays.
-    widths = embeddings.agg(F.min(F.size("embedding")).alias("w")).collect()
-    if widths and widths[0]["w"] is not None and prefix_dims > widths[0]["w"]:
-        raise ValueError(
-            f"Matryoshka prefix_dims={prefix_dims} exceeds the corpus's "
-            f"minimum embedding width {widths[0]['w']}: slice() would "
-            "silently clamp and the index would train on truncated "
-            "prefixes — the prefix must nest inside every row's width"
-        )
-    prefix = embeddings.select(
-        "vec_id",
-        F.expr(f"slice(embedding, 1, {prefix_dims})").alias("embedding"),
-    )
-    books, codes = pq_build_index(prefix, sub=sub, k=k, iters=iters,
-                                  mode=mode, dims=prefix_dims)
-    if probe_ids:
-        row = matryoshka_recall_probe(
-            embeddings, probe_ids, n_neighbors, n_candidates,
-            prefix_dims, sub, k, iters, mode, dims,
-        ).collect()[0]
-        if row["recall_bp"] < min_recall_bp:
-            msg = (
-                f"Matryoshka prefix-{prefix_dims}/{dims} index measured "
-                f"sampled recall {row['recall_bp']} bp < the "
-                f"min_recall_bp={min_recall_bp} floor over "
-                f"{row['n_probes']} probes: the prefix does not carry "
-                "this corpus's neighbor signal (non-MRL embeddings?) — "
-                "the shortlist degrades toward an id-lottery. Retrain "
-                "with MRL, widen prefix_dims, or serve the full-width "
-                "index instead."
-            )
-            if fail_below:
-                raise ValueError(msg)
-            import warnings
-
-            warnings.warn(msg, stacklevel=2)
-    return books, codes
-
-
 def matryoshka_rerank_topk_sql(
     probe_ids: list[int],
     n_neighbors: int = 3,
@@ -1444,7 +1365,6 @@ def ivf_pq_build_index(
     iters: int = ITERS,
     mode: str | None = None,
     train_sample_mod: int | None = None,
-    train_frame: DataFrame | None = None,
     dims: int = DIMS,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index ONCE — (books, coded inverted lists,
@@ -1460,16 +1380,10 @@ def ivf_pq_build_index(
     filter on this single table, no full-vector access. `centroids`
     (centroid_id, cvec) is the small table queries broadcast to route
     probes. `train_sample_mod` bounds codebook training exactly as in
-    `pq_build_index`. `train_frame` substitutes the codebook-training
-    input entirely (encoding still covers `embeddings`): the k-means
-    init takes the subvectors of vec_id 0..k-1, so a caller that needs
-    init seeds drawn from somewhere other than the head of the id
-    space (e.g. `streaming.ann.refresh_streamed_index`, whose standing
-    corpus appends NEW distributions at HIGH ids) passes a re-keyed
-    view here — ids in the returned index are never affected."""
+    `pq_build_index`."""
     from khronus_spark.operators.similarity import ivf_assignments
 
-    train = embeddings if train_frame is None else train_frame
+    train = embeddings
     if train_sample_mod is not None:
         train = train.where(F.col("vec_id") % train_sample_mod == 0)
     books = _books_from_state(_pq_state(train, sub, k, iters, mode, dims))
@@ -1486,7 +1400,6 @@ def write_ivf_pq_index(
     coded: DataFrame,
     centroids: DataFrame,
     path: str,
-    atomic: bool = True,
     grace_seconds: float = 600.0,
 ) -> None:
     """Persist the IVF-PQ index as three parquet tables. `coded` is
@@ -1497,25 +1410,14 @@ def write_ivf_pq_index(
     Same atomic generation publish as `write_pq_index` (three in-place
     overwrites are three chances for a reader to pair tables from
     different builds): everything lands in `gen-<token>/`, one CURRENT
-    swap makes it visible, flat pre-generation layouts still read.
-    `atomic=False` writes the flat layout for callers that already own
-    an outer atomic publish (`streaming/ann.py` builds into an
-    UNPUBLISHED generation dir of its own — nesting a second pointer
-    inside it would hide the tables from its flat readers)."""
+    swap makes it visible, flat pre-generation layouts still read."""
     import os
 
-    from khronus_spark.streaming.retrieval import (
+    from khronus_spark.sources.generations import (
         new_generation,
         publish_generation,
     )
 
-    if not atomic:
-        books.write.mode("overwrite").parquet(f"{path}/books")
-        coded.repartition("centroid_id").write.mode("overwrite").parquet(
-            f"{path}/coded"
-        )
-        centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-        return
     gen, gdir = new_generation(path)
     books.write.mode("overwrite").parquet(os.path.join(gdir, "books"))
     coded.repartition("centroid_id").write.mode("overwrite").parquet(
@@ -1530,7 +1432,7 @@ def write_ivf_pq_index(
 def read_ivf_pq_index(
     spark, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    from khronus_spark.streaming.retrieval import resolve_generation_dir
+    from khronus_spark.sources.generations import resolve_generation_dir
 
     root = resolve_generation_dir(path)
     return (
@@ -1678,11 +1580,8 @@ def ivf_pq_rerank_topk_indexed(
     the prebuilt (books, coded, centroids) triple, ADC keeps
     `n_candidates` per probe, and only those rows fetch full vectors
     from the primary store for the exact integer-L2 rerank. No
-    training anywhere in the plan. This is the query face the
-    streaming-ANN drift tests measure recall through — ADC shortlist
-    quality is exactly what frozen-codebook drift destroys, and the
-    exact rerank means recall is the SHORTLIST's recall, uncontaminated
-    by ADC ranking noise."""
+    training anywhere in the plan. The exact rerank means recall is the
+    SHORTLIST's recall, uncontaminated by ADC ranking noise."""
     cands = ivf_pq_topk_indexed(
         books, coded, centroids, probe_vecs, n_candidates, nprobe, sub, k, dims
     )

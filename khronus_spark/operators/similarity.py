@@ -464,8 +464,7 @@ def anisotropic_corpus(
     is chopped across several cells and a probe near a chop boundary
     has true nearest neighbors in the ADJACENT cell — recall at low
     nprobe genuinely fails here, unlike jitter-replicated corpora
-    where any probed list contains the clones. Use it to validate an
-    `ivf_size_for_recall` grid before trusting a derived config.
+    where any probed list contains the clones.
 
     Everything is xxhash64-derived (keyed by vec_id/dim/salt;
     Irwin-Hall sum-of-3 pseudo-Gaussian), so the corpus is
@@ -492,226 +491,6 @@ def anisotropic_corpus(
         .withColumnRenamed("id", "vec_id")
         .withColumn("embedding", F.expr(expr))
     )
-
-
-def ivf_size_for_recall(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    target_recall_bp: int = 8000,
-    n_clusters_grid: tuple[int, ...] = (4, 8, 16),
-    nprobe_grid: tuple[int, ...] = (1, 2, 4, 8),
-    iters: int | None = None,
-    sample_mod: int = 1,
-    stats: dict | None = None,
-    recall_stat: str = "median",
-) -> dict[str, int]:
-    """EMPIRICAL IVF sizing — the measured counterpart of the
-    closed-form `lsh_size_for_recall` (round-7 verdict directive 5):
-    unlike sign-LSH, trained-IVF lists have no collision model (list
-    membership follows the learned centroids, not independent coin
-    flips — the cost-optimal `nlist = √(nprobe·N)` folklore gave 0–33%
-    recall on this corpus, measured in round 7), so the honest sizing
-    path is the recall CURVE, not a formula. This helper walks it:
-
-    - train one kmeans-IVF index per `n_clusters_grid` value on a
-      bounded deterministic carve (`sample_mod` > 1 keeps every
-      vec_id ≡ 0 (mod sample_mod) — at 100 TB you size on the sample,
-      then build the production index once at the chosen config),
-    - evaluate recall@k for every (n_clusters, nprobe) combination in
-      ONE `ann_recall_at_k` pass (each combination is an
-      `extra_methods` entry, so the exact brute-force baseline is
-      built once and every comparison is a broadcast join on
-      k×#probes rows),
-    - MEASURE each config's candidate mass instead of trusting the
-      nominal nprobe/n_clusters: kmeans lists are imbalanced, so the
-      per-config scanned rows are counted from the actual probe-list
-      joins (one rank-bucketed aggregate per n_clusters, cumulated
-      over nprobe driver-side — the nominal fraction would undersell
-      a config whose single probed list holds half the corpus),
-    - return the cheapest config whose MEDIAN recall across the
-      probes meets `target_recall_bp` — cheapest by measured scanned
-      rows, ties to fewer clusters (a smaller centroid broadcast),
-      then fewer probes.
-
-    Returns {n_clusters, nprobe, iters, measured_recall_bp (the
-    winning median), scanned_pm (measured candidate rows per probe as
-    per-mille of the corpus — the cost the target recall buys)}.
-    Known off-by-one in the cost readout: the candidate mass sums FULL
-    probed-list sizes, while `ivf_kmeans_topk_indexed` excludes the
-    probe's own vector from its candidates — an overcount of exactly
-    one row per (probe, probed-list-containing-it). It cannot affect
-    the pinned gate-corpus result, but between two grid points whose
-    true masses differ by < #probes it could flip the "cheapest"
-    ranking; recall, the correctness side, is measured on the real
-    retriever either way.
-    Raises ValueError when no grid point reaches the target — the
-    `lsh_size_for_recall` refusal contract: an honest error beats a
-    silently under-recalling index.
-
-    SEED-PROBE BIAS (round-9 self-caught, refused up front): the
-    integer kmeans initializes centroids from vec_id 0..k-1, so a
-    probe drawn from that range sits AT (round 0) or near (after the
-    bounded Lloyd iterations) its own cell's center — its true
-    neighbors co-locate in its cell and recall reads near-perfect
-    regardless of the index's real quality. Measured on the hard
-    anisotropic corpus: seed probes 10000 bp median where non-seed
-    probes read 0 at the same config; on the 500-vector gate corpus
-    the same bias inflated c16_p1 from a true 3333 bp to 10000. Any
-    probe id in [0, max(n_clusters_grid)) is therefore refused.
-
-    `recall_stat` picks the statistic the target applies to:
-    "median" (default) or "p10" (the floor of the worst decile,
-    nearest-rank). The hard-sweep's mixed corpus shows why the choice
-    matters: with 80% of probes in tight filament neighborhoods and
-    20% in a uniform noise floor, every grid config PASSES an 8000 bp
-    MEDIAN (the easy majority outvotes the tail) while the noise
-    probes individually recall ~0-3333 bp — a p10 target surfaces
-    that tail instead of letting it hide.
-
-    Deterministic end-to-end (integer kmeans, deterministic tie
-    order, fixed grids), so a pinned config stays pinned:
-    `ann_ivf_sized` registers the gate corpus's result and
-    tests/test_similarity.py asserts the helper still derives it."""
-    from statistics import median
-
-    from khronus_spark.operators import clustering as km
-
-    if not 0 < target_recall_bp <= 10000:
-        raise ValueError("target_recall_bp must be in (0, 10000]")
-    seed_range = max(n_clusters_grid)
-    biased = sorted(p for p in probe_ids if 0 <= p < seed_range)
-    if biased:
-        raise ValueError(
-            f"probe_ids {biased} fall in the kmeans init-seed range "
-            f"[0, {seed_range}) — recall measured on training seeds is "
-            "biased upward (seed probes sit at their own cell centers; "
-            "measured 10000 bp vs 0 for non-seed probes on a hard "
-            "corpus). Size with probes outside the seed range."
-        )
-    corpus = (
-        embeddings
-        if sample_mod <= 1
-        else embeddings.where(F.col("vec_id") % sample_mod == 0)
-    )
-    if sample_mod > 1:
-        # probes excluded by the carve would silently shrink the recall
-        # median (possibly to an empty set misreported as "recall
-        # unreachable") — a caller mismatch, not an index property
-        surviving = {
-            r["vec_id"]
-            for r in corpus.where(F.col("vec_id").isin(probe_ids))
-            .select("vec_id")
-            .collect()
-        }
-        missing = [p for p in probe_ids if p not in surviving]
-        if missing:
-            raise ValueError(
-                f"probe_ids {missing} are excluded by sample_mod="
-                f"{sample_mod} (vec_id % {sample_mod} == 0); size with "
-                "probes that survive the carve"
-            )
-    n_corpus = corpus.count()
-    max_probe = max(p for p in nprobe_grid)
-    methods: dict[str, DataFrame] = {}
-    scanned: dict[tuple[int, int], int] = {}
-    for n_clusters in n_clusters_grid:
-        cents, assign = ivf_kmeans_build_index(corpus, n_clusters, iters)
-        cents = cents.localCheckpoint(eager=False)
-        assign = assign.localCheckpoint(eager=False)
-        for nprobe in nprobe_grid:
-            if nprobe > n_clusters:
-                continue
-            methods[f"c{n_clusters}_p{nprobe}"] = ivf_kmeans_topk_indexed(
-                corpus, cents, assign, probe_ids, k, nprobe
-            )
-        # measured candidate mass: list sizes joined to each probe's
-        # rank-r list, counted per rank r (n_clusters rows in, ≤
-        # max(nprobe) rows out), cumulated over r driver-side
-        probes_q = corpus.where(F.col("vec_id").isin(probe_ids)).select(
-            "vec_id", F.expr(km._QUANT).alias("e")
-        )
-        ranked = (
-            probes_q.crossJoin(F.broadcast(cents))
-            .withColumn("d", F.expr(km._DIST))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("vec_id").orderBy(
-                        F.col("d").asc(), F.col("cid").asc()
-                    )
-                ),
-            )
-            .where(F.col("rn") <= max_probe)
-        )
-        sizes = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("sz"))
-        per_rank = {
-            r["rn"]: r["rows"]
-            for r in ranked.join(F.broadcast(sizes), "cid")
-            .groupBy("rn")
-            .agg(F.sum("sz").alias("rows"))
-            .collect()
-        }
-        acc = 0
-        for rn in range(1, max_probe + 1):
-            acc += per_rank.get(rn, 0)
-            if rn in nprobe_grid and rn <= n_clusters:
-                scanned[(n_clusters, rn)] = acc
-    rows = ann_recall_at_k(
-        corpus, probe_ids, k, include=(), extra_methods=methods
-    ).collect()
-    if recall_stat == "median":
-        def _stat(recalls: list[int]) -> int:
-            return int(median(sorted(recalls)))
-    elif recall_stat == "p10":
-        def _stat(recalls: list[int]) -> int:
-            s = sorted(recalls)
-            # nearest-rank percentile: the floor of the worst decile
-            return s[max(0, (len(s) + 9) // 10 - 1)]
-    else:
-        raise ValueError(f"unknown recall_stat {recall_stat!r}")
-    by_method: dict[str, list[int]] = {}
-    for r in rows:
-        by_method.setdefault(r["method"], []).append(r["recall_bp"])
-    if stats is not None:
-        # the full measured grid, for sweep scripts / hard-corpus
-        # evidence: per-config recall statistic and measured scan rows
-        stats["grid"] = {
-            name: {
-                "median_recall_bp": int(median(sorted(recalls))),
-                f"{recall_stat}_recall_bp": _stat(recalls),
-                "scanned_rows": scanned[
-                    tuple(int(x[1:]) for x in name.split("_"))
-                ],
-            }
-            for name, recalls in sorted(by_method.items())
-        }
-        stats["n_corpus"] = n_corpus
-    best = None
-    for name, recalls in by_method.items():
-        med = _stat(recalls)
-        if med < target_recall_bp:
-            continue
-        n_clusters, nprobe = (int(x[1:]) for x in name.split("_"))
-        cost = (scanned[(n_clusters, nprobe)], n_clusters, nprobe)
-        if best is None or cost < best[0]:
-            best = (cost, n_clusters, nprobe, med)
-    if best is None:
-        raise ValueError(
-            f"recall {target_recall_bp}bp unreachable on the measured grid "
-            f"{n_clusters_grid}x{nprobe_grid} at {recall_stat}; measured: "
-            + ", ".join(
-                f"{n}={_stat(v)}" for n, v in sorted(by_method.items())
-            )
-        )
-    (rows_scanned, _, _), n_clusters, nprobe, med = best
-    return {
-        "n_clusters": n_clusters,
-        "nprobe": nprobe,
-        "iters": iters if iters is not None else km.ITERS,
-        "measured_recall_bp": med,
-        "scanned_pm": 1000 * rows_scanned // max(1, n_corpus * len(probe_ids)),
-    }
 
 
 def ivf_kmeans_topk(

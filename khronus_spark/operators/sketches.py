@@ -137,18 +137,6 @@ def hll_estimate_expr():
     return _hll_est_from(lambda i: f"coalesce(r{i}, 0)")
 
 
-def hll_distinct_wide(df: DataFrame, group_col: str, key_expr: str) -> DataFrame:
-    """Single-aggregation form of ``hll_distinct`` — identical estimate
-    (same registers, same fold), streaming-safe. Used by the windowed
-    streaming distinct-count path (tests/test_streaming.py)."""
-    bucket, rho = _hash_cols(key_expr)
-    hashed = df.select(F.col(group_col).alias("grp"), bucket, rho)
-    regs = hashed.groupBy("grp").agg(*hll_register_aggs())
-    return regs.select(
-        F.col("grp").alias(group_col), hll_estimate_expr().alias("est_distinct")
-    )
-
-
 def windowed_hll_distinct(
     frame: DataFrame, window_duration: str, key_expr: str
 ) -> DataFrame:
@@ -685,13 +673,6 @@ def bloom_build(df: DataFrame, key_expr: str, bits: int = BLOOM_BITS) -> DataFra
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("word"))
         .localCheckpoint(eager=False)
-    )
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union of two key sets = cellwise bit_or of their filters."""
-    return (
-        a.unionByName(b).groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     )
 
 

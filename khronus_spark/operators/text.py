@@ -759,29 +759,6 @@ GROUP BY source
 """
 
 
-def pii_redact(docs: DataFrame) -> DataFrame:
-    """Redacted-text projection: email/URL/phone spans replaced with
-    typed placeholder tokens, plus the per-doc replacement count.
-    Map-only (regexp_replace chain, JVM codegen)."""
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), PII_EMAIL, "<EMAIL>"),
-            PII_URL,
-            "<URL>",
-        ),
-        PII_PHONE,
-        "<PHONE>",
-    )
-    n_hits = (
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(PII_EMAIL), F.lit(0)))
-        + F.size(F.regexp_extract_all(F.col("text"), F.lit(PII_URL), F.lit(0)))
-        + F.size(F.regexp_extract_all(F.col("text"), F.lit(PII_PHONE), F.lit(0)))
-    )
-    return docs.select(
-        "doc_id", red.alias("text_redacted"), n_hits.cast("long").alias("n_redactions")
-    )
-
-
 # ---- hashed linear quality classifier ------------------------------------
 
 #: hashed-feature dimension for the linear quality classifier.
@@ -2122,9 +2099,8 @@ def bm25_build_postings(corpus: DataFrame) -> DataFrame:
     this one table and the corpus text is never needed again at query
     time. One map-side-combinable shuffle. Persist with
     `write_bm25_index` — the same build/query lifecycle the ANN
-    (`pq_build_index`) and dedup (`build_dedup_index`) families have;
-    `streaming/retrieval.py` maintains it incrementally per
-    micro-batch."""
+    (`pq_build_index`) and dedup (`build_dedup_index`) families
+    have."""
     corpus_t = corpus.select("doc_id", _tokens().alias("_t"))
     return (
         corpus_t.select(
@@ -2153,39 +2129,19 @@ def write_bm25_index(postings: DataFrame, path: str) -> None:
     write_bm25_constants(postings, path)
 
 
-def write_bm25_constants(
-    postings: DataFrame, path: str, upto_batch: int | None = None
-) -> None:
+def write_bm25_constants(postings: DataFrame, path: str) -> None:
     """Write the QUERY-TIME CONSTANTS of a postings table — per-term
     df, collection stats, max-impact ceilings — under `path`
     ({path}/df, {path}/stats, {path}/maximpact; `read_bm25_stats` /
     `read_bm25_max_impact` read them back). The tail of
-    `write_bm25_index`, exposed on its own for HOT indexes: a
-    streaming-maintained postings table
-    (`streaming/retrieval.py::run_streaming_postings_update`) grows
-    per micro-batch, and its constants refresh PERIODICALLY from the
-    accumulated postings into a sibling constants dir — after which
-    the streamed index serves the same indexed/pruned query paths as
-    a batch-built one (test-pinned bit-identical).
+    `write_bm25_index`.
 
     EXACTNESS CONTRACT for the PRUNED path: the ceilings are upper
     bounds only over the postings they were built from. Serving
     `bm25_rank_indexed_pruned` against postings that grew PAST the
-    refresh is unsound — a new posting whose tf exceeds the build's
+    build is unsound — a new posting whose tf exceeds the build's
     maximum for its term can out-score a stale ceiling, and a doc
-    the exact top-k contains could then be pruned away. Serve the
-    pruned path from the SAME postings snapshot the constants were
-    refreshed from: for the streaming layout, query
-    `read_streamed_postings(spark, path, upto_batch=<refresh
-    boundary>)` — index-as-of-refresh semantics, the standard search
-    -tier contract (new docs appear at the next refresh). Pass
-    `upto_batch` here to RECORD that boundary with the constants
-    ({path}/boundary; `read_bm25_boundary` returns it and
-    `streaming/retrieval.py::refresh_streamed_constants` /
-    `read_pruned_snapshot` wire the whole loop so misuse takes
-    effort). The PLAIN `bm25_rank_indexed` face has no such hazard:
-    stale constants score every doc with the same collection stats,
-    so its ranking stays internally consistent over live postings."""
+    the exact top-k contains could then be pruned away."""
     df_t = postings.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     df_t = df_t.localCheckpoint(eager=False)
     stats_df = (
@@ -2222,26 +2178,6 @@ def write_bm25_constants(
         df_t=df_t,
         collection_stats=(int(n_docs), int(avgdl_m)),
     ).write.mode("overwrite").parquet(f"{path}/maximpact")
-    if upto_batch is not None:
-        local_frame(spark, [(int(upto_batch),)], "upto_batch long").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/boundary")
-
-
-def read_bm25_boundary(spark, path: str) -> int | None:
-    """The postings-snapshot boundary recorded with a constants
-    refresh (`write_bm25_constants(upto_batch=…)`), or None when the
-    refresh recorded none (a batch-built index, whose postings ARE
-    the snapshot)."""
-    import os
-
-    if not os.path.isdir(f"{path}/boundary"):
-        return None
-    return int(
-        spark.read.schema("upto_batch long")
-        .parquet(f"{path}/boundary")
-        .first()["upto_batch"]
-    )
 
 
 # The index tables are OUR OWN persisted layouts with fixed schemas, so
@@ -2256,10 +2192,8 @@ POSTINGS_SCHEMA = "doc_id long, dl long, w string, tf long"
 
 def read_bm25_index(spark, path: str) -> DataFrame:
     """The postings table of a persisted index. Accepts both the
-    round-7 layout ({path}/postings + df + stats) and a bare postings
-    directory (the streaming maintainer's accumulating layout; extra
-    columns there are ignored by the pinned-schema read exactly as the
-    previous select ignored them)."""
+    `write_bm25_index` layout ({path}/postings + df + stats) and a bare
+    postings directory."""
     import os
 
     sub = f"{path}/postings"
@@ -2312,7 +2246,7 @@ def bm25_rank_indexed(
     `read_bm25_stats` and the query plan contains NO aggregate over
     the postings at all (the stats pair inlines as literals — one-row
     driver metadata, the codebook convention). Pinned bit-identical
-    to `bm25_rank` over the same corpus in test_streaming_retrieval.
+    to `bm25_rank` over the same corpus in test_retrieval.
     Scoring and tie semantics are `bm25_rank`'s docstring verbatim.
 
     `share_postings` (default True) checkpoints the postings frame so
@@ -3799,9 +3733,9 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Deliberately ASCII-conservative: both engines (Java regex / RE2)
     agree exactly on these character classes, so the op stays
     oracle-checkable; Unicode-aware normalization (NFKC, zero-width
-    strips) is locale/dialect-dependent across engines and belongs in
-    a Pandas-UDF extension (`normalize_text_nfkc`), not in the
-    exact-parity core. Map-only, zero shuffle, scan-speed at 100 TB.
+    strips) is locale/dialect-dependent across engines and does not
+    belong in the exact-parity core. Map-only, zero shuffle,
+    scan-speed at 100 TB.
 
     NULL text is in-contract: text_norm/n_chars_norm stay NULL and
     `changed` is a null-safe FALSE (nothing was changed), not a silent
@@ -3837,80 +3771,6 @@ SELECT doc_id, text_norm,
        text_norm IS DISTINCT FROM text AS changed
 FROM cleaned
 """
-
-
-def nfkc_normalize_str(s: str | None, form: str = "NFKC") -> str | None:
-    """The pure-Python normalization `normalize_text_nfkc` applies per
-    value — exposed so the fixture-parity test and any driver-side
-    caller share ONE definition with the distributed path. Steps, in
-    order: Unicode normalization (`form`, default NFKC: full-width →
-    ASCII, ligatures split, compatibility digits folded, NBSP →
-    space), zero-width/soft-hyphen strip (U+200B–200D, U+FEFF,
-    U+00AD — invisible in rendering, poison for tokenizers), control
-    chars → space (the core op's contract), Unicode-whitespace runs →
-    one space, trim. None passes through."""
-    import re
-    import unicodedata
-
-    if s is None:
-        return None
-    out = unicodedata.normalize(form, s)
-    out = re.sub("[\u200b\u200c\u200d\ufeff\u00ad]", "", out)
-    out = re.sub("[\x00-\x1f\x7f]", " ", out)
-    return re.sub(r"\s+", " ", out).strip()
-
-
-def normalize_text_nfkc(
-    docs: DataFrame, text_col: str = "text", form: str = "NFKC"
-) -> DataFrame:
-    """Unicode-aware normalization — the documented extension beyond
-    the ASCII-conservative `normalize_text` (real corpora are not
-    ASCII): NFKC folding (full-width forms, ligatures, compatibility
-    digits), zero-width and soft-hyphen strips, control chars to
-    spaces, Unicode-whitespace collapse, trim. Same output shape as
-    the core op: (doc_id, text_norm, n_chars_norm, changed); NULL
-    text stays NULL with a null-safe `changed` = false.
-
-    NOT oracle-backed by design: NFKC tables are ICU/Python-version
-    artifacts DuckDB does not expose, so cross-engine hash parity is
-    the wrong contract here. Correctness is pinned instead by a
-    fixture-set parity test (tests/test_text_norm.py): the Spark
-    output must equal `nfkc_normalize_str` over a pinned corpus of
-    Unicode edge cases, and must agree exactly with `normalize_text`
-    on already-clean ASCII input.
-
-    Arrow-batched scalar Pandas UDF (the decode/recurrence exception
-    class — per-value Python is unavoidable for NFKC, so it is
-    vectorized per batch, never per-row pickled). Map-only, zero
-    shuffle; n_chars_norm counts CODE POINTS (Python len), matching
-    Spark `length` semantics on the BMP fixtures the tests pin."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _norm_fn(s):
-        return s.map(lambda v: nfkc_normalize_str(v, form))
-
-    # real class objects, not strings: the module's `from __future__
-    # import annotations` would stringify inline hints and pyspark
-    # cannot resolve 'pd.Series' from a function-local import
-    _norm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    _norm = pandas_udf(_norm_fn, "string")
-
-    # two-step projection: materialize the UDF column once, derive the
-    # cheap columns from it — three references to the UDF expression in
-    # one select can evaluate the per-value NFKC work three times
-    # (optimizer dedup of extracted Python UDFs is not guaranteed)
-    normed = docs.select(
-        "doc_id",
-        F.col(text_col).alias("_orig"),
-        _norm(F.col(text_col)).alias("text_norm"),
-    )
-    return normed.select(
-        "doc_id",
-        "text_norm",
-        F.length("text_norm").cast("long").alias("n_chars_norm"),
-        (~F.col("text_norm").eqNullSafe(F.col("_orig"))).alias("changed"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -51,31 +51,6 @@ def z_value(a: str, b: str, bits: int = 10) -> Column:
     return F.expr(z_expr_sql(a, b, bits, div="div"))
 
 
-def zorder_layout(
-    df: DataFrame,
-    a: str,
-    b: str,
-    bits: int = 10,
-    n_partitions: int = 16,
-    z_col: str = "_z",
-) -> DataFrame:
-    """Re-layout `df` along the Morton curve of (a, b): range-partition
-    on the code, sort within partitions. Writing the result produces
-    files whose min/max statistics are tight boxes in BOTH dimensions —
-    a predicate on either column prunes files/row-groups at plan time.
-
-    Shape at 100 TB: one range shuffle (the same cost as any global
-    sort-based layout job — this IS the compaction/OPTIMIZE pass, run
-    once per ingest window, not per query) and a per-partition sort;
-    the curve value itself is map-only. The z column is kept so the
-    writer can also partition directories by a coarse prefix
-    (z div 2**k) when file-level pruning alone is not enough."""
-    with_z = df.withColumn(z_col, z_value(a, b, bits))
-    return with_z.repartitionByRange(n_partitions, z_col).sortWithinPartitions(
-        z_col
-    )
-
-
 def _rank_expr(bounds: list[float], col: str) -> str:
     """SQL expression for #{b in bounds : col >= b} as an O(log k)
     nested-IF binary search. The expression TREE is O(k) literals but
@@ -125,29 +100,6 @@ def quantile_bounds(
     return {c: sorted(set(b)) for c, b in zip(cols, all_bounds)}
 
 
-def quantile_cell(
-    df: DataFrame, col: str, bits: int = 6, relative_error: float = 0.001
-) -> Column:
-    """Rank-normalize a numeric column into 2**bits cells by its own
-    quantiles — the step that makes Morton interleaving effective on
-    real data (Delta's OPTIMIZE ZORDER BY does the same via
-    range-partition ids). Interleaving RAW values wastes curve bits
-    whenever the two columns occupy unequal ranges: if one column only
-    spans 7 of 10 bits, the top curve splits are all the other
-    column's bits and one axis gets no clustering at all (measured in
-    tests/test_zorder.py).
-
-    The boundary list (≤ 2**bits − 1 doubles) is computed once with
-    approxQuantile — a bounded driver-side call, fine for a write-time
-    layout job — and baked into an O(log k) binary-search expression
-    (`_rank_expr`). Ties/skew collapse boundaries (deduped), so a
-    dominant value gets one wide cell instead of breaking
-    monotonicity. Multi-axis callers should use `quantile_bounds` +
-    `_cell_from_bounds` to share one stats scan."""
-    uniq = quantile_bounds(df, [col], bits, relative_error)[col]
-    return _cell_from_bounds(uniq, col, bits)
-
-
 def zorder_layout_ranked(
     df: DataFrame,
     a: str,
@@ -156,12 +108,27 @@ def zorder_layout_ranked(
     n_partitions: int = 16,
     z_col: str = "_z",
 ) -> DataFrame:
-    """`zorder_layout` over quantile-ranked cells of the two raw
-    columns: each axis is first rank-normalized into 2**bits cells
-    (`quantile_cell`), then Morton-interleaved — robust to skew and to
-    columns of wildly different scales (epoch-ms vs small ids). Both
-    axes' quantile sketches come from ONE stats scan
-    (`quantile_bounds`)."""
+    """Re-layout `df` along the Morton curve of quantile-ranked cells
+    of (a, b): range-partition on the code, sort within partitions.
+    Writing the result produces files whose min/max statistics are
+    tight boxes in BOTH dimensions — a predicate on either column
+    prunes files/row-groups at plan time.
+
+    Each axis is first rank-normalized into 2**bits cells by its own
+    quantiles (Delta's OPTIMIZE ZORDER BY does the same via
+    range-partition ids), then Morton-interleaved — robust to skew and
+    to columns of wildly different scales (epoch-ms vs small ids).
+    Interleaving RAW values wastes curve bits whenever the two columns
+    occupy unequal ranges: the top curve splits all go to one column
+    and the other axis gets no clustering at all. Both axes' quantile
+    boundaries (≤ 2**bits − 1 doubles each) come from ONE
+    approxQuantile stats scan (`quantile_bounds`) and are baked into
+    an O(log k) binary-search expression (`_rank_expr`); ties/skew
+    collapse boundaries, so a dominant value gets one wide cell.
+
+    Shape at 100 TB: one range shuffle (this IS the compaction/OPTIMIZE
+    pass, run once per ingest window, not per query) and a
+    per-partition sort; the curve value itself is map-only."""
     bounds = quantile_bounds(df, [a, b], bits)
     with_cells = df.withColumn(
         "_ca", _cell_from_bounds(bounds[a], a, bits)
@@ -169,23 +136,4 @@ def zorder_layout_ranked(
     with_z = with_cells.withColumn(z_col, z_value("_ca", "_cb", bits))
     return with_z.repartitionByRange(n_partitions, z_col).sortWithinPartitions(
         z_col
-    )
-
-
-def layout_box_stats(df: DataFrame, a: str, b: str) -> DataFrame:
-    """Per-partition bounding boxes of columns (a, b) for a laid-out
-    DataFrame — the file-footer min/max statistics a parquet writer
-    would persist, computed without writing. Used to measure pruning
-    effectiveness: a query box prunes a partition iff the boxes are
-    disjoint."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.min(a).alias("a_min"),
-            F.max(a).alias("a_max"),
-            F.min(b).alias("b_min"),
-            F.max(b).alias("b_max"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
     )

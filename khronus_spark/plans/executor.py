@@ -146,7 +146,6 @@ class QueryExecutor:
         measurements: DataFrame | None = None,
         summary_base_path: str | None = None,
         windows_ms: tuple[int, ...] = DEFAULT_WINDOWS_MS,
-        read_limit: int | None = None,
     ):
         """Queries read the summary store at `summary_base_path` when
         given, else summarize raw `measurements` (metric, mtype, ts_ms,
@@ -155,12 +154,6 @@ class QueryExecutor:
         self.measurements = measurements
         self.summary_base_path = summary_base_path
         self.windows_ms = windows_ms
-        #: hard per-(metric, slice) read cap, the reference's Cassandra
-        #: `limit ?` bind (`SummaryStore.scala:80-88` summary-limit=1000;
-        #: `BucketStore.scala:77` bucket-limit=30000). Applied in ts
-        #: order (query direction) to each source's buckets, before fill
-        #: and post-processing.
-        self.read_limit = read_limit
 
     # -- public ------------------------------------------------------------
 
@@ -424,13 +417,13 @@ class _Statement:
         difference to the source's previous kept bucket: the first has
         none, so its delta is NULL and the series drops it, and a gap's
         delta spans the gap."""
-        limits = [n for n in (self.criteria.limit, self.ex.read_limit) if n is not None]
+        limit = self.criteria.limit
         ctes, rel, key = "", "b", "p"
-        if limits:
+        if limit is not None:
             order = "" if self.criteria.order_asc else " DESC"
             ranks = ", ".join(
                 f"s{i}_p AND row_number() OVER (PARTITION BY s{i}_p ORDER BY ts{order}) "
-                f"<= {min(limits)} AS s{i}_k"
+                f"<= {limit} AS s{i}_k"
                 for i in range(len(tids))
             )
             ctes, rel, key = f"l AS (SELECT *, {ranks} FROM b),\n", "l", "k"

@@ -75,7 +75,9 @@ def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple
     """MetricBatch JSON → measurement rows (one per value). Raises
     ValueError on a metric name that is not a string or a metric type
     that has no summary family: one landed row of either would fail
-    every query whose FROM regex matches it."""
+    every query whose FROM regex matches it. A `ts` or value outside
+    int64 raises too: the landing column is int64, and a failed write
+    would answer 500, which a client retries forever."""
     now = now_ms if now_ms is not None else int(time.time() * 1000)
     rows = []
     for metric in payload.get("metrics", []):
@@ -86,10 +88,14 @@ def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple
         for m in metric.get("measurements", []):
             ts = m.get("ts")
             ts = now if ts is None else int(ts)
+            if not -(1 << 63) <= ts < 1 << 63:
+                raise ValueError(f"ts {ts} is outside int64")
             for v in m.get("values", []):
                 v = int(v)
                 if v < 0:  # skipped, like the reference ingest
                     continue
+                if v >= 1 << 63:
+                    raise ValueError(f"value {v} is outside int64")
                 rows.append((name, mtype, ts, v))
     return rows
 

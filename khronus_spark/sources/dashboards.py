@@ -48,9 +48,7 @@ class DashboardStore:
         persist the loss of every other dashboard."""
         import os
 
-        from khronus_spark.streaming.retrieval import (
-            resolve_generation_dir,
-        )
+        from khronus_spark.sources.generations import resolve_generation_dir
 
         root = resolve_generation_dir(self.path)
         if not os.path.isdir(root) or not os.listdir(root):
@@ -66,7 +64,7 @@ class DashboardStore:
         previous complete generation; the new frame reads the OLD
         generation while writing the new dir, so no self-overwrite
         materialization dance is needed either."""
-        from khronus_spark.streaming.retrieval import (
+        from khronus_spark.sources.generations import (
             new_generation,
             publish_generation,
         )

@@ -109,10 +109,8 @@ def run_streaming_dedup(
     micro-batch's edges land as `out_path/batch=<id>` via overwrite —
     foreachBatch is AT-LEAST-ONCE, so a checkpoint replay must REPLACE
     its own batch dir with recomputed-identical content rather than
-    append a second copy (the r13 review finding: a flat append sink
-    duplicated every replayed edge; every other sink in this package —
-    the postings update, the incremental-dedup index, the ANN landings
-    — already wrote batch-keyed overwrites)."""
+    append a second copy (a flat append sink duplicated every
+    replayed edge)."""
     edges = streaming_duplicate_edges(docs_stream, num_hashes, bands, n, family)
     return (
         edges.writeStream.outputMode("update")
@@ -121,96 +119,6 @@ def run_streaming_dedup(
                 f"{out_path}/batch={bid}"
             )
         )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_streaming_incremental_dedup(
-    docs_stream: DataFrame,
-    corpus_index: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    num_hashes: int = 8,
-    bands: int = 2,
-    n: int = 3,
-):
-    """Continuous-crawl dedup: every arriving micro-batch of documents
-    is deduplicated against the PERSISTED corpus bucket index (the
-    `operators.dedup.build_dedup_index` table) PLUS every earlier
-    micro-batch, and then folds its own buckets into the growing index
-    — the streaming face of `incremental_dedup`, i.e. the production
-    loop "new crawl lands → verdicts out → index grows" with the
-    corpus never re-scanned.
-
-    Per micro-batch (foreachBatch):
-      1. verdicts = `incremental_dedup(static index ∪ prior batches'
-         index parts, batch)` → one row per batch doc (doc_id, dup_of,
-         dup_src); here `dup_src='corpus'` means "already indexed" —
-         the static corpus OR any earlier micro-batch — and `'batch'`
-         means the same micro-batch;
-      2. the batch's own pre-aggregated (band, bucket, n_docs,
-         min_doc_id) rows append as `index_path/batch=<id>`.
-    Both writes are mode("overwrite") into a per-batch-id subdir and
-    the accumulated-index read filters `batch < id`, so a replayed
-    micro-batch (checkpoint recovery) rewrites exactly its own outputs
-    and sees exactly the pre-crash index — replay-idempotent, proven
-    stream==batch in tests/test_streaming_dedup.py.
-
-    Scale shape: verdict probing inherits `incremental_dedup` (batch
-    signatures map-only; unique-ish-key joins; a corpus mega-bucket is
-    ONE index row); the index grows by ≤ bands × batch-docs short rows
-    per trigger and duplicate (band, bucket) keys across parts stay
-    correct under the probe's min-aggregation — compact them offline
-    whenever part count matters, no rebuild needed."""
-    from pyspark.sql import functions as F
-
-    from khronus_spark.operators.dedup import build_dedup_index, incremental_dedup
-
-    static_index = corpus_index.select("band", "bucket", "n_docs", "min_doc_id")
-
-    def process(batch_docs: DataFrame, batch_id: int) -> None:
-        from khronus_spark.streaming.retrieval import landed_batches
-
-        spark = batch_docs.sparkSession
-        batch_docs = batch_docs.localCheckpoint(eager=True)
-        # probe for landed index parts by DIRECTORY, never by catching
-        # the read error: a transient read failure (FS hiccup, listing
-        # timeout) caught as "first batch" would compute verdicts
-        # against the static corpus alone and PERSIST them — wrong
-        # dup_of=null rows that replay-idempotence then never
-        # recomputes (the r13 review finding; ingest.py's upsert_sink
-        # probes existence for exactly this reason)
-        import os
-
-        has_prior = os.path.isdir(index_path) and bool(
-            landed_batches(index_path)
-        )
-        if has_prior:
-            # explicit schema: the index-part layout is self-owned
-            # (build_dedup_index) — no footer-inference job per batch
-            prior = (
-                spark.read.schema(
-                    "band long, bucket long, n_docs long, "
-                    "min_doc_id long, batch int"
-                )
-                .parquet(index_path)
-                .where(F.col("batch") < batch_id)
-                .select("band", "bucket", "n_docs", "min_doc_id")
-            )
-            full = static_index.unionByName(prior)
-        else:  # first batch: no index parts yet
-            full = static_index
-        verdicts = incremental_dedup(full, batch_docs, num_hashes, bands, n)
-        verdicts.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-        build_dedup_index(batch_docs, num_hashes, bands, n).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/batch={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()

@@ -51,7 +51,7 @@ def main() -> None:
         read_pq_index_geometry,
         write_pq_index,
     )
-    from khronus_spark.streaming.retrieval import resolve_generation_dir
+    from khronus_spark.sources.generations import resolve_generation_dir
 
     spark = (
         SparkSession.builder.master("local[8]")

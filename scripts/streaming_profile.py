@@ -4,10 +4,9 @@ VERDICT item 8): stage N input files, run each maintainer with
 maxFilesPerTrigger=1 under availableNow, and count Spark jobs, stages
 and wall per micro-batch via a listener-free statusTracker sweep.
 
-Covers the three maintainer families the bench never times:
+Covers the two maintainer families the bench never times:
   - rollup ingest upsert (streaming/ingest.py::run_streaming_rollup_upsert)
   - online MinHash-LSH dedup   (streaming/dedup.py::run_streaming_dedup)
-  - BM25 postings maintenance  (streaming/retrieval.py::run_streaming_postings_update)
 
 Writes sweeps/r14/streaming_profile.json and prints a table.
 """
@@ -103,18 +102,6 @@ def main() -> None:
             stream, out_path=f"{tmp}/out", checkpoint_path=f"{tmp}/ckpt"
         )
 
-    def run_postings(tmp, schema):
-        from khronus_spark.streaming.retrieval import run_streaming_postings_update
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{tmp}/in/*")
-        )
-        return run_streaming_postings_update(
-            stream, index_path=f"{tmp}/idx", checkpoint_path=f"{tmp}/ckpt"
-        )
-
     meas = measurements_from_events(spark, SF)
 
     def stage_meas(tmp):
@@ -144,7 +131,6 @@ def main() -> None:
 
     profile("rollup_upsert", stage_meas, run_rollup)
     profile("dedup_edges", stage_docs, run_dedup)
-    profile("postings_update", stage_docs, run_postings)
 
     dest = Path(_REPO) / "sweeps" / "r14"
     dest.mkdir(parents=True, exist_ok=True)

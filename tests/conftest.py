@@ -49,7 +49,6 @@ SLOW_TESTS = {
     "tests/test_alerts.py::test_hysteresis_debounce_hand_case",
     "tests/test_components.py::test_bucket_pairs_mega_bucket_bounded_memory",
     "tests/test_components.py::test_bucket_pairs_star_cap_preserves_components",
-    "tests/test_components.py::test_canonical_keep_one_per_cluster",
     "tests/test_components.py::test_cc_chain_converges_in_log_rounds",
     "tests/test_components.py::test_components_match_union_find[path]",
     "tests/test_components.py::test_curation_stages_monotonic",
@@ -90,7 +89,6 @@ SLOW_TESTS = {
     "tests/test_oracle_parity.py::test_query_matches_oracle[streaming_dedup_components]",
     "tests/test_pq_dims.py::test_dim16_oracle_parity_codes_and_topk",
     "tests/test_pq_dims.py::test_ivf_pq_build_encode_query_dim16",
-    "tests/test_pq_dims.py::test_matryoshka_build_guard_warns_and_raises",
     "tests/test_pq_dims.py::test_matryoshka_degenerates_to_pq_rerank_at_full_prefix",
     "tests/test_pq_dims.py::test_matryoshka_indexed_matches_inline",
     "tests/test_pq_dims.py::test_matryoshka_probe_pins_the_sweep_numbers",
@@ -104,42 +102,16 @@ SLOW_TESTS = {
     "tests/test_retrieval.py::test_hybrid_and_chunk_auto_route",
     "tests/test_retrieval.py::test_hybrid_indexed_matches_inline_index_composition",
     "tests/test_retrieval.py::test_hybrid_indexed_pruned_branch_is_bit_identical",
-    "tests/test_similarity.py::test_ivf_size_for_recall_derives_pinned_config",
-    "tests/test_similarity.py::test_ivf_sizing_on_hard_corpus_fails_low_nprobe_and_sizes_past_it",
-    "tests/test_similarity.py::test_ivf_sizing_p10_surfaces_the_tail_the_median_hides",
     "tests/test_sketches.py::test_hll_overlap_union_exact_and_intersection_bounded",
     "tests/test_smoothing.py::test_holt_winters_duckdb_recursion_matches_python_fold_property",
     "tests/test_streaming.py::test_effective_watermark_lags_two_batches_of_front_progress",
     "tests/test_streaming.py::test_streaming_windowed_hll_matches_batch",
     "tests/test_streaming.py::test_upsert_store_complete_and_idempotent",
-    "tests/test_streaming_ann.py::test_add_post_check_lands_batch_into_swapped_generation",
-    "tests/test_streaming_ann.py::test_carry_fails_loudly_on_null_embeddings",
-    "tests/test_streaming_ann.py::test_carry_skips_mid_commit_batch_dirs",
-    "tests/test_streaming_ann.py::test_drift_guard_verdicts_per_batch_and_replay",
-    "tests/test_streaming_ann.py::test_drift_refresh_restores_shortlist_recall_and_stream_survives_swap",
-    "tests/test_streaming_ann.py::test_guarded_post_swap_reland_is_atomic",
-    "tests/test_streaming_ann.py::test_hot_add_path_never_scans_the_coded_table",
-    "tests/test_streaming_ann.py::test_maintenance_tick_self_heals_drifted_stream",
-    "tests/test_streaming_ann.py::test_refresh_carries_at_the_generations_own_geometry",
-    "tests/test_streaming_ann.py::test_refresh_carries_boundary_straddling_batches",
-    "tests/test_streaming_ann.py::test_refresh_carry_dedups_snapshot_included_batches",
-    "tests/test_streaming_ann.py::test_refresh_default_carries_batches_missing_from_standing_corpus",
-    "tests/test_streaming_ann.py::test_repeated_drift_heal_cycles_stay_consistent",
-    "tests/test_streaming_ann.py::test_replay_replaces_batches_identically_and_snapshot_pins",
-    "tests/test_streaming_ann.py::test_replayed_batch_absorbed_by_retrain_does_not_duplicate",
-    "tests/test_streaming_ann.py::test_streamed_adds_match_one_shot_encode_and_queries_agree",
-    "tests/test_streaming_coreset.py::test_fold_m1_covers_by_scale_growth_and_state_prunes",
     "tests/test_streaming_coreset.py::test_streaming_kcenter_bounded_state_and_radius",
-    "tests/test_streaming_coreset.py::test_streaming_kcenter_deterministic_and_replay_idempotent",
     "tests/test_streaming_dedup.py::test_streaming_dedup_full_redelivery_replaces_batches",
     "tests/test_streaming_dedup.py::test_streaming_dedup_matches_batch_components",
     # replay-half of the same soak chain (reads its producer's out/)
     "tests/test_streaming_dedup.py::test_streaming_dedup_replay_is_idempotent",
-    "tests/test_streaming_dedup.py::test_streaming_incremental_dedup_matches_cumulative_batch",
-    "tests/test_streaming_retrieval.py::test_hybrid_from_streamed_postings_matches_batch_face",
-    "tests/test_streaming_retrieval.py::test_refresh_boundary_pins_the_pruned_snapshot",
-    "tests/test_streaming_retrieval.py::test_refresh_in_place_swaps_generations_atomically",
-    "tests/test_streaming_retrieval.py::test_refreshed_constants_enable_pruned_path_on_streamed_index",
     "tests/test_unigram.py::test_unigram_oracle_matches_python_reference_property",
     "tests/test_wordpiece.py::test_wordpiece_oracle_matches_python_reference_property",
 }

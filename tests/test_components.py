@@ -1,6 +1,5 @@
 """Connected components (large-star/small-star) vs a Python union-find,
-plus the canonical-keep dedup filter and the curation pipeline's
-stage-by-stage row accounting."""
+plus the curation pipeline's stage-by-stage row accounting."""
 
 from __future__ import annotations
 
@@ -9,11 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from khronus_spark.operators.components import (
-    canonical_keep_filter,
-    connected_components,
-    duplicate_components,
-)
+from khronus_spark.operators.components import connected_components
 from khronus_spark.operators.curation import curated_docs
 
 
@@ -78,25 +73,6 @@ def test_components_empty_edges(spark):
     assert star_contraction(empty).count() == 0
 
 
-def test_canonical_keep_one_per_cluster(spark, oracle_sf_dir):
-    docs = spark.read.parquet(f"{oracle_sf_dir}/documents.parquet")
-    comps = duplicate_components(docs)
-    kept = canonical_keep_filter(docs, comps)
-
-    n_docs = docs.count()
-    n_clustered = comps.count()
-    n_clusters = comps.select("component_id").distinct().count()
-    assert n_clustered > n_clusters > 0  # the fixture really has clusters
-    # every clustered doc except one representative per cluster is dropped
-    assert kept.count() == n_docs - (n_clustered - n_clusters)
-    # each kept doc id appears once; each cluster keeps exactly its min
-    kept_in_clusters = kept.select("doc_id").join(comps, "doc_id")
-    assert kept_in_clusters.where(
-        F.col("doc_id") != F.col("component_id")
-    ).count() == 0
-    assert kept_in_clusters.count() == n_clusters
-
-
 def test_curation_stages_monotonic(spark, oracle_sf_dir):
     """Each curation stage only removes rows, and the final corpus is a
     subset of the quality-gated set."""
@@ -156,7 +132,7 @@ def test_empty_input_edge_cases(spark):
     """New operators must degrade to empty outputs, not crash, on empty
     inputs (the first thing a malformed upstream filter produces)."""
     from khronus_spark.operators.curation import curated_docs, curation_stats
-    from khronus_spark.operators.sketches import hll_distinct, hll_distinct_wide
+    from khronus_spark.operators.sketches import hll_distinct
     from khronus_spark.operators.skew import salted_distinct
     from khronus_spark.operators.text import repetition, top_terms_tfidf
 
@@ -171,7 +147,6 @@ def test_empty_input_edge_cases(spark):
     assert repetition(empty_docs).count() == 0
     assert top_terms_tfidf(empty_docs).count() == 0
     assert hll_distinct(empty_events, "event_type", "user_id").count() == 0
-    assert hll_distinct_wide(empty_events, "event_type", "user_id").count() == 0
     assert salted_distinct(empty_events, "event_type", "user_id").count() == 0
 
     from khronus_spark.operators.curation import curriculum_shards

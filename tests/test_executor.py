@@ -192,23 +192,22 @@ def test_division_by_zero_value_raises_at_eval(engine):
     assert all(r["value"] is not None for r in res[0].df.collect())
 
 
-def test_read_limit_caps_slice_in_query_order(spark):
-    """The reference's Cassandra `limit ?` bind (bucket-limit /
-    summary-limit, reference.conf:30-33) truncates each (metric, slice)
-    read in timestamp order. Forced tiny here to watch it bite."""
+def test_query_limit_caps_slice_in_query_order(spark):
+    """The query's `limit` binds each (metric, slice) read in timestamp
+    order, like the reference's influx path
+    (`InfluxQueryResolver.scala:138`)."""
     from khronus_spark.engine import KhronusEngine
 
     rows = [("m", "counter", t * 60_000, 1) for t in range(1, 11)]
     m = spark.createDataFrame(rows, "metric STRING, mtype STRING, ts_ms LONG, value LONG")
-    eng = KhronusEngine(spark, measurements=m, now_ms=700_000, read_limit=3)
-    res = eng.sql('select count from "m" where time >= 0 force group by time(1m)')
+    eng = KhronusEngine(spark, measurements=m, now_ms=700_000)
+    res = eng.sql('select count from "m" where time >= 0 force group by time(1m) limit 3')
     pts = sorted(r["time"] for r in res[0].df.where("value is not null").collect())
-    # ascending order (default): the FIRST 3 buckets survive the cap
+    # ascending order (default): the FIRST 3 buckets survive the limit
     assert pts == [60_000, 120_000, 180_000]
 
-    eng2 = KhronusEngine(spark, measurements=m, now_ms=700_000, read_limit=3)
-    res2 = eng2.sql(
-        'select count from "m" where time >= 0 force group by time(1m) order desc'
+    res2 = eng.sql(
+        'select count from "m" where time >= 0 force group by time(1m) limit 3 order desc'
     )
     pts2 = sorted(r["time"] for r in res2[0].df.where("value is not null").collect())
     # descending reads keep the LAST 3 buckets (SummaryStore's desc select)

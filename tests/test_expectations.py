@@ -90,23 +90,6 @@ def test_per_table_checks_are_single_scan(spark, sf_dir):
     assert plan.count("Scan parquet") == 1, plan
 
 
-def test_quarantine_rows_carry_reason_bitmask(spark):
-    ok_ts = 1_704_100_000_000 * 1_000_000
-    ev = _events(
-        spark,
-        [
-            (0, ok_ts, 1, "click", 5.0),                 # clean
-            (1, ok_ts, 1, "teleport", -1.0),             # domain + range
-            (2, 1_000_000_000, 1, "view", 2000.0),       # span + range
-        ],
-    )
-    got = {r.event_id: r.reasons for r in ex.quarantine_events(ev).collect()}
-    assert got == {
-        1: ex.R_VALUE_RANGE + ex.R_TYPE_DOMAIN,
-        2: ex.R_VALUE_RANGE + ex.R_TS_SPAN,
-    }
-
-
 def test_anomaly_flags_planted(spark):
     day_ns = 86_400_000 * 1_000_000
     base = 1_704_100_000_000 * 1_000_000

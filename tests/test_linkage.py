@@ -287,47 +287,6 @@ def test_cusum_plan_has_window_group_limit(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
-def test_multipass_snm_recovers_head_edits(spark):
-    """An edit at the string HEAD sorts the two variants far apart
-    (forward pass misses them) but their reversals are adjacent — the
-    reverse pass recovers the pair. Multi-pass = union of both."""
-    rows = [
-        (1, "A", "alpha widget deluxe"),
-        (2, "A", "blpha widget deluxe"),   # head edit: forward-sort distant
-        (3, "A", "middle aaaa"),           # sort-spacer between 1 and 2
-        (4, "A", "another spacer bbbb"),
-        (5, "A", "assorted spacer cccc"),
-    ]
-    df = spark.createDataFrame(rows, "id long, blk string, name string")
-    single = {
-        (r["id_a"], r["id_b"])
-        for r in linkage.sorted_neighbor_pairs(
-            df, ["blk"], "name", "id", window=1, max_dist=2
-        ).collect()
-    }
-    multi = {
-        (r["id_a"], r["id_b"])
-        for r in linkage.sorted_neighbor_pairs_multipass(
-            df, ["blk"], "name", "id", window=1, max_dist=2
-        ).collect()
-    }
-    assert (1, 2) not in single  # forward pass alone misses the head edit
-    assert (1, 2) in multi       # reverse pass recovers it
-    assert single <= multi       # never loses a forward-pass pair
-
-
-def test_multipass_snm_dedupes_double_finds(spark):
-    # identical strings are adjacent in BOTH sort orders: the union
-    # must still emit each pair once
-    df = spark.createDataFrame(
-        [(1, "A", "same"), (2, "A", "same")], "id long, blk string, name string"
-    )
-    out = linkage.sorted_neighbor_pairs_multipass(
-        df, ["blk"], "name", "id", window=2, max_dist=0
-    ).collect()
-    assert len(out) == 1 and (out[0]["id_a"], out[0]["id_b"]) == (1, 2)
-
-
 def test_golden_records_survivorship(spark):
     """Mode-with-deterministic-ties survivorship: the most frequent
     value wins per entity, ties break lexicographically smallest,

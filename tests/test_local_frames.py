@@ -65,22 +65,6 @@ def _bpe_batched(spark, tmp_path, sf_dir):
     return lambda: bpe_merges_batched(docs, k=2)
 
 
-def _bm25_boundary(spark, tmp_path, sf_dir):
-    from khronus_spark.operators.text import (
-        bm25_build_postings,
-        read_bm25_boundary,
-        write_bm25_constants,
-    )
-
-    postings = bm25_build_postings(_bpe_docs(spark))
-
-    def run():
-        write_bm25_constants(postings, str(tmp_path / "const"), upto_batch=3)
-        assert read_bm25_boundary(spark, str(tmp_path / "const")) == 3
-
-    return run
-
-
 def _clustering_empty(spark, tmp_path, sf_dir):
     from khronus_spark.operators.clustering import _assign_arrow, _mean_partials_arrow
 
@@ -99,12 +83,6 @@ def _streaming_kcenter_audit(spark, tmp_path, sf_dir):
 
     entry = entry_queries.queries()["coreset_streaming_kcenter_audit"]
     return lambda: entry(spark, sf_dir).collect()
-
-
-def _streaming_coreset_state(spark, tmp_path, sf_dir):
-    from khronus_spark.streaming.coreset import _write_state
-
-    return lambda: _write_state(spark, str(tmp_path / "st"), [(1, [3, 4]), (2, [])], 25, 0)
 
 
 def _monitoring(spark, tmp_path, sf_dir):
@@ -153,10 +131,8 @@ SITES = {
     "coreset.kcenter_select_per_cell": _kcenter_per_cell,
     "text.bpe_merges_sequential": _bpe_sequential,
     "text.bpe_merges_batched": _bpe_batched,
-    "text.write_bm25_constants": _bm25_boundary,
     "clustering.empty_centroids": _clustering_empty,
     "entry_queries.coreset_streaming_kcenter_audit": _streaming_kcenter_audit,
-    "streaming.coreset._write_state": _streaming_coreset_state,
     "monitoring.flush": _monitoring,
     "dashboards.store_drop": _dashboards,
 }

@@ -1,10 +1,10 @@
-"""PII detectors and redaction (operators/text.py::pii_scan/pii_redact)
-proven on PII-laden fixtures — the synthetic corpus is PII-free, so the
+"""PII detectors (operators/text.py::pii_scan) proven on PII-laden
+fixtures — the synthetic corpus is PII-free, so the
 registry entry only certifies zeros; detection has to be shown here."""
 
 from __future__ import annotations
 
-from khronus_spark.operators.text import pii_redact, pii_scan
+from khronus_spark.operators.text import pii_scan
 
 DOCS = [
     (1, "contact me at Jane.Doe@Example.COM or visit HTTPS://Example.com/x", "en", "webA", 64),
@@ -23,14 +23,3 @@ def test_scan_counts_by_source(spark):
     assert a["n_docs"] == 2
     assert b["n_email_hits"] == b["n_url_hits"] == b["n_phone_hits"] == 0
 
-
-def test_redact_replaces_spans_and_counts(spark):
-    out = {r["doc_id"]: r.asDict() for r in pii_redact(spark.createDataFrame(DOCS, SCHEMA)).collect()}
-    assert "<EMAIL>" in out[1]["text_redacted"]
-    assert "<URL>" in out[1]["text_redacted"]
-    assert "Jane.Doe" not in out[1]["text_redacted"]  # mixed case caught
-    assert out[1]["n_redactions"] == 2
-    assert "<PHONE>" in out[2]["text_redacted"]
-    assert out[2]["n_redactions"] == 1
-    assert out[3]["n_redactions"] == 0
-    assert out[3]["text_redacted"] == DOCS[2][1]

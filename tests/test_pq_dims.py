@@ -313,64 +313,6 @@ def test_matryoshka_probe_pins_the_sweep_numbers(spark, sweep_corpora):
     assert bp(tail, 64) >= 9000
 
 
-def test_matryoshka_build_guard_warns_and_raises(spark, sweep_corpora):
-    """The build face acts on the probe: a non-MRL corpus warns below
-    the floor (or raises under fail_below), the realistic corpus
-    builds silently, and the guarded build's output is the plain
-    build (the guard must not perturb the index)."""
-    import warnings
-
-    iso, tail = sweep_corpora
-    probes = list(range(400, 410))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        books, codes = pq_ops.matryoshka_build_index(
-            tail, 16, 4, 8, 1, probe_ids=probes, n_neighbors=5
-        )
-        guard = [x for x in w if "id-lottery" in str(x.message)]
-        assert len(guard) == 1 and "0 bp" in str(guard[0].message)
-    with pytest.raises(ValueError, match="id-lottery"):
-        pq_ops.matryoshka_build_index(
-            tail, 16, 4, 8, 1, probe_ids=probes, n_neighbors=5,
-            fail_below=True,
-        )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        books, codes = pq_ops.matryoshka_build_index(
-            iso, 16, 4, 8, 1, probe_ids=probes, n_neighbors=5
-        )
-        assert not [x for x in w if "id-lottery" in str(x.message)]
-    want_books, want_codes = pq_ops.pq_build_index(
-        iso.select(
-            "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")
-        ),
-        sub=4, k=8, iters=1, dims=16,
-    )
-    assert sorted(map(tuple, books.collect())) == sorted(
-        map(tuple, want_books.collect())
-    )
-    assert sorted(map(tuple, codes.collect())) == sorted(
-        map(tuple, want_codes.collect())
-    )
-
-
-def test_matryoshka_build_refuses_short_width_corpus(spark, emb16):
-    """r12 ADVICE mirror of the query-side width check: prefix_dims is
-    validated against the dims PARAMETER, so a corpus whose rows are
-    narrower than prefix_dims used to slip through and slice() clamped
-    silently — the index trained on truncated prefixes. The build now
-    measures min(size(embedding)) and fails loudly."""
-    with pytest.raises(ValueError, match="minimum embedding width 16"):
-        pq_ops.matryoshka_build_index(
-            emb16, prefix_dims=24, sub=4, k=8, iters=1, dims=32
-        )
-    # exactly-nesting width still builds
-    books, _codes = pq_ops.matryoshka_build_index(
-        emb16, prefix_dims=16, sub=4, k=8, iters=1, dims=16
-    )
-    assert books.count() > 0
-
-
 def test_pq_index_geometry_sidecar_roundtrip_and_validation(
     spark, emb16, tmp_path
 ):
@@ -442,14 +384,16 @@ def test_pq_index_publish_is_atomic_generation_swap(spark, emb16, tmp_path):
     geometry sidecar non-atomically — a reader between the parquet
     overwrite and the sidecar write could pair OLD geometry with NEW
     books. The writer now lands everything in a fresh gen-<token>/ and
-    publishes with ONE CURRENT-pointer swap (the streaming/ann.py
-    convention); the superseded generation stays readable (kept
-    unconditionally as `prev`), so a reader that resolved before the
-    swap keeps a consistent (books, codes, geometry) triple."""
+    publishes with ONE CURRENT-pointer swap (sources/generations.py);
+    the superseded generation stays readable (kept unconditionally as
+    `prev`), so a reader that resolved before the swap keeps a
+    consistent (books, codes, geometry) triple. A half-written
+    generation whose pointer swap never happened stays invisible, and
+    older generations retire only once `grace_seconds` old."""
     import os
 
     from khronus_spark.operators.pq import read_pq_index_geometry
-    from khronus_spark.streaming.retrieval import resolve_generation_dir
+    from khronus_spark.sources.generations import resolve_generation_dir
 
     prefix = emb16.select(
         "vec_id", F.expr("slice(embedding, 1, 8)").alias("embedding")
@@ -475,6 +419,28 @@ def test_pq_index_publish_is_atomic_generation_swap(spark, emb16, tmp_path):
     # and the published view reads end-to-end
     b2, c2 = pq_ops.read_pq_index(spark, path)
     assert b2.count() == books.count() and c2.count() == codes.count()
+
+    # crash simulation: a generation written without the pointer swap
+    # is invisible — serving stays on gen2
+    os.makedirs(os.path.join(path, "gen-deadbeef0000"))
+    assert resolve_generation_dir(path) == gen2
+
+    # a third publish in quick succession must NOT retire gen1 under
+    # the default age grace: a reader slower than one publish interval
+    # may still hold it
+    pq_ops.write_pq_index(books, codes, path, geometry={"dims": 8, "v": 3})
+    gen3 = resolve_generation_dir(path)
+    assert os.path.isdir(gen1) and os.path.isdir(gen2)
+
+    # with the grace waived, every generation but the current and the
+    # previous one retires — the unpublished crash leftover included
+    pq_ops.write_pq_index(
+        books, codes, path, geometry={"dims": 8, "v": 4}, grace_seconds=0
+    )
+    gens = sorted(n for n in os.listdir(path) if n.startswith("gen-"))
+    assert gens == sorted(
+        [os.path.basename(gen3), os.path.basename(resolve_generation_dir(path))]
+    )
 
 
 def test_recall_probe_rejects_absent_and_duplicate_probes(spark, emb16):

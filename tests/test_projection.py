@@ -787,6 +787,40 @@ def test_lm_reference_joins_are_salted_and_model_broadcast(spark, oracle_sf_dir)
     assert "CartesianProduct" not in plan
 
 
+def test_drift_detector_flags_shifted_batch_not_control(spark, tmp_path):
+    """On the hard anisotropic corpus, a same-distribution half of the
+    training vectors raises no drift flag, while a batch collapsed
+    into [0.85, 0.95]^dim flags every dimension's mean."""
+    from khronus_spark.operators.quantize import (
+        embedding_dim_stats,
+        embedding_drift_flags,
+    )
+    from khronus_spark.operators.similarity import anisotropic_corpus
+
+    corpus = anisotropic_corpus(spark, 600, dim=64)
+    corpus.where("vec_id < 400").write.parquet(f"{tmp_path}/A")
+    corpus.where("vec_id >= 400").select(
+        "vec_id",
+        F.expr(
+            "transform(embedding, x -> CAST(least(1.0D, greatest(-1.0D, "
+            "0.9D + 0.05D * CAST(x AS DOUBLE))) AS FLOAT))"
+        ).alias("embedding"),
+    ).write.parquet(f"{tmp_path}/B")
+    A = spark.read.parquet(f"{tmp_path}/A")
+    B = spark.read.parquet(f"{tmp_path}/B")
+    train_stats = embedding_dim_stats(A)
+    # control: the 5-sigma standard-error gate must stay silent
+    ctrl = embedding_drift_flags(
+        train_stats, embedding_dim_stats(A.where("vec_id % 2 = 0"))
+    )
+    assert ctrl.where("drifted").count() == 0
+    # the shifted batch: every dimension's mean moved ~0.9 at a
+    # standard error of ~0.03 — all 64 dims must flag
+    drift = embedding_drift_flags(train_stats, embedding_dim_stats(B))
+    assert drift.where("drifted").count() == 64
+    assert drift.where("mean_shift").count() == 64
+
+
 def test_embedding_dim_stats_flags_dead_and_clipped(spark):
     """A constant dimension flags dead; a dimension pinned at ±1 for
     ≥1% of vectors flags clipped; a healthy dimension flags neither;
@@ -845,11 +879,9 @@ def test_decimal_to_string_is_plain_digits_at_the_38_digit_bound(spark):
 
 
 def test_embedding_dim_stats_survives_int64_overflow_scale(spark):
-    """r12 dual-writer soak finding: the int64 variance numerator
-    n·Σv² − (Σv)² overflows at n ≈ 2,300 rows per dim (v ≤ 2e6), which
-    made refresh_streamed_index's train-stats write throw once the
-    standing corpus crossed it — the maintenance daemon then never
-    healed again. The numerator now evaluates in DECIMAL(38,0); pin it
+    """The int64 variance numerator n·Σv² − (Σv)² overflows at
+    n ≈ 2,300 rows per dim (v ≤ 2e6), so a training profile over a
+    larger corpus threw. The numerator now evaluates in DECIMAL(38,0); pin it
     at an n where the old form provably wrapped, value-checked against
     exact Python integers."""
     from khronus_spark.operators.quantize import embedding_dim_stats

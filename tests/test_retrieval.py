@@ -1,5 +1,6 @@
 """Hybrid retrieval (RRF fusion): fusion semantics, branch agreement,
-and the plan shape of the composed retriever."""
+and the plan shape of the composed retriever; the persisted BM25 index
+(build/query split identity, the degenerate empty build)."""
 
 from __future__ import annotations
 
@@ -173,6 +174,54 @@ def test_hybrid_indexed_semantic_branch_is_pq_ranks(spark, sf_dir):
     got = {(r["query_id"], r["doc_id"], r["rank"]) for r in sem}
     assert got == want
     assert all(d % 97 != 0 for _, d, _ in got)
+
+
+def test_indexed_query_equals_inline_rank(spark, oracle_sf_dir, tmp_path):
+    """`bm25_rank_indexed` over a parquet-round-tripped
+    `bm25_build_postings` table equals `bm25_rank` over the raw corpus,
+    row for row: the build/query split changes no value."""
+    from khronus_spark.operators.text import (
+        bm25_build_postings,
+        bm25_rank,
+        bm25_rank_indexed,
+        read_bm25_index,
+        write_bm25_index,
+    )
+    from khronus_spark.sources.tables import load_table
+
+    docs = load_table(spark, oracle_sf_dir, "documents")
+    corpus = docs.where(F.col("doc_id") % 97 != 0)
+    queries = docs.where(F.col("doc_id") % 97 == 0).select(
+        F.col("doc_id").alias("query_id"), "text"
+    )
+    write_bm25_index(bm25_build_postings(corpus), f"{tmp_path}/postings")
+    got = bm25_rank_indexed(
+        read_bm25_index(spark, f"{tmp_path}/postings"), queries
+    )
+    want = bm25_rank(docs, eval_mod=97)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
+def test_empty_corpus_index_builds_and_reads(spark, sf_dir, tmp_path):
+    """Degenerate but reachable (an empty carve): the index build and
+    the stats read-back must complete with (0, 0) instead of dying on
+    a NULL avgdl."""
+    from khronus_spark.operators.text import (
+        bm25_build_postings,
+        read_bm25_max_impact,
+        read_bm25_stats,
+        write_bm25_index,
+    )
+    from khronus_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "empty_idx")
+    write_bm25_index(bm25_build_postings(docs.where("doc_id < 0")), path)
+    df_t, n_docs, avgdl_m = read_bm25_stats(spark, path)
+    assert (n_docs, avgdl_m) == (0, 0) and df_t.count() == 0
+    assert read_bm25_max_impact(spark, path).count() == 0
 
 
 def test_bm25_chunk_rank_finds_needle_in_long_doc(spark):

@@ -482,14 +482,21 @@ def test_metric_landed_after_engine_cached_is_listed_and_queryable(spark):
         {"name": "bad.hist", "mtype": "histogram"},
         {"name": None, "mtype": "timer"},
         {"name": 7, "mtype": "counter"},
+        {"name": "big.value", "mtype": "timer",
+         "measurements": [{"ts": None, "values": [1 << 63]}]},
+        {"name": "big.ts", "mtype": "timer",
+         "measurements": [{"ts": 1 << 63, "values": [7]}]},
     ],
-    ids=["unknown_mtype", "null_name", "int_name"],
+    ids=["unknown_mtype", "null_name", "int_name", "value_over_int64",
+         "ts_over_int64"],
 )
 def test_unknown_metric_type_is_400_and_lands_nothing(spark, bad_metric):
-    """A batch naming a metric type without a summary family, or a
-    metric name that is not a string, answers 400 and lands none of its
-    rows, good ones included: one landed row of it would fail every
-    FROM-regex query that matches it."""
+    """A batch naming a metric type without a summary family, a metric
+    name that is not a string, or a value or `ts` outside int64 answers
+    400 and lands none of its rows, good ones included: one landed row
+    of the first two would fail every FROM-regex query that matches it,
+    and the landing write of the last two would fail with a 500 that
+    clients retry forever."""
     import time as _time
     import urllib.error
 
@@ -502,8 +509,8 @@ def test_unknown_metric_type_is_400_and_lands_nothing(spark, bad_metric):
         bad = {"metrics": [
             {"name": "good.latency", "mtype": "timer",
              "measurements": [{"ts": now - 60_000, "values": [5]}]},
-            {**bad_metric,
-             "measurements": [{"ts": now - 60_000, "values": [7]}]},
+            {"measurements": [{"ts": now - 60_000, "values": [7]}],
+             **bad_metric},
         ]}
         req = urllib.request.Request(
             f"http://127.0.0.1:{svc.port}/khronus/metrics",

@@ -276,49 +276,6 @@ def test_hyperplane_family_is_full_rank():
     assert C.max() < 0.99, f"near-parallel planes (max |cos| {C.max():.3f})"
 
 
-def test_ivf_size_for_recall_derives_pinned_config(spark, sf_dir):
-    """The empirical sizing helper (round-7 directive 5) must still
-    derive the config pinned in the ann_ivf_sized registry entry when
-    run on the gate corpus — deterministic end-to-end (integer
-    kmeans, fixed grids, deterministic ties), so drift here means an
-    engine-path change that must rotate the entry."""
-    from khronus_spark.entry_queries import _SIZED_IVF, _SIZED_IVF_PROBES
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cfg = sim.ivf_size_for_recall(
-        emb, _SIZED_IVF_PROBES, k=3, target_recall_bp=8000
-    )
-    assert {k: cfg[k] for k in _SIZED_IVF} == _SIZED_IVF
-    assert cfg["measured_recall_bp"] >= 8000
-    # the honest cost readout at n=500: NO sub-scan config reaches the
-    # target with unbiased probes (neighborhoods scatter at 31
-    # vectors/list), so the cheapest passing config IS the full scan —
-    # scanned_pm 1000, stated plainly instead of a seed-biased "6%"
-    assert cfg["scanned_pm"] == 1000
-
-
-def test_ivf_size_for_recall_refuses_unreachable_target(spark, sf_dir):
-    """Refusal contract (mirrors lsh_size_for_recall): a grid whose
-    best median recall is below target raises with the measured
-    medians in the message instead of shipping an under-recalling
-    config (c4/p1 measures well under target with unbiased probes)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="unreachable"):
-        sim.ivf_size_for_recall(
-            emb,
-            list(range(100, 110)),
-            k=3,
-            target_recall_bp=8000,
-            n_clusters_grid=(4,),
-            nprobe_grid=(1,),
-        )
-    with pytest.raises(ValueError):
-        sim.ivf_size_for_recall(emb, [100], target_recall_bp=0)
-    # round-9 seed-probe guard: probes in [0, max(grid)) are refused
-    with pytest.raises(ValueError, match="init-seed range"):
-        sim.ivf_size_for_recall(emb, list(range(10)), target_recall_bp=8000)
-
-
 def test_sized_ivf_recall_meets_documented_floor(spark, oracle_sf_dir):
     """The ann_ivf_sized contract: at the pinned sized parameters the
     median recall@3 across the 10 probes is >= 8000 bp on the sf0.01
@@ -331,99 +288,6 @@ def test_sized_ivf_recall_meets_documented_floor(spark, oracle_sf_dir):
     assert len(out) == 10 and all(r["method"] == "ivf_sized" for r in out)
     med = statistics.median(r["recall_bp"] for r in out)
     assert med >= 8000, f"sized-IVF median recall {med}bp below floor"
-
-
-def test_ivf_sizing_on_hard_corpus_fails_low_nprobe_and_sizes_past_it(
-    spark,
-):
-    """The round-8 caveat retired: on the anisotropic-filament + noise
-    corpus (scripts/ivf_hard_sweep.py at scale), recall GENUINELY
-    degrades at low nprobe — at least one grid config fails the
-    target — and the helper (a) derives a config that meets it and
-    (b) REFUSES when the grid is capped to the failing configs."""
-    from khronus_spark.operators.similarity import (
-        anisotropic_corpus,
-        ivf_size_for_recall,
-    )
-
-    # dim-32 with a full uniform noise floor: concentration of
-    # distances scatters true neighbors across cells — measured
-    # c16_p1 = 0 bp with unbiased probes (and 10000 bp with seed
-    # probes, which is the bias the helper now refuses)
-    corpus = anisotropic_corpus(
-        spark, 3000, dim=32, n_true=4, noise_pm=1000
-    ).localCheckpoint(eager=True)
-    probes = list(range(500, 512))
-    stats: dict = {}
-    chosen = ivf_size_for_recall(
-        corpus,
-        probes,
-        k=3,
-        target_recall_bp=8000,
-        n_clusters_grid=(8, 16),
-        nprobe_grid=(1, 2, 4, 8),
-        stats=stats,
-    )
-    medians = {
-        name: g["median_recall_bp"] for name, g in stats["grid"].items()
-    }
-    failing = {n: m for n, m in medians.items() if m < 8000}
-    assert failing, f"hard corpus defeated no config: {medians}"
-    assert chosen["measured_recall_bp"] >= 8000, (chosen, medians)
-
-    # capped to exactly the worst config, the helper must refuse
-    import pytest as _pytest
-
-    worst = min(medians, key=lambda n: (medians[n], n))
-    wc, wp = (int(x[1:]) for x in worst.split("_"))
-    with _pytest.raises(ValueError, match="unreachable"):
-        ivf_size_for_recall(
-            corpus,
-            probes,
-            k=3,
-            target_recall_bp=8000,
-            n_clusters_grid=(wc,),
-            nprobe_grid=(wp,),
-        )
-
-
-def test_ivf_sizing_p10_surfaces_the_tail_the_median_hides(spark):
-    """The statistic-choice caveat made executable: on the mixed
-    corpus (filaments + 25% noise floor) the MEDIAN says every config
-    is perfect — the easy majority outvotes the noise tail — while
-    p10 exposes 0 bp at the cheap configs and forces a config that
-    actually covers the tail. Measured at this exact scale: median
-    picks c16_p1 (12% scan, but p10=0); p10 picks c8_p4 (~59% scan,
-    p10=10000)."""
-    from khronus_spark.operators.similarity import (
-        anisotropic_corpus,
-        ivf_size_for_recall,
-    )
-
-    corpus = anisotropic_corpus(
-        spark, 3000, dim=32, n_true=4, noise_pm=250
-    ).localCheckpoint(eager=True)
-    probes = list(range(500, 520))
-
-    med_stats: dict = {}
-    med_cfg = ivf_size_for_recall(
-        corpus, probes, k=3, target_recall_bp=8000,
-        n_clusters_grid=(8, 16), nprobe_grid=(1, 2, 4),
-        stats=med_stats, recall_stat="median",
-    )
-    p10_stats: dict = {}
-    p10_cfg = ivf_size_for_recall(
-        corpus, probes, k=3, target_recall_bp=8000,
-        n_clusters_grid=(8, 16), nprobe_grid=(1, 2, 4),
-        stats=p10_stats, recall_stat="p10",
-    )
-    # the median-chosen config's own p10 is BELOW target — the tail
-    # the median hid
-    med_name = f"c{med_cfg['n_clusters']}_p{med_cfg['nprobe']}"
-    assert p10_stats["grid"][med_name]["p10_recall_bp"] < 8000
-    # the p10-chosen config genuinely covers the tail, at honest cost
-    assert p10_cfg["measured_recall_bp"] >= 8000
-    assert p10_cfg["scanned_pm"] > med_cfg["scanned_pm"]
 
 
 def test_mmr_breaks_up_duplicate_cluster(spark):

@@ -56,19 +56,6 @@ def test_hll_partition_invariant_and_pinned(spark, oracle_sf_dir):
     assert all(est == 135 for _, est in a)  # spec pin at sf0.01 (exact: 150)
 
 
-def test_hll_wide_equals_tall(spark, oracle_sf_dir):
-    """The single-aggregation (streaming-safe) register-column form must
-    produce the identical estimate to the two-level tall form."""
-    from khronus_spark.operators.sketches import hll_distinct_wide
-
-    ev = spark.read.parquet(f"{oracle_sf_dir}/events.parquet")
-    tall = sorted(tuple(r) for r in hll_distinct(ev, "event_type", "user_id").collect())
-    wide = sorted(
-        tuple(r) for r in hll_distinct_wide(ev, "event_type", "user_id").collect()
-    )
-    assert tall == wide
-
-
 def test_cms_never_underestimates_and_ranks_heavies(spark, oracle_sf_dir):
     """CMS guarantee: est >= true count for EVERY key (collisions only
     add), and every true heavy hitter clears any threshold its true
@@ -141,22 +128,6 @@ def test_bloom_no_false_negatives_and_bounded_size(spark):
     # (1 - e^(-4*2000/65536))^4 ~ 1.6e-4 — allow a loose 2% bound
     fp = sum(flags[str(i)] for i in range(2_000, 4_000))
     assert fp <= 40, fp
-
-
-def test_bloom_merge_is_union(spark):
-    from khronus_spark.operators.sketches import bloom_build, bloom_merge
-
-    a = spark.range(0, 500).selectExpr("CAST(id AS STRING) AS key")
-    b = spark.range(400, 900).selectExpr("CAST(id AS STRING) AS key")
-    merged = {
-        r["word_idx"]: r["word"]
-        for r in bloom_merge(bloom_build(a, "key"), bloom_build(b, "key")).collect()
-    }
-    direct = {
-        r["word_idx"]: r["word"]
-        for r in bloom_build(a.unionByName(b), "key").collect()
-    }
-    assert merged == direct
 
 
 def test_bloom_decontamination_overcounts_exact_never_undercounts(spark, oracle_sf_dir):

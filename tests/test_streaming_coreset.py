@@ -1,41 +1,16 @@
 """Streaming k-center (doubling algorithm): bounded state, bounded
-radius vs the batch Gonzalez selection, deterministic folds, replay
-idempotence — the single-pass twin of the oracle-backed
-`embedding_coreset_kcenter`."""
+radius vs the batch Gonzalez selection, deterministic folds — the
+single-pass twin of the oracle-backed `embedding_coreset_kcenter`."""
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from khronus_spark.operators.coreset import coreset_assign, kcenter_select
 from khronus_spark.operators.similarity import anisotropic_corpus
-from khronus_spark.streaming.coreset import (
-    _fold_batch,
-    read_streaming_kcenter,
-    run_streaming_kcenter,
-)
+from khronus_spark.streaming.coreset import _fold_batch, replay_kcenter
 
 M = 8
-
-
-def _stream_chunks(spark, tmp, chunks, state_path, ckpt, m=M):
-    landing = f"{tmp}/landing_{ckpt}"
-    os.makedirs(landing, exist_ok=True)
-    schema = chunks[0].schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    for i, chunk in enumerate(chunks):
-        stage = f"{tmp}/stage_{ckpt}_{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(stage)
-        for j, f in enumerate(sorted(os.listdir(stage))):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{stage}/{f}", f"{landing}/c{i}_{j}.parquet")
-        q = run_streaming_kcenter(
-            stream, state_path, f"{tmp}/{ckpt}", m=m
-        )
-        q.awaitTermination(120)
 
 
 def _radius(emb, center_ids):
@@ -49,78 +24,29 @@ def _radius(emb, center_ids):
 
 def test_streaming_kcenter_bounded_state_and_radius(spark, tmp_path):
     """Three chunks of the hard anisotropic corpus through the
-    doubling fold: final state holds ≤ m centers; the realized
-    covering radius (audited against the WHOLE corpus) respects the
-    doubling algorithm's hard bound vs batch Gonzalez at the same m
-    (≤ 8x in distance = 64x in d²) and the MEASURED factor on this
-    corpus — far tighter — is pinned with headroom."""
+    doubling fold: the final state holds ≤ m centers pairwise beyond
+    the committed threshold; the realized covering radius (audited
+    against the WHOLE corpus) respects the doubling algorithm's hard
+    bound vs batch Gonzalez at the same m (≤ 8x in distance = 64x in
+    d²) and the MEASURED factor on this corpus — far tighter — is
+    pinned with headroom."""
     corpus = anisotropic_corpus(spark, 600, dim=64)
     corpus.write.parquet(f"{tmp_path}/c")
-    emb = spark.read.parquet(f"{tmp_path}/c")
-    chunks = [
-        emb.where("vec_id < 200").select("vec_id", "embedding"),
-        emb.where("vec_id >= 200 AND vec_id < 400").select(
-            "vec_id", "embedding"
-        ),
-        emb.where("vec_id >= 400").select("vec_id", "embedding"),
-    ]
-    state = str(tmp_path / "state")
-    _stream_chunks(spark, str(tmp_path), chunks, state, "ck")
+    emb = spark.read.parquet(f"{tmp_path}/c").select("vec_id", "embedding")
+    centers, t2 = replay_kcenter(spark, emb, m=M, n_chunks=3)
+    assert 1 <= len(centers) <= M
+    for i in range(len(centers)):
+        for j in range(i + 1, len(centers)):
+            e1, e2 = centers[i][1], centers[j][1]
+            assert sum((a - b) * (a - b) for a, b in zip(e1, e2)) > t2
 
-    centers, meta = read_streaming_kcenter(spark, state)
-    rows = centers.collect()
-    assert 1 <= len(rows) <= M and meta["last_batch"] == 2
-    # centers pairwise farther than the committed threshold
-    es = [list(r["e"]) for r in rows]
-    for i in range(len(es)):
-        for j in range(i + 1, len(es)):
-            d2 = sum((a - b) * (a - b) for a, b in zip(es[i], es[j]))
-            assert d2 > meta["t2"]
-
-    r_stream = _radius(emb, [r["vec_id"] for r in rows])
+    r_stream = _radius(emb, [v for v, _ in centers])
     batch_sel = kcenter_select(emb, m=M)
     r_batch = _radius(emb, [r["vec_id"] for r in batch_sel.collect()])
     assert r_stream <= 64 * r_batch  # the 8x distance-domain guarantee
     # measured on this corpus: ~1.5x in d² (≈1.2x in distance); pin 4x
     assert r_stream <= 4 * r_batch
-    # and every seen point is within the committed scale's reach: the
-    # audit radius is what the state promises to bound
     assert r_stream > 0
-
-
-def test_streaming_kcenter_deterministic_and_replay_idempotent(
-    spark, tmp_path
-):
-    """Same chunking twice → identical centers and threshold; and a
-    REPLAYED batch (checkpoint recovery re-delivers batch ids at or
-    below the high-water mark) is a no-op on the committed state."""
-    from khronus_spark.streaming.coreset import _read_meta
-
-    corpus = anisotropic_corpus(spark, 300, dim=64)
-    corpus.write.parquet(f"{tmp_path}/c")
-    emb = spark.read.parquet(f"{tmp_path}/c")
-    chunks = [
-        emb.where("vec_id < 150").select("vec_id", "embedding"),
-        emb.where("vec_id >= 150").select("vec_id", "embedding"),
-    ]
-    s1, s2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    _stream_chunks(spark, str(tmp_path), chunks, s1, "ck1")
-    _stream_chunks(spark, str(tmp_path), chunks, s2, "ck2")
-    c1, m1 = read_streaming_kcenter(spark, s1)
-    c2, m2 = read_streaming_kcenter(spark, s2)
-    assert sorted(map(tuple, c1.collect())) == sorted(
-        map(tuple, c2.collect())
-    )
-    assert m1["t2"] == m2["t2"]
-
-    # replay: re-run the whole stream against s1 with a FRESH
-    # checkpoint (all batch ids re-delivered from 0) — the high-water
-    # mark drops every replayed fold
-    before = sorted(map(tuple, c1.collect())), m1["t2"], m1["last_batch"]
-    _stream_chunks(spark, str(tmp_path), chunks, s1, "ck1_replay")
-    c1b, m1b = read_streaming_kcenter(spark, s1)
-    after = sorted(map(tuple, c1b.collect())), m1b["t2"], m1b["last_batch"]
-    assert before == after
 
 
 def test_fold_admits_gonzalez_style_until_full_then_merges(spark):
@@ -147,12 +73,10 @@ def test_fold_admits_gonzalez_style_until_full_then_merges(spark):
         assert sum((a - b) ** 2 for a, b in zip(e1, e2)) > t2
 
 
-def test_fold_m1_covers_by_scale_growth_and_state_prunes(spark, tmp_path):
-    """Self-review pins: (a) m=1 has no center pair to merge — the
-    scale must grow to the farthest point's distance instead of
-    raising on an empty pairwise min; (b) superseded centers_v dirs
-    prune after each commit so a long stream's state dir stays
-    bounded."""
+def test_fold_m1_covers_by_scale_growth(spark):
+    """m=1 has no center pair to merge — the scale must grow to the
+    farthest point's distance instead of raising on an empty pairwise
+    min."""
     emb = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.2, 0.0])],
         "vec_id long, embedding array<float>",
@@ -160,20 +84,6 @@ def test_fold_m1_covers_by_scale_growth_and_state_prunes(spark, tmp_path):
     centers, t2 = _fold_batch(spark, emb, [], 0, m=1)
     assert len(centers) == 1 and centers[0][0] == 0
     assert t2 >= 1_000_000_000_000  # covers the farthest point (v1)
-
-    chunks = [
-        emb.where("vec_id = 0").select("vec_id", "embedding"),
-        emb.where("vec_id = 1").select("vec_id", "embedding"),
-        emb.where("vec_id = 2").select("vec_id", "embedding"),
-    ]
-    state = str(tmp_path / "s")
-    _stream_chunks(spark, str(tmp_path), chunks, state, "ckp", m=2)
-    vdirs = sorted(
-        d for d in os.listdir(state) if d.startswith("centers_v")
-    )
-    # current + previous retained (a reader that resolved meta just
-    # before the swap still holds an intact dir); older pruned
-    assert vdirs == ["centers_v1", "centers_v2"]
 
 
 def test_recall_probe_rejects_empty_probe_sample(spark):
@@ -194,15 +104,12 @@ def test_replay_fixture_matches_oracle_sf(spark, oracle_sf_dir):
     oracle's own scale factor and assert it equals the registered
     constants — so fixture drift (a fold change, a tie-break change, a
     testdata regeneration) goes red locally before the driver hashes a
-    stale restatement. Also pins that replay == the foreachBatch
-    stream folding the same chunks (replay_kcenter IS the trigger
-    body, chunked identically)."""
+    stale restatement."""
     from khronus_spark.entry_queries import (
         _STREAM_KC_CENTERS,
         _STREAM_KC_T2,
     )
     from khronus_spark.sources.tables import load_table
-    from khronus_spark.streaming.coreset import replay_kcenter
 
     emb = load_table(spark, oracle_sf_dir, "embeddings")
     centers, t2 = replay_kcenter(spark, emb, m=6, n_chunks=4)

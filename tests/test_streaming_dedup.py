@@ -87,108 +87,6 @@ def test_streaming_dedup_replay_is_idempotent(spark, staged_docs):
     assert spark.read.parquet(f"{tmp}/out").count() == before
 
 
-def test_streaming_incremental_dedup_matches_cumulative_batch(spark, staged_docs):
-    """The continuous-crawl loop: each micro-batch's verdicts must equal
-    the BATCH incremental_dedup run against the static corpus index
-    plus every earlier chunk — i.e. the stream is just the batch
-    operator applied cumulatively, and the growing on-disk index never
-    re-scans the corpus."""
-    from khronus_spark.operators.dedup import build_dedup_index, incremental_dedup
-    from khronus_spark.streaming.dedup import run_streaming_incremental_dedup
-
-    tmp, docs = staged_docs
-    static_corpus = docs.where(F.col("doc_id") % 3 == 0)
-    stream_docs = docs.where(F.col("doc_id") % 3 != 0)
-    # restage the stream side as 4 mtime-ordered files
-    out = tempfile.mkdtemp(prefix="khronus_sincdedup_")
-    lo, hi = stream_docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    span = (hi - lo) + 1
-    chunked = stream_docs.withColumn(
-        "chunk", ((F.col("doc_id") - lo) * 4 / span).cast("int")
-    )
-    import os
-    import time as _time
-
-    for i in range(4):
-        d = f"{out}/in/chunk={i}"
-        chunked.where(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        now = _time.time() + i * 10
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (now, now))
-    static_index = build_dedup_index(static_corpus).localCheckpoint(eager=True)
-
-    schema = stream_docs.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/in/*")
-    )
-    q = run_streaming_incremental_dedup(
-        stream,
-        static_index,
-        index_path=f"{out}/index",
-        out_path=f"{out}/verdicts",
-        checkpoint_path=f"{out}/ckpt",
-    )
-    q.awaitTermination(180)
-
-    chunks = [
-        chunked.where(F.col("chunk") == i).drop("chunk").localCheckpoint(eager=True)
-        for i in range(4)
-    ]
-    for i in range(4):
-        got_df = spark.read.parquet(f"{out}/verdicts/batch={i}")
-        got = {r.doc_id: (r.dup_of, r.dup_src) for r in got_df.collect()}
-        corpus_i = static_corpus
-        for j in range(i):
-            corpus_i = corpus_i.unionByName(chunks[j])
-        expect_df = incremental_dedup(build_dedup_index(corpus_i), chunks[i])
-        expect = {r.doc_id: (r.dup_of, r.dup_src) for r in expect_df.collect()}
-        assert got == expect, f"batch {i} diverged from cumulative batch run"
-
-
-def test_compacted_index_probes_identically(spark, staged_docs):
-    """Compacting accumulated index parts (sum counts, min ids) must
-    not change a single probe verdict — compaction is a file-layout
-    optimization, not a semantic operation."""
-    from khronus_spark.operators.dedup import (
-        build_dedup_index,
-        compact_dedup_index,
-        incremental_dedup,
-    )
-
-    tmp, docs = staged_docs
-    a = docs.where(F.col("doc_id") % 3 == 0)
-    b = docs.where(F.col("doc_id") % 3 == 1)
-    batch = docs.where(F.col("doc_id") % 3 == 2)
-    parts = build_dedup_index(a).unionByName(build_dedup_index(b))
-    compacted = compact_dedup_index(parts)
-    assert compacted.groupBy("band", "bucket").count().where(
-        F.col("count") > 1
-    ).count() == 0  # unique keys after compaction
-    v1 = {
-        r.doc_id: (r.dup_of, r.dup_src)
-        for r in incremental_dedup(parts, batch).collect()
-    }
-    v2 = {
-        r.doc_id: (r.dup_of, r.dup_src)
-        for r in incremental_dedup(compacted, batch).collect()
-    }
-    assert v1 == v2
-    # and equals the from-scratch single index over the union
-    full = build_dedup_index(a.unionByName(b))
-    v3 = {
-        r.doc_id: (r.dup_of, r.dup_src)
-        for r in incremental_dedup(full, batch).collect()
-    }
-    assert v2 == v3
-    c = {(r.band, r.bucket): (r.n_docs, r.min_doc_id) for r in compacted.collect()}
-    f = {(r.band, r.bucket): (r.n_docs, r.min_doc_id) for r in full.collect()}
-    assert c == f  # compaction == rebuild, bit for bit
-
-
 def test_streaming_dedup_full_redelivery_replaces_batches(spark, staged_docs):
     """r13 review finding: the edge sink appended into a flat path, so
     any redelivered batch (foreachBatch is at-least-once: a crash

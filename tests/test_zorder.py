@@ -67,7 +67,20 @@ def test_zorder_layout_prunes_on_either_dimension(spark, sf_dir):
     )
 
     def touched(df, a_lo, a_hi, b_lo, b_hi):
-        boxes = zorder.layout_box_stats(df, "ua", "hb").collect()
+        # per-partition (ua, hb) boxes: the min/max statistics a
+        # parquet writer would persist, computed without writing
+        boxes = (
+            df.withColumn("_pid", F.spark_partition_id())
+            .groupBy("_pid")
+            .agg(
+                F.min("ua").alias("a_min"),
+                F.max("ua").alias("a_max"),
+                F.min("hb").alias("b_min"),
+                F.max("hb").alias("b_max"),
+                F.count(F.lit(1)).alias("n_rows"),
+            )
+            .collect()
+        )
         assert sum(r.n_rows for r in boxes) == n_rows
         return sum(
             1
