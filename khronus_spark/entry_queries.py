@@ -159,7 +159,9 @@ DRIVER_WINDOW = 50
 #: changed after the freeze queue here the same way: below, every
 #: caller of `components.connected_components` (small graphs now solved
 #: on the driver), the k-center coreset entries and the BPE trainers
-#: (driver rows now shipped as Arrow local relations).
+#: (driver rows now shipped as Arrow local relations), and the IVF-PQ
+#: index entries (`ivf_pq_build_index` now encodes with the map-only
+#: `pq_encode` instead of per-subspace passes summed by vec_id).
 PENDING_NEXT_WINDOW: list[str] = [
     "canonical_by_quality",
     "corpus_curation",
@@ -177,6 +179,8 @@ PENDING_NEXT_WINDOW: list[str] = [
     "embedding_coreset_kcenter",
     "bpe_encode_6",
     "bpe_merges_batched",
+    "ann_ivfpq_topk_indexed",
+    "ann_ivfpq_rerank_topk_indexed",
 ]
 
 _PRIORITY = [

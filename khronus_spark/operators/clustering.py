@@ -24,11 +24,12 @@ clustering is value-checked end-to-end — an iterative ML primitive
 under the same correctness gate as the SQL operators.
 
 Scale shape (the standard distributed Lloyd's): centroids are k×64
-longs → BROADCAST to the assignment pass (map-only over the corpus);
-the update is one map-side-combinable shuffle keyed (cluster, dim)
-emitting k·64 rows; per-iteration lineage is truncated with an eager
-localCheckpoint (components.py has the full rationale). Iteration
-count is a fixed hyperparameter, not data-dependent.
+longs, collected and shipped in the task closure of one Arrow
+assignment pass (map-only over the corpus); the update is one
+cid-keyed shuffle of per-batch partial sums; per-iteration lineage is
+truncated with a lazy localCheckpoint (components.py has the full
+rationale). Iteration count is a fixed hyperparameter, not
+data-dependent.
 """
 
 from __future__ import annotations
@@ -42,71 +43,82 @@ K = 4
 ITERS = 2
 DIMS = 64
 
-_QUANT = "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-_DIST = (
-    "aggregate(zip_with(e, c, (a, b) -> (a - b) * (a - b)), "
-    "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+#: The ×10⁶ integer grid every integer-vector operator shares (k-means,
+#: PQ, IVF, coreset, projection, quantize, MMR): the Spark spelling over
+#: any array column, the DuckDB spelling of one element, and the numpy
+#: mirror the Arrow passes use. Oracle and plan text is built from these
+#: strings, so they must not change by a byte.
+_QUANT_COL = "transform({c}, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
+_QUANT = _QUANT_COL.format(c="embedding")
+_QUANT_DUCK_X = "CAST(floor((CAST({x} AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT)"
+_QUANT_DUCK = "list_transform(embedding, x -> " + _QUANT_DUCK_X.format(x="x") + ")"
+
+#: int64-exact squared L2 between two equal-length long array columns
+_D2 = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
 )
 
 
-#: default assignment implementation: 'arrow' computes every distance
-#: as one exact int64 matmul per Arrow batch — zero row expansion, zero
-#: shuffle; 'sql' is the pure-JVM expression path (broadcast cross +
-#: map-side min_by), the DuckDB oracle's structural twin. Both are
-#: bit-identical (equality-tested); the driver verifies the default.
-ASSIGN_MODE = "arrow"
+def _quantize_np(emat):
+    """numpy image of `_QUANT` over a float64 matrix."""
+    import numpy as np
+
+    return np.floor((emat + 1.0) * 1000000.0).astype(np.int64)
+
+
+def _nearest(emat, cmat, c_sq):
+    """(row-wise argmin index, its distance) of the exact int64
+    d = |e|² − 2·E·Cᵀ + |c|² — every intermediate ≤ 64·(2·10⁶)² ≈
+    2.6e14, inside int64. The first minimum over cid-ascending columns
+    is the ties-to-smaller-cid rule."""
+    import numpy as np
+
+    d = (
+        (emat * emat).sum(axis=1, keepdims=True)
+        - 2 * (emat @ cmat.T)
+        + c_sq[None, :]
+    )
+    idx = d.argmin(axis=1)
+    return idx, d[np.arange(len(idx)), idx]
 
 
 def _kmeans_state(
-    embeddings: DataFrame, k: int = K, iters: int = ITERS, mode: str = ASSIGN_MODE
+    embeddings: DataFrame, k: int = K, iters: int = ITERS
 ) -> tuple[DataFrame, DataFrame]:
     """(quantized vectors, final centroids) after `iters` Lloyd updates.
-    Centroids: (cid, c: array<long>)."""
+    Centroids: (cid, c: array<long>).
+
+    Each update is one fused Arrow pass (`_mean_partials`): only k
+    short partial-sum rows per batch cross the Python boundary, and ONE
+    cid-keyed exchange carries the k×n_batches partials. Integer sums
+    are associative, so folding the per-batch sum vectors element-wise
+    and then `div` by the total count is the per-dimension integer mean
+    of the spec, bit for bit."""
     q = embeddings.select("vec_id", F.expr(_QUANT).alias("e"))
     cents = q.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), F.col("e").alias("c")
     )
 
     for _ in range(iters):
-        if mode == "arrow":
-            # fused assignment + per-batch partial sums: only k short
-            # rows per Arrow batch cross the Python boundary (vs the
-            # whole assigned corpus), the N×dims posexplode expansion
-            # disappears, and ONE cid-keyed exchange carries the
-            # k×n_batches partials (the former path exchanged twice:
-            # (cid, dim) then cid). Integer sums are associative, so
-            # folding the per-batch sum vectors element-wise and then
-            # `div` by the total count is bit-identical to the
-            # row-expanded per-dimension mean.
-            part = _mean_partials_arrow(q, cents)
-            cents = (
-                part.groupBy("cid")
-                .agg(
-                    F.collect_list("s").alias("ss"),
-                    F.sum("n").alias("n"),
-                )
-                .select(
-                    "cid",
-                    F.expr(
-                        "transform(aggregate(ss, "
-                        "array_repeat(CAST(0 AS BIGINT), "
-                        "size(element_at(ss, 1))), "
-                        "(acc, x) -> zip_with(acc, x, (a, b) -> a + b)), "
-                        "v -> v div n)"
-                    ).alias("c"),
-                )
+        cents = (
+            _mean_partials(q, cents)
+            .groupBy("cid")
+            .agg(
+                F.collect_list("s").alias("ss"),
+                F.sum("n").alias("n"),
             )
-        else:
-            best = _assign(q, cents, mode).select("cid", "e")
-            ex = best.select("cid", F.posexplode("e").alias("dim", "v"))
-            means = ex.groupBy("cid", "dim").agg(
-                F.expr("sum(v) div count(1)").alias("m")
-            )
-            cents = means.groupBy("cid").agg(
+            .select(
+                "cid",
                 F.expr(
-                    "transform(array_sort(collect_list(struct(dim, m))), s -> s.m)"
-                ).alias("c")
+                    "transform(aggregate(ss, "
+                    "array_repeat(CAST(0 AS BIGINT), "
+                    "size(element_at(ss, 1))), "
+                    "(acc, x) -> zip_with(acc, x, (a, b) -> a + b)), "
+                    "v -> v div n)"
+                ).alias("c"),
             )
+        )
         # lazy checkpoint: the NEXT action that touches cents (the
         # following iteration's centroid collect, or the caller's first
         # use) materializes it — same lineage truncation as eager=True
@@ -116,57 +128,24 @@ def _kmeans_state(
     return q, cents
 
 
-def _assign(q: DataFrame, centroids: DataFrame, mode: str = ASSIGN_MODE) -> DataFrame:
-    """Nearest-centroid assignment, (vec_id, e, cid, d) — ties to the
-    smaller centroid id, identical in both modes (equality-tested in
-    tests/test_components.py)."""
-    return _assign_arrow(q, centroids) if mode == "arrow" else _assign_sql(q, centroids)
+def _map_nearest(
+    q: DataFrame, centroids: DataFrame, emit, out_schema: str
+) -> DataFrame:
+    """Score every Arrow batch of `q` (with an `e` column) against all
+    centroids and yield `emit(pdf, emat, cid, d)` per batch — ZERO row
+    expansion and ZERO shuffle.
 
-
-def _assign_sql(q: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Expression-path assignment as a map-side-combinable aggregate.
-
-    The broadcast cross join expands each vector to k scored rows, but
-    the argmin is taken with ``min_by`` keyed on the ``(d, cid)`` struct
-    (distance first, ties to the smaller centroid id — bit-identical to
-    the former ``row_number`` window). A hash aggregate combines the k
-    rows per vector map-side BEFORE the exchange, so the shuffle carries
-    ≤N rows — a window argmin would shuffle the full N×k expansion,
-    which at SemDeDup's derived k=⌈√N⌉ is an N^1.5-row exchange."""
-    scored = q.crossJoin(F.broadcast(centroids)).withColumn("d", F.expr(_DIST))
-    best = scored.groupBy("vec_id").agg(
-        F.min_by(F.struct("cid", "d", "e"), F.struct("d", "cid")).alias("b")
-    )
-    return best.select(
-        "vec_id",
-        F.col("b.e").alias("e"),
-        F.col("b.cid").alias("cid"),
-        F.col("b.d").alias("d"),
-    )
-
-
-def _assign_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Vectorized assignment: ZERO row expansion and ZERO shuffle.
-
-    The centroid table collects once per iteration (k×DIMS int64 — at
-    the derived k=⌈√N⌉ that is ~16 MB for 10⁹ vectors) and ships in the
-    task closure; each Arrow batch then scores all its vectors against
-    all centroids with one exact int64 matmul (d = |e|² − 2·E·Cᵀ + |c|²
-    — every intermediate ≤ 64·(2·10⁶)² ≈ 2.6e14, inside int64, so numpy
-    integer arithmetic reproduces the SQL path bit-for-bit) and takes
-    the row-wise argmin (first minimum over cid-ascending columns = the
-    ties-to-smaller-cid rule). Why this beats the expression path: the
-    SQL distance runs Catalyst's interpreted higher-order lambdas over
-    the N×k expansion — measured 301 s for N=100 k, k=317 on local[32]
-    vs ~2 s here (scripts/semdedup_sweep.py) — and the argmin aggregate
-    still shuffles N rows, where this path shuffles none."""
+    The centroid table collects once per call (k×DIMS int64 — at the
+    derived k=⌈√N⌉ that is ~16 MB for 10⁹ vectors; collect + driver-
+    side sort, no range-exchange/sampling job per iteration) and ships
+    in the task closure; each batch then scores with one exact int64
+    matmul (`_nearest`). The SQL spelling of the same distance runs
+    Catalyst's interpreted higher-order lambdas over the N×k expansion
+    — measured 317.7 s against 5.06 s here for N=100 k, k=317
+    (ROUND4_NOTES.md, scaling measurement)."""
     import numpy as np
-    import pandas as pd
 
-    # k tiny rows: collect + driver-side sort (no range-exchange/
-    # sampling job per iteration; guide §2.1)
     rows = sorted(centroids.collect(), key=lambda r: int(r["cid"]))
-    out_schema = "vec_id long, e array<long>, cid long, d long"
     if not rows:
         return local_frame(q.sparkSession, [], out_schema)
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
@@ -178,75 +157,57 @@ def _assign_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
             if pdf.empty:
                 continue
             emat = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["e"]])
-            d = (
-                (emat * emat).sum(axis=1, keepdims=True)
-                - 2 * (emat @ cmat.T)
-                + c_sq[None, :]
-            )
-            idx = d.argmin(axis=1)  # first min → smallest cid (sorted)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "e": pdf["e"],
-                    "cid": cids[idx],
-                    "d": d[np.arange(len(idx)), idx],
-                }
-            )
+            idx, d = _nearest(emat, cmat, c_sq)
+            yield emit(pdf, emat, cids[idx], d)
 
     return q.mapInPandas(run, out_schema)
 
 
-def _mean_partials_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
+def _assign(q: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment, (vec_id, e, cid, d) — ties to the
+    smaller centroid id."""
+    import pandas as pd
+
+    def emit(pdf, emat, cid, d):
+        return pd.DataFrame(
+            {"vec_id": pdf["vec_id"], "e": pdf["e"], "cid": cid, "d": d}
+        )
+
+    return _map_nearest(
+        q, centroids, emit, "vec_id long, e array<long>, cid long, d long"
+    )
+
+
+def _mean_partials(q: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assignment + per-batch partial mean state in ONE Arrow pass:
     (cid, s: per-dimension int64 sum over the batch's members, n:
-    member count). The distance/argmin math is `_assign_arrow`'s
-    verbatim (exact int64, ties to the smaller cid); only the OUTPUT
-    changes — k short rows per batch instead of the whole assigned
-    corpus, so the mean update never ships vectors back through the
-    Python boundary (guide §4: control what crosses). Per-batch sums
-    stay inside int64: |e| ≤ 2·10⁶ and a batch is ≤ arrow
-    maxRecordsPerBatch rows."""
+    member count) — k short rows per batch instead of the whole
+    assigned corpus, so the mean update never ships vectors back
+    through the Python boundary. Per-batch sums stay inside int64:
+    |e| ≤ 2·10⁶ and a batch is ≤ arrow maxRecordsPerBatch rows."""
     import numpy as np
     import pandas as pd
 
-    # k tiny rows: collect + driver-side sort (no range-exchange/
-    # sampling job per iteration; guide §2.1)
-    rows = sorted(centroids.collect(), key=lambda r: int(r["cid"]))
-    out_schema = "cid long, s array<long>, n long"
-    if not rows:
-        return local_frame(q.sparkSession, [], out_schema)
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([list(r["c"]) for r in rows], dtype=np.int64)
-    c_sq = (cmat * cmat).sum(axis=1)
+    def emit(pdf, emat, cid, d):
+        out_cid, out_s, out_n = [], [], []
+        for c in np.unique(cid):
+            m = cid == c
+            out_cid.append(int(c))
+            out_s.append(emat[m].sum(axis=0).tolist())
+            out_n.append(int(m.sum()))
+        return pd.DataFrame({"cid": out_cid, "s": out_s, "n": out_n})
 
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emat = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["e"]])
-            d = (
-                (emat * emat).sum(axis=1, keepdims=True)
-                - 2 * (emat @ cmat.T)
-                + c_sq[None, :]
-            )
-            idx = d.argmin(axis=1)  # first min → smallest cid (sorted)
-            out_cid, out_s, out_n = [], [], []
-            for ci in np.unique(idx):
-                m = idx == ci
-                out_cid.append(int(cids[ci]))
-                out_s.append(emat[m].sum(axis=0).tolist())
-                out_n.append(int(m.sum()))
-            yield pd.DataFrame({"cid": out_cid, "s": out_s, "n": out_n})
-
-    return q.select("e").mapInPandas(run, out_schema)
+    return _map_nearest(
+        q.select("e"), centroids, emit, "cid long, s array<long>, n long"
+    )
 
 
 def kmeans_assignments(
-    embeddings: DataFrame, k: int = K, iters: int = ITERS, mode: str = ASSIGN_MODE
+    embeddings: DataFrame, k: int = K, iters: int = ITERS
 ) -> DataFrame:
     """(vec_id, cluster, dist_q) after `iters` Lloyd updates."""
-    q, cents = _kmeans_state(embeddings, k, iters, mode)
-    return _assign(q, cents, mode).select(
+    q, cents = _kmeans_state(embeddings, k, iters)
+    return _assign(q, cents).select(
         "vec_id", F.col("cid").alias("cluster"), F.col("d").alias("dist_q")
     )
 
@@ -258,11 +219,6 @@ def kmeans_assignments(
 #: paper's cosine keeps the criterion pure int64 (cosine needs a sqrt
 #: or an int128 cross-multiply), so both engines agree bit-for-bit.
 D2_DEDUP_THRESH = 1_250_000_000_000
-
-_PAIR_D2 = (
-    "aggregate(zip_with(ae, be, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
 
 
 def derive_k(n_vectors: int, floor_k: int = K) -> int:
@@ -279,7 +235,6 @@ def semantic_dedup(
     k: int | None = None,
     iters: int = ITERS,
     d2_thresh: int = D2_DEDUP_THRESH,
-    mode: str = ASSIGN_MODE,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): Lloyd
     cluster the corpus, compare pairs only WITHIN a cluster, and drop
@@ -294,15 +249,9 @@ def semantic_dedup(
     setting. Pass an explicit k only when the cluster count must be
     reproducible independent of corpus size (the oracle-checked
     registry entry pins k=4 to keep the DuckDB CTE chain tractable).
-    The assignment table is eagerly checkpointed first: the pair join
-    reads it twice, and without truncation each side would re-run the
-    whole Lloyd iteration subtree.
-
-    `mode='arrow'` (default) runs both stages vectorized — assignment
-    as zero-shuffle batch matmuls, the pair search as per-cluster
-    blocked int64 matmuls under one cluster-key shuffle
-    (_dedup_within_clusters_arrow); `mode='sql'` is the pure-expression
-    twin of the DuckDB oracle. Bit-identical, equality-tested."""
+    Both stages run vectorized: the assignment as zero-shuffle batch
+    matmuls, the pair search as per-cluster blocked int64 matmuls under
+    one cluster-key shuffle (`_dedup_within_clusters`)."""
     import logging
 
     if k is None:
@@ -318,41 +267,21 @@ def semantic_dedup(
                 "semantic_dedup: expected pair count %d exceeds 1e10; "
                 "raise k or pre-shard the corpus", exp_pairs,
             )
-    q, cents = _kmeans_state(embeddings, k, iters, mode)
-    a = _assign(q, cents, mode).select(
-        "vec_id", "e", F.col("cid").alias("cluster")
-    )
-    if mode == "arrow":
-        # single consumer (the grouped Arrow pair search) — no
-        # checkpoint needed: the assignment pipe feeds the cluster-key
-        # shuffle directly, one job instead of materialize + replay
-        return _dedup_within_clusters_arrow(a, d2_thresh)
-    # the SQL pair join reads `a` three times (left, right, final join)
-    # — truncate once; lazily, so the consumer's own action materializes
-    a = a.localCheckpoint(eager=False)
-    left = a.select(F.col("vec_id").alias("a_id"), F.col("e").alias("ae"), "cluster")
-    right = a.select(F.col("vec_id").alias("b_id"), F.col("e").alias("be"), "cluster")
-    dropped = (
-        left.join(right, "cluster")
-        .where(F.col("a_id") < F.col("b_id"))
-        .where(F.expr(_PAIR_D2) <= F.lit(d2_thresh))
-        .select(F.col("b_id").alias("vec_id"))
-        .distinct()
-        .withColumn("is_dup", F.lit(True))
-    )
-    return a.join(dropped, "vec_id", "left").select(
-        "vec_id", "cluster", F.col("is_dup").isNull().alias("kept")
-    )
+    q, cents = _kmeans_state(embeddings, k, iters)
+    a = _assign(q, cents).select("vec_id", "e", F.col("cid").alias("cluster"))
+    # single consumer (the grouped Arrow pair search) — no checkpoint
+    # needed: the assignment pipe feeds the cluster-key shuffle directly
+    return _dedup_within_clusters(a, d2_thresh)
 
 
-def _dedup_within_clusters_arrow(a: DataFrame, d2_thresh: int) -> DataFrame:
+def _dedup_within_clusters(a: DataFrame, d2_thresh: int) -> DataFrame:
     """Within-cluster ε-ball keep-one as a grouped Arrow computation:
-    one shuffle on the cluster key (same as the SQL pair join), then
-    each cluster's pairwise distances run as blocked exact-int64 numpy
-    matmuls instead of ~(cluster size)²/2 interpreted higher-order
-    expressions. A vector drops iff ANY lower-id cluster-mate is within
-    ε — compared against all predecessors, dropped or not, exactly like
-    the SQL path's a_id < b_id join. Row blocks bound peak memory at
+    one shuffle on the cluster key, then each cluster's pairwise
+    distances run as blocked exact-int64 numpy matmuls instead of
+    ~(cluster size)²/2 interpreted higher-order expressions. A vector
+    drops iff ANY lower-id cluster-mate is within ε — compared against
+    all predecessors, dropped or not, exactly like the oracle's
+    l.vec_id < r.vec_id pair join. Row blocks bound peak memory at
     ~block × cluster_size int64s; at the derived k=⌈√N⌉ a cluster is
     ~√N rows, so the per-task group stays small (~31 k rows at 10⁹)."""
     import numpy as np
@@ -419,13 +348,9 @@ def kmeans_ctes(k: int = K, iters: int = ITERS) -> str:
     no trailing comma): `final` is the per-vector argmin assignment
     under the last centroids, `c{iters}` the centroid arrays — reusable
     inside larger oracles (IVF-over-kmeans)."""
-    quant = (
-        "list_transform(embedding, x -> "
-        "CAST(floor((CAST(x AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT))"
-    )
     dist = KMEANS_DIST_SQL
     parts = [
-        f"q AS (\n  SELECT vec_id, {quant} AS e FROM embeddings\n),",
+        f"q AS (\n  SELECT vec_id, {_QUANT_DUCK} AS e FROM embeddings\n),",
         f"c0 AS (SELECT vec_id AS cid, e AS c FROM q WHERE vec_id < {k}),",
     ]
     for it in range(iters):
@@ -462,7 +387,7 @@ def kmeans_sql(k: int = K, iters: int = ITERS) -> str:
 
 
 def kmeans_inertia(
-    embeddings: DataFrame, k: int = K, iters: int = ITERS, mode: str = ASSIGN_MODE
+    embeddings: DataFrame, k: int = K, iters: int = ITERS
 ) -> DataFrame:
     """Cluster-quality audit: per final cluster, its population and the
     exact integer inertia (sum / mean / max of the quantized squared L2
@@ -474,7 +399,7 @@ def kmeans_inertia(
     Shape at 100 TB: one map-side-combinable aggregation over the
     assignment output (≤ k rows out); inherits the zero-expansion Arrow
     assignment, so nothing here shuffles more than N rows."""
-    a = kmeans_assignments(embeddings, k, iters, mode)
+    a = kmeans_assignments(embeddings, k, iters)
     return (
         a.groupBy("cluster")
         .agg(

@@ -36,15 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from khronus_spark.operators.clustering import _D2, _QUANT, _QUANT_DUCK
 from khronus_spark.session import local_frame
-
-#: the module-shared quantization grid (pq/clustering convention)
-_QUANT = "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-
-_D2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
 
 
 def kcenter_select(embeddings: DataFrame, m: int = 8) -> DataFrame:
@@ -245,12 +238,6 @@ def kcenter_select_per_cell(
         ]
         state = state.join(_won_frame(newest), "vec_id", "left_anti")
     return local_frame(spark, out, "cell long, rank long, vec_id long, d2 long")
-
-
-_QUANT_DUCK = (
-    "list_transform(embedding, x -> "
-    "CAST(floor((CAST(x AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT))"
-)
 
 
 def _duck_d2(a: str, b: str, dims: int) -> str:

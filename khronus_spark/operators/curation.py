@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from khronus_spark.operators.components import (
-    DEDUP_COMPONENTS_SQL,
     duplicate_components,
     minhash_components_ctes,
     minhash_duplicate_components,
@@ -140,23 +139,13 @@ def curation_stats(docs: DataFrame, **kwargs) -> DataFrame:
     )
 
 
-def _components_cte() -> str:
-    """The recursive-CTE body of DEDUP_COMPONENTS_SQL, reusable inside a
-    larger WITH chain (strip the leading WITH RECURSIVE / final SELECT)."""
-    body = DEDUP_COMPONENTS_SQL.strip()
-    assert body.startswith("WITH RECURSIVE")
-    head, final = body.rsplit("SELECT src AS doc_id", 1)
-    return head[len("WITH RECURSIVE"):].rstrip().rstrip(",")
-
-
 _SAMPLE_THRESHOLD = (1 << 32) * SAMPLE_PCT // 100
 
 
-def _kept_prefix(comp_ctes: str) -> str:
-    """WITH-chain ending in the `kept` CTE (the curated doc set) over a
-    given component-closure CTE chain (must end in a `reach` CTE)."""
-    return rf"""
-WITH RECURSIVE {comp_ctes},
+#: WITH-chain ending in the `kept` CTE (the curated doc set) — matches
+#: curated_docs(edge_gen="minhash"), the default
+CURATION_KEPT_PREFIX = rf"""
+WITH RECURSIVE {minhash_components_ctes()},
 comp AS (
   SELECT src AS doc_id, min(dst) AS component_id FROM reach GROUP BY src
 ),
@@ -171,12 +160,6 @@ kept AS (
     AND (comp.component_id IS NULL OR comp.component_id = d.doc_id)
     AND CAST(('0x' || substr(md5(d.text), 1, 8))::UINTEGER AS BIGINT) < {_SAMPLE_THRESHOLD}
 )"""
-
-
-#: default oracle prefix — matches curated_docs(edge_gen="minhash");
-#: the Jaccard twin matches edge_gen="jaccard".
-CURATION_KEPT_PREFIX = _kept_prefix(minhash_components_ctes())
-CURATION_KEPT_PREFIX_JACCARD = _kept_prefix(_components_cte())
 
 CURATION_STATS_SQL = (
     CURATION_KEPT_PREFIX

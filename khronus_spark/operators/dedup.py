@@ -51,14 +51,6 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     )
 
 
-EXACT_DEDUP_SQL = """
-SELECT md5(text) AS text_hash, count(*) AS n_docs, min(doc_id) AS keep_doc_id
-FROM documents
-GROUP BY text_hash
-HAVING count(*) > 1
-"""
-
-
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of the sorted distinct token set."""
     return docs.select(

@@ -16,9 +16,11 @@ and scoring drops from 64 multiplies to 8 adds.
 
 Scale shape:
 - training: per subspace, the zero-shuffle Arrow assignment + one
-  map-side-combinable (cluster, dim) mean shuffle — inherited from
+  cid-keyed partial-sum shuffle — inherited from
   clustering._kmeans_state on a sliced embedding frame;
-- codes: `sub` assignment passes combined by one map-side-combinable
+- codes: the index builders encode with `pq_encode`, one map-only Arrow
+  pass over all subspaces; the inline faces reuse the training state's
+  `sub` assignment passes, combined by one map-side-combinable
   groupBy(vec_id) sum — the stored index is ONE BIGINT per vector;
 - search: the codebooks (sub·k rows) and the per-probe LUTs broadcast;
   scoring is a map-only pass over the code table; the per-probe top-k
@@ -34,7 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from khronus_spark.operators.clustering import _assign, _kmeans_state
+from khronus_spark.operators.clustering import (
+    _D2,
+    _QUANT,
+    _QUANT_COL,
+    _QUANT_DUCK,
+    _assign,
+    _kmeans_state,
+    _nearest,
+    _quantize_np,
+)
 
 DIMS = 64
 SUB = 8
@@ -66,16 +77,6 @@ def _subdim(dims: int, sub: int) -> int:
     return dims // sub
 
 
-_QUANT_COL = "transform({c}, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-_QUANT = _QUANT_COL.format(c="embedding")
-
-#: int64-exact squared L2 between two equal-length long arrays
-_D2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
-
-
 def _sub_frame(embeddings: DataFrame, s: int, subdim: int) -> DataFrame:
     """(vec_id, embedding) with the subspace-s float slice as the
     embedding column — _kmeans_state quantizes it exactly like the
@@ -92,7 +93,6 @@ def _pq_state(
     sub: int,
     k: int,
     iters: int,
-    mode: str | None,
     dims: int = DIMS,
 ) -> list[tuple[DataFrame, DataFrame]]:
     """Per subspace: (quantized subvectors, trained centroids). Each
@@ -104,16 +104,13 @@ def _pq_state(
     them cuts the build wall from Σ(subspaces) toward max(subspace)
     with byte-identical results (scheduling overlap only)."""
     subdim = _subdim(dims, sub)
-    kw = {} if mode is None else {"mode": mode}
     if sub == 1:
-        return [_kmeans_state(_sub_frame(embeddings, 0, subdim), k, iters, **kw)]
+        return [_kmeans_state(_sub_frame(embeddings, 0, subdim), k, iters)]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(sub, 8)) as pool:
         futs = [
-            pool.submit(
-                _kmeans_state, _sub_frame(embeddings, s, subdim), k, iters, **kw
-            )
+            pool.submit(_kmeans_state, _sub_frame(embeddings, s, subdim), k, iters)
             for s in range(sub)
         ]
         return [f.result() for f in futs]
@@ -127,11 +124,10 @@ def _books_from_state(state) -> DataFrame:
     return out
 
 
-def _codes_from_state(state, k: int, mode: str | None) -> DataFrame:
-    kw = {} if mode is None else {"mode": mode}
+def _codes_from_state(state, k: int) -> DataFrame:
     out = None
     for s, (q, cents) in enumerate(state):
-        a = _assign(q, cents, **kw)
+        a = _assign(q, cents)
         part = a.select(
             "vec_id", (F.col("cid") * F.lit(k**s).cast("long")).alias("term")
         )
@@ -144,13 +140,12 @@ def pq_codebooks(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """(s, cid, c: array<long>[subdim]) — one trained integer codebook
     per subspace (init: centroids = the subvectors of vec_id 0..k-1,
     the same deterministic rule as the full-space k-means)."""
-    return _books_from_state(_pq_state(embeddings, sub, k, iters, mode, dims))
+    return _books_from_state(_pq_state(embeddings, sub, k, iters, dims))
 
 
 def pq_codes(
@@ -158,15 +153,12 @@ def pq_codes(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """(vec_id, pq_code) — the packed PQ index: code = Σ_s cid_s · k^s.
-    `sub` assignment passes (each ≤N-row or zero shuffle, per the
-    clustering module) combined by one map-side-combinable sum."""
-    return _codes_from_state(
-        _pq_state(embeddings, sub, k, iters, mode, dims), k, mode
-    )
+    `sub` zero-shuffle assignment passes (the training state's own
+    quantized subvectors) combined by one map-side-combinable sum."""
+    return _codes_from_state(_pq_state(embeddings, sub, k, iters, dims), k)
 
 
 def pq_encode(
@@ -174,51 +166,19 @@ def pq_encode(
     books: DataFrame,
     sub: int = SUB,
     k: int = K,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """(vec_id, pq_code) — encode vectors against PROVIDED codebooks
-    (s, cid, c): the apply half of the build/query split. Each subspace
-    is one broadcast-centroid assignment pass; the `sub` passes combine
-    by one map-side-combinable sum. Used both by `pq_build_index` (full
-    encode after sample training) and to encode NEW vectors into an
-    existing index without retraining."""
-    subdim = _subdim(dims, sub)
-    kw = {} if mode is None else {"mode": mode}
-    out = None
-    for s in range(sub):
-        q = _sub_frame(embeddings, s, subdim).select(
-            "vec_id", F.expr(_QUANT).alias("e")
-        )
-        cents = books.where(F.col("s") == s).select("cid", "c")
-        a = _assign(q, cents, **kw)
-        part = a.select(
-            "vec_id", (F.col("cid") * F.lit(k**s).cast("long")).alias("term")
-        )
-        out = part if out is None else out.unionByName(part)
-    return out.groupBy("vec_id").agg(F.sum("term").alias("pq_code"))
-
-
-def pq_encode_fused(
-    embeddings: DataFrame,
-    books: DataFrame,
-    sub: int = SUB,
-    k: int = K,
-    dims: int = DIMS,
-) -> DataFrame:
-    """Map-only PQ encode: all `sub` subspace argmins score in ONE
-    Arrow pass against the collected codebooks (sub·k short rows ship
-    in the task closure, the clustering module's `_assign_arrow`
-    device) and the packed code assembles in the same pass — ZERO
-    shuffle and no aggregation state, so the SAME plan runs unchanged
-    on a STREAMING DataFrame: this is the index "add" path at ingest —
-    new vectors encode against the persisted books as they arrive
-    (stream==batch pinned in tests). Bit-identical to `pq_encode`
-    (which spends one map-side-combinable shuffle combining per-
-    subspace passes): the float→double cast, the ×10⁶ floor
-    quantization, the exact int64 |e|²−2·E·Cᵀ+|c|² distance, and the
-    ties-to-smaller-cid argmin all mirror the SQL spec, every
-    intermediate inside int64."""
+    (s, cid, c): the apply half of the build/query split, used by both
+    index builders and to encode NEW vectors into an existing index
+    without retraining. Map-only: all `sub` subspace argmins score in
+    ONE Arrow pass against the collected codebooks (sub·k short rows
+    ship in the task closure) and the packed code assembles in the same
+    pass — ZERO shuffle and no aggregation state, so the SAME plan runs
+    unchanged on a STREAMING DataFrame (stream==batch pinned in tests).
+    The float→double cast, the ×10⁶ floor quantization, the exact int64
+    distance and the ties-to-smaller-cid argmin are the clustering
+    module's, so codes equal `pq_codes` and the DuckDB oracle."""
     import numpy as np
     import pandas as pd
 
@@ -247,20 +207,14 @@ def pq_encode_fused(
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+            q = _quantize_np(
+                np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             )
-            q = np.floor((emat + 1.0) * 1000000.0).astype(np.int64)
             code = np.zeros(len(pdf), dtype=np.int64)
             for s in range(sub):
                 sl = q[:, s * subdim : (s + 1) * subdim]
-                d = (
-                    (sl * sl).sum(axis=1, keepdims=True)
-                    - 2 * (sl @ cmats[s].T)
-                    + csqs[s][None, :]
-                )
-                # first min over cid-ascending columns = ties to smaller cid
-                code += cids_l[s][d.argmin(axis=1)] * powers[s]
+                idx, _ = _nearest(sl, cmats[s], csqs[s])
+                code += cids_l[s][idx] * powers[s]
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "pq_code": code})
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
@@ -273,7 +227,6 @@ def pq_build_index(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     train_sample_mod: int | None = None,
     dims: int = DIMS,
 ) -> tuple[DataFrame, DataFrame]:
@@ -294,15 +247,8 @@ def pq_build_index(
         if train_sample_mod is None
         else embeddings.where(F.col("vec_id") % train_sample_mod == 0)
     )
-    books = _books_from_state(_pq_state(train, sub, k, iters, mode, dims))
-    # encode with the fused map-only pass (zero shuffle, one codebook
-    # collect) unless the caller pinned the SQL structural twin; the
-    # two encoders are test-pinned bit-identical
-    if mode == "sql":
-        codes = pq_encode(embeddings, books, sub, k, mode, dims)
-    else:
-        codes = pq_encode_fused(embeddings, books, sub, k, dims)
-    return books, codes
+    books = _books_from_state(_pq_state(train, sub, k, iters, dims))
+    return books, pq_encode(embeddings, books, sub, k, dims)
 
 
 def write_pq_index(
@@ -430,7 +376,7 @@ def _adc_luts(
     full vector.
 
     The codebook is sub·k short rows — bounded index metadata under the
-    codebook-collect convention (`pq_encode_fused`) — so the LUT builds
+    codebook-collect convention (`pq_encode`) — so the LUT builds
     as ONE projection on `pvec`: a `transform` over the collected
     (key, c) pairs as an array LITERAL, evaluating the _D2 fold per
     centroid against the probe's subvector slice. The former shape
@@ -515,7 +461,6 @@ def pq_topk(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """(probe_id, neighbor_id, d2_adc) — ADC search over the packed
@@ -525,9 +470,9 @@ def pq_topk(
     smaller neighbor id; probes are excluded from their own results.
     Building the plan runs the codebook collect (`_adc_luts`), so
     calling this function already runs Spark jobs."""
-    state = _pq_state(embeddings, sub, k, iters, mode, dims)
+    state = _pq_state(embeddings, sub, k, iters, dims)
     books = _books_from_state(state)
-    codes = _codes_from_state(state, k, mode)
+    codes = _codes_from_state(state, k)
     pvec = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.expr(_QUANT).alias("pe")
     )
@@ -593,12 +538,6 @@ def pq_topk_indexed(
 
 
 # ---------------------------------------------------------------- oracles
-
-_QUANT_DUCK = (
-    "list_transform(embedding, x -> "
-    "CAST(floor((CAST(x AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT))"
-)
-
 
 def _sub_ctes(s: int, subdim: int, k: int, iters: int) -> str:
     """Per-subspace CTE chain `p{s}_q, p{s}_c0, …, p{s}_final` — the
@@ -767,7 +706,6 @@ def ivf_pq_topk(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """IVF-PQ — the canonical billion-scale index (FAISS's IVFPQ, minus
@@ -786,9 +724,9 @@ def ivf_pq_topk(
     calling this function already runs Spark jobs."""
     from khronus_spark.operators.similarity import ivf_assignments, ivf_probe_lists
 
-    state = _pq_state(embeddings, sub, k, iters, mode, dims)
+    state = _pq_state(embeddings, sub, k, iters, dims)
     books = _books_from_state(state)
-    codes = _codes_from_state(state, k, mode)
+    codes = _codes_from_state(state, k)
     probe_lists = ivf_probe_lists(embeddings, probe_ids, nprobe, stride)
     pvec = probe_lists.select("probe_id", "probe_vec").distinct().select(
         "probe_id", F.expr(_QUANT_COL.format(c="probe_vec")).alias("pe")
@@ -963,7 +901,6 @@ def matryoshka_rerank_topk(
     sub: int = 4,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """Matryoshka-style two-stage retrieval, enabled by the r11 dims
@@ -1002,7 +939,7 @@ def matryoshka_rerank_topk(
         F.expr(f"slice(embedding, 1, {prefix_dims})").alias("embedding"),
     )
     cands = pq_topk(
-        prefix, probe_ids, n_candidates, sub, k, iters, mode, prefix_dims
+        prefix, probe_ids, n_candidates, sub, k, iters, prefix_dims
     )
     probe_vecs = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"), "embedding"
@@ -1081,7 +1018,6 @@ def matryoshka_recall_probe(
     sub: int = 4,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """ONE-ROW sampled recall probe for the Matryoshka composition —
@@ -1130,7 +1066,7 @@ def matryoshka_recall_probe(
         )
     got = matryoshka_rerank_topk(
         embeddings, probe_ids, n_neighbors, n_candidates, prefix_dims,
-        sub, k, iters, mode, dims,
+        sub, k, iters, dims,
     ).select("probe_id", "neighbor_id")
     pv = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"),
@@ -1263,7 +1199,6 @@ def pq_rerank_topk(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """Two-stage PQ retrieval: ADC over the packed codes keeps the
@@ -1280,7 +1215,7 @@ def pq_rerank_topk(
     neighbor whose candidate survives — 0.70 at C=30 — and planted
     near-duplicates (identical codes) are recalled at 1.0."""
     cands = pq_topk(
-        embeddings, probe_ids, n_candidates, sub, k, iters, mode, dims
+        embeddings, probe_ids, n_candidates, sub, k, iters, dims
     )
     vecs = embeddings.select("vec_id", F.expr(_QUANT).alias("e"))
     pv = vecs.where(F.col("vec_id").isin(probe_ids)).select(
@@ -1311,7 +1246,6 @@ def ivf_pq_rerank_topk(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     dims: int = DIMS,
 ) -> DataFrame:
     """The full production composition — IVF inverted lists → ADC over
@@ -1332,7 +1266,6 @@ def ivf_pq_rerank_topk(
         sub,
         k,
         iters,
-        mode,
         dims,
     )
     vecs = embeddings.select("vec_id", F.expr(_QUANT).alias("e"))
@@ -1363,7 +1296,6 @@ def ivf_pq_build_index(
     sub: int = SUB,
     k: int = K,
     iters: int = ITERS,
-    mode: str | None = None,
     train_sample_mod: int | None = None,
     dims: int = DIMS,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1386,8 +1318,8 @@ def ivf_pq_build_index(
     train = embeddings
     if train_sample_mod is not None:
         train = train.where(F.col("vec_id") % train_sample_mod == 0)
-    books = _books_from_state(_pq_state(train, sub, k, iters, mode, dims))
-    codes = pq_encode(embeddings, books, sub, k, mode, dims)
+    books = _books_from_state(_pq_state(train, sub, k, iters, dims))
+    codes = pq_encode(embeddings, books, sub, k, dims)
     coded = codes.join(ivf_assignments(embeddings, stride), "vec_id")
     centroids = embeddings.where(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
@@ -1586,42 +1518,6 @@ def ivf_pq_rerank_topk_indexed(
         books, coded, centroids, probe_vecs, n_candidates, nprobe, sub, k, dims
     )
     return _rerank_exact(cands, probe_vecs, vectors, n_neighbors)
-
-
-def ivf_pq_encode(
-    new_vectors: DataFrame,
-    books: DataFrame,
-    centroids: DataFrame,
-    sub: int = SUB,
-    k: int = K,
-    mode: str | None = None,
-    dims: int = DIMS,
-) -> DataFrame:
-    """Incremental add for the IVF-PQ index (FAISS `index.add()`):
-    encode NEW vectors against the FIXED codebooks and route them to
-    their coarse list via the PERSISTED centroid table — no retraining
-    anywhere. Output rows (vec_id, pq_code, centroid_id) append
-    directly to the `coded` table from `ivf_pq_build_index`
-    (test-pinned identical to rebuilding over the union). Same
-    assignment semantics as `similarity.ivf_assignments`: cosine
-    argmax, ties → smaller centroid id, as a map-side-combinable
-    max_by (no window, shuffle carries ≤N rows). Both passes are
-    broadcast-probe map scans — the 100 TB ingest shape."""
-    from khronus_spark.operators.similarity import cosine_col
-
-    codes = pq_encode(new_vectors, books, sub, k, mode, dims)
-    pairs = new_vectors.crossJoin(F.broadcast(centroids))
-    sim = cosine_col(F.col("embedding"), F.col("cvec"))
-    assign = (
-        pairs.select("vec_id", "centroid_id", sim.alias("_sim"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "centroid_id", F.struct(F.col("_sim"), -F.col("centroid_id"))
-            ).alias("centroid_id")
-        )
-    )
-    return codes.join(assign, "vec_id")
 
 
 def pq_mmr_topk_indexed(

@@ -36,24 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from khronus_spark.operators.clustering import _D2, _QUANT, _QUANT_DUCK
+
 DIM_IN = 64
 DIM_OUT = 16
 
-#: same quantization as the k-means family (clustering.py) — positive
-#: int64, floor (not CAST) so both engines truncate identically.
-_QUANT = "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-
 #: 16-dim projected-space squared L2 (int64-exact)
-_D2_PROJ = (
-    "aggregate(zip_with(pa, pb, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
+_D2_PROJ = _D2.format(a="pa", b="pb")
 
 #: 64-dim full-space squared L2 over quantized vectors (int64-exact)
-_D2_FULL = (
-    "aggregate(zip_with(ea, eb, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
+_D2_FULL = _D2.format(a="ea", b="eb")
 
 
 def _sign_matrix_expr(dim_in: int = DIM_IN, dim_out: int = DIM_OUT) -> str:
@@ -186,12 +178,6 @@ def exact_l2_topk(embeddings: DataFrame, probe_ids: list[int], k: int = 3) -> Da
 # ---------------------------------------------------------------- oracles
 
 _H60_DUCK = "(('0x' || substr(md5('rp:' || i || ':' || j), 1, 15))::UBIGINT::BIGINT)"
-
-_QUANT_DUCK = (
-    "list_transform(embedding, x -> "
-    "CAST(floor((CAST(x AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT))"
-)
-
 
 def _smat_ctes(dim_in: int = DIM_IN, dim_out: int = DIM_OUT) -> str:
     """CTEs `srows, smat` — the identical sign matrix derived with

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from khronus_spark.operators.clustering import _QUANT, _QUANT_DUCK_X
+
 DIM = 64
 
 #: absmax scale (guarded against the zero vector), as a double column
@@ -174,11 +176,8 @@ def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:
     Scale shape: one posexplode + one map-side-combinable groupBy on
     the 64-value dim key; output is 64 rows regardless of corpus
     size."""
-    quant = (
-        "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-    )
     q = embeddings.select(
-        "vec_id", F.expr(quant).alias("e")
+        "vec_id", F.expr(_QUANT).alias("e")
     ).select(F.posexplode("e").alias("dim", "v"))
     lo, hi = 0, 2_000_000  # _QUANT image of [-1.0, 1.0]
     return (
@@ -209,10 +208,10 @@ def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-EMBEDDING_DIM_STATS_SQL = """
+EMBEDDING_DIM_STATS_SQL = f"""
 WITH q AS (
   SELECT s.i AS dim,
-         CAST(floor((CAST(embedding[s.i] AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT) AS v
+         {_QUANT_DUCK_X.format(x="embedding[s.i]")} AS v
   FROM embeddings, unnest(generate_series(1, len(embedding))) s(i)
 )
 SELECT CAST(dim - 1 AS BIGINT) AS dim,
@@ -319,16 +318,17 @@ def embedding_drift_flags_sql(z_tenths: int = 50) -> str:
         "* b.n * t.n * t.n * 100"
     )
     rhs = f"CAST({z_tenths} AS HUGEINT) * {z_tenths} * t.var_num"
+    shifted = "CAST(least(1.0, CAST(embedding[s.i] AS DOUBLE) + 0.5) AS FLOAT)"
     return f"""
 WITH tq AS (
   SELECT s.i - 1 AS dim,
-         CAST(floor((CAST(embedding[s.i] AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT) AS v
+         {_QUANT_DUCK_X.format(x="embedding[s.i]")} AS v
   FROM embeddings, unnest(generate_series(1, len(embedding))) s(i)
   WHERE vec_id % 2 = 0
 ),
 bq AS (
   SELECT s.i - 1 AS dim,
-         CAST(floor((CAST(CAST(least(1.0, CAST(embedding[s.i] AS DOUBLE) + 0.5) AS FLOAT) AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT) AS v
+         {_QUANT_DUCK_X.format(x=shifted)} AS v
   FROM embeddings, unnest(generate_series(1, len(embedding))) s(i)
   WHERE vec_id % 2 = 1
 ),

@@ -353,7 +353,8 @@ def hybrid_rrf_topk_indexed(
     # exchange). Rank and score semantics are verbatim: lex orders by
     # (score DESC, doc_id), sem by (d2_adc ASC, neighbor_id), both
     # expressed as (_skey ASC, doc_id ASC) with _skey = -score / d2.
-    from khronus_spark.operators.pq import _QUANT_COL, _adc_luts, _adc_scored
+    from khronus_spark.operators.clustering import _QUANT_COL
+    from khronus_spark.operators.pq import _adc_luts, _adc_scored
     from khronus_spark.operators.text import bm25_scored_indexed
 
     lex_s = bm25_scored_indexed(

@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from khronus_spark.operators.clustering import _D2, _QUANT, _QUANT_DUCK
+
 DIM = 64
 
 #: Scale defaults: 8 tables of 12-bit codes — 4096 buckets per band, so a
@@ -545,13 +547,11 @@ def ivf_kmeans_topk_indexed(
     broadcast PREBUILT centroids, candidates from the PREBUILT inverted
     lists, exact-cosine rerank on candidates only. No training inside
     the query (identical results to `ivf_kmeans_topk`, test-pinned)."""
-    from khronus_spark.operators import clustering as km
-
     probes_q = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
-        "vec_id", F.expr(km._QUANT).alias("e")
+        "vec_id", F.expr(_QUANT).alias("e")
     )
     scored_c = probes_q.crossJoin(F.broadcast(cents)).withColumn(
-        "d", F.expr(km._DIST)
+        "d", F.expr(_D2.format(a="e", b="c"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("d").asc(), F.col("cid").asc())
     probe_lists = (
@@ -1187,15 +1187,10 @@ def mmr_topk(
             f"need pool >= k >= 1 (got k={k}, pool={pool}): the greedy "
             "picks k of the pool"
         )
-    from khronus_spark.operators.clustering import _QUANT as _Q
     from khronus_spark.sources.tables import spread
 
-    d2 = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
     pv = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.expr(_Q).alias("pe")
+        F.col("vec_id").alias("probe_id"), F.expr(_QUANT).alias("pe")
     )
     # the ONE corpus pass runs at a capped partition count: the pool
     # build is a broadcast-join + per-probe window over higher-order
@@ -1207,9 +1202,9 @@ def mmr_topk(
     # same greedy a pool that never scales with the corpus.
     cand = (
         spread(embeddings, max_partitions=8)
-        .select(F.col("vec_id").alias("neighbor_id"), F.expr(_Q).alias("e"))
+        .select(F.col("vec_id").alias("neighbor_id"), F.expr(_QUANT).alias("e"))
         .join(F.broadcast(pv), F.col("neighbor_id") != F.col("probe_id"))
-        .withColumn("d2q", F.expr(d2.format(a="pe", b="e")))
+        .withColumn("d2q", F.expr(_D2.format(a="pe", b="e")))
         .withColumn(
             "rn",
             F.row_number().over(
@@ -1239,14 +1234,10 @@ def mmr_rerank(cand: DataFrame, k: int = 5, lam10: int = 7) -> DataFrame:
         )
     if k < 1:
         raise ValueError(f"mmr_rerank needs k >= 1 picks, got {k}")
-    d2 = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
     cand = cand.localCheckpoint(eager=False)
     remaining = cand.withColumn("mind2_sel", F.lit(None).cast("long"))
     picks = []
-    d2_sel = d2.format(a="e", b="se")
+    d2_sel = _D2.format(a="e", b="se")
     for r in range(k):
         score = (
             F.lit(lam10) * F.col("d2q")
@@ -1317,10 +1308,6 @@ def mmr_topk_sql(
     remaining pool with the running min-distance-to-picked folded) —
     the k-center oracle convention, MATERIALIZED against DuckDB's
     default inlining."""
-    quant = (
-        "list_transform(embedding, x -> "
-        "CAST(floor((CAST(x AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT))"
-    )
     ids = ", ".join(str(i) for i in probe_ids)
 
     def d2(a: str, b: str) -> str:
@@ -1330,7 +1317,7 @@ def mmr_topk_sql(
         )
 
     parts = [
-        f"q AS (SELECT vec_id, {quant} AS e FROM embeddings)",
+        f"q AS (SELECT vec_id, {_QUANT_DUCK} AS e FROM embeddings)",
         f"""mcand AS MATERIALIZED (
   SELECT p.vec_id AS probe_id, n.vec_id AS neighbor_id, n.e,
          {d2('p.e', 'n.e')} AS d2q

@@ -2191,16 +2191,12 @@ POSTINGS_SCHEMA = "doc_id long, dl long, w string, tf long"
 
 
 def read_bm25_index(spark, path: str) -> DataFrame:
-    """The postings table of a persisted index. Accepts both the
-    `write_bm25_index` layout ({path}/postings + df + stats) and a bare
-    postings directory."""
-    import os
-
-    sub = f"{path}/postings"
-    target = sub if os.path.isdir(sub) else path
+    """The postings table of a persisted index: `{path}/postings` of
+    the `write_bm25_index` layout ({path}/postings + df + stats). The
+    path is passed to Spark as is, so any Hadoop filesystem works."""
     return (
         spark.read.schema(POSTINGS_SCHEMA)
-        .parquet(target)
+        .parquet(f"{path}/postings")
         .select("doc_id", "dl", "w", "tf")
     )
 

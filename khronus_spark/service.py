@@ -77,7 +77,10 @@ def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple
     that has no summary family: one landed row of either would fail
     every query whose FROM regex matches it. A `ts` or value outside
     int64 raises too: the landing column is int64, and a failed write
-    would answer 500, which a client retries forever."""
+    would answer 500, which a client retries forever. `values` must be
+    a list of JSON numbers, as the reference's `Seq[Long]` reader
+    demands: a string would otherwise land one sample per character and
+    a boolean would land as 0 or 1."""
     now = now_ms if now_ms is not None else int(time.time() * 1000)
     rows = []
     for metric in payload.get("metrics", []):
@@ -90,7 +93,13 @@ def flatten_metric_batch(payload: dict, now_ms: int | None = None) -> list[tuple
             ts = now if ts is None else int(ts)
             if not -(1 << 63) <= ts < 1 << 63:
                 raise ValueError(f"ts {ts} is outside int64")
-            for v in m.get("values", []):
+            values = m.get("values", [])
+            if not isinstance(values, list):
+                raise ValueError(f"values must be a list, got {values!r}")
+            for v in values:
+                # JSON numbers only: a bool is an int subclass
+                if type(v) not in (int, float):
+                    raise ValueError(f"value must be a number, got {v!r}")
                 v = int(v)
                 if v < 0:  # skipped, like the reference ingest
                     continue

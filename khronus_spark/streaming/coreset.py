@@ -44,15 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: shared quantization grid (coreset/pq/clustering convention)
-_QUANT = (
-    "transform(embedding, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1000000.0D))"
-)
-
-_D2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
+from khronus_spark.operators.clustering import _D2, _QUANT
 
 
 def _arr(e: list[int]) -> str:

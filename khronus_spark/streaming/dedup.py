@@ -12,7 +12,7 @@ process only what arrived, merge into persistent state).
 Shape:
 
 - the band-bucket assignment is the SAME column algebra as batch
-  (`minhash_banded` / `minhash_md5_banded` — map-only, streaming-safe);
+  (`minhash_md5_banded` — map-only, streaming-safe);
 - per (band, bucket) key, `applyInPandasWithState` keeps ONE long of
   state: the first-seen doc_id. Every later doc in that bucket emits an
   edge (first_seen, doc) — exactly the star-edge shape the batch path
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
-from khronus_spark.operators.dedup import minhash_banded, minhash_md5_banded
+from khronus_spark.operators.dedup import minhash_md5_banded
 
 EDGE_SCHEMA = StructType(
     [
@@ -56,14 +56,10 @@ def streaming_duplicate_edges(
     num_hashes: int = 8,
     bands: int = 2,
     n: int = 3,
-    family: str = "md5",
 ) -> DataFrame:
     """docs(doc_id, text, …) stream → duplicate-candidate star edges
     (band, bucket, doc_a=first seen in bucket, doc_b=later arrival)."""
-    if family == "md5":
-        banded = minhash_md5_banded(docs_stream, num_hashes, bands, n)
-    else:
-        banded = minhash_banded(docs_stream, num_hashes, bands, n)
+    banded = minhash_md5_banded(docs_stream, num_hashes, bands, n)
 
     def update(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -103,7 +99,6 @@ def run_streaming_dedup(
     num_hashes: int = 8,
     bands: int = 2,
     n: int = 3,
-    family: str = "md5",
 ):
     """Drive the online dedup with an availableNow trigger; each
     micro-batch's edges land as `out_path/batch=<id>` via overwrite —
@@ -111,7 +106,7 @@ def run_streaming_dedup(
     its own batch dir with recomputed-identical content rather than
     append a second copy (a flat append sink duplicated every
     replayed edge)."""
-    edges = streaming_duplicate_edges(docs_stream, num_hashes, bands, n, family)
+    edges = streaming_duplicate_edges(docs_stream, num_hashes, bands, n)
     return (
         edges.writeStream.outputMode("update")
         .foreachBatch(

@@ -11,9 +11,10 @@ or run):
    `perfbench/*.py`), following every `import` statement, including
    those inside functions. Modules outside the closure are listed with
    their line counts.
-2. Defs (`non_product_defs`): every public top-level def or class
-   under `khronus_spark/`, classed by the code that uses it (Name,
-   attribute or import references; strings and comments do not
+2. Defs (`non_product_defs`): every public top-level def, class or
+   module-level assignment (a constant) under `khronus_spark/`, classed
+   by the code that uses it (Name loads, attribute or import
+   references; strings, comments and the assignment itself do not
    count): `product` when any package, bench, entry or perfbench file
    uses it or it is a `@register`ed entry, else `tests`, `scripts`,
    `tests+scripts` or `nothing`. Only the non-product defs are listed.
@@ -92,9 +93,24 @@ def unreached_modules(root="."):
     return out
 
 
+def _top_level_names(node):
+    """The names a module-level statement binds: a def or class name, or
+    the plain-name targets of an assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (node.targets if isinstance(node, ast.Assign)
+               else [node.target] if isinstance(node, ast.AnnAssign) else [])
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        names += [e.id for e in elts if isinstance(e, ast.Name)]
+    return names
+
+
 def non_product_defs(root="."):
-    """([(class, "path::name", line count)] of the public defs no product
-    code uses, sorted; the number of public defs scanned)."""
+    """([(class, "path::name", line count)] of the public defs and
+    module-level constants no product code uses, sorted; the number
+    scanned)."""
     groups = {"pkg": list(pyfiles(root, "khronus_spark")), "prod": _product_files(root),
               "tests": list(pyfiles(root, "tests")), "scripts": list(pyfiles(root, "scripts"))}
     uses, defs = {}, []
@@ -103,11 +119,14 @@ def non_product_defs(root="."):
             tree = _parse(root, f)
             if g == "pkg":
                 for n in tree.body:
-                    if isinstance(n, (ast.FunctionDef, ast.ClassDef)) and not n.name.startswith("_"):
-                        reg = any("register" in ast.unparse(d) for d in n.decorator_list)
-                        defs.append((f, n.name, n.end_lineno - n.lineno + 1, reg))
+                    reg = any("register" in ast.unparse(d)
+                              for d in getattr(n, "decorator_list", []))
+                    for name in _top_level_names(n):
+                        if not name.startswith("_"):
+                            defs.append((f, name, n.end_lineno - n.lineno + 1, reg))
             for n in ast.walk(tree):
-                name = (n.id if isinstance(n, ast.Name) else n.attr if isinstance(n, ast.Attribute)
+                name = (n.id if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+                        else n.attr if isinstance(n, ast.Attribute)
                         else n.name.rpartition(".")[2] if isinstance(n, ast.alias) else None)
                 if name:
                     uses.setdefault(name, set()).add(g)
@@ -127,8 +146,8 @@ def main():
     for path, n in unreached:
         print(f"  {path} {n}")
     rows, n_defs = non_product_defs(root)
-    print(f"public defs no product code uses: {len(rows)}, "
-          f"{sum(r[2] for r in rows)} lines (of {n_defs} defs)")
+    print(f"public defs and constants no product code uses: {len(rows)}, "
+          f"{sum(r[2] for r in rows)} lines (of {n_defs} scanned)")
     for cls, where, n in rows:
         print(f"  {cls:14} {where} {n}")
 

@@ -54,7 +54,6 @@ SLOW_TESTS = {
     "tests/test_components.py::test_curation_stages_monotonic",
     "tests/test_components.py::test_empty_input_edge_cases",
     "tests/test_components.py::test_keep_star_preserves_connectivity_under_verification",
-    "tests/test_components.py::test_kmeans_arrow_and_sql_assignments_bit_identical",
     "tests/test_components.py::test_kmeans_deterministic_and_partition_invariant",
     "tests/test_components.py::test_lpa_matches_python_reference_on_random_graphs",
     "tests/test_components.py::test_lpa_splits_bridged_cliques_components_do_not",

@@ -106,26 +106,33 @@ def test_kmeans_deterministic_and_partition_invariant(spark, oracle_sf_dir):
     assert max(sizes.values()) < 500 * 0.8
 
 
-def test_kmeans_arrow_and_sql_assignments_bit_identical(spark, oracle_sf_dir):
-    """The vectorized (numpy int64 matmul, zero-shuffle) assignment and
-    the pure-expression path must agree on every (vec_id, cluster,
-    dist_q) — including distance VALUES and argmin tie-breaks. Both run
-    the full Lloyd loop, so a single divergent iteration would cascade
-    into different centroids and fail loudly."""
-    from khronus_spark.operators.clustering import (
-        kmeans_assignments,
-        semantic_dedup,
-    )
+def test_kmeans_ties_go_to_the_smaller_centroid_like_the_oracle(spark):
+    """A hand-built table whose vec_id 2 sits exactly between the two
+    initial centroids (vec_ids 0 and 1) in every iteration: the 2-means
+    here is a fixed point only if ties go to the smaller centroid id
+    (c0 = mean(-0.25, 0, -0.5), c1 = mean(0.25, 0.25, 0.25) on dim 0).
+    Sending the tie to c1 moves both centroids, so the Spark assignment
+    must equal the DuckDB oracle's at every iteration count, and the
+    tied vector must land in cluster 0 at distance 250000²."""
+    import duckdb
+    import pandas as pd
 
-    emb = spark.read.parquet(f"{oracle_sf_dir}/embeddings.parquet")
-    arrow = sorted(tuple(r) for r in kmeans_assignments(emb, mode="arrow").collect())
-    sql = sorted(tuple(r) for r in kmeans_assignments(emb, mode="sql").collect())
-    assert arrow == sql
-    sd_arrow = sorted(
-        tuple(r) for r in semantic_dedup(emb, k=4, mode="arrow").collect()
+    from khronus_spark.operators.clustering import DIMS, kmeans_assignments, kmeans_sql
+
+    dim0 = [-0.25, 0.25, 0.0, -0.5, 0.25, 0.25]  # exact in float32
+    rows = [(v, [x] + [0.0] * (DIMS - 1)) for v, x in enumerate(dim0)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    con = duckdb.connect()
+    con.register("pdf", pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT CAST(vec_id AS BIGINT) AS vec_id, "
+        "CAST(embedding AS FLOAT[]) AS embedding FROM pdf"
     )
-    sd_sql = sorted(tuple(r) for r in semantic_dedup(emb, k=4, mode="sql").collect())
-    assert sd_arrow == sd_sql
+    for iters in (0, 1, 2):
+        got = sorted(tuple(r) for r in kmeans_assignments(emb, 2, iters).collect())
+        want = sorted(con.execute(kmeans_sql(2, iters)).fetchall())
+        assert got == want, iters
+        assert got[2] == (2, 0, 250_000**2), iters
 
 
 def test_empty_input_edge_cases(spark):

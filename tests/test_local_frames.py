@@ -66,14 +66,14 @@ def _bpe_batched(spark, tmp_path, sf_dir):
 
 
 def _clustering_empty(spark, tmp_path, sf_dir):
-    from khronus_spark.operators.clustering import _assign_arrow, _mean_partials_arrow
+    from khronus_spark.operators.clustering import _assign, _mean_partials
 
     q = local_frame(spark, [(1, [1, 2])], "vec_id long, e array<long>")
     cents = local_frame(spark, [], "cid long, c array<long>")
 
     def run():
-        assert _assign_arrow(q, cents).count() == 0
-        assert _mean_partials_arrow(q, cents).count() == 0
+        assert _assign(q, cents).count() == 0
+        assert _mean_partials(q, cents).count() == 0
 
     return run
 

@@ -202,8 +202,8 @@ def test_hll_daily_single_aggregation_no_python(spark, oracle_sf_dir):
 
 
 def test_kmeans_assignment_zero_expansion_default(spark, oracle_sf_dir):
-    """The default (arrow) assignment scores each Arrow batch against
-    the closure-shipped centroid matrix: NO broadcast cross expansion,
+    """The k-means assignment scores each Arrow batch against the
+    closure-shipped centroid matrix: NO broadcast cross expansion,
     NO join, NO window — the assignment stage shuffles nothing at all
     (the only exchanges left belong to the centroid-mean update)."""
     plan = _plan(spark, oracle_sf_dir, "kmeans_embeddings")
@@ -211,31 +211,6 @@ def test_kmeans_assignment_zero_expansion_default(spark, oracle_sf_dir):
     assert "Window" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_kmeans_assignment_sql_mode_argmin_is_map_side_aggregate(
-    spark, oracle_sf_dir
-):
-    """The expression-path assignment (mode='sql', the oracle's
-    structural twin) must broadcast the centroids into the cross join
-    and take the argmin with a map-side-combinable min_by aggregate
-    (partial_min_by BEFORE the exchange), never a window over vec_id: a
-    window shuffles the full N×k scored expansion, which at SemDeDup's
-    derived k=⌈√N⌉ is an N^1.5-row exchange — this stage may shuffle at
-    most the ≤N combined rows."""
-    from khronus_spark.operators.clustering import kmeans_assignments
-    from khronus_spark.sources.tables import load_table
-
-    emb = load_table(spark, oracle_sf_dir, "embeddings")
-    df = kmeans_assignments(emb, mode="sql")
-    jvm = spark._jvm
-    plan = df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "BroadcastNestedLoopJoin" in plan  # broadcast cross, k rows
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
-    assert "partial_min_by" in plan  # k rows/vector combine map-side
 
 
 def test_ivf_assignment_argmax_never_shuffles_expansion(spark, oracle_sf_dir):

@@ -384,17 +384,13 @@ def test_bigram_surprisal_matches_python_reference_random_corpora(spark):
 
 
 def test_pq_codes_pack_and_modes_agree(spark, sf_dir):
-    """Codes live in [0, k^sub); the Arrow and SQL assignment paths must
-    produce bit-identical codes (inherited from the clustering module's
-    dual-mode contract)."""
+    """Codes live in [0, k^sub), one per vector."""
     from khronus_spark.operators.pq import pq_codes
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 80)
-    arrow = {r.vec_id: r.pq_code for r in pq_codes(emb, 4, 8, 1, "arrow").collect()}
-    sql = {r.vec_id: r.pq_code for r in pq_codes(emb, 4, 8, 1, "sql").collect()}
-    assert arrow == sql
-    assert all(0 <= c < 8**4 for c in arrow.values())
-    assert len(arrow) == 80
+    codes = {r.vec_id: r.pq_code for r in pq_codes(emb, 4, 8, 1).collect()}
+    assert all(0 <= c < 8**4 for c in codes.values())
+    assert len(codes) == 80
 
 
 def test_pq_identical_vectors_share_codes_and_rank_first(spark, sf_dir):
@@ -699,32 +695,27 @@ def test_ivf_kmeans_indexed_equals_inline(spark, sf_dir):
     assert got == expect
 
 
-def test_pq_encode_fused_bit_matches_shuffled_encode(spark, sf_dir):
-    """The zero-shuffle fused encode must produce bit-identical codes
-    to pq_encode (the per-subspace + groupBy-sum path), and its plan
-    must be map-only: no exchange, no aggregate."""
-    from khronus_spark.operators.pq import pq_build_index, pq_encode, pq_encode_fused
+def test_pq_encode_plan_is_map_only(spark, sf_dir):
+    """The encode both index builders use is one Arrow pass: no
+    exchange, no aggregate."""
+    from khronus_spark.operators.pq import pq_build_index, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 80)
     books, _ = pq_build_index(emb, sub=4, k=8, iters=1)
-    shuffled = {r.vec_id: r.pq_code for r in pq_encode(emb, books, 4, 8).collect()}
-    fused_df = pq_encode_fused(emb, books, 4, 8)
-    fused = {r.vec_id: r.pq_code for r in fused_df.collect()}
-    assert fused == shuffled
-    plan = fused_df._jdf.queryExecution().executedPlan().toString()
+    plan = pq_encode(emb, books, 4, 8)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Aggregate" not in plan
 
 
-def test_pq_encode_fused_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """The fused encode is the streaming index 'add' path: running the
-    SAME plan over a file stream of arriving vectors must emit exactly
-    the batch codes (stream == batch)."""
-    from khronus_spark.operators.pq import pq_build_index, pq_encode_fused
+def test_pq_encode_streaming_matches_batch(spark, sf_dir, tmp_path):
+    """The encode is the streaming index 'add' path: running the SAME
+    plan over a file stream of arriving vectors must emit exactly the
+    batch codes (stream == batch)."""
+    from khronus_spark.operators.pq import pq_build_index, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 60)
     books, _ = pq_build_index(emb, sub=4, k=8, iters=1)
-    batch = {r.vec_id: r.pq_code for r in pq_encode_fused(emb, books, 4, 8).collect()}
+    batch = {r.vec_id: r.pq_code for r in pq_encode(emb, books, 4, 8).collect()}
 
     src = str(tmp_path / "arriving")
     emb.select("vec_id", "embedding").write.parquet(src)
@@ -733,7 +724,7 @@ def test_pq_encode_fused_streaming_matches_batch(spark, sf_dir, tmp_path):
     )
     out = str(tmp_path / "codes")
     q = (
-        pq_encode_fused(stream, books, 4, 8)
+        pq_encode(stream, books, 4, 8)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -743,28 +734,6 @@ def test_pq_encode_fused_streaming_matches_batch(spark, sf_dir, tmp_path):
     q.awaitTermination(120)
     got = {r.vec_id: r.pq_code for r in spark.read.parquet(out).collect()}
     assert got == batch
-
-
-def test_ivf_pq_encode_appends_identically_to_rebuild(spark, sf_dir):
-    """ivf_pq_encode is the IVF-PQ index's `add()`: new vectors encoded
-    against the fixed books + persisted centroid router must carry the
-    SAME (pq_code, centroid_id) as identical vectors coded at build
-    time — appending them to the coded table is indistinguishable from
-    rebuilding over the union (no retraining, no drift)."""
-    from khronus_spark.operators.pq import ivf_pq_build_index, ivf_pq_encode
-
-    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 120)
-    books, coded, cents = ivf_pq_build_index(emb, stride=20, sub=4, k=8, iters=1)
-    base = {r.vec_id: (r.pq_code, r.centroid_id) for r in coded.collect()}
-    newcomers = emb.where(F.col("vec_id") < 6).select(
-        (F.col("vec_id") + 9000).alias("vec_id"), "embedding"
-    )
-    got = {
-        r.vec_id: (r.pq_code, r.centroid_id)
-        for r in ivf_pq_encode(newcomers, books, cents, sub=4, k=8).collect()
-    }
-    for v in range(6):
-        assert got[9000 + v] == base[v], v
 
 
 def test_lm_reference_joins_are_salted_and_model_broadcast(spark, oracle_sf_dir):

@@ -486,17 +486,23 @@ def test_metric_landed_after_engine_cached_is_listed_and_queryable(spark):
          "measurements": [{"ts": None, "values": [1 << 63]}]},
         {"name": "big.ts", "mtype": "timer",
          "measurements": [{"ts": 1 << 63, "values": [7]}]},
+        {"name": "str.values", "mtype": "timer",
+         "measurements": [{"ts": None, "values": "57"}]},
+        {"name": "bool.value", "mtype": "timer",
+         "measurements": [{"ts": None, "values": [True]}]},
     ],
     ids=["unknown_mtype", "null_name", "int_name", "value_over_int64",
-         "ts_over_int64"],
+         "ts_over_int64", "values_string", "value_bool"],
 )
 def test_unknown_metric_type_is_400_and_lands_nothing(spark, bad_metric):
     """A batch naming a metric type without a summary family, a metric
-    name that is not a string, or a value or `ts` outside int64 answers
-    400 and lands none of its rows, good ones included: one landed row
-    of the first two would fail every FROM-regex query that matches it,
-    and the landing write of the last two would fail with a 500 that
-    clients retry forever."""
+    name that is not a string, a value or `ts` outside int64, or
+    `values` that are not a list of JSON numbers answers 400 and lands
+    none of its rows, good ones included: one landed row of the first
+    two would fail every FROM-regex query that matches it, the landing
+    write of the next two would fail with a 500 that clients retry
+    forever, and a string or boolean would land made-up samples (one
+    per character of "57", or 1 for true)."""
     import time as _time
     import urllib.error
 
