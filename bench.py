@@ -231,10 +231,9 @@ def build_slots(spark, sf_dir: str, cpus: str) -> dict:
             q["decontamination_retrieval"](spark, sf_dir)
         ),
         # the PQ build/query split: index built+persisted ONCE (timed as
-        # the build entry), then the query only reads the parquet index.
-        # The inline ann_pq_topk (train-per-query) slot was retired per
-        # the round-5 verdict — it conflated build cost with query cost;
-        # it remains a registry oracle twin.
+        # the build entry), then the query only reads the parquet index
+        # — build cost and query cost are timed apart, and no PQ query
+        # trains.
         "ann_pq_index_build": lambda: _pq_build(),
         "ann_pq_topk_indexed": lambda: _pq_query(),
         # DSIR data selection: hashed-ngram importance weights, broadcast

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from khronus_spark.engine import KhronusEngine
 from khronus_spark.functions.summary import (
     PERCENTILE_FRACTIONS,
-    bucket_ts,
     counter_summary,
     counter_summary_sql,
     histogram_summary,
@@ -161,7 +160,14 @@ DRIVER_WINDOW = 50
 #: on the driver), the k-center coreset entries and the BPE trainers
 #: (driver rows now shipped as Arrow local relations), and the IVF-PQ
 #: index entries (`ivf_pq_build_index` now encodes with the map-only
-#: `pq_encode` instead of per-subspace passes summed by vec_id).
+#: `pq_encode` instead of per-subspace passes summed by vec_id). The PQ
+#: entries that answered through a train-per-query face now build the
+#: index and query it (`pq_codes`, `ann_pq_dim16_topk`,
+#: `ann_recall_at_k`, `matryoshka_recall_probe`), and the three indexed
+#: entries whose proven same-oracle twin was deleted
+#: (`ann_pq_topk_indexed`, `ann_pq_rerank_topk_indexed`,
+#: `ann_matryoshka_rerank_topk_indexed`) queue so the next window leads
+#: with them.
 PENDING_NEXT_WINDOW: list[str] = [
     "canonical_by_quality",
     "corpus_curation",
@@ -181,6 +187,13 @@ PENDING_NEXT_WINDOW: list[str] = [
     "bpe_merges_batched",
     "ann_ivfpq_topk_indexed",
     "ann_ivfpq_rerank_topk_indexed",
+    "pq_codes",
+    "ann_pq_dim16_topk",
+    "ann_recall_at_k",
+    "matryoshka_recall_probe",
+    "ann_pq_topk_indexed",
+    "ann_pq_rerank_topk_indexed",
+    "ann_matryoshka_rerank_topk_indexed",
 ]
 
 _PRIORITY = [
@@ -3952,34 +3965,27 @@ def pq_codes_entry(spark, sf_dir):
     bit-exact integer k-means codebooks; each vector stores ONE packed
     BIGINT code (64x compression at the production sub=8/k=16; the
     entry pins sub=4/k=8/iters=1 so the unrolled per-subspace CTE
-    oracle stays tractable, like the k-means entry pins k=4)."""
+    oracle stays tractable, like the k-means entry pins k=4). The codes
+    are `pq_build_index`'s: trained books, then the map-only
+    `pq_encode`."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ops.pq_codes(emb, sub=4, k=8, iters=1)
-
-
-@register("ann_pq_topk", pq_ops.pq_topk_sql(list(range(5)), 3, sub=4, k=8, iters=1))
-def ann_pq_topk(spark, sf_dir):
-    """ADC search over the PQ codes: per probe a sub x k lookup table of
-    exact int64 subspace distances (broadcast), then every corpus code
-    scores with `sub` table adds — the compressed-domain ANN that scans
-    8-byte codes instead of 256-byte vectors. Oracle restates the LUT
-    relationally (probe-subvector to assigned-centroid distances summed
-    per subspace)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ops.pq_topk(emb, list(range(5)), 3, sub=4, k=8, iters=1)
+    return pq_ops.pq_build_index(emb, sub=4, k=8, iters=1)[1]
 
 
 @register(
     "ann_pq_topk_indexed", pq_ops.pq_topk_sql(list(range(5)), 3, sub=4, k=8, iters=1)
 )
 def ann_pq_topk_indexed(spark, sf_dir):
-    """The build/query split the round-4 verdict prescribed: the PQ
-    index (codebooks + packed codes) is BUILT ONCE, persisted as
-    parquet tables, and the query only READS them — no k-means inside
-    the query (operators/pq.py::pq_build_index / pq_topk_indexed; the
-    FAISS train/add/search separation, and the reference's materialized
-    summary-store read path, `store/BucketStore.scala`). Same oracle as
-    ann_pq_topk — the split must not change a single value."""
+    """ADC search over a built PQ index: the index (codebooks + packed
+    codes) is BUILT ONCE, persisted as parquet tables, and the query
+    only READS them — no k-means inside the query (operators/pq.py::
+    pq_build_index / pq_topk_indexed; the FAISS train/add/search
+    separation, and the reference's materialized summary-store read
+    path, `store/BucketStore.scala`). Per probe a sub x k lookup table
+    of exact int64 subspace distances, then every corpus code scores
+    with `sub` table adds — 8-byte codes scanned instead of 256-byte
+    vectors. The oracle restates the LUT relationally (probe-subvector
+    to assigned-centroid distances summed per subspace)."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _scratch_dir("pq_index")
     books, codes = pq_ops.pq_build_index(emb, sub=4, k=8, iters=1)
@@ -3989,22 +3995,6 @@ def ann_pq_topk_indexed(spark, sf_dir):
         F.col("vec_id").alias("probe_id"), "embedding"
     )
     return pq_ops.pq_topk_indexed(books, codes, probes, 3, sub=4, k=8)
-
-
-@register(
-    "ann_ivfpq_topk",
-    pq_ops.ivf_pq_topk_sql(list(range(5)), 3, stride=50, nprobe=2, sub=4, k=8, iters=1),
-)
-def ann_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ (operators/pq.py): the canonical billion-scale index —
-    IVF inverted lists restrict each probe to ~nprobe/nlist of the
-    corpus, and candidates score from packed PQ codes via broadcast ADC
-    lookup tables. Completes the ANN arc: brute -> LSH -> IVF ->
-    IVF-kmeans -> int8 -> RP two-stage -> PQ -> IVF-PQ."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ops.ivf_pq_topk(
-        emb, list(range(5)), 3, stride=50, nprobe=2, sub=4, k=8, iters=1
-    )
 
 
 @register("source_health_report", curation_ops.source_health_report_sql())
@@ -4046,23 +4036,6 @@ def dedup_graph_pagerank(spark, sf_dir):
 
 
 @register(
-    "ann_pq_rerank_topk",
-    pq_ops.pq_rerank_topk_sql(
-        list(range(5)), 3, n_candidates=30, sub=4, k=8, iters=1
-    ),
-)
-def ann_pq_rerank_topk(spark, sf_dir):
-    """Two-stage PQ retrieval (operators/pq.py): ADC keeps the 30 best
-    codes per probe, then only those candidates fetch full vectors for
-    an exact integer-L2 rerank — the production recipe that buys back
-    quantization error for n_candidates/N of the full-scan cost."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ops.pq_rerank_topk(
-        emb, list(range(5)), 3, n_candidates=30, sub=4, k=8, iters=1
-    )
-
-
-@register(
     "ann_ivfpq_topk_indexed",
     pq_ops.ivf_pq_topk_sql(list(range(5)), 3, stride=50, nprobe=2, sub=4, k=8, iters=1),
 )
@@ -4074,8 +4047,7 @@ def ann_ivfpq_topk_indexed(spark, sf_dir):
     parquet; the query broadcasts centroids to route each probe to its
     nprobe lists, restricts candidates by join key on the coded table,
     and scores via broadcast ADC LUTs. No training in the query plan
-    (plan-gated). Same oracle as ann_ivfpq_topk — the split must not
-    change a value."""
+    (plan-gated)."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _scratch_dir("ivfpq_index")
     books, coded, cents = pq_ops.ivf_pq_build_index(
@@ -4103,7 +4075,8 @@ def ann_pq_rerank_topk_indexed(spark, sf_dir):
     reads the persisted books+codes (no training in the query plan —
     plan-gated); only the ~n_candidates survivors per probe fetch full
     vectors for the exact integer-L2 rerank, which is the stage's
-    recall contract, not a scan. Same oracle as ann_pq_rerank_topk."""
+    recall contract, not a scan — buying back quantization error for
+    n_candidates/N of the full-scan cost."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _scratch_dir("pq_rerank_index")
     books, codes = pq_ops.pq_build_index(emb, sub=4, k=8, iters=1)
@@ -5271,6 +5244,12 @@ def ann_recall_at_k(spark, sf_dir):
     k × #probes-row frames; every retrieval keeps its hardened
     shape."""
     emb = load_table(spark, sf_dir, "embeddings")
+    books, coded, cents = pq_ops.ivf_pq_build_index(
+        emb, stride=50, sub=4, k=8, iters=1
+    )
+    probes = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
     return sim_ops.ann_recall_at_k(
         emb,
         list(range(5)),
@@ -5279,8 +5258,8 @@ def ann_recall_at_k(spark, sf_dir):
         planes_per_band=8,
         nprobe=2,
         extra_methods={
-            "ivfpq": pq_ops.ivf_pq_topk(
-                emb, list(range(5)), 3, stride=50, nprobe=2, sub=4, k=8, iters=1
+            "ivfpq": pq_ops.ivf_pq_topk_indexed(
+                books, coded, cents, probes, 3, nprobe=2, sub=4, k=8
             )
         },
     )
@@ -6302,35 +6281,16 @@ def ann_pq_dim16_topk(spark, sf_dir):
     slice/range bounds derive from the same parameter — a value
     mismatch anywhere in the train/encode/LUT chain would move codes
     and flip the hash. Same sub=4/k=8/iters=1 pins as the 64-dim
-    entries keep the unrolled CTE oracle tractable."""
+    entries keep the unrolled CTE oracle tractable. The index builds in
+    memory and the query reads it through `pq_topk_indexed`."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")
     )
-    return pq_ops.pq_topk(emb, list(range(5)), 3, sub=4, k=8, iters=1, dims=16)
-
-
-@register(
-    "ann_matryoshka_rerank_topk",
-    pq_ops.matryoshka_rerank_topk_sql(
-        list(range(5)), 3, n_candidates=30, prefix_dims=16, sub=4, k=8, iters=1
-    ),
-)
-def ann_matryoshka_rerank_topk(spark, sf_dir):
-    """Matryoshka two-stage retrieval (operators/pq.py::
-    matryoshka_rerank_topk) — the first consumer the r11 dims
-    parameterization UNLOCKS rather than merely permits: the ADC
-    shortlist trains/scans on the 16-dim PREFIX subspace only (MRL
-    embeddings make nested prefixes standalone-usable; 4x less
-    quantized scan work at prefix 16/64), and only the 30 survivors
-    per probe fetch full 64-dim vectors for the exact integer-L2
-    rerank. The oracle states the two-width split explicitly:
-    training chains + ADC at prefix_dims, rerank distance at the full
-    width — a shortlist/rerank width mixup anywhere flips the hash."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_ops.matryoshka_rerank_topk(
-        emb, list(range(5)), 3, n_candidates=30, prefix_dims=16,
-        sub=4, k=8, iters=1,
+    books, codes = pq_ops.pq_build_index(emb, sub=4, k=8, iters=1, dims=16)
+    probes = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
     )
+    return pq_ops.pq_topk_indexed(books, codes, probes, 3, sub=4, k=8, dims=16)
 
 
 # drained into the round-12 window (rotation policy at _PRIORITY)
@@ -6343,14 +6303,16 @@ def ann_matryoshka_rerank_topk(spark, sf_dir):
     ),
 )
 def ann_matryoshka_rerank_topk_indexed(spark, sf_dir):
-    """The Matryoshka BUILD/QUERY split (operators/pq.py::
-    matryoshka_rerank_topk_indexed): the prefix-16 PQ index builds
-    once and persists (4x smaller than the full-width index), the
-    query slices probes to the prefix for the ADC shortlist and
-    fetches full vectors only for the rerank — no training anywhere
-    in the query plan (the standing index/query discipline every
-    other ANN face follows). Same oracle as the inline entry: the
-    split must not change a single value."""
+    """Matryoshka two-stage retrieval (operators/pq.py::
+    matryoshka_rerank_topk_indexed) — the composition the r11 dims
+    parameterization unlocks: the prefix-16 PQ index builds once and
+    persists (4x smaller than the full-width index), the query slices
+    probes to the prefix for the ADC shortlist and fetches full 64-dim
+    vectors only for the 30 survivors' exact integer-L2 rerank — no
+    training anywhere in the query plan. The oracle states the
+    two-width split explicitly: training chains + ADC at prefix_dims,
+    rerank distance at the full width — a shortlist/rerank width mixup
+    anywhere flips the hash."""
     emb = load_table(spark, sf_dir, "embeddings")
     prefix = emb.select(
         "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")

@@ -16,7 +16,7 @@ SURVEY §2.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: events span contract: calendar year 2024 in epoch-ms.

@@ -18,13 +18,14 @@ Scale shape:
 - training: per subspace, the zero-shuffle Arrow assignment + one
   cid-keyed partial-sum shuffle — inherited from
   clustering._kmeans_state on a sliced embedding frame;
-- codes: the index builders encode with `pq_encode`, one map-only Arrow
-  pass over all subspaces; the inline faces reuse the training state's
-  `sub` assignment passes, combined by one map-side-combinable
-  groupBy(vec_id) sum — the stored index is ONE BIGINT per vector;
-- search: the codebooks (sub·k rows) and the per-probe LUTs broadcast;
-  scoring is a map-only pass over the code table; the per-probe top-k
-  row_number window is bounded map-side by Spark 4's WindowGroupLimit.
+- codes: `pq_encode`, one map-only Arrow pass over all subspaces
+  against the trained codebooks — the stored index is ONE BIGINT per
+  vector;
+- search: every query reads a built index (`pq_build_index` /
+  `ivf_pq_build_index`, persisted or in memory) — no query trains; the
+  codebooks (sub·k rows) and the per-probe LUTs broadcast; scoring is a
+  map-only pass over the code table; the per-probe top-k row_number
+  window is bounded map-side by Spark 4's WindowGroupLimit.
 
 The registry entry pins small parameters (sub=4, k=8, iters=1) to keep
 the unrolled per-subspace CTE oracle tractable, exactly like the
@@ -41,7 +42,6 @@ from khronus_spark.operators.clustering import (
     _QUANT,
     _QUANT_COL,
     _QUANT_DUCK,
-    _assign,
     _kmeans_state,
     _nearest,
     _quantize_np,
@@ -124,43 +124,6 @@ def _books_from_state(state) -> DataFrame:
     return out
 
 
-def _codes_from_state(state, k: int) -> DataFrame:
-    out = None
-    for s, (q, cents) in enumerate(state):
-        a = _assign(q, cents)
-        part = a.select(
-            "vec_id", (F.col("cid") * F.lit(k**s).cast("long")).alias("term")
-        )
-        out = part if out is None else out.unionByName(part)
-    return out.groupBy("vec_id").agg(F.sum("term").alias("pq_code"))
-
-
-def pq_codebooks(
-    embeddings: DataFrame,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """(s, cid, c: array<long>[subdim]) — one trained integer codebook
-    per subspace (init: centroids = the subvectors of vec_id 0..k-1,
-    the same deterministic rule as the full-space k-means)."""
-    return _books_from_state(_pq_state(embeddings, sub, k, iters, dims))
-
-
-def pq_codes(
-    embeddings: DataFrame,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """(vec_id, pq_code) — the packed PQ index: code = Σ_s cid_s · k^s.
-    `sub` zero-shuffle assignment passes (the training state's own
-    quantized subvectors) combined by one map-side-combinable sum."""
-    return _codes_from_state(_pq_state(embeddings, sub, k, iters, dims), k)
-
-
 def pq_encode(
     embeddings: DataFrame,
     books: DataFrame,
@@ -178,7 +141,7 @@ def pq_encode(
     unchanged on a STREAMING DataFrame (stream==batch pinned in tests).
     The float→double cast, the ×10⁶ floor quantization, the exact int64
     distance and the ties-to-smaller-cid argmin are the clustering
-    module's, so codes equal `pq_codes` and the DuckDB oracle."""
+    module's, so codes equal the DuckDB oracle (`pq_codes_sql`)."""
     import numpy as np
     import pandas as pd
 
@@ -241,7 +204,7 @@ def pq_build_index(
     centroid quality saturates far below corpus size), then EVERY
     vector encodes against the trained books in one map-side pass —
     the standard FAISS train/add split. None = train on everything
-    (bit-identical to the inline `pq_codes` path; test-pinned)."""
+    (the registry `pq_codes` entry, oracle-checked)."""
     train = (
         embeddings
         if train_sample_mod is None
@@ -396,22 +359,31 @@ def _adc_luts(
     the cached frame rather than re-running training."""
     subdim = _subdim(dims, sub)
     rows = sorted(books.collect(), key=lambda r: (int(r["s"]), int(r["cid"])))
-    # a corrupt or foreign codebook must fail here, by name: an
-    # out-of-range cid would silently mis-slice the probe, and a
-    # duplicate (s, cid) would surface as an opaque map_from_entries
-    # error at execution
+    # a corrupt or foreign codebook — or one queried with a geometry
+    # it was not trained at — must fail here, by name: an out-of-range
+    # s or cid, or a centroid of the wrong width, would silently
+    # mis-slice the probe (NULL or garbage distances), and a duplicate
+    # (s, cid) would surface as an opaque map_from_entries error at
+    # execution
+    geo = f"k={k}, sub={sub}, dims={dims}"
     seen: set[tuple[int, int]] = set()
     for r in rows:
         s, cid = int(r["s"]), int(r["cid"])
-        if not 0 <= cid < k:
+        if not (0 <= cid < k and 0 <= s < sub):
+            raise ValueError(f"PQ codebook row out of range for {geo}: {r}")
+        if len(r["c"]) != subdim:
             raise ValueError(
-                f"PQ codebook row out of range for k={k}, sub={sub}: {r}"
+                f"PQ codebook centroid has width {len(r['c'])}, not "
+                f"dims // sub = {subdim}, for {geo}: {r}"
             )
         if (s, cid) in seen:
-            raise ValueError(
-                f"PQ codebook has a duplicate (s, cid) for k={k}, sub={sub}: {r}"
-            )
+            raise ValueError(f"PQ codebook has a duplicate (s, cid) for {geo}: {r}")
         seen.add((s, cid))
+    missing = sorted(set(range(sub)) - {s for s, _ in seen})
+    if rows and missing:
+        raise ValueError(
+            f"PQ codebook has no centroid for subspaces {missing} for {geo}"
+        )
     if not rows:
         # degenerate empty codebook: preserve the former cross-join
         # semantics (zero LUT rows → zero scored rows downstream)
@@ -454,59 +426,15 @@ def _adc_score_expr(sub: int, k: int) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    n_neighbors: int = 3,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """(probe_id, neighbor_id, d2_adc) — ADC search over the packed
-    codes: per probe a sub×k LUT of exact int64 subspace distances to
-    every centroid (built in-engine from the broadcast codebooks), then
-    every corpus code scores with `sub` lookups. Ties break to the
-    smaller neighbor id; probes are excluded from their own results.
-    Building the plan runs the codebook collect (`_adc_luts`), so
-    calling this function already runs Spark jobs."""
-    state = _pq_state(embeddings, sub, k, iters, dims)
-    books = _books_from_state(state)
-    codes = _codes_from_state(state, k)
-    pvec = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.expr(_QUANT).alias("pe")
-    )
-    return _adc_scan_topk(
-        codes, _adc_luts(pvec, books, sub, k, dims), n_neighbors, sub, k
-    )
-
-
 def _adc_scored(codes: DataFrame, luts: DataFrame, sub: int, k: int) -> DataFrame:
     """(probe_id, neighbor_id, d2_adc) for EVERY (probe, corpus code)
     pair — the map-only ADC scan before any per-probe ranking. Shared
-    by `_adc_scan_topk` and the fused hybrid tail (which ranks both
+    by `pq_topk_indexed` and the fused hybrid tail (which ranks both
     retriever branches under one exchange)."""
     return (
         codes.select(F.col("vec_id").alias("neighbor_id"), "pq_code")
         .join(F.broadcast(luts), F.col("neighbor_id") != F.col("probe_id"))
         .withColumn("d2_adc", F.expr(_adc_score_expr(sub, k)))
-        .select("probe_id", "neighbor_id", "d2_adc")
-    )
-
-
-def _adc_scan_topk(
-    codes: DataFrame, luts: DataFrame, n_neighbors: int, sub: int, k: int
-) -> DataFrame:
-    """The ADC scan shared by the inline and indexed query paths: codes
-    × broadcast LUTs, `sub` table adds per row, bounded per-probe
-    top-k."""
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("d2_adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        _adc_scored(codes, luts, sub, k)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_neighbors)
         .select("probe_id", "neighbor_id", "d2_adc")
     )
 
@@ -525,15 +453,24 @@ def pq_topk_indexed(
     (typically via `read_pq_index` of persisted tables), so NO training
     runs inside the query; the only work is the per-probe LUT build
     (sub·k broadcast rows) and the map-side scan over the 8-byte code
-    table. `probe_vecs` is (probe_id, embedding). Identical results to
-    `pq_topk` when the index was trained on the full corpus
-    (test-pinned). Building the plan runs the codebook collect
-    (`_adc_luts`), which also validates the persisted books."""
+    table. `probe_vecs` is (probe_id, embedding). Output (probe_id,
+    neighbor_id, d2_adc): per probe a sub×k LUT of exact int64
+    subspace distances to every centroid, then every corpus code scores
+    with `sub` lookups; ties break to the smaller neighbor id and
+    probes are excluded from their own results. Building the plan runs
+    the codebook collect (`_adc_luts`), which also validates the books
+    against the query geometry."""
     pvec = probe_vecs.select(
         "probe_id", F.expr(_QUANT_COL.format(c="embedding")).alias("pe")
     )
-    return _adc_scan_topk(
-        codes, _adc_luts(pvec, books, sub, k, dims), n_neighbors, sub, k
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("d2_adc").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        _adc_scored(codes, _adc_luts(pvec, books, sub, k, dims), sub, k)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n_neighbors)
+        .select("probe_id", "neighbor_id", "d2_adc")
     )
 
 
@@ -697,65 +634,6 @@ QUALIFY row_number() OVER (
 """
 
 
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    n_neighbors: int = 3,
-    stride: int = 50,
-    nprobe: int = 2,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """IVF-PQ — the canonical billion-scale index (FAISS's IVFPQ, minus
-    the optional residual encoding): the IVF coarse quantizer restricts
-    each probe to `nprobe` inverted lists (~nprobe/nlist of the
-    corpus), and the candidates score from their 8-byte PQ codes via
-    the broadcast ADC lookup tables instead of full vectors. Output:
-    (probe_id, neighbor_id, d2_adc), ties to the smaller neighbor id.
-
-    Scale shape: coarse assignment and probe lists reuse the IVF
-    module's map-only broadcast passes; codes are the ONE-BIGINT-per-
-    vector table; the candidate join keys on the centroid id against a
-    broadcast probe-list table; scoring is `sub` table adds per
-    candidate; the per-probe top-k window is over the candidate subset
-    only. Building the plan runs the codebook collect (`_adc_luts`), so
-    calling this function already runs Spark jobs."""
-    from khronus_spark.operators.similarity import ivf_assignments, ivf_probe_lists
-
-    state = _pq_state(embeddings, sub, k, iters, dims)
-    books = _books_from_state(state)
-    codes = _codes_from_state(state, k)
-    probe_lists = ivf_probe_lists(embeddings, probe_ids, nprobe, stride)
-    pvec = probe_lists.select("probe_id", "probe_vec").distinct().select(
-        "probe_id", F.expr(_QUANT_COL.format(c="probe_vec")).alias("pe")
-    )
-    luts = _adc_luts(pvec, books, sub, k, dims)
-    assign = ivf_assignments(embeddings, stride)
-    cand = (
-        codes.join(assign, "vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"), "pq_code", "centroid_id"
-        )
-        .join(
-            F.broadcast(probe_lists.select("probe_id", "probe_centroid")),
-            F.col("centroid_id") == F.col("probe_centroid"),
-        )
-        .where(F.col("neighbor_id") != F.col("probe_id"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("d2_adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(F.broadcast(luts), "probe_id")
-        .withColumn("d2_adc", F.expr(_adc_score_expr(sub, k)))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_neighbors)
-        .select("probe_id", "neighbor_id", "d2_adc")
-    )
-
-
 def ivf_pq_topk_sql(
     probe_ids: list[int],
     n_neighbors: int = 3,
@@ -892,61 +770,6 @@ QUALIFY row_number() OVER (
 """
 
 
-def matryoshka_rerank_topk(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    n_neighbors: int = 3,
-    n_candidates: int = 30,
-    prefix_dims: int = 16,
-    sub: int = 4,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """Matryoshka-style two-stage retrieval, enabled by the r11 dims
-    parameterization: the ADC shortlist runs on the PREFIX subspace
-    only (`prefix_dims` of the full `dims` — MRL-trained embeddings
-    make nested prefixes usable as standalone vectors, so the prefix
-    index is 4x smaller to train/store and its LUTs 4x cheaper to
-    scan at prefix 16/64), then ONLY the `n_candidates` survivors
-    fetch full-width vectors for the exact integer-L2 rerank. Output
-    (probe_id, neighbor_id, d2) with exact FULL-width distances — the
-    same contract as `pq_rerank_topk`, reached through a quarter of
-    the quantized scan work.
-
-    Semantics note (why this is not just pq_rerank_topk at small
-    dims): the candidate stage deliberately sees a DIFFERENT metric
-    (prefix L2) than the rerank (full L2) — recall is the probability
-    the prefix shortlist contains the full-width neighbors, which is
-    exactly what MRL training optimizes. On non-MRL embeddings the
-    prefix carries whatever signal the first coordinates happen to
-    hold — measured worst case recall 0.0 on the tail-only-signal
-    corpus vs 0.92 at full width (sweeps/r11/matryoshka_sweep.json,
-    ASSERTED by tests/test_pq_dims.py::
-    test_matryoshka_probe_pins_the_sweep_numbers) — so gate any new
-    corpus through `matryoshka_recall_probe` before serving from a
-    prefix index."""
-    if prefix_dims > dims:
-        raise ValueError(
-            f"Matryoshka prefix_dims={prefix_dims} exceeds dims={dims}: "
-            "slice() would silently clamp and the upper prefix "
-            "subspaces would quantize empty slices (constant codes, "
-            "id-lottery shortlists) — the prefix must nest inside the "
-            "full width"
-        )
-    prefix = embeddings.select(
-        "vec_id",
-        F.expr(f"slice(embedding, 1, {prefix_dims})").alias("embedding"),
-    )
-    cands = pq_topk(
-        prefix, probe_ids, n_candidates, sub, k, iters, prefix_dims
-    )
-    probe_vecs = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    return _rerank_exact(cands, probe_vecs, embeddings, n_neighbors)
-
-
 def matryoshka_rerank_topk_indexed(
     books: DataFrame,
     codes: DataFrame,
@@ -959,15 +782,30 @@ def matryoshka_rerank_topk_indexed(
     k: int = K,
     trained_geometry: dict | None = None,
 ) -> DataFrame:
-    """Query half of the Matryoshka split: `books`/`codes` come from
-    `pq_build_index` over the PREFIX-sliced corpus (train once, 4x
-    smaller index at prefix 16/64), probes slice themselves to the
-    prefix for the ADC shortlist, and only the survivors fetch
-    FULL-width vectors from the primary store for the exact rerank —
-    no training anywhere in the plan. Identical results to
-    `matryoshka_rerank_topk` when the index trained on the full
-    corpus (test-pinned). `probe_vecs` is (probe_id, embedding) at
-    full width; `vectors` is the full-width primary store."""
+    """Matryoshka-style two-stage retrieval: `books`/`codes` come from
+    `pq_build_index` over the PREFIX-sliced corpus (`prefix_dims` of
+    the full width — MRL-trained embeddings make nested prefixes usable
+    as standalone vectors, so the prefix index is 4x smaller to
+    train/store and its LUTs 4x cheaper to scan at prefix 16/64),
+    probes slice themselves to the prefix for the ADC shortlist, and
+    only the `n_candidates` survivors fetch FULL-width vectors from the
+    primary store for the exact integer-L2 rerank — no training
+    anywhere in the plan. `probe_vecs` is (probe_id, embedding) at full
+    width; `vectors` is the full-width primary store. Output
+    (probe_id, neighbor_id, d2) with exact FULL-width distances — the
+    contract of `pq_rerank_topk_indexed`, reached through a quarter of
+    the quantized scan work.
+
+    The candidate stage deliberately sees a DIFFERENT metric (prefix
+    L2) than the rerank (full L2): recall is the probability the prefix
+    shortlist contains the full-width neighbors, which is exactly what
+    MRL training optimizes. On non-MRL embeddings the prefix carries
+    whatever signal the first coordinates happen to hold — measured
+    worst case recall 0.0 on the tail-only-signal corpus vs 0.92 at
+    full width (sweeps/r11/matryoshka_sweep.json, asserted by
+    tests/test_pq_dims.py::test_matryoshka_probe_pins_the_sweep_numbers)
+    — so gate any new corpus through `matryoshka_recall_probe` before
+    serving from a prefix index."""
     # when the index is self-describing (write_pq_index(geometry=...)
     # -> read_pq_index_geometry), validate the query parameters
     # against the TRAINED geometry — a prefix/sub/k mismatch against
@@ -982,12 +820,11 @@ def matryoshka_rerank_topk_indexed(
                     f"(geometry sidecar {trained_geometry}): codes are "
                     "meaningless under mismatched quantizer geometry"
                 )
-    # the inline twin validates prefix_dims against its dims parameter;
-    # here the probe frame itself is the source of truth for the full
-    # width — without this check slice() silently CLAMPS an oversized
-    # prefix and the ADC shortlist degrades to an id-lottery (r12
-    # ADVICE). The probe frame is query-load-sized, so one driver-side
-    # min() is noise next to the shortlist scan.
+    # the probe frame is the source of truth for the full width —
+    # without this check slice() silently CLAMPS an oversized prefix
+    # and the ADC shortlist degrades to an id-lottery (r12 ADVICE). The
+    # probe frame is query-load-sized, so one driver-side min() is
+    # noise next to the shortlist scan.
     widths = probe_vecs.agg(
         F.min(F.size("embedding")).alias("w")
     ).collect()
@@ -1033,10 +870,20 @@ def matryoshka_recall_probe(
     n_hits, recall_bp) — recall_bp = 10000·|matryoshka top-k ∩ exact
     full-width top-k| div (n_probes·n_neighbors), integer-exact.
 
-    Cost: the probe stage is the inline Matryoshka query itself plus
-    ONE exact top-k pass for the sampled probes (broadcast probes ×
-    one corpus scan — the `ann_recall_at_k` cost class, amortized
-    into the index build it gates)."""
+    Cost: the probe builds the prefix index (`pq_build_index` at
+    `prefix_dims`) in memory and queries it once through
+    `matryoshka_rerank_topk_indexed`, plus ONE exact top-k pass for the
+    sampled probes (broadcast probes × one corpus scan — the
+    `ann_recall_at_k` cost class, amortized into the index build it
+    gates)."""
+    if prefix_dims > dims:
+        raise ValueError(
+            f"Matryoshka prefix_dims={prefix_dims} exceeds dims={dims}: "
+            "slice() would silently clamp and the upper prefix "
+            "subspaces would quantize empty slices (constant codes, "
+            "id-lottery shortlists) — the prefix must nest inside the "
+            "full width"
+        )
     if not probe_ids:
         raise ValueError(
             "matryoshka_recall_probe needs at least one probe id: an "
@@ -1064,9 +911,17 @@ def matryoshka_recall_probe(
             "deflated (and a healthy index could spuriously fail the "
             "build guard). Sample probe ids from the corpus itself."
         )
-    got = matryoshka_rerank_topk(
-        embeddings, probe_ids, n_neighbors, n_candidates, prefix_dims,
-        sub, k, iters, dims,
+    prefix = embeddings.select(
+        "vec_id",
+        F.expr(f"slice(embedding, 1, {prefix_dims})").alias("embedding"),
+    )
+    books, codes = pq_build_index(prefix, sub, k, iters, dims=prefix_dims)
+    probe_vecs = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    got = matryoshka_rerank_topk_indexed(
+        books, codes, probe_vecs, embeddings, n_neighbors, n_candidates,
+        prefix_dims, sub, k,
     ).select("probe_id", "neighbor_id")
     pv = embeddings.where(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"),
@@ -1191,102 +1046,6 @@ QUALIFY row_number() OVER (
 """
 
 
-def pq_rerank_topk(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    n_neighbors: int = 3,
-    n_candidates: int = 30,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """Two-stage PQ retrieval: ADC over the packed codes keeps the
-    `n_candidates` best per probe, then ONLY those candidates fetch
-    their full vectors for an exact integer-L2 rerank — the standard
-    production recipe that buys back the quantization error for
-    `n_candidates`/N of the full-scan cost (same shape the JL
-    two-stage entry `ann_rp_topk` proves against its oracle).
-
-    Output (probe_id, neighbor_id, d2) with exact full-space distances.
-    Measured envelope on the UNIFORM test corpus (ROUND4_NOTES.md):
-    direct ADC recall@3 is 0.23 at sub=8/k=16 (distances concentrate in
-    random high-dim data) but the exact rerank recovers every exact
-    neighbor whose candidate survives — 0.70 at C=30 — and planted
-    near-duplicates (identical codes) are recalled at 1.0."""
-    cands = pq_topk(
-        embeddings, probe_ids, n_candidates, sub, k, iters, dims
-    )
-    vecs = embeddings.select("vec_id", F.expr(_QUANT).alias("e"))
-    pv = vecs.where(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.col("e").alias("pe")
-    )
-    nv = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ne"))
-    d2 = _D2.format(a="pe", b="ne")
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.join(F.broadcast(pv), "probe_id")
-        .join(nv, "neighbor_id")
-        .withColumn("d2", F.expr(d2))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_neighbors)
-        .select("probe_id", "neighbor_id", "d2")
-    )
-
-
-def ivf_pq_rerank_topk(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    n_neighbors: int = 3,
-    n_candidates: int = 30,
-    stride: int = 50,
-    nprobe: int = 2,
-    sub: int = SUB,
-    k: int = K,
-    iters: int = ITERS,
-    dims: int = DIMS,
-) -> DataFrame:
-    """The full production composition — IVF inverted lists → ADC over
-    packed codes → exact rerank of the ADC survivors: each probe scans
-    ~nprobe/nlist of the corpus as 8-byte codes and touches full
-    vectors only for `n_candidates` rows. Output (probe_id,
-    neighbor_id, d2) with exact full-space integer distances.
-
-    Equivalence contract (test-pinned): identical to pq_rerank_topk
-    with its candidate stage restricted to the probed lists — the IVF
-    and rerank stages only restrict candidates, never change scores."""
-    cands = ivf_pq_topk(
-        embeddings,
-        probe_ids,
-        n_candidates,
-        stride,
-        nprobe,
-        sub,
-        k,
-        iters,
-        dims,
-    )
-    vecs = embeddings.select("vec_id", F.expr(_QUANT).alias("e"))
-    pv = vecs.where(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("probe_id"), F.col("e").alias("pe")
-    )
-    nv = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ne"))
-    d2 = _D2.format(a="pe", b="ne")
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.join(F.broadcast(pv), "probe_id")
-        .join(nv, "neighbor_id")
-        .withColumn("d2", F.expr(d2))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_neighbors)
-        .select("probe_id", "neighbor_id", "d2")
-    )
-
-
 # ------------------------------------------------------- indexed variants
 
 
@@ -1300,11 +1059,13 @@ def ivf_pq_build_index(
     dims: int = DIMS,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index ONCE — (books, coded inverted lists,
-    centroids) — the round-5 verdict's remaining inline-training
-    family: `ivf_pq_topk` retrains both quantizers inside every query,
-    which is a non-starter at 100 TB. Persist all three with
-    `write_ivf_pq_index`; query with `ivf_pq_topk_indexed`, whose plan
-    contains no training (plan-gated).
+    centroids) — the canonical billion-scale index (FAISS's IVFPQ,
+    minus the optional residual encoding): the IVF coarse quantizer
+    restricts each probe to `nprobe` inverted lists (~nprobe/nlist of
+    the corpus), and the candidates score from their 8-byte PQ codes.
+    Persist all three with `write_ivf_pq_index`; query with
+    `ivf_pq_topk_indexed`, whose plan contains no training
+    (plan-gated).
 
     `coded` is the physical IVFPQ layout: one row per vector carrying
     its packed BIGINT PQ code AND its coarse list id (vec_id, pq_code,
@@ -1389,9 +1150,8 @@ def ivf_pq_topk_indexed(
 ) -> DataFrame:
     """Query half of the IVF-PQ split: probes route to their `nprobe`
     nearest lists via the BROADCAST prebuilt centroid table (identical
-    cosine/tie semantics to `similarity.ivf_probe_lists`, so results
-    match `ivf_pq_topk` exactly when the index trained on the full
-    corpus — test-pinned, same oracle); candidates come from the
+    cosine/tie semantics to `similarity.ivf_probe_lists` and the
+    `ivf_pq_topk_sql` oracle); candidates come from the
     prebuilt coded lists by a join-key restriction; scoring is `sub`
     broadcast-LUT adds per candidate. No k-means anywhere in the plan.
     `probe_vecs` is (probe_id, embedding). Building the plan runs the
@@ -1456,9 +1216,13 @@ def pq_rerank_topk_indexed(
     training in the plan), then only those candidates fetch their full
     vectors from `vectors` (vec_id, embedding — the primary store; the
     rerank stage reads full vectors BY DESIGN, that is its recall
-    contract) for the exact integer-L2 rerank. Results identical to
-    `pq_rerank_topk` when the index trained on the full corpus
-    (test-pinned, same oracle)."""
+    contract) for the exact integer-L2 rerank. Output (probe_id,
+    neighbor_id, d2) with exact full-space distances. Measured envelope
+    on the UNIFORM test corpus (ROUND4_NOTES.md): direct ADC recall@3
+    is 0.23 at sub=8/k=16 (distances concentrate in random high-dim
+    data) but the exact rerank recovers every exact neighbor whose
+    candidate survives — 0.70 at C=30 — and planted near-duplicates
+    (identical codes) are recalled at 1.0."""
     cands = pq_topk_indexed(
         books, codes, probe_vecs, n_candidates, sub, k, dims
     )
@@ -1506,9 +1270,9 @@ def ivf_pq_rerank_topk_indexed(
     k: int = K,
     dims: int = DIMS,
 ) -> DataFrame:
-    """The INDEXED full production composition, previously missing
-    (the unindexed `ivf_pq_rerank_topk` retrains inside the query; the
-    indexed `ivf_pq_topk_indexed` stops at ADC): probes route through
+    """The full production composition — IVF inverted lists → ADC
+    over packed codes → exact rerank of the ADC survivors: probes route
+    through
     the prebuilt (books, coded, centroids) triple, ADC keeps
     `n_candidates` per probe, and only those rows fetch full vectors
     from the primary store for the exact integer-L2 rerank. No
@@ -1593,7 +1357,7 @@ def pq_mmr_topk_sql(
     dims: int = DIMS,
 ) -> str:
     """Oracle for the indexed PQ+MMR composition: the ADC restatement
-    (`_adc_score_ctes`, the proven pq_topk oracle core) shortlists the
+    (`_adc_score_ctes`, the `pq_topk_sql` oracle core) shortlists the
     pool, exact full-width distances attach, and the SHARED unrolled
     greedy (`similarity._mmr_greedy_sql_parts` — the same text the
     inline `ann_mmr_topk` oracle uses) picks. The split must not

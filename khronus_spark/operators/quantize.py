@@ -234,10 +234,9 @@ def embedding_drift_flags(
 ) -> DataFrame:
     """Per-dimension DRIFT verdict between a training-time profile and
     a fresh-batch profile (both `embedding_dim_stats` outputs) — the
-    detector half of the streaming-ANN refresh loop (`streaming/
-    ann.py`: frozen PQ codebooks quantize new vectors with the
-    training distribution's geometry, so a drifted batch silently
-    inflates ADC error; this is the signal that gates a retrain).
+    signal that gates a PQ index retrain: `pq_encode` quantizes new
+    vectors against frozen codebooks with the training distribution's
+    geometry, so a drifted batch silently inflates ADC error.
 
     A dimension is flagged `mean_shift` when the batch mean sits more
     than z standard ERRORS from the training mean (a two-sample z-test

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from khronus_spark.operators.similarity import cosine_col
 from khronus_spark.operators.text import (
     bm25_rank,
-    bm25_rank_indexed,
     bm25_rank_sql_parts,
 )
 from khronus_spark.sources.tables import spread

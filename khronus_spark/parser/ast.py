@@ -8,7 +8,7 @@ bound `InfluxCriteria` (sources resolved against the metric catalog,
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 
 # ---- SELECT ---------------------------------------------------------------

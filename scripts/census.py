@@ -18,6 +18,8 @@ or run):
    count): `product` when any package, bench, entry or perfbench file
    uses it or it is a `@register`ed entry, else `tests`, `scripts`,
    `tests+scripts` or `nothing`. Only the non-product defs are listed.
+3. Imports (`unused_imports`): every name a khronus_spark/ module
+   imports but never uses.
 """
 
 from __future__ import annotations
@@ -138,6 +140,29 @@ def non_product_defs(root="."):
     return sorted(rows), len(defs)
 
 
+def unused_imports(root="."):
+    """["path::name"] of the names a module under khronus_spark/ imports
+    and never loads, sorted. Package `__init__` files (whose imports
+    are the package's re-exports) and `from __future__` imports are
+    skipped; a dotted `import a.b` binds, and is used through, `a`."""
+    out = []
+    for f in pyfiles(root, "khronus_spark"):
+        if f.endswith("__init__.py"):
+            continue
+        tree = _parse(root, f)
+        bound = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    bound[a.asname or a.name.partition(".")[0]] = n.lineno
+        used = {n.id for n in ast.walk(tree)
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+        out += [f"{f}::{name}" for name in sorted(set(bound) - used)]
+    return out
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else "."
     unreached = unreached_modules(root)
@@ -150,6 +175,10 @@ def main():
           f"{sum(r[2] for r in rows)} lines (of {n_defs} scanned)")
     for cls, where, n in rows:
         print(f"  {cls:14} {where} {n}")
+    unused = unused_imports(root)
+    print(f"unused imports under khronus_spark/: {len(unused)}")
+    for where in unused:
+        print(f"  {where}")
 
 
 if __name__ == "__main__":

@@ -62,7 +62,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from khronus_spark.operators.pq import matryoshka_rerank_topk
+    from khronus_spark.operators.pq import (
+        matryoshka_rerank_topk_indexed,
+        pq_build_index,
+    )
     from khronus_spark.operators.similarity import anisotropic_corpus
 
     import tempfile
@@ -135,9 +138,13 @@ def main() -> None:
         for p in PREFIXES:
             sub = 4  # fixed subquantizer count: subdim shrinks with p
             t0 = time.perf_counter()
-            res = matryoshka_rerank_topk(
-                corpus, PROBES, K_NEIGHBORS, n_candidates=C,
-                prefix_dims=p, sub=sub, k=8, iters=1,
+            prefix = corpus.select(
+                "vec_id", F.expr(f"slice(embedding, 1, {p})").alias("embedding")
+            )
+            books, codes = pq_build_index(prefix, sub, 8, 1, dims=p)
+            res = matryoshka_rerank_topk_indexed(
+                books, codes, pv, corpus, K_NEIGHBORS, n_candidates=C,
+                prefix_dims=p, sub=sub, k=8,
             )
             rec = recall(truth_rows, res)
             wall = round(time.perf_counter() - t0, 3)

@@ -67,14 +67,12 @@ SLOW_TESTS = {
     "tests/test_corpus_ops.py::test_leakage_safe_kfold_component_purity",
     "tests/test_corpus_ops.py::test_tokenizer_fertility_consistent_with_encode_and_ranks_langs",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_rerank_topk_indexed]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_ivfpq_topk_indexed]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_lsh_buckets]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_lsh_recall_sized]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_lsh_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_pq_dim16_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_pq_mmr_topk_indexed]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[ann_pq_rerank_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[ann_recall_at_k]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[bm25_chunk_topk_indexed]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[bpe_merges_batched]",
@@ -89,7 +87,6 @@ SLOW_TESTS = {
     "tests/test_pq_dims.py::test_dim16_oracle_parity_codes_and_topk",
     "tests/test_pq_dims.py::test_ivf_pq_build_encode_query_dim16",
     "tests/test_pq_dims.py::test_matryoshka_degenerates_to_pq_rerank_at_full_prefix",
-    "tests/test_pq_dims.py::test_matryoshka_indexed_matches_inline",
     "tests/test_pq_dims.py::test_matryoshka_probe_pins_the_sweep_numbers",
     "tests/test_pq_property.py::test_pq_topk_oracle_matches_python_reference",
     "tests/test_projection.py::test_ivfpq_is_subset_of_full_adc_ranking",

@@ -480,13 +480,11 @@ def test_duplicate_spans_no_corpus_self_join(spark, oracle_sf_dir):
 
 
 def test_pq_adc_scoring_stays_broadcast_and_map_side(spark, oracle_sf_dir):
-    """The ADC search plan must keep the code table map-only: LUTs and
-    codebooks arrive by broadcast, the code packing combines map-side
-    (partial_sum), and nothing degenerates into a cartesian or a
+    """The ADC search plan must keep the code table map-only: the LUTs
+    arrive by broadcast, and nothing degenerates into a cartesian or a
     sort-merge join of corpus-sized sides."""
-    plan = _plan(spark, oracle_sf_dir, "ann_pq_topk")
+    plan = _plan(spark, oracle_sf_dir, "ann_pq_topk_indexed")
     assert "BroadcastExchange" in plan
-    assert "partial_sum" in plan          # code packing combines map-side
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
 
@@ -495,7 +493,7 @@ def test_ivfpq_candidate_join_is_broadcast(spark, oracle_sf_dir):
     """IVF-PQ must probe the inverted lists through broadcast joins
     (probe lists and LUTs are tiny); the corpus-side code+assignment
     join may shuffle but never nested-loop against a non-broadcast."""
-    plan = _plan(spark, oracle_sf_dir, "ann_ivfpq_topk")
+    plan = _plan(spark, oracle_sf_dir, "ann_ivfpq_topk_indexed")
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
 
@@ -550,11 +548,8 @@ def test_ann_topk_windows_have_group_limit(spark, oracle_sf_dir):
         "ann_lsh_topk",
         "ann_ivf_topk",
         "ann_ivf_kmeans_topk",
-        "ann_pq_topk",
         "ann_pq_topk_indexed",
-        "ann_ivfpq_topk",
         "ann_ivfpq_topk_indexed",
-        "ann_pq_rerank_topk",
         "ann_pq_rerank_topk_indexed",
         "ann_rp_topk",
         "ann_quantized_topk",

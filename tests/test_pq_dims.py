@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pq_index import pq_index
 from pyspark.sql import functions as F
 
 from khronus_spark.operators import pq as pq_ops
@@ -29,9 +30,15 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _duck_rows(pdf, sql):
+    con = duckdb.connect()
+    con.register("embeddings", pdf)
+    return sorted(map(tuple, con.execute(sql).fetchall()))
+
+
 def test_invalid_geometry_fails_at_build_time(emb16):
     with pytest.raises(ValueError, match="dims=16 .*sub=5"):
-        pq_ops.pq_codes(emb16, sub=5, k=8, iters=1, dims=16)
+        pq_ops.pq_build_index(emb16, sub=5, k=8, iters=1, dims=16)
     with pytest.raises(ValueError, match="positive multiple"):
         pq_ops.pq_codes_sql(sub=7, k=8, iters=1, dims=16)
     with pytest.raises(ValueError, match="positive multiple"):
@@ -39,14 +46,11 @@ def test_invalid_geometry_fails_at_build_time(emb16):
 
 
 def test_ivf_pq_build_encode_query_dim16(spark, emb16, tmp_path):
-    """The full indexed arc at dims=16/sub=4: build == inline (the
-    split must not change a value, also through a parquet round trip),
-    and the rerank face agrees with its inline twin."""
-    kw = dict(sub=4, k=8, iters=1, dims=16)
-
-    # indexed query == inline query (index trained on the full corpus)
+    """The full indexed IVF-PQ arc at dims=16/sub=4, through a parquet
+    round trip: the ADC query and the rerank face agree value-for-value
+    with their DuckDB restatements at the same geometry."""
     books_f, coded_f, cents_f = pq_ops.ivf_pq_build_index(
-        emb16, stride=50, **kw
+        emb16, stride=50, sub=4, k=8, iters=1, dims=16
     )
     path = str(tmp_path / "idx16")
     pq_ops.write_ivf_pq_index(books_f, coded_f, cents_f, path)
@@ -55,79 +59,74 @@ def test_ivf_pq_build_encode_query_dim16(spark, emb16, tmp_path):
     pv = emb16.where(F.col("vec_id").isin(probes)).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
+    pdf = emb16.toPandas()
     got = pq_ops.ivf_pq_topk_indexed(
         books_f, coded_f, cents_f, pv, 3, nprobe=2, sub=4, k=8, dims=16
     )
-    want = pq_ops.ivf_pq_topk(
-        emb16, probes, 3, stride=50, nprobe=2, sub=4, k=8, iters=1, dims=16
-    )
-    assert _rows(got) == _rows(want) and got.count() > 0
+    want = _duck_rows(pdf, pq_ops.ivf_pq_topk_sql(
+        probes, 3, stride=50, nprobe=2, sub=4, k=8, iters=1, dims=16
+    ))
+    assert _rows(got) == want and len(want) == 9
 
     # and the full production composition (rerank) agrees too
     got_rr = pq_ops.ivf_pq_rerank_topk_indexed(
         books_f, coded_f, cents_f, pv, emb16, 3, 10, nprobe=2,
         sub=4, k=8, dims=16,
     )
-    want_rr = pq_ops.ivf_pq_rerank_topk(
-        emb16, probes, 3, 10, stride=50, nprobe=2, sub=4, k=8, iters=1,
-        dims=16,
-    )
-    assert _rows(got_rr) == _rows(want_rr) and got_rr.count() > 0
+    want_rr = _duck_rows(pdf, pq_ops.ivf_pq_rerank_topk_sql(
+        probes, 3, 10, stride=50, nprobe=2, sub=4, k=8, iters=1, dims=16
+    ))
+    assert _rows(got_rr) == want_rr and len(want_rr) == 9
 
 
 def test_dim16_oracle_parity_codes_and_topk(spark, emb16, tmp_path):
     """DuckDB parity at dims=16 — the same gate the 64-dim registry
     entries pass: codes and ADC top-k value-identical across engines."""
     pdf = emb16.toPandas()
-    con = duckdb.connect()
-    con.register("embeddings", pdf)
+    probes = [0, 9, 42]
+    books, codes, pv = pq_index(emb16, probes, 4, 8, 1, dims=16)
 
-    got = _rows(pq_ops.pq_codes(emb16, sub=4, k=8, iters=1, dims=16))
-    want = sorted(
-        map(tuple, con.execute(
-            pq_ops.pq_codes_sql(sub=4, k=8, iters=1, dims=16)
-        ).fetchall())
-    )
+    got = _rows(codes)
+    want = _duck_rows(pdf, pq_ops.pq_codes_sql(sub=4, k=8, iters=1, dims=16))
     assert got == want and len(got) == 300
 
-    probes = [0, 9, 42]
     got_tk = _rows(
-        pq_ops.pq_topk(emb16, probes, 3, sub=4, k=8, iters=1, dims=16)
+        pq_ops.pq_topk_indexed(books, codes, pv, 3, sub=4, k=8, dims=16)
     )
-    want_tk = sorted(
-        map(tuple, con.execute(
-            pq_ops.pq_topk_sql(probes, 3, sub=4, k=8, iters=1, dims=16)
-        ).fetchall())
+    want_tk = _duck_rows(
+        pdf, pq_ops.pq_topk_sql(probes, 3, sub=4, k=8, iters=1, dims=16)
     )
     assert got_tk == want_tk and len(got_tk) == 9
 
 
 def test_dim64_defaults_untouched(spark, sf_dir):
     """The parameterization must not move a single default-geometry
-    value: pq_codes with and without an explicit dims=64 are
+    value: the built codes with and without an explicit dims=64 are
     row-identical on the real embeddings table."""
     from khronus_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").where("vec_id < 120")
-    a = _rows(pq_ops.pq_codes(emb, sub=4, k=8, iters=1))
-    b = _rows(pq_ops.pq_codes(emb, sub=4, k=8, iters=1, dims=64))
-    assert a == b
+    a = _rows(pq_ops.pq_build_index(emb, sub=4, k=8, iters=1)[1])
+    b = _rows(pq_ops.pq_build_index(emb, sub=4, k=8, iters=1, dims=64)[1])
+    assert a == b and len(a) == 120
 
 
 def test_matryoshka_degenerates_to_pq_rerank_at_full_prefix(spark, emb16):
     """prefix_dims == dims makes the Matryoshka composition exactly
-    pq_rerank_topk (same shortlist metric, same rerank width) — the
-    degenerate-equality pin that anchors the two-width semantics."""
+    the two-stage PQ rerank (same shortlist metric, same rerank width)
+    — the degenerate-equality pin that anchors the two-width
+    semantics."""
     probes = [0, 9, 42]
+    books, codes, pv = pq_index(emb16, probes, 4, 8, 1, dims=16)
     a = _rows(
-        pq_ops.matryoshka_rerank_topk(
-            emb16, probes, 3, n_candidates=10, prefix_dims=16,
-            sub=4, k=8, iters=1, dims=16,
+        pq_ops.matryoshka_rerank_topk_indexed(
+            books, codes, pv, emb16, 3, n_candidates=10, prefix_dims=16,
+            sub=4, k=8,
         )
     )
     b = _rows(
-        pq_ops.pq_rerank_topk(
-            emb16, probes, 3, n_candidates=10, sub=4, k=8, iters=1, dims=16
+        pq_ops.pq_rerank_topk_indexed(
+            books, codes, pv, emb16, 3, n_candidates=10, sub=4, k=8, dims=16
         )
     )
     assert a == b and len(a) == 9
@@ -146,14 +145,16 @@ def test_matryoshka_shortlist_is_prefix_metric_rerank_full_width(
 
     emb = load_table(spark, sf_dir, "embeddings").where("vec_id < 200")
     probes = [0, 1, 2, 3, 4]
-    mat = pq_ops.matryoshka_rerank_topk(
-        emb, probes, 3, n_candidates=10, prefix_dims=16, sub=4, k=8, iters=1
+    books, codes, pv = pq_index(emb, probes, 4, 8, 1, dims=16)
+    mat = pq_ops.matryoshka_rerank_topk_indexed(
+        books, codes, pv, emb, 3, n_candidates=10, prefix_dims=16, sub=4, k=8
     )
     rows = mat.collect()
     assert len(rows) == 15
+    books, codes, pv = pq_index(emb, probes, 4, 8, 1)
     full = _rows(
-        pq_ops.pq_rerank_topk(
-            emb, probes, 3, n_candidates=10, sub=4, k=8, iters=1
+        pq_ops.pq_rerank_topk_indexed(
+            books, codes, pv, emb, 3, n_candidates=10, sub=4, k=8
         )
     )
     # d2 values that DO appear must be exact full-width distances:
@@ -166,43 +167,12 @@ def test_matryoshka_shortlist_is_prefix_metric_rerank_full_width(
         assert fd[(r.probe_id, r.neighbor_id)] == r.d2
 
 
-def test_matryoshka_indexed_matches_inline(spark, sf_dir, tmp_path):
-    """The Matryoshka build/query split must not change a value: the
-    prefix index built once + queried (no training in the plan) equals
-    the inline composition on the real 64-wide table."""
-    from khronus_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").where("vec_id < 200")
-    prefix = emb.select(
-        "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")
-    )
-    books, codes = pq_ops.pq_build_index(
-        prefix, sub=4, k=8, iters=1, dims=16
-    )
-    path = str(tmp_path / "mat16")
-    pq_ops.write_pq_index(books, codes, path)
-    books, codes = pq_ops.read_pq_index(spark, path)
-    probes = [0, 1, 2, 3, 4]
-    pv = emb.where(F.col("vec_id").isin(probes)).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    got = pq_ops.matryoshka_rerank_topk_indexed(
-        books, codes, pv, emb, 3, n_candidates=10, prefix_dims=16,
-        sub=4, k=8,
-    )
-    want = pq_ops.matryoshka_rerank_topk(
-        emb, probes, 3, n_candidates=10, prefix_dims=16, sub=4, k=8,
-        iters=1,
-    )
-    assert _rows(got) == _rows(want) and got.count() == 15
-
-
 def test_matryoshka_prefix_must_nest_inside_dims(spark, emb16):
     """r11 self-review: slice() clamps silently, so an oversized
     prefix would quantize empty upper subspaces into constant codes
     (an id-lottery shortlist) — the misuse must fail at call time."""
     with pytest.raises(ValueError, match="prefix_dims=32 exceeds dims=16"):
-        pq_ops.matryoshka_rerank_topk(
+        pq_ops.matryoshka_recall_probe(
             emb16, [0], 3, prefix_dims=32, sub=4, k=8, iters=1, dims=16
         )
     with pytest.raises(ValueError, match="exceeds dims"):
@@ -212,10 +182,9 @@ def test_matryoshka_prefix_must_nest_inside_dims(spark, emb16):
 
 
 def test_matryoshka_indexed_rejects_oversized_prefix(spark, emb16, tmp_path):
-    """r12 ADVICE: the indexed twin used to skip the nesting check its
-    inline twin raises on — an oversized prefix_dims silently clamped
-    at slice() and the ADC shortlist degraded to an id-lottery. The
-    probe frame itself is the width source of truth."""
+    """r12 ADVICE: an oversized prefix_dims used to clamp silently at
+    slice() and the ADC shortlist degraded to an id-lottery. The probe
+    frame itself is the width source of truth."""
     prefix = emb16.select(
         "vec_id", F.expr("slice(embedding, 1, 8)").alias("embedding")
     )
@@ -459,3 +428,23 @@ def test_adc_lut_rejects_corrupt_codebook(spark, emb16, tmp_path, corrupt, match
     assert pq_ops.pq_topk_indexed(books, codes, pv, sub=4, k=8, dims=16).count() == 9
     with pytest.raises(ValueError, match=match):
         pq_ops.pq_topk_indexed(corrupt(books), codes, pv, sub=4, k=8, dims=16)
+
+
+def test_pq_index_rejects_query_geometry_it_was_not_built_at(spark, emb16):
+    """An index built at sub=4/dims=16 and queried at another geometry
+    must fail while the plan is built, naming sub, k and dims — not
+    return NULL distances and an id-ordered top-k. A different sub at
+    the same dims changes the centroid width; fewer subspaces of the
+    same width leave codebook rows with s >= sub; a codebook missing a
+    subspace has no centroid to score it."""
+    books, codes = pq_ops.pq_build_index(emb16, sub=4, k=8, iters=1, dims=16)
+    pv = emb16.where("vec_id < 3").select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    for sub in (2, 8):
+        with pytest.raises(ValueError, match=f"width 4, .* for k=8, sub={sub}, dims=16"):
+            pq_ops.pq_topk_indexed(books, codes, pv, 3, sub=sub, k=8, dims=16)
+    with pytest.raises(ValueError, match="out of range for k=8, sub=2, dims=8"):
+        pq_ops.pq_topk_indexed(books, codes, pv, 3, sub=2, k=8, dims=8)
+    with pytest.raises(ValueError, match=r"subspaces \[1\] for k=8, sub=4, dims=16"):
+        pq_ops.pq_topk_indexed(books.where("s <> 1"), codes, pv, 3, sub=4, k=8, dims=16)

@@ -66,7 +66,7 @@ def _py_pq_state(vecs, sub, k, iters, dims):
     return state
 
 
-def _py_pq_codes(vecs, sub, k, iters, dims):
+def _py_codes(vecs, sub, k, iters, dims):
     state = _py_pq_state(vecs, sub, k, iters, dims)
     out = {vid: 0 for vid, _ in vecs}
     for s, (_, final, _) in enumerate(state):
@@ -75,7 +75,7 @@ def _py_pq_codes(vecs, sub, k, iters, dims):
     return out
 
 
-def _py_pq_topk(vecs, probe_ids, n_neighbors, sub, k, iters, dims):
+def _py_adc_topk(vecs, probe_ids, n_neighbors, sub, k, iters, dims):
     state = _py_pq_state(vecs, sub, k, iters, dims)
     ids = [vid for vid, _ in vecs]
     rows = []
@@ -134,7 +134,7 @@ def test_pq_codes_oracle_matches_python_reference(case):
         .execute(pq_codes_sql(sub=sub, k=k, iters=iters, dims=dims))
         .fetchall()
     )
-    assert got == _py_pq_codes(vecs, sub, k, iters, dims)
+    assert got == _py_codes(vecs, sub, k, iters, dims)
 
 
 @settings(max_examples=15, deadline=None)
@@ -152,4 +152,4 @@ def test_pq_topk_oracle_matches_python_reference(case):
             .fetchall(),
         )
     )
-    assert got == _py_pq_topk(vecs, probes, 3, sub, k, iters, dims)
+    assert got == _py_adc_topk(vecs, probes, 3, sub, k, iters, dims)

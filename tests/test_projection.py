@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+from pq_index import pq_index
 from pyspark.sql import functions as F
 
 from khronus_spark.operators import projection as proj
@@ -381,14 +382,17 @@ def test_bigram_surprisal_matches_python_reference_random_corpora(spark):
 
 
 # -------------------------------------------------------- product quantization
+# Every PQ query below builds the index in memory and reads it through
+# the `*_indexed` faces (tests/pq_index.py) — the only PQ query path.
 
 
 def test_pq_codes_pack_and_modes_agree(spark, sf_dir):
     """Codes live in [0, k^sub), one per vector."""
-    from khronus_spark.operators.pq import pq_codes
+    from khronus_spark.operators.pq import pq_build_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 80)
-    codes = {r.vec_id: r.pq_code for r in pq_codes(emb, 4, 8, 1).collect()}
+    _, codes = pq_build_index(emb, 4, 8, 1)
+    codes = {r.vec_id: r.pq_code for r in codes.collect()}
     assert all(0 <= c < 8**4 for c in codes.values())
     assert len(codes) == 80
 
@@ -397,21 +401,24 @@ def test_pq_identical_vectors_share_codes_and_rank_first(spark, sf_dir):
     """An exact copy of a vector must receive the same packed code, and
     ADC must rank it at distance == the probe's own quantization error
     (the minimum possible) — the planted-duplicate retrieval case."""
-    from khronus_spark.operators.pq import pq_codes, pq_topk
+    from khronus_spark.operators.pq import pq_topk_indexed
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 60)
     copies = emb.where(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding", "label"
     )
     corpus = emb.unionByName(copies)
-    codes = {r.vec_id: r.pq_code for r in pq_codes(corpus, 4, 8, 1).collect()}
+    books, codes_df, probes = pq_index(
+        corpus, [1000 + v for v in range(5)], 4, 8, 1
+    )
+    codes = {r.vec_id: r.pq_code for r in codes_df.collect()}
     for v in range(5):
         assert codes[v] == codes[v + 1000]
     top1 = {
         r.probe_id: r
-        for r in pq_topk(corpus, [1000 + v for v in range(5)], 1, 4, 8, 1).collect()
+        for r in pq_topk_indexed(books, codes_df, probes, 1, 4, 8).collect()
     }
-    got = pq_topk(corpus, [1000 + v for v in range(5)], 60, 4, 8, 1)
+    got = pq_topk_indexed(books, codes_df, probes, 60, 4, 8)
     by_probe = {}
     for r in got.collect():
         by_probe.setdefault(r.probe_id, {})[r.neighbor_id] = r.d2_adc
@@ -422,27 +429,26 @@ def test_pq_identical_vectors_share_codes_and_rank_first(spark, sf_dir):
         assert top1[p].d2_adc == by_probe[p][v]
 
 
-def test_pq_adc_equals_lut_free_restatement(spark, sf_dir):
-    """The broadcast-LUT scoring must equal the relational restatement
-    (probe-subvector to assigned-centroid distance summed per subspace)
-    computed independently in Python."""
-    from khronus_spark.operators.pq import _QUANT, pq_codebooks, pq_codes, pq_topk
+def _assert_adc_matches_restatement(corpus, probes, n_neighbors, sub, k, iters):
+    """ADC distances from the built index equal an independent Python
+    restatement keyed BY CID: probe-subvector to the neighbor's
+    assigned centroid, summed per subspace."""
+    from khronus_spark.operators.pq import _QUANT, pq_topk_indexed
 
-    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 40)
-    sub, k, iters = 4, 8, 1
-    subdim = 64 // sub
-    books = {
-        (r.s, r.cid): list(r.c) for r in pq_codebooks(emb, sub, k, iters).collect()
-    }
-    codes = {r.vec_id: r.pq_code for r in pq_codes(emb, sub, k, iters).collect()}
+    books_df, codes_df, pv = pq_index(corpus, probes, sub, k, iters)
+    books = {(r.s, r.cid): list(r.c) for r in books_df.collect()}
+    codes = {r.vec_id: r.pq_code for r in codes_df.collect()}
     qvecs = {
         r.vec_id: list(r.e)
-        for r in emb.select("vec_id", F.expr(_QUANT).alias("e")).collect()
+        for r in corpus.select("vec_id", F.expr(_QUANT).alias("e")).collect()
     }
-    probes = [0, 1]
-    got = {}
-    for r in pq_topk(emb, probes, 39, sub, k, iters).collect():
-        got[(r.probe_id, r.neighbor_id)] = r.d2_adc
+    subdim = 64 // sub
+    got = {
+        (r.probe_id, r.neighbor_id): r.d2_adc
+        for r in pq_topk_indexed(
+            books_df, codes_df, pv, n_neighbors, sub, k
+        ).collect()
+    }
     for p in probes:
         for n, code in codes.items():
             if n == p:
@@ -454,6 +460,15 @@ def test_pq_adc_equals_lut_free_restatement(spark, sf_dir):
                 pe = qvecs[p][s * subdim : (s + 1) * subdim]
                 expect += sum((a - b) * (a - b) for a, b in zip(pe, c))
             assert got[(p, n)] == expect, (p, n)
+    return books
+
+
+def test_pq_adc_equals_lut_free_restatement(spark, sf_dir):
+    """The broadcast-LUT scoring must equal the relational restatement
+    (probe-subvector to assigned-centroid distance summed per subspace)
+    computed independently in Python."""
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 40)
+    _assert_adc_matches_restatement(emb, [0, 1], 39, 4, 8, 1)
 
 
 def test_ivfpq_is_subset_of_full_adc_ranking(spark, sf_dir):
@@ -461,16 +476,24 @@ def test_ivfpq_is_subset_of_full_adc_ranking(spark, sf_dir):
     PQ scan assigns to that (probe, neighbor) pair — the IVF stage only
     restricts candidates, never changes scores — and results only come
     from the probed lists."""
-    from khronus_spark.operators.pq import ivf_pq_topk, pq_topk
+    from khronus_spark.operators.pq import (
+        ivf_pq_build_index,
+        ivf_pq_topk_indexed,
+        pq_topk_indexed,
+    )
     from khronus_spark.operators.similarity import ivf_assignments, ivf_probe_lists
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = [0, 1, 2]
+    books, codes, pv = pq_index(emb, probes, 4, 8, 1)
     full = {
         (r.probe_id, r.neighbor_id): r.d2_adc
-        for r in pq_topk(emb, probes, 500, 4, 8, 1).collect()
+        for r in pq_topk_indexed(books, codes, pv, 500, 4, 8).collect()
     }
-    ivf = ivf_pq_topk(emb, probes, 3, stride=50, nprobe=2, sub=4, k=8, iters=1)
+    ivf = ivf_pq_topk_indexed(
+        *ivf_pq_build_index(emb, stride=50, sub=4, k=8, iters=1),
+        pv, 3, nprobe=2, sub=4, k=8,
+    )
     lists = {}
     for r in ivf_probe_lists(emb, probes, 2, 50).collect():
         lists.setdefault(r.probe_id, set()).add(r.probe_centroid)
@@ -486,12 +509,13 @@ def test_pq_rerank_recovers_exact_when_candidates_cover(spark, sf_dir):
     """With n_candidates = corpus size the two-stage PQ result must
     equal the exact integer-L2 top-k, and planted identical vectors
     must come back at distance 0 rank 1."""
-    from khronus_spark.operators.pq import pq_rerank_topk
+    from khronus_spark.operators.pq import pq_rerank_topk_indexed
     from khronus_spark.operators.projection import exact_l2_topk
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 50)
     probes = [0, 1]
-    full = pq_rerank_topk(emb, probes, 3, 100, 4, 8, 1).collect()
+    books, codes, pv = pq_index(emb, probes, 4, 8, 1)
+    full = pq_rerank_topk_indexed(books, codes, pv, emb, 3, 100, 4, 8).collect()
     exact = exact_l2_topk(emb, probes, 3).collect()
     key = lambda r: (r.probe_id, r.neighbor_id, r.d2)  # noqa: E731
     assert sorted(map(key, full)) == sorted(map(key, exact))
@@ -500,8 +524,12 @@ def test_pq_rerank_recovers_exact_when_candidates_cover(spark, sf_dir):
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding", "label"
     )
     corpus = emb.unionByName(copies)
+    books, codes, pv = pq_index(corpus, [1000, 1001], 4, 8, 1)
     top1 = {
-        r.probe_id: r for r in pq_rerank_topk(corpus, [1000, 1001], 1, 10, 4, 8, 1).collect()
+        r.probe_id: r
+        for r in pq_rerank_topk_indexed(
+            books, codes, pv, corpus, 1, 10, 4, 8
+        ).collect()
     }
     assert top1[1000].neighbor_id == 0 and top1[1000].d2 == 0
     assert top1[1001].neighbor_id == 1 and top1[1001].d2 == 0
@@ -515,17 +543,13 @@ def test_pq_adc_correct_with_non_dense_codebook(spark, sf_dir):
     to an independent Python restatement keyed BY CID — a positional
     lookup table would shift every row above the gap (or throw on the
     top surviving cid)."""
-    from khronus_spark.operators.pq import _QUANT, pq_codebooks, pq_codes, pq_topk
-
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 30)
     dup0 = emb.where(F.col("vec_id") == 0).select(
         F.lit(1).cast("long").alias("vec_id"), "embedding", "label"
     )
     corpus = emb.where(F.col("vec_id") != 1).unionByName(dup0)
-    sub, k, iters = 4, 4, 2
-    books = {
-        (r.s, r.cid): list(r.c) for r in pq_codebooks(corpus, sub, k, iters).collect()
-    }
+    sub, k = 4, 4
+    books = _assert_adc_matches_restatement(corpus, [0, 2], 40, sub, k, 2)
     cids_per_sub = {
         s: sorted(c for (ss, c) in books if ss == s) for s in range(sub)
     }
@@ -533,27 +557,6 @@ def test_pq_adc_correct_with_non_dense_codebook(spark, sf_dir):
         cids != list(range(len(cids))) or len(cids) < k
         for cids in cids_per_sub.values()
     ), f"fixture no longer produces a cid gap: {cids_per_sub}"
-    codes = {r.vec_id: r.pq_code for r in pq_codes(corpus, sub, k, iters).collect()}
-    qvecs = {
-        r.vec_id: list(r.e)
-        for r in corpus.select("vec_id", F.expr(_QUANT).alias("e")).collect()
-    }
-    subdim = 64 // sub
-    got = {
-        (r.probe_id, r.neighbor_id): r.d2_adc
-        for r in pq_topk(corpus, [0, 2], 40, sub, k, iters).collect()
-    }
-    for p in (0, 2):
-        for n, code in codes.items():
-            if n == p:
-                continue
-            expect = 0
-            for s in range(sub):
-                cid = (code // (k**s)) % k
-                c = books[(s, cid)]
-                pe = qvecs[p][s * subdim : (s + 1) * subdim]
-                expect += sum((a - b) * (a - b) for a, b in zip(pe, c))
-            assert got[(p, n)] == expect, (p, n)
 
 
 def test_ivfpq_rerank_exact_distances_within_probed_lists(spark, sf_dir):
@@ -561,15 +564,21 @@ def test_ivfpq_rerank_exact_distances_within_probed_lists(spark, sf_dir):
     space distances, each neighbor must come from a probed list, and
     with the candidate budget covering all listed vectors it must equal
     the exact top-k restricted to those lists."""
-    from khronus_spark.operators.pq import ivf_pq_rerank_topk
+    from khronus_spark.operators.pq import (
+        ivf_pq_build_index,
+        ivf_pq_rerank_topk_indexed,
+    )
     from khronus_spark.operators.projection import exact_l2_topk
     from khronus_spark.operators.similarity import ivf_assignments, ivf_probe_lists
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = [0, 1, 2]
-    got = ivf_pq_rerank_topk(
-        emb, probes, 3, n_candidates=10_000, stride=50, nprobe=2,
-        sub=4, k=8, iters=1,
+    pv = emb.where(F.col("vec_id").isin(probes)).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    got = ivf_pq_rerank_topk_indexed(
+        *ivf_pq_build_index(emb, stride=50, sub=4, k=8, iters=1),
+        pv, emb, 3, n_candidates=10_000, nprobe=2, sub=4, k=8,
     ).collect()
     assert got
     lists = {}
@@ -597,34 +606,29 @@ def test_ivfpq_rerank_exact_distances_within_probed_lists(spark, sf_dir):
 # ------------------------------------------------- PQ/IVF build-query split
 
 
-def test_pq_indexed_query_equals_inline_after_persist_roundtrip(spark, sf_dir, tmp_path):
-    """The build/query split must not change a single value: build the
+def test_pq_indexed_query_same_after_persist_roundtrip(spark, sf_dir, tmp_path):
+    """Persisting the index must not change a single value: build the
     index, write it to parquet, read it back, query — identical rows to
-    the inline pq_topk (which trains per call)."""
+    the same query over the in-memory index."""
     from khronus_spark.operators.pq import (
-        pq_build_index,
-        pq_topk,
         pq_topk_indexed,
         read_pq_index,
         write_pq_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 80)
-    books, codes = pq_build_index(emb, sub=4, k=8, iters=1)
+    books, codes, probes = pq_index(emb, [0, 1, 2, 3, 4], 4, 8, 1)
     write_pq_index(books, codes, str(tmp_path / "pqidx"))
     books2, codes2 = read_pq_index(spark, str(tmp_path / "pqidx"))
-    probes = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
     got = {
         (r.probe_id, r.neighbor_id): r.d2_adc
         for r in pq_topk_indexed(books2, codes2, probes, 3, sub=4, k=8).collect()
     }
     expect = {
         (r.probe_id, r.neighbor_id): r.d2_adc
-        for r in pq_topk(emb, [0, 1, 2, 3, 4], 3, sub=4, k=8, iters=1).collect()
+        for r in pq_topk_indexed(books, codes, probes, 3, sub=4, k=8).collect()
     }
-    assert got == expect
+    assert got == expect and len(got) == 15
 
 
 def test_pq_encode_new_vectors_into_existing_index(spark, sf_dir):
